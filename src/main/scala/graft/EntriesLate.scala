@@ -3,6 +3,7 @@ package graft
 import graft.agg.Aggs
 import graft.dedup.Dedup
 import graft.dsl.QueryDsl
+import graft.index.{IndexArtifacts, PackedCodec}
 import graft.rel.Relational
 import graft.search.{Search, Sorting}
 import graft.sim.Ann
@@ -18,6 +19,32 @@ import graft.EntryShared._
   * Split from SparkEntry.scala in r11 (registration-only; the
   * implementing operators live in the modules named in SURVEY §2). */
 private[graft] object EntriesLate {
+
+  /** The write-once embeddings index behind the `*_persisted` knn keys:
+    * one `Connector.save` carrying the `graft.index.*` options `opts`,
+    * built into a fingerprint-keyed artifact dir (`ensureArtifact`)
+    * and reused while `fresh` accepts it. */
+  private def embeddingsIndex(s: SparkSession, d: String, kind: String,
+      opts: (String, String)*)(fresh: String => Boolean): String = {
+    val srcFp = IndexArtifacts.dataFingerprint(s, s"$d/embeddings.parquet").take(12)
+    IndexArtifacts.ensureArtifact(kind, srcFp)(fresh)(stage =>
+      graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
+        "graft.write.operation" -> "overwrite",
+        "graft.mapping.id" -> "vec_id") ++ opts))
+  }
+
+  private def ivfAdcFresh(s: SparkSession, p: String): Boolean =
+    IndexArtifacts.loadPq(s, p, "embedding", Some("vec_id")).nonEmpty &&
+      IndexArtifacts.loadIvf(s, p, "embedding", Some("vec_id")).nonEmpty
+
+  /** Packed-codec knn over the persisted artifact — hash-equal to the
+    * codec's on-the-fly key (same oracle SQL). */
+  private def packedKnnPersisted(s: SparkSession, d: String, codec: PackedCodec): DataFrame = {
+    val out = embeddingsIndex(s, d, s"${codec.name}idx", s"graft.index.${codec.name}" -> "embedding")(
+      p => IndexArtifacts.loadPacked(s, codec, p, "embedding").nonEmpty)
+    Ann.packedTopKIndexed(s, out, "vec_id", "embedding", codec, ScriptQv, k = 10, oversample = 4)
+      .getOrElse(sys.error(s"${codec.name} artifact missing right after build"))
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- r7 additions ----
@@ -91,38 +118,26 @@ private[graft] object EntriesLate {
     // two-phase quantized knn (ES 8.18 rescore_vector.oversample):
     // the int8 index ranks a coarse 4x window, raw vectors rescore
     "q_knn_rescore" -> ((s, d) =>
-      graft.sim.Ann.knnRescoreTopK(t(s, d, "embeddings"), "vec_id", "embedding",
+      Ann.packedTopK(t(s, d, "embeddings"), "vec_id", "embedding", PackedCodec.Int8,
         ScriptQv, k = 10, oversample = 4)),
     // ES 8.16 BBQ (1-bit binary quantization): coarse asymmetric
     // dot(q, sign(v)) from TWO PACKED LONGS per doc, oversampled
     // window rescored with exact cosine — the 32x-compressed storage
     // path beyond int8
     "q_knn_bbq" -> ((s, d) =>
-      graft.sim.Ann.bbqTopK(t(s, d, "embeddings"), "vec_id", "embedding",
+      Ann.packedTopK(t(s, d, "embeddings"), "vec_id", "embedding", PackedCodec.Bbq,
         ScriptQv, k = 10, oversample = 4)),
     // ES 8.18 int4_hnsw: half-byte codes (two per byte + scale
     // header), coarse pass reads ONLY the packed artifact, exact
     // rescore on the oversampled window — the 8x point between int8
     // and BBQ
     "q_knn_int4" -> ((s, d) =>
-      graft.sim.Ann.knnRescoreInt4TopK(t(s, d, "embeddings"), "vec_id", "embedding",
+      Ann.packedTopK(t(s, d, "embeddings"), "vec_id", "embedding", PackedCodec.Int4,
         ScriptQv, k = 10, oversample = 4)),
     // pack-once persisted form: the write pays the packing, the query
     // reads the ~8x-smaller packed table for the coarse pass —
     // hash-equal to on-the-fly q_knn_int4 (same oracle SQL)
-    "q_knn_int4_persisted" -> ((s, d) => {
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/embeddings.parquet").take(12)
-      val out = graft.index.IndexArtifacts.ensureArtifact("int4idx", srcFp)(
-        p => graft.index.IndexArtifacts.loadInt4(s, p, "embedding").nonEmpty)(
-        stage => graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
-          "graft.write.operation" -> "overwrite",
-          "graft.mapping.id" -> "vec_id",
-          "graft.index.int4" -> "embedding")))
-      graft.sim.Ann.knnRescoreInt4Indexed(s, out, "vec_id", "embedding",
-        ScriptQv, k = 10, oversample = 4)
-        .getOrElse(sys.error("int4 artifact missing right after build"))
-    }),
+    "q_knn_int4_persisted" -> ((s, d) => packedKnnPersisted(s, d, PackedCodec.Int4)),
     // product quantization (Jégou et al. 2011 — IVFADC's PQ half):
     // 4 code bytes per doc (128x vs float64), coarse pass = m LUT
     // lookups off the codes alone, exact rescore on the oversampled
@@ -241,14 +256,8 @@ private[graft] object EntriesLate {
     // codebook, the query's coarse pass reads m bytes/doc — hash-equal
     // to on-the-fly q_knn_pq (same oracle SQL)
     "q_knn_pq_persisted" -> ((s, d) => {
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/embeddings.parquet").take(12)
-      val out = graft.index.IndexArtifacts.ensureArtifact("pqidx", srcFp)(
-        p => graft.index.IndexArtifacts.loadPq(s, p, "embedding").nonEmpty)(
-        stage => graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
-          "graft.write.operation" -> "overwrite",
-          "graft.mapping.id" -> "vec_id",
-          "graft.index.pq" -> "embedding")))
+      val out = embeddingsIndex(s, d, "pqidx", "graft.index.pq" -> "embedding")(
+        p => IndexArtifacts.loadPq(s, p, "embedding").nonEmpty)
       graft.sim.Ann.pqTopKIndexed(s, out, "vec_id", "embedding",
         ScriptQv, k = 10, oversample = 4)
         .getOrElse(sys.error("pq artifact missing right after build"))
@@ -256,35 +265,11 @@ private[graft] object EntriesLate {
     // pack-once persisted int8 (the ES default int8_hnsw storage):
     // packed score bit-equals QuantizedCosine over the raw vector, so
     // the key is hash-equal to q_knn_rescore (same oracle SQL)
-    "q_knn_rescore_persisted" -> ((s, d) => {
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/embeddings.parquet").take(12)
-      val out = graft.index.IndexArtifacts.ensureArtifact("int8idx", srcFp)(
-        p => graft.index.IndexArtifacts.loadInt8(s, p, "embedding").nonEmpty)(
-        stage => graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
-          "graft.write.operation" -> "overwrite",
-          "graft.mapping.id" -> "vec_id",
-          "graft.index.int8" -> "embedding")))
-      graft.sim.Ann.knnRescoreInt8Indexed(s, out, "vec_id", "embedding",
-        ScriptQv, k = 10, oversample = 4)
-        .getOrElse(sys.error("int8 artifact missing right after build"))
-    }),
+    "q_knn_rescore_persisted" -> ((s, d) => packedKnnPersisted(s, d, PackedCodec.Int8)),
     // pack-once persisted BBQ: the write pays the sign-bit packing,
     // the query's coarse pass reads 16 bytes/doc — hash-equal to
     // on-the-fly q_knn_bbq (same oracle SQL)
-    "q_knn_bbq_persisted" -> ((s, d) => {
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/embeddings.parquet").take(12)
-      val out = graft.index.IndexArtifacts.ensureArtifact("bbqidx", srcFp)(
-        p => graft.index.IndexArtifacts.loadBbq(s, p, "embedding").nonEmpty)(
-        stage => graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
-          "graft.write.operation" -> "overwrite",
-          "graft.mapping.id" -> "vec_id",
-          "graft.index.bbq" -> "embedding")))
-      graft.sim.Ann.bbqTopKIndexed(s, out, "vec_id", "embedding",
-        ScriptQv, k = 10, oversample = 4)
-        .getOrElse(sys.error("bbq artifact missing right after build"))
-    }),
+    "q_knn_bbq_persisted" -> ((s, d) => packedKnnPersisted(s, d, PackedCodec.Bbq)),
     // IVFADC proper (Jégou et al. 2011 — FAISS's at-scale default):
     // IVF probe routes the query to nprobe of nCentroids lists, ADC
     // scores ONLY those lists' 4-byte codes, raw vectors rescore the
@@ -298,17 +283,10 @@ private[graft] object EntriesLate {
     // one write builds both artifacts; answer-equal to the on-the-fly
     // composition (same oracle SQL)
     "q_knn_ivfadc_persisted" -> ((s, d) => {
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/embeddings.parquet").take(12)
-      val out = graft.index.IndexArtifacts.ensureArtifact("ivfadcidx", srcFp)(
-        p => graft.index.IndexArtifacts.loadPq(s, p, "embedding", Some("vec_id")).nonEmpty &&
-          graft.index.IndexArtifacts.loadIvf(s, p, "embedding", Some("vec_id")).nonEmpty)(
-        stage => graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
-          "graft.write.operation" -> "overwrite",
-          "graft.mapping.id" -> "vec_id",
-          "graft.index.vectors" -> "embedding",
-          "graft.index.vectors.centroids" -> "16",
-          "graft.index.pq" -> "embedding")))
+      val out = embeddingsIndex(s, d, "ivfadcidx",
+        "graft.index.vectors" -> "embedding",
+        "graft.index.vectors.centroids" -> "16",
+        "graft.index.pq" -> "embedding")(ivfAdcFresh(s, _))
       graft.sim.Ann.ivfAdcTopKIndexed(s, out, "vec_id", "embedding",
         ScriptQv, k = 10, oversample = 4, nprobe = 4)
         .getOrElse(sys.error("ivfadc artifacts missing right after build"))
@@ -326,21 +304,14 @@ private[graft] object EntriesLate {
     // in SQL off the probed candidate count.
     "q_knn_ivfadc_trained" -> ((s, d) => {
       import s.implicits._
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/embeddings.parquet").take(12)
-      val out = graft.index.IndexArtifacts.ensureArtifact("ivfadctr", srcFp)(
-        p => graft.index.IndexArtifacts.loadPq(s, p, "embedding", Some("vec_id")).nonEmpty &&
-          graft.index.IndexArtifacts.loadIvf(s, p, "embedding", Some("vec_id")).nonEmpty)(
-        stage => graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
-          "graft.write.operation" -> "overwrite",
-          "graft.mapping.id" -> "vec_id",
-          "graft.index.vectors" -> "embedding",
-          "graft.index.vectors.centroids" -> "16",
-          "graft.index.vectors.fit" -> "kmeans",
-          "graft.index.pq" -> "embedding",
-          "graft.index.pq.m" -> "8",
-          "graft.index.pq.k" -> "64",
-          "graft.index.pq.fit" -> "lloyd-dist")))
+      val out = embeddingsIndex(s, d, "ivfadctr",
+        "graft.index.vectors" -> "embedding",
+        "graft.index.vectors.centroids" -> "16",
+        "graft.index.vectors.fit" -> "kmeans",
+        "graft.index.pq" -> "embedding",
+        "graft.index.pq.m" -> "8",
+        "graft.index.pq.k" -> "64",
+        "graft.index.pq.fit" -> "lloyd-dist")(ivfAdcFresh(s, _))
       // static oracle copies FROM the persisted model — 16 centroid
       // rows + 512 codebook rows, driver-tiny by contract
       val (centsDf, _) = graft.index.IndexArtifacts

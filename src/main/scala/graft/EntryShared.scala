@@ -209,7 +209,7 @@ private[graft] object EntryShared {
     graft.expr.GeoKernels.geohashKernel(lat, lon, 2).toString
   }
 
-  /** Mirror of Ann.bbqTopK: identical bit packing (two 32-bit halves
+  /** Mirror of the BBQ packed codec: identical bit packing (two 32-bit halves
     * as BIGINTs), identical ascending-dim fold for the asymmetric
     * estimate, same cosine formulation as the other vector oracles. */
   def bbqOracleSql(qv: Seq[Double], k: Int, ov: Int): String = {

@@ -53,8 +53,8 @@ object ScaleProbe {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     embR.count()
     val qv = (0 until 64).map(i => (i * 37 % 100) / 100.0 - 0.5)
-    val truth = graft.sim.Ann.knnRescoreTopK(embR, "vec_id", "embedding",
-      qv, k = 10, oversample = 8).select("id").collect().map(_.getLong(0)).toSet
+    val truth = graft.sim.Ann.packedTopK(embR, "vec_id", "embedding",
+      graft.index.PackedCodec.Int8, qv, k = 10, oversample = 8).select("id").collect().map(_.getLong(0)).toSet
     val r = (df: org.apache.spark.sql.DataFrame) =>
       df.select("id").collect().map(_.getLong(0)).count(truth.contains)
     (embR, qv, r)
@@ -416,7 +416,7 @@ object ScaleProbe {
     time("knn_rescore_10x") {
       // coarse quantized pass over the full corpus + exact rescore on
       // the 40-row window — the cost curve must track the corpus scan
-      graft.sim.Ann.knnRescoreTopK(emb, "vec_id", "embedding",
+      graft.sim.Ann.packedTopK(emb, "vec_id", "embedding", graft.index.PackedCodec.Int8,
         (0 until 64).map(i => (i * 37 % 100) / 100.0 - 0.5),
         k = 10, oversample = 4).count()
     }
@@ -431,12 +431,12 @@ object ScaleProbe {
     // passes read only their packed artifacts, so the curves should
     // order by bytes touched at IO-bound scale (CPU-bound here).
     time("knn_int4_10x") {
-      graft.sim.Ann.knnRescoreInt4TopK(emb, "vec_id", "embedding",
+      graft.sim.Ann.packedTopK(emb, "vec_id", "embedding", graft.index.PackedCodec.Int4,
         (0 until 64).map(i => (i * 37 % 100) / 100.0 - 0.5),
         k = 10, oversample = 4).count()
     }
     time("knn_bbq_10x") {
-      graft.sim.Ann.bbqTopK(emb, "vec_id", "embedding",
+      graft.sim.Ann.packedTopK(emb, "vec_id", "embedding", graft.index.PackedCodec.Bbq,
         (0 until 64).map(i => (i * 37 % 100) / 100.0 - 0.5),
         k = 10, oversample = 4).count()
     }
@@ -468,8 +468,8 @@ object ScaleProbe {
         0L
       }
       time("bbq_indexed_query_10x") {
-        graft.sim.Ann.bbqTopKIndexed(spark, idx, "vec_id", "embedding",
-          (0 until 64).map(i => (i * 37 % 100) / 100.0 - 0.5),
+        graft.sim.Ann.packedTopKIndexed(spark, idx, "vec_id", "embedding",
+          graft.index.PackedCodec.Bbq, (0 until 64).map(i => (i * 37 % 100) / 100.0 - 0.5),
           k = 10, oversample = 4).get.count()
       }
     }
@@ -657,8 +657,8 @@ object ScaleProbe {
       // the IVF-gated composition — the quality ledger beside the
       // wall-time ledger
       val qv = (0 until 64).map(i => (i * 37 % 100) / 100.0 - 0.5)
-      val truth = graft.sim.Ann.knnRescoreTopK(emb, "vec_id", "embedding",
-        qv, k = 10, oversample = 8).select("id").collect().map(_.getLong(0)).toSet
+      val truth = graft.sim.Ann.packedTopK(emb, "vec_id", "embedding",
+        graft.index.PackedCodec.Int8, qv, k = 10, oversample = 8).select("id").collect().map(_.getLong(0)).toSet
       def r(df: org.apache.spark.sql.DataFrame): Int =
         df.select("id").collect().map(_.getLong(0)).count(truth.contains)
       val sample = r(graft.sim.Ann.pqTopK(emb, "vec_id", "embedding", qv,
@@ -1025,7 +1025,7 @@ object ScaleProbe {
       // broadcast-bounded at k*oversample rows
       val emb10 = times(Tables.embeddings(spark, sfDir), "vec_id", 10000000L)
       val qv = (0 until 64).map(i => (i * 37 % 100) / 100.0 - 0.5)
-      graft.sim.Ann.bbqTopK(emb10, "vec_id", "embedding", qv, 10, 4).count()
+      graft.sim.Ann.packedTopK(emb10, "vec_id", "embedding", graft.index.PackedCodec.Bbq, qv, 10, 4).count()
     }
     time("highlight_order_10x") {
       // per-term window regex once per doc (materialized columns),

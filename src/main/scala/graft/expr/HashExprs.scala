@@ -1099,16 +1099,18 @@ object HashKernels {
       Array[Any](bestC, bestId))
   }
 
-  /** Dotted-quad IP string -> any-CIDR-block membership in ONE parse
-    * (r18): value-identical to the column formulation
+  /** Dotted-quad IP string -> any-CIDR-block membership in ONE parse:
+    * value-identical to the column formulation
     * `v >= net_i && v < net_i + block_i` OR-folded over blocks, with
     * `v = ipValue(ip)` = o1*2^24 + o2*2^16 + o3*2^8 + o4 — but the
     * column form re-evaluates the split-and-cast chain (and the
     * caller's derived-ip expression substituted into it) once PER
     * OCTET PER COMPARISON: 16 evaluations per row for a 2-block
     * match, which dominated q_esql_cidr's scan stage. One byte scan
-    * here. Malformed input (not 4 dot-separated digit runs) throws,
-    * matching the ANSI element_at/cast behavior of the column form. */
+    * here. Malformed input (not 4 dot-separated runs of 1-3 digits)
+    * throws, matching the ANSI element_at/cast behavior of the column
+    * form; the 3-digit bound also keeps an octet from spilling into its
+    * neighbours or overflowing the accumulator. */
   def ipInRangesKernel(ip: UTF8String, nets: Array[Long], blocks: Array[Long]): Boolean = {
     val b = ip.getBytes
     var v = 0L
@@ -1118,7 +1120,10 @@ object HashKernels {
     var i = 0
     while (i < b.length) {
       val c = b(i)
-      if (c >= '0' && c <= '9') { octet = octet * 10 + (c - '0'); digits += 1 }
+      if (c >= '0' && c <= '9') {
+        if (digits == 3) throw new IllegalArgumentException(s"bad dotted-quad ip: $ip")
+        octet = octet * 10 + (c - '0'); digits += 1
+      }
       else if (c == '.') {
         if (digits == 0 || nOct >= 3)
           throw new IllegalArgumentException(s"bad dotted-quad ip: $ip")

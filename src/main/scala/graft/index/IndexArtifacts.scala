@@ -2,8 +2,9 @@ package graft.index
 
 import graft.analysis.Analyzer
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JBool, JDouble, JInt, JString, JValue}
 
 /** Analyze-once persisted index artifacts — the Spark-native analog of
   * what an ES server amortizes across queries by maintaining a Lucene
@@ -45,29 +46,18 @@ import org.apache.spark.sql.functions._
   */
 object IndexArtifacts {
 
-  /** Build-once artifact directory keyed by source fingerprint, safe
-    * against CONCURRENT builders and stale generations (the r13
-    * advice): `loaded(finalDir)` probes for a fresh artifact; when
-    * absent, `build(stagingDir)` runs into a process-unique sibling
-    * path and the result is ATOMICALLY renamed into place — two
-    * concurrent harness runs over the same testdata can never observe
-    * a partially-written artifact at the final path, and the rename
-    * loser just deletes its staging copy and reads the winner's.
-    * Sibling dirs from EARLIER testdata generations (same kind+user
-    * prefix, different fingerprint) are best-effort swept, so /tmp
-    * stops accumulating one artifact tree per regeneration. */
   /** Artifact root: `graft.artifacts.root` on the active session (any
     * Hadoop-FS-addressable URI), defaulting to /tmp on the root's own
-    * filesystem. r15: the whole commit path runs on the Hadoop
-    * FileSystem API (staging dir + `fs.rename` commit), so artifacts
-    * are storage-portable; NIO is gone. ATOMICITY CAVEAT (r16):
-    * rename-as-commit is atomic on HDFS and local filesystems ONLY.
-    * S3A rename is a non-atomic O(data) copy — a concurrent reader on
-    * s3a:// can observe a partially-copied artifact that the exists()
-    * pre-check treats as committed. Point concurrent builders at an
-    * HDFS or local root; an S3A root is safe only when one process
-    * owns the build (the same restriction S3A puts on
-    * FileOutputCommitter v1, which this layer mirrors). */
+    * filesystem. The whole commit path runs on the Hadoop FileSystem
+    * API (staging dir + `fs.rename` commit), so artifacts are
+    * storage-portable. ATOMICITY CAVEAT: rename-as-commit is atomic on
+    * HDFS and local filesystems ONLY. S3A rename is a non-atomic
+    * O(data) copy — a concurrent reader on s3a:// can observe a
+    * partially-copied artifact that the exists() pre-check treats as
+    * committed. Point concurrent builders at an HDFS or local root; an
+    * S3A root is safe only when one process owns the build (the same
+    * restriction S3A puts on FileOutputCommitter v1, which this layer
+    * mirrors). */
   private def artifactRoot: String =
     org.apache.spark.sql.SparkSession.getActiveSession
       .flatMap(s => s.conf.getOption("graft.artifacts.root"))
@@ -82,8 +72,7 @@ object IndexArtifacts {
     * artifact roots may be Hadoop-FS URIs (hdfs://, s3a://) where a
     * java.io.File probe always returns false — the artifact would
     * rebuild every run only to lose the rename race and discard its
-    * staging copy (the r15 q_knn_pq_dist fix, shared here so every
-    * directory-shaped artifact probes the same way). */
+    * staging copy. */
   def fsDirExists(spark: SparkSession, p: String): Boolean = {
     val path = new Path(p)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -91,6 +80,17 @@ object IndexArtifacts {
     catch { case _: java.io.FileNotFoundException => false }
   }
 
+  /** Build-once artifact directory keyed by source fingerprint, safe
+    * against CONCURRENT builders and stale generations:
+    * `loaded(finalDir)` probes for a fresh artifact; when absent,
+    * `build(stagingDir)` runs into a process-unique sibling path and
+    * the result is ATOMICALLY renamed into place — two concurrent
+    * harness runs over the same testdata can never observe a
+    * partially-written artifact at the final path, and the rename
+    * loser just deletes its staging copy and reads the winner's.
+    * Sibling dirs from EARLIER testdata generations (same kind+user
+    * prefix, different fingerprint) are best-effort swept, so the root
+    * stops accumulating one artifact tree per regeneration. */
   def ensureArtifact(kind: String, srcFp: String)
       (loaded: String => Boolean)(build: String => Unit): String = {
     val user = System.getProperty("user.name")
@@ -146,10 +146,7 @@ object IndexArtifacts {
     finalDir
   }
 
-  val AnalysisDirName = "_graft_analysis"
-
-  def analysisDir(indexPath: String, textCol: String): String =
-    s"$indexPath/$AnalysisDirName/$textCol"
+  // ---- shared artifact lifecycle: meta, freshness, append audit ----
 
   /** md5 over the sorted (relative path, length, mtime) of every
     * non-hidden file under the index dir — changes on any append,
@@ -179,6 +176,109 @@ object IndexArtifacts {
     md.digest(lines.sorted.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
   }
+
+  private def metaPath(dir: String): Path = new Path(s"$dir/_graft_meta.json")
+
+  /** Stamp an artifact dir with the live-data fingerprint — its commit
+    * point, written LAST by every build and refresh. `fields` follow
+    * the fingerprint in order: strings print quoted and unescaped,
+    * doubles with one decimal, everything else as-is. The layout is
+    * byte-stable, so artifacts already on disk keep loading. */
+  private def writeMeta(
+      spark: SparkSession, indexPath: String, dir: String, fields: (String, Any)*): Unit = {
+    val json = (("fingerprint" -> dataFingerprint(spark, indexPath)) +: fields)
+      .map { case (k, v) =>
+        val value = v match {
+          case s: String => "\"" + s + "\""
+          case d: Double => String.format(java.util.Locale.ROOT, "%.1f", Double.box(d))
+          case other => other.toString
+        }
+        s""""$k":$value"""
+      }.mkString("{", ",", "}")
+    val path = metaPath(dir)
+    val out = path.getFileSystem(spark.sparkContext.hadoopConfiguration).create(path, true)
+    try out.write(json.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** The parsed meta JSON of an artifact dir, or None when absent. */
+  private def readMeta(spark: SparkSession, dir: String): Option[JValue] = {
+    val path = metaPath(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) return None
+    val in = fs.open(path)
+    try Some(org.json4s.jackson.JsonMethods.parse(
+      scala.io.Source.fromInputStream(in, "UTF-8").mkString))
+    finally in.close()
+  }
+
+  private def metaStr(meta: JValue, field: String): Option[String] =
+    meta \ field match { case JString(s) => Some(s); case _ => None }
+
+  private def metaInt(meta: JValue, field: String): Option[Int] =
+    meta \ field match { case JInt(i) => Some(i.toInt); case _ => None }
+
+  /** The meta of a FRESH artifact: present, its fingerprint equal to
+    * the live data's (`knownFp` when the caller already computed it —
+    * callers consulting several artifacts in one request skip re-
+    * walking the index dir), and built on `expectIdCol` when given.
+    * The artifact ids are the WRITER's graft.mapping.id values — a
+    * reader joining them against a different id column would get
+    * silently wrong rows, so a mismatch reads as absent. None means
+    * missing or stale: callers fall back to the on-the-fly path. */
+  private def freshMeta(
+      spark: SparkSession, indexPath: String, dir: String,
+      expectIdCol: Option[String] = None,
+      knownFp: => Option[String] = None): Option[JValue] =
+    readMeta(spark, dir).filter { meta =>
+      (metaStr(meta, "fingerprint"), metaStr(meta, "id_col")) match {
+        case (Some(fp), Some(idc)) =>
+          fp == knownFp.getOrElse(dataFingerprint(spark, indexPath)) &&
+            expectIdCol.forall(_ == idc)
+        case _ => false
+      }
+    }
+
+  /** Data rows whose id is absent from an artifact's stored `id`
+    * column — the increment a refresh adds. The stored ids rename
+    * before the join: an index whose own id column is literally "id"
+    * would otherwise make the condition ambiguous. */
+  private def unindexed(data: DataFrame, idCol: String, stored: DataFrame): DataFrame =
+    data.join(stored.select(col("id").as("__known_id")),
+      col(idCol) === col("__known_id"), "left_anti")
+
+  /** The append audit every incremental refresh runs before appending
+    * `fresh`: the anti-join SILENTLY drops an appended row whose id
+    * collides with a stored one (absent from the artifact behind a
+    * fresh meta stamp) and KEEPS null-id rows (null never equals). The
+    * batch must be non-null, internally distinct (unless `distinct` is
+    * false — the analysis artifact records duplicates in its ids_clean
+    * flag instead), and account for every data row not already stored
+    * (`data.count() == stored + n`). One aggregation, with `extra`
+    * columns riding along; the counts run only once the batch checks
+    * pass. Some(row of n, n_nonnull, n_distinct, extra...) when the
+    * append is safe, None when the caller must rebuild. */
+  private def auditAppend(
+      fresh: DataFrame, id: Column, data: DataFrame, stored: => Long,
+      distinct: Boolean = true, extra: Seq[Column] = Nil): Option[Row] = {
+    val audit = fresh.agg(count(lit(1)), count(id) +: countDistinct(id) +: extra: _*).head()
+    val n = audit.getLong(0)
+    if (n == audit.getLong(1) && (!distinct || n == audit.getLong(2)) &&
+        data.count() == stored + n) Some(audit)
+    else None
+  }
+
+  /** The index's rows with a non-null vector — what every vector
+    * artifact packs and every exact rescore reads. */
+  def liveVectors(
+      spark: SparkSession, indexPath: String, vecCol: String, fmt: String): DataFrame =
+    spark.read.format(fmt).load(indexPath).where(col(vecCol).isNotNull)
+
+  // ---- analysis (BM25 postings) ------------------------------------
+
+  val AnalysisDirName = "_graft_analysis"
+
+  def analysisDir(indexPath: String, textCol: String): String =
+    s"$indexPath/$AnalysisDirName/$textCol"
 
   /** Build (or rebuild) the analysis artifacts for one text column.
     * One corpus tokenize; postings land range-partitioned + sorted by
@@ -249,18 +349,9 @@ object IndexArtifacts {
   private def writeAnalysisMeta(
       spark: SparkSession, indexPath: String, dir: String,
       idCol: String, textCol: String, idsClean: Boolean,
-      nDocs: Long, nDl: Long, dlSum: Double): Unit = {
-    val fp = dataFingerprint(spark, indexPath)
-    val metaPath = new Path(s"$dir/_graft_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    out.write(
-      (s"""{"fingerprint":"$fp","id_col":"$idCol","text_col":"$textCol",""" +
-        s""""ids_clean":$idsClean,"n_docs":$nDocs,"n_dl":$nDl,""" +
-        s""""dl_sum":${String.format(java.util.Locale.ROOT, "%.1f", Double.box(dlSum))}}""")
-        .getBytes("UTF-8"))
-    out.close()
-  }
+      nDocs: Long, nDl: Long, dlSum: Double): Unit =
+    writeMeta(spark, indexPath, dir, "id_col" -> idCol, "text_col" -> textCol,
+      "ids_clean" -> idsClean, "n_docs" -> nDocs, "n_dl" -> nDl, "dl_sum" -> dlSum)
 
   /** Incremental analysis append — the daily-ingest shape for the BM25
     * artifact (an ES index analyzes only the new documents; a full
@@ -269,7 +360,7 @@ object IndexArtifacts {
     * Connector.save (the same contract an ES index has with its API) —
     * an out-of-band file replacement that preserves ids and row count
     * is indistinguishable from "nothing changed" here; any mutation
-    * that changes counts or ids is caught by the overlap check and
+    * that changes counts or ids is caught by the append audit and
     * rebuilt. Only docs absent from the stored doclen table tokenize;
     * their postings/doclen rows append, the df table merges
     * (vocabulary-sized work), and the stats scalars merge EXACTLY
@@ -286,11 +377,9 @@ object IndexArtifacts {
       textCol: String,
       fmt: String = "parquet"): Unit = {
     val dir = analysisDir(indexPath, textCol)
-    val metaJ = readMetaJson(spark, s"$dir/_graft_meta.json")
-    val merge = metaJ.flatMap { m =>
+    val merge = readMeta(spark, dir).flatMap { m =>
       (m \ "id_col", m \ "ids_clean", m \ "n_docs", m \ "n_dl", m \ "dl_sum") match {
-        case (org.json4s.JString(idc), org.json4s.JBool(clean),
-            org.json4s.JInt(nd), org.json4s.JInt(ndl), org.json4s.JDouble(ds))
+        case (JString(idc), JBool(clean), JInt(nd), JInt(ndl), JDouble(ds))
             if idc == idCol =>
           Some((clean, nd.toLong, ndl.toLong, ds))
         case _ => None
@@ -299,33 +388,26 @@ object IndexArtifacts {
     if (merge.isEmpty) return buildAnalysis(spark, indexPath, idCol, textCol, fmt)
     val (oldClean, oldNDocs, oldNDl, oldDlSum) = merge.get
 
-    val known = spark.read.parquet(s"$dir/doclen").select(col("id").as("__known_id"))
     val data = spark.read.format(fmt).load(indexPath)
-    val fresh = data.join(known, col(idCol) === col("__known_id"), "left_anti")
-    val toks = fresh.select(
+    val toks = unindexed(data, idCol, spark.read.parquet(s"$dir/doclen")).select(
       col(idCol).as("id"), Analyzer.tokens(col(textCol)).as("toks"))
       .withColumn("dl", size(col("toks")).cast("double"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val audit = toks.agg(
-        count(lit(1)).as("n"),
-        count(col("id")).as("n_nonnull"),
-        countDistinct(col("id")).as("n_distinct"),
-        count(col("dl")).as("n_dl"),
-        sum(col("dl")).as("dl_sum")).head()
-      val nFresh = audit.getLong(0)
-      // overlap check: every data row must be either known or fresh —
-      // a shortfall means an appended id collides with a stored one,
-      // and its row would be missing from the postings
-      val overlap = data.count() != oldNDocs + nFresh
-      if (overlap || nFresh != audit.getLong(1)) {
-        toks.unpersist(false)
-        return buildAnalysis(spark, indexPath, idCol, textCol, fmt)
+      // coverage counts against the stored n_docs; duplicate fresh ids
+      // only clear ids_clean below
+      val audit = auditAppend(toks, col("id"), data, oldNDocs, distinct = false,
+        extra = Seq(count(col("dl")), sum(col("dl")))) match {
+        case Some(a) => a
+        case None =>
+          toks.unpersist(false)
+          return buildAnalysis(spark, indexPath, idCol, textCol, fmt)
       }
+      val nFresh = audit.getLong(0)
       if (nFresh > 0) {
         // checkpointed (rows, not lineage): the appends below write
-        // into paths this lineage reads via the anti-join — the
-        // minhash-refresh recache lesson
+        // into paths this lineage reads via the anti-join — a lineage-
+        // carrying frame would be recomputed by recacheByPath
         val freshPost = toks
           .select(col("id"), col("dl"), explode(col("toks")).as("term"))
           .groupBy(col("term"), col("id"), col("dl"))
@@ -359,12 +441,35 @@ object IndexArtifacts {
           when(isnan(col("avgdl")), lit(null).cast("double"))
             .otherwise(col("avgdl")).as("avgdl"))
         .write.mode("overwrite").parquet(s"$dir/stats")
-      // merged cleanliness: no cross overlap (checked), fresh batch
+      // merged cleanliness: no cross overlap (audited), fresh batch
       // internally distinct, old batch was clean
       val idsClean = oldClean && nFresh == audit.getLong(2)
       writeAnalysisMeta(spark, indexPath, dir, idCol, textCol, idsClean,
         nDocs, nDl, dlSum)
     } finally toks.unpersist(false)
+  }
+
+  /** Load the artifacts if present AND fresh; None means missing or
+    * stale — callers fall back to on-the-fly analysis. Returns
+    * (postings, df, stats). `requireCleanIds`: the filter-context
+    * semi-join rewrite needs unique non-null ids (see buildAnalysis). */
+  def loadAnalysis(
+      spark: SparkSession,
+      indexPath: String,
+      textCol: String,
+      expectIdCol: Option[String] = None,
+      knownFp: => Option[String] = None,
+      requireCleanIds: Boolean = false): Option[(DataFrame, DataFrame, DataFrame)] = {
+    val dir = analysisDir(indexPath, textCol)
+    freshMeta(spark, indexPath, dir, expectIdCol, knownFp)
+      .filter(m => !requireCleanIds || (m \ "ids_clean" match {
+        case JBool(clean) => clean
+        case _ => false
+      }))
+      .map(_ => (
+        spark.read.parquet(s"$dir/postings"),
+        spark.read.parquet(s"$dir/df"),
+        spark.read.parquet(s"$dir/stats")))
   }
 
   // ---- persisted near-dup dedup artifact (MinHash/LSH) -------------
@@ -400,12 +505,18 @@ object IndexArtifacts {
       banded.repartitionByRange(col("band")).sortWithinPartitions(col("band"))
         .write.mode("overwrite").parquet(s"$dir/bands")
     } finally sh.unpersist(false)
-    writeMinhashMeta(spark, indexPath, idCol, textCol, numHashes, bands)
+    writeMinhashMeta(spark, indexPath, dir, idCol, textCol, numHashes, bands)
   }
 
   /** Incremental add (the daily-ingest shape): shingle+band ONLY the
     * docs absent from the stored artifact, append, re-stamp. Banding
-    * params come from the stored meta — an append can't change them. */
+    * params come from the stored meta — an append can't change them.
+    * The append audit guards minhashLshCrossIndexed's "answer-equal
+    * to the on-the-fly screen by construction" contract. Old
+    * EMPTY-SHINGLE docs are never stored (both build paths filter
+    * size(sh)>0), so they legitimately reappear in the increment each
+    * refresh and are filtered again — the coverage identity counts
+    * them on the fresh side, consistently. */
   def refreshMinhash(
       spark: SparkSession,
       indexPath: String,
@@ -413,76 +524,42 @@ object IndexArtifacts {
       textCol: String,
       fmt: String = "parquet"): Unit = {
     val dir = minhashDir(indexPath, textCol)
-    val (numHashes, bands) = readMinhashMeta(spark, s"$dir/_graft_meta.json") match {
-      case Some((_, idc, nh, nb)) =>
+    val (numHashes, bands) = readMeta(spark, dir)
+      .flatMap(m => for {
+        idc <- metaStr(m, "id_col"); nh <- metaInt(m, "num_hashes"); nb <- metaInt(m, "bands")
+      } yield {
         require(idc == idCol,
           s"minhash artifact was built on id '$idc', refresh asked for '$idCol'")
         (nh, nb)
-      case None => sys.error(s"refreshMinhash: no artifact meta under $dir")
-    }
+      })
+      .getOrElse(sys.error(s"refreshMinhash: no artifact meta under $dir"))
     val known = spark.read.parquet(s"$dir/shingles")
-      .select(col("id").as("__known_id"))
     val data = spark.read.format(fmt).load(indexPath)
-    val fresh = data.join(known, col(idCol) === col("__known_id"), "left_anti")
-    // Append audit (mirrors refreshAnalysis — the r13 advice gap): the
-    // anti-join SILENTLY drops an appended row whose id collides with
-    // a stored one (absent from the artifact, meta stamped fresh) and
-    // KEEPS null-id rows (null never equals, so they'd append as
-    // id-null artifact rows); either breaks minhashLshCrossIndexed's
-    // "answer-equal to the on-the-fly screen by construction"
-    // contract. The fresh batch must be non-null, internally
-    // distinct, and account for every non-stored data row — on any
-    // mismatch fall back to a full rebuild. Old EMPTY-SHINGLE docs
-    // are never stored (both build paths filter size(sh)>0), so they
-    // legitimately reappear in `fresh` each refresh and are filtered
-    // again — the coverage identity counts them on the fresh side,
-    // consistently.
-    val audit = fresh.agg(
-      count(lit(1)).as("n"),
-      count(col(idCol)).as("n_nonnull"),
-      countDistinct(col(idCol)).as("n_distinct")).head()
-    val nFresh = audit.getLong(0)
-    if (nFresh != audit.getLong(1) || nFresh != audit.getLong(2) ||
-        data.count() != known.count() + nFresh)
-      return buildMinhash(spark, indexPath, idCol, textCol, numHashes, bands, fmt)
-    if (nFresh > 0) {
-      // the Cut variant checkpoints: this method writes into the very
-      // path the anti-join reads, and a lineage-carrying frame would be
-      // recomputed (empty) by recacheByPath after the first write
-      val (sh, banded) =
-        graft.dedup.Dedup.minhashArtifactFramesCut(fresh, idCol, textCol, numHashes, bands)
-      try {
-        sh.write.mode("append").parquet(s"$dir/shingles")
-        banded.write.mode("append").parquet(s"$dir/bands")
-      } finally sh.unpersist(false)
+    val fresh = unindexed(data, idCol, known)
+    auditAppend(fresh, col(idCol), data, known.count()) match {
+      case None => buildMinhash(spark, indexPath, idCol, textCol, numHashes, bands, fmt)
+      case Some(audit) =>
+        if (audit.getLong(0) > 0) {
+          // the Cut variant checkpoints: this method writes into the
+          // very path the anti-join reads, and a lineage-carrying frame
+          // would be recomputed (empty) by recacheByPath after the
+          // first write
+          val (sh, banded) =
+            graft.dedup.Dedup.minhashArtifactFramesCut(fresh, idCol, textCol, numHashes, bands)
+          try {
+            sh.write.mode("append").parquet(s"$dir/shingles")
+            banded.write.mode("append").parquet(s"$dir/bands")
+          } finally sh.unpersist(false)
+        }
+        writeMinhashMeta(spark, indexPath, dir, idCol, textCol, numHashes, bands)
     }
-    writeMinhashMeta(spark, indexPath, idCol, textCol, numHashes, bands)
   }
 
   private def writeMinhashMeta(
-      spark: SparkSession, indexPath: String, idCol: String, textCol: String,
-      numHashes: Int, bands: Int): Unit = {
-    val fp = dataFingerprint(spark, indexPath)
-    val metaPath = new Path(s"${minhashDir(indexPath, textCol)}/_graft_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    out.write(
-      (s"""{"fingerprint":"$fp","id_col":"$idCol","text_col":"$textCol",""" +
-        s""""num_hashes":$numHashes,"bands":$bands}""").getBytes("UTF-8"))
-    out.close()
-  }
-
-  /** (fingerprint, id_col, num_hashes, bands) or None. */
-  private def readMinhashMeta(
-      spark: SparkSession, metaFile: String): Option[(String, String, Int, Int)] =
-    readMetaJson(spark, metaFile).flatMap { meta =>
-      (meta \ "fingerprint", meta \ "id_col", meta \ "num_hashes", meta \ "bands") match {
-        case (org.json4s.JString(fp), org.json4s.JString(idc),
-            org.json4s.JInt(nh), org.json4s.JInt(nb)) =>
-          Some((fp, idc, nh.toInt, nb.toInt))
-        case _ => None
-      }
-    }
+      spark: SparkSession, indexPath: String, dir: String, idCol: String, textCol: String,
+      numHashes: Int, bands: Int): Unit =
+    writeMeta(spark, indexPath, dir, "id_col" -> idCol, "text_col" -> textCol,
+      "num_hashes" -> numHashes, "bands" -> bands)
 
   /** Fresh (shingles, bands) frames, or None when missing, stale, or
     * built under different (idCol, numHashes, bands). */
@@ -494,15 +571,12 @@ object IndexArtifacts {
       numHashes: Int = 32,
       bands: Int = 8): Option[(DataFrame, DataFrame)] = {
     val dir = minhashDir(indexPath, textCol)
-    readMinhashMeta(spark, s"$dir/_graft_meta.json") match {
-      case Some((fp, idc, nh, nb))
-          if fp == dataFingerprint(spark, indexPath)
-            && expectIdCol.forall(_ == idc) && nh == numHashes && nb == bands =>
-        Some((
-          spark.read.parquet(s"$dir/shingles"),
-          spark.read.parquet(s"$dir/bands")))
-      case _ => None
-    }
+    freshMeta(spark, indexPath, dir, expectIdCol)
+      .filter(m => metaInt(m, "num_hashes").contains(numHashes) &&
+        metaInt(m, "bands").contains(bands))
+      .map(_ => (
+        spark.read.parquet(s"$dir/shingles"),
+        spark.read.parquet(s"$dir/bands")))
   }
 
   // ---- persisted vector index (IVF) --------------------------------
@@ -535,7 +609,7 @@ object IndexArtifacts {
       .repartitionByRange(col("cent_id"))
       .sortWithinPartitions(col("cent_id"))
       .write.mode("overwrite").parquet(s"$dir/assignments")
-    writeIvfMeta(spark, indexPath, idCol, vecCol)
+    writeVectorsMeta(spark, indexPath, vecCol, idCol)
   }
 
   /** IVF list-balance report over the persisted assignments: one row
@@ -583,345 +657,133 @@ object IndexArtifacts {
       fmt: String = "parquet"): Unit = {
     val dir = vectorsDir(indexPath, vecCol)
     val cents = spark.read.parquet(s"$dir/centroids")
-    // rename before the join: a corpus whose own id column is named
-    // "id" would otherwise make the condition ambiguous
     val known = spark.read.parquet(s"$dir/assignments")
-      .select(col("id").as("__known_id"))
     val data = spark.read.format(fmt).load(indexPath)
-    val fresh = data.join(known, col(idCol) === col("__known_id"), "left_anti")
-    // same append audit as refreshMinhash/refreshAnalysis (the r13
-    // advice class): an id colliding with a stored one silently
-    // vanishes from the artifact behind a fresh meta stamp, and
-    // null-id rows pass the anti-join; verify the fresh batch and the
-    // coverage identity, rebuild on any mismatch
-    val audit = fresh.agg(
-      count(lit(1)).as("n"),
-      count(col(idCol)).as("n_nonnull"),
-      countDistinct(col(idCol)).as("n_distinct")).head()
-    val nFresh = audit.getLong(0)
-    if (nFresh != audit.getLong(1) || nFresh != audit.getLong(2) ||
-        data.count() != known.count() + nFresh)
-      // checkpoint the centroid frame first: buildIvf OVERWRITES the
-      // very path this frame's lineage reads
-      return buildIvf(spark, indexPath, idCol, vecCol,
-        graft.util.Stages.truncate(cents), fmt)
-    if (nFresh > 0)
-      graft.sim.Ann.assignToCentroids(fresh, idCol, vecCol, cents)
-        .write.mode("append").parquet(s"$dir/assignments")
-    writeIvfMeta(spark, indexPath, idCol, vecCol)
+    val fresh = unindexed(data, idCol, known)
+    auditAppend(fresh, col(idCol), data, known.count()) match {
+      case None =>
+        // checkpoint the centroid frame first: buildIvf OVERWRITES the
+        // very path this frame's lineage reads
+        buildIvf(spark, indexPath, idCol, vecCol, graft.util.Stages.truncate(cents), fmt)
+      case Some(audit) =>
+        if (audit.getLong(0) > 0)
+          graft.sim.Ann.assignToCentroids(fresh, idCol, vecCol, cents)
+            .write.mode("append").parquet(s"$dir/assignments")
+        writeVectorsMeta(spark, indexPath, vecCol, idCol)
+    }
   }
-
-  private def writeIvfMeta(
-      spark: SparkSession, indexPath: String, idCol: String, vecCol: String): Unit =
-    writeVectorsMeta(spark, indexPath, vecCol, idCol)
 
   /** Stamp a vector-artifact dir (IVF lists, HNSW graphs) with the
     * live-data fingerprint — the artifact's commit point. */
   def writeVectorsMeta(
-      spark: SparkSession, indexPath: String, vecKey: String, idCol: String): Unit = {
-    val fp = dataFingerprint(spark, indexPath)
-    val metaPath = new Path(s"${vectorsDir(indexPath, vecKey)}/_graft_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    out.write(
-      s"""{"fingerprint":"$fp","id_col":"$idCol","vec_col":"$vecKey"}"""
-        .getBytes("UTF-8"))
-    out.close()
-  }
+      spark: SparkSession, indexPath: String, vecKey: String, idCol: String): Unit =
+    writeMeta(spark, indexPath, vectorsDir(indexPath, vecKey),
+      "id_col" -> idCol, "vec_col" -> vecKey)
 
   /** Freshness check alone (for artifacts whose payload loads inside
     * tasks rather than as frames, e.g. the HNSW graph table). */
   def vectorsMetaFresh(
       spark: SparkSession, indexPath: String, vecKey: String,
       expectIdCol: Option[String] = None): Boolean =
-    readMeta(spark, s"${vectorsDir(indexPath, vecKey)}/_graft_meta.json")
-      .exists { case (fp, idc, _) =>
-        fp == dataFingerprint(spark, indexPath) && expectIdCol.forall(_ == idc)
-      }
+    freshMeta(spark, indexPath, vectorsDir(indexPath, vecKey), expectIdCol).isDefined
 
-  /** Fresh (centroids, assignments) or None — same freshness contract
-    * as loadAnalysis, including the id-column check. */
+  /** Fresh (centroids, assignments) or None. */
   def loadIvf(
       spark: SparkSession,
       indexPath: String,
       vecCol: String,
       expectIdCol: Option[String] = None): Option[(DataFrame, DataFrame)] = {
     val dir = vectorsDir(indexPath, vecCol)
-    readMeta(spark, s"$dir/_graft_meta.json") match {
-      case Some((fp, idc, _)) if fp == dataFingerprint(spark, indexPath)
-          && expectIdCol.forall(_ == idc) =>
-        Some((
-          spark.read.parquet(s"$dir/centroids"),
-          spark.read.parquet(s"$dir/assignments")))
-      case _ => None
+    freshMeta(spark, indexPath, dir, expectIdCol).map(_ => (
+      spark.read.parquet(s"$dir/centroids"),
+      spark.read.parquet(s"$dir/assignments")))
+  }
+
+  // ---- persisted packed vectors (PackedCodec: int4, int8, BBQ) -----
+
+  def packedDir(codec: PackedCodec, indexPath: String, vecCol: String): String =
+    s"$indexPath/${codec.dirName}/$vecCol"
+
+  /** Pack-once artifact for a codec's quantized scan: one (id,
+    * packed...) table beside the index, the storage ES builds at
+    * segment-write time. Queries read ONLY this table for the coarse
+    * pass (Ann.packedTopKIndexed); the oversampled exact rescore
+    * touches the float vectors for O(k·oversample) rows via a
+    * broadcast semi-join. */
+  def buildPacked(
+      spark: SparkSession,
+      codec: PackedCodec,
+      indexPath: String,
+      idCol: String,
+      vecCol: String,
+      fmt: String = "parquet"): Unit = {
+    val corpus = spark.read.format(fmt).load(indexPath)
+    // the dimension probe (BBQ only) skips empty arrays: an empty
+    // vector must not define the packed layout
+    codec.pack(corpus, idCol, vecCol, corpus.select(size(col(vecCol)).as("d"))
+        .where(col("d") > 0).limit(1).head().getInt(0))
+      .write.mode("overwrite").parquet(s"${packedDir(codec, indexPath, vecCol)}/packed")
+    writePackedMeta(spark, codec, indexPath, idCol, vecCol)
+  }
+
+  /** Incremental add: pack ONLY the docs absent from the stored table,
+    * after the shared append audit over the packable (non-null-vector)
+    * subset — pack drops null-vector rows, so counting them would fail
+    * the coverage identity on every legitimate append and silently
+    * degrade refresh to full rebuilds. A dimension-bound codec also
+    * rebuilds when the appended dimension differs from the built one
+    * (or either side has no probe-able dimension): a drift would
+    * append bit layouts inconsistent with the stored rows. */
+  def refreshPacked(
+      spark: SparkSession,
+      codec: PackedCodec,
+      indexPath: String,
+      idCol: String,
+      vecCol: String,
+      fmt: String = "parquet"): Unit = {
+    val dir = packedDir(codec, indexPath, vecCol)
+    val known = spark.read.parquet(s"$dir/packed")
+    val data = liveVectors(spark, indexPath, vecCol, fmt)
+    val fresh = unindexed(data, idCol, known)
+    def rebuild(): Unit = buildPacked(spark, codec, indexPath, idCol, vecCol, fmt)
+    auditAppend(fresh, col(idCol), data, known.count()) match {
+      case None => rebuild()
+      case Some(audit) =>
+        if (audit.getLong(0) > 0) {
+          def dims(df: DataFrame): DataFrame =
+            df.select(size(col(vecCol)).as("d")).where(col("d") > 0)
+          lazy val builtDim = dims(data.join(known.select(col("id").as("__known_id")),
+            col(idCol) === col("__known_id"), "semi"))
+            .limit(1).collect().headOption.map(_.getInt(0))
+          if (codec.dimBound) {
+            val freshDims = dims(fresh).distinct().limit(2).collect().map(_.getInt(0))
+            if (freshDims.length != 1 || !builtDim.contains(freshDims.head)) return rebuild()
+          }
+          codec.pack(fresh, idCol, vecCol, builtDim.get)
+            .write.mode("append").parquet(s"$dir/packed")
+        }
+        writePackedMeta(spark, codec, indexPath, idCol, vecCol)
     }
   }
 
-  // ---- persisted int4 quantized vectors (`int4_hnsw` storage) -----
+  private def writePackedMeta(
+      spark: SparkSession, codec: PackedCodec, indexPath: String,
+      idCol: String, vecCol: String): Unit =
+    writeMeta(spark, indexPath, packedDir(codec, indexPath, vecCol),
+      "id_col" -> idCol, "vec_col" -> vecCol)
 
-  val Int4DirName = "_graft_int4"
-
-  def int4Dir(indexPath: String, vecCol: String): String =
-    s"$indexPath/$Int4DirName/$vecCol"
-
-  /** Pack-once artifact for the int4 quantized scan: one (id, packed
-    * half-byte codes) table — 8 bytes of scale + dim/2 code bytes per
-    * doc, ~8x smaller than the float column. Queries read ONLY this
-    * table for the coarse pass (Ann.knnRescoreInt4Indexed); the
-    * oversampled exact rescore touches the float vectors for
-    * O(k·oversample) rows via a broadcast semi-join. The ES analog is
-    * the `int4_hnsw` index built at segment-write time. */
-  def buildInt4(
+  /** Fresh packed frame (the codec's `pack` schema) or None. */
+  def loadPacked(
       spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = int4Dir(indexPath, vecCol)
-    val corpus = spark.read.format(fmt).load(indexPath)
-    packInt4(corpus, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$dir/packed")
-    writeInt4Meta(spark, indexPath, idCol, vecCol)
-  }
-
-  /** Incremental add with the same append audit as refreshMinhash /
-    * refreshIvf: fresh batch non-null + internally distinct + the
-    * coverage identity, any mismatch rebuilds. */
-  def refreshInt4(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = int4Dir(indexPath, vecCol)
-    val known = spark.read.parquet(s"$dir/packed")
-      .select(col("id").as("__known_id"))
-    // the packable subset only: packInt4 drops null-vector rows, so
-    // counting them here would fail the coverage identity on every
-    // legitimate append and silently degrade refresh to full rebuilds
-    val data = spark.read.format(fmt).load(indexPath)
-      .where(col(vecCol).isNotNull)
-    val fresh = data.join(known, col(idCol) === col("__known_id"), "left_anti")
-    val audit = fresh.agg(
-      count(lit(1)).as("n"),
-      count(col(idCol)).as("n_nonnull"),
-      countDistinct(col(idCol)).as("n_distinct")).head()
-    val nFresh = audit.getLong(0)
-    if (nFresh != audit.getLong(1) || nFresh != audit.getLong(2) ||
-        data.count() != known.count() + nFresh)
-      return buildInt4(spark, indexPath, idCol, vecCol, fmt)
-    if (nFresh > 0)
-      packInt4(fresh, idCol, vecCol).write.mode("append").parquet(s"$dir/packed")
-    writeInt4Meta(spark, indexPath, idCol, vecCol)
-  }
-
-  private def packInt4(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
-    corpus
-      .where(col(vecCol).isNotNull)
-      .select(col(idCol).as("id"),
-        org.apache.spark.sql.GraftBridge.column(graft.expr.Int4Pack(
-          org.apache.spark.sql.GraftBridge.expression(
-            col(vecCol).cast("array<double>")))).as("pk"))
-
-  private def writeInt4Meta(
-      spark: SparkSession, indexPath: String, idCol: String, vecCol: String): Unit = {
-    val fp = dataFingerprint(spark, indexPath)
-    val metaPath = new Path(s"${int4Dir(indexPath, vecCol)}/_graft_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    out.write(
-      s"""{"fingerprint":"$fp","id_col":"$idCol","vec_col":"$vecCol"}"""
-        .getBytes("UTF-8"))
-    out.close()
-  }
-
-  /** Fresh (id, packed) frame or None — loadIvf's freshness contract. */
-  def loadInt4(
-      spark: SparkSession,
+      codec: PackedCodec,
       indexPath: String,
       vecCol: String,
       expectIdCol: Option[String] = None): Option[DataFrame] = {
-    val dir = int4Dir(indexPath, vecCol)
-    readMeta(spark, s"$dir/_graft_meta.json") match {
-      case Some((fp, idc, _)) if fp == dataFingerprint(spark, indexPath)
-          && expectIdCol.forall(_ == idc) =>
-        Some(spark.read.parquet(s"$dir/packed"))
-      case _ => None
-    }
+    val dir = packedDir(codec, indexPath, vecCol)
+    freshMeta(spark, indexPath, dir, expectIdCol).map(_ => spark.read.parquet(s"$dir/packed"))
   }
 
-  val Int8DirName = "_graft_int8"
-
-  def int8Dir(indexPath: String, vecCol: String): String =
-    s"$indexPath/$Int8DirName/$vecCol"
-
-  /** Pack-once int8 artifact — the ES default (`int8_hnsw`) 4x
-    * storage, same shape as the int4 family: 8-byte scale header +
-    * one code byte per dim. */
-  def buildInt8(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = int8Dir(indexPath, vecCol)
-    val corpus = spark.read.format(fmt).load(indexPath)
-    packInt8(corpus, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$dir/packed")
-    writeInt8Meta(spark, indexPath, idCol, vecCol)
-  }
-
-  /** Incremental add with the standard packable-subset append audit. */
-  def refreshInt8(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = int8Dir(indexPath, vecCol)
-    val known = spark.read.parquet(s"$dir/packed")
-      .select(col("id").as("__known_id"))
-    val data = spark.read.format(fmt).load(indexPath)
-      .where(col(vecCol).isNotNull)
-    val fresh = data.join(known, col(idCol) === col("__known_id"), "left_anti")
-    val audit = fresh.agg(
-      count(lit(1)).as("n"),
-      count(col(idCol)).as("n_nonnull"),
-      countDistinct(col(idCol)).as("n_distinct")).head()
-    val nFresh = audit.getLong(0)
-    if (nFresh != audit.getLong(1) || nFresh != audit.getLong(2) ||
-        data.count() != known.count() + nFresh)
-      return buildInt8(spark, indexPath, idCol, vecCol, fmt)
-    if (nFresh > 0)
-      packInt8(fresh, idCol, vecCol).write.mode("append").parquet(s"$dir/packed")
-    writeInt8Meta(spark, indexPath, idCol, vecCol)
-  }
-
-  private def packInt8(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
-    corpus
-      .where(col(vecCol).isNotNull)
-      .select(col(idCol).as("id"),
-        org.apache.spark.sql.GraftBridge.column(graft.expr.Int8Pack(
-          org.apache.spark.sql.GraftBridge.expression(
-            col(vecCol).cast("array<double>")))).as("pk"))
-
-  private def writeInt8Meta(
-      spark: SparkSession, indexPath: String, idCol: String, vecCol: String): Unit = {
-    val fp = dataFingerprint(spark, indexPath)
-    val metaPath = new Path(s"${int8Dir(indexPath, vecCol)}/_graft_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    out.write(
-      s"""{"fingerprint":"$fp","id_col":"$idCol","vec_col":"$vecCol"}"""
-        .getBytes("UTF-8"))
-    out.close()
-  }
-
-  /** Fresh (id, packed) frame or None. */
-  def loadInt8(
-      spark: SparkSession,
-      indexPath: String,
-      vecCol: String,
-      expectIdCol: Option[String] = None): Option[DataFrame] = {
-    val dir = int8Dir(indexPath, vecCol)
-    readMeta(spark, s"$dir/_graft_meta.json") match {
-      case Some((fp, idc, _)) if fp == dataFingerprint(spark, indexPath)
-          && expectIdCol.forall(_ == idc) =>
-        Some(spark.read.parquet(s"$dir/packed"))
-      case _ => None
-    }
-  }
-
-  val BbqDirName = "_graft_bbq"
-
-  def bbqDir(indexPath: String, vecCol: String): String =
-    s"$indexPath/$BbqDirName/$vecCol"
-
-  /** Pack-once BBQ artifact: (id, b_lo, b_hi) sign bits — 16 bytes
-    * per doc (32x vs float64), packed at write time. */
-  def buildBbq(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = bbqDir(indexPath, vecCol)
-    val corpus = spark.read.format(fmt).load(indexPath)
-    val dim = corpus.select(size(col(vecCol)).as("d"))
-      .where(col("d") > 0).limit(1).head().getInt(0)
-    graft.sim.Ann.bbqPack(corpus, idCol, vecCol, dim)
-      .write.mode("overwrite").parquet(s"$dir/packed")
-    writeBbqMeta(spark, indexPath, idCol, vecCol)
-  }
-
-  /** Incremental add with the standard packable-subset append audit. */
-  def refreshBbq(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = bbqDir(indexPath, vecCol)
-    val known = spark.read.parquet(s"$dir/packed")
-      .select(col("id").as("__known_id"))
-    val data = spark.read.format(fmt).load(indexPath)
-      .where(col(vecCol).isNotNull)
-    val fresh = data.join(known, col(idCol) === col("__known_id"), "left_anti")
-    val audit = fresh.agg(
-      count(lit(1)).as("n"),
-      count(col(idCol)).as("n_nonnull"),
-      countDistinct(col(idCol)).as("n_distinct")).head()
-    val nFresh = audit.getLong(0)
-    if (nFresh != audit.getLong(1) || nFresh != audit.getLong(2) ||
-        data.count() != known.count() + nFresh)
-      return buildBbq(spark, indexPath, idCol, vecCol, fmt)
-    if (nFresh > 0) {
-      // probe dims like buildBbq does (d > 0 guard: an appended
-      // empty-array vector must not define the dim), and compare the
-      // appended dim to the dim the artifact was built with — a drift
-      // would silently append bit layouts inconsistent with the
-      // existing packed rows, so rebuild instead
-      val builtDim = data.join(known, col(idCol) === col("__known_id"), "semi")
-        .select(size(col(vecCol)).as("d")).where(col("d") > 0)
-        .limit(1).collect().headOption.map(_.getInt(0))
-      val freshDims = fresh.select(size(col(vecCol)).as("d"))
-        .where(col("d") > 0).distinct().limit(2).collect().map(_.getInt(0))
-      // no probe-able dim on either side, or a drift between them:
-      // fall back to the full rebuild like every other inconsistency
-      if (freshDims.length != 1 || !builtDim.contains(freshDims.head))
-        return buildBbq(spark, indexPath, idCol, vecCol, fmt)
-      graft.sim.Ann.bbqPack(fresh, idCol, vecCol, builtDim.get)
-        .write.mode("append").parquet(s"$dir/packed")
-    }
-    writeBbqMeta(spark, indexPath, idCol, vecCol)
-  }
-
-  private def writeBbqMeta(
-      spark: SparkSession, indexPath: String, idCol: String, vecCol: String): Unit = {
-    val fp = dataFingerprint(spark, indexPath)
-    val metaPath = new Path(s"${bbqDir(indexPath, vecCol)}/_graft_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    out.write(
-      s"""{"fingerprint":"$fp","id_col":"$idCol","vec_col":"$vecCol"}"""
-        .getBytes("UTF-8"))
-    out.close()
-  }
-
-  /** Fresh (id, b_lo, b_hi) frame or None. */
-  def loadBbq(
-      spark: SparkSession,
-      indexPath: String,
-      vecCol: String,
-      expectIdCol: Option[String] = None): Option[DataFrame] = {
-    val dir = bbqDir(indexPath, vecCol)
-    readMeta(spark, s"$dir/_graft_meta.json") match {
-      case Some((fp, idc, _)) if fp == dataFingerprint(spark, indexPath)
-          && expectIdCol.forall(_ == idc) =>
-        Some(spark.read.parquet(s"$dir/packed"))
-      case _ => None
-    }
-  }
+  // ---- persisted product-quantization codes (PQ) -------------------
 
   val PqDirName = "_graft_pq"
 
@@ -970,11 +832,15 @@ object IndexArtifacts {
     Seq(cb.toSeq).toDF("cb").write.mode("overwrite").parquet(s"$dir/codebook")
     graft.sim.Ann.pqEncodeFrame(corpus, idCol, vecCol, cb, m, k)
       .write.mode("overwrite").parquet(s"$dir/codes")
-    writePqMeta(spark, indexPath, idCol, vecCol, m, k, fit, fitSampleN, fitIters)
+    writeMeta(spark, indexPath, dir, "id_col" -> idCol, "vec_col" -> vecCol,
+      "m" -> m, "k" -> k, "fit" -> fit, "fit_sample_n" -> fitSampleN, "fit_iters" -> fitIters)
   }
 
-  /** Incremental add under the FROZEN codebook, with the standard
-    * append audit on the packable (non-null-vector) subset. */
+  /** Incremental add under the FROZEN codebook, with the shared append
+    * audit on the packable (non-null-vector) subset. A rebuild re-fits
+    * the SAME way the artifact was built, with the recorded fit
+    * hyperparams — a lloyd artifact silently rebuilt as sample would
+    * degrade recall behind a fresh meta stamp. */
   def refreshPq(
       spark: SparkSession,
       indexPath: String,
@@ -982,147 +848,43 @@ object IndexArtifacts {
       vecCol: String,
       fmt: String = "parquet"): Unit = {
     val dir = pqDir(indexPath, vecCol)
-    val (mk, cb) = readPqCodebook(spark, dir).getOrElse(
-      return sys.error(s"refreshPq without a built artifact at $dir"))
-    val (m, k) = mk
-    // the rebuild path must re-fit the SAME way the artifact was
-    // built — a lloyd artifact silently rebuilt as sample would
-    // degrade recall behind a fresh meta stamp
-    val metaJson = readMetaJson(spark, s"$dir/_graft_meta.json")
-    val fit = metaJson.map(meta => meta \ "fit" match {
-        case org.json4s.JString(f) => f
-        case _ => "sample"
-      }).getOrElse("sample")
-    // fit hyperparams recorded at build time ride every rebuild too
-    def metaInt(field: String, dflt: Int): Int =
-      metaJson.map(meta => meta \ field match {
-        case org.json4s.JInt(v) => v.toInt
-        case _ => dflt
-      }).getOrElse(dflt)
-    val fitSampleN = metaInt("fit_sample_n", 65536)
-    val fitIters = metaInt("fit_iters", 5)
+    val (meta, (m, k), cb) = readMeta(spark, dir)
+      .flatMap(meta => pqCodebook(spark, dir, meta).map { case (mk, cb) => (meta, mk, cb) })
+      .getOrElse(sys.error(s"refreshPq without a built artifact at $dir"))
+    val fit = metaStr(meta, "fit").getOrElse("sample")
+    val fitSampleN = metaInt(meta, "fit_sample_n").getOrElse(65536)
+    val fitIters = metaInt(meta, "fit_iters").getOrElse(5)
     val known = spark.read.parquet(s"$dir/codes")
-      .select(col("id").as("__known_id"))
-    val data = spark.read.format(fmt).load(indexPath)
-      .where(col(vecCol).isNotNull)
-    val fresh = data.join(known, col(idCol) === col("__known_id"), "left_anti")
-    val audit = fresh.agg(
-      count(lit(1)).as("n"),
-      count(col(idCol)).as("n_nonnull"),
-      countDistinct(col(idCol)).as("n_distinct")).head()
-    val nFresh = audit.getLong(0)
-    if (nFresh != audit.getLong(1) || nFresh != audit.getLong(2) ||
-        data.count() != known.count() + nFresh)
-      return buildPq(spark, indexPath, idCol, vecCol, m, k, fmt, fit, fitSampleN, fitIters)
-    if (nFresh > 0)
-      graft.sim.Ann.pqEncodeFrame(fresh, idCol, vecCol, cb, m, k)
-        .write.mode("append").parquet(s"$dir/codes")
-    writePqMeta(spark, indexPath, idCol, vecCol, m, k, fit, fitSampleN, fitIters)
-  }
-
-  private def writePqMeta(
-      spark: SparkSession, indexPath: String, idCol: String, vecCol: String,
-      m: Int, k: Int, fit: String,
-      fitSampleN: Int = 65536, fitIters: Int = 5): Unit = {
-    val fp = dataFingerprint(spark, indexPath)
-    val metaPath = new Path(s"${pqDir(indexPath, vecCol)}/_graft_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    out.write(
-      (s"""{"fingerprint":"$fp","id_col":"$idCol","vec_col":"$vecCol",""" +
-        s""""m":$m,"k":$k,"fit":"$fit","fit_sample_n":$fitSampleN,""" +
-        s""""fit_iters":$fitIters}""").getBytes("UTF-8"))
-    out.close()
-  }
-
-  private def readPqCodebook(
-      spark: SparkSession, dir: String): Option[((Int, Int), Array[Double])] =
-    readMetaJson(spark, s"$dir/_graft_meta.json").flatMap { meta =>
-      (meta \ "m", meta \ "k") match {
-        case (org.json4s.JInt(m), org.json4s.JInt(k)) =>
-          val cb = spark.read.parquet(s"$dir/codebook")
-            .head().getSeq[Double](0).toArray
-          Some(((m.toInt, k.toInt), cb))
-        case _ => None
-      }
+    val data = liveVectors(spark, indexPath, vecCol, fmt)
+    val fresh = unindexed(data, idCol, known)
+    auditAppend(fresh, col(idCol), data, known.count()) match {
+      case None =>
+        buildPq(spark, indexPath, idCol, vecCol, m, k, fmt, fit, fitSampleN, fitIters)
+      case Some(audit) =>
+        if (audit.getLong(0) > 0)
+          graft.sim.Ann.pqEncodeFrame(fresh, idCol, vecCol, cb, m, k)
+            .write.mode("append").parquet(s"$dir/codes")
+        writeMeta(spark, indexPath, dir, "id_col" -> idCol, "vec_col" -> vecCol,
+          "m" -> m, "k" -> k, "fit" -> fit, "fit_sample_n" -> fitSampleN,
+          "fit_iters" -> fitIters)
     }
+  }
 
-  /** Fresh ((m, k), codebook, codes frame) or None — the loadInt4
-    * freshness contract. */
+  /** ((m, k), flat codebook) of a PQ artifact whose meta is `meta`. */
+  private def pqCodebook(
+      spark: SparkSession, dir: String, meta: JValue): Option[((Int, Int), Array[Double])] =
+    for (m <- metaInt(meta, "m"); k <- metaInt(meta, "k")) yield
+      ((m, k), spark.read.parquet(s"$dir/codebook").head().getSeq[Double](0).toArray)
+
+  /** Fresh ((m, k), codebook, codes frame) or None. */
   def loadPq(
       spark: SparkSession,
       indexPath: String,
       vecCol: String,
       expectIdCol: Option[String] = None): Option[((Int, Int), Array[Double], DataFrame)] = {
     val dir = pqDir(indexPath, vecCol)
-    readMeta(spark, s"$dir/_graft_meta.json") match {
-      case Some((fp, idc, _)) if fp == dataFingerprint(spark, indexPath)
-          && expectIdCol.forall(_ == idc) =>
-        readPqCodebook(spark, dir).map { case (mk, cb) =>
-          (mk, cb, spark.read.parquet(s"$dir/codes"))
-        }
-      case _ => None
-    }
-  }
-
-  /** (fingerprint, id_col, ids_clean) from an artifact meta file, or
-    * None. ids_clean defaults false when absent (vector metas never
-    * record it; only the analysis build audits ids). */
-  private def readMeta(
-      spark: SparkSession, metaFile: String): Option[(String, String, Boolean)] =
-    readMetaJson(spark, metaFile).flatMap { meta =>
-      (meta \ "fingerprint", meta \ "id_col") match {
-        case (org.json4s.JString(fp), org.json4s.JString(idc)) =>
-          val clean = meta \ "ids_clean" match {
-            case org.json4s.JBool(b) => b
-            case _ => false
-          }
-          Some((fp, idc, clean))
-        case _ => None
-      }
-    }
-
-  /** The parsed meta JSON of any artifact dir, or None when absent. */
-  private def readMetaJson(
-      spark: SparkSession, metaFile: String): Option[org.json4s.JValue] = {
-    val metaPath = new Path(metaFile)
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(metaPath)) return None
-    val in = fs.open(metaPath)
-    try Some(org.json4s.jackson.JsonMethods.parse(
-      scala.io.Source.fromInputStream(in, "UTF-8").mkString))
-    finally in.close()
-  }
-
-  /** Load the artifacts if present AND fresh (meta fingerprint matches
-    * the live data files); None means missing or stale — callers fall
-    * back to on-the-fly analysis. Returns (postings, df, stats). */
-  /** `expectIdCol`: the posting ids are the WRITER's graft.mapping.id
-    * values — a reader joining them against a different id column
-    * would get silently wrong rows, so a mismatch reads as
-    * no-artifact and the caller's on-the-fly path (which scores by
-    * the reader's own column) takes over. `knownFp`: callers that
-    * consult several artifacts in one request pass the fingerprint
-    * they already computed instead of re-walking the index dir per
-    * lookup. */
-  def loadAnalysis(
-      spark: SparkSession,
-      indexPath: String,
-      textCol: String,
-      expectIdCol: Option[String] = None,
-      knownFp: => Option[String] = None,
-      requireCleanIds: Boolean = false): Option[(DataFrame, DataFrame, DataFrame)] = {
-    val dir = analysisDir(indexPath, textCol)
-    readMeta(spark, s"$dir/_graft_meta.json") match {
-      case Some((fp, idc, idsClean))
-          if fp == knownFp.getOrElse(dataFingerprint(spark, indexPath))
-            && expectIdCol.forall(_ == idc)
-            && (!requireCleanIds || idsClean) =>
-        Some((
-          spark.read.parquet(s"$dir/postings"),
-          spark.read.parquet(s"$dir/df"),
-          spark.read.parquet(s"$dir/stats")))
-      case _ => None
-    }
+    freshMeta(spark, indexPath, dir, expectIdCol)
+      .flatMap(meta => pqCodebook(spark, dir, meta))
+      .map { case (mk, cb) => (mk, cb, spark.read.parquet(s"$dir/codes")) }
   }
 }

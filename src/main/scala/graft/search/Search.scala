@@ -2018,15 +2018,17 @@ object Search {
     val leaves = registry.where(col("kind") =!= "bool")
     val bools = registry.where(col("kind") === "bool")
       .select(col("query_id"), col("path").as("_bpath"), col("msm"))
-    // registry validation as ONE job (r18 — was two: a distinct-kind
-    // collect + a max-depth head): unknown kinds evaluate as NOTHING
-    // in the leaf union — the query would silently lose clauses — and
-    // an empty/leafless registry has no defined fold depth
+    // registry validation as ONE job (distinct bad kinds + max depth):
+    // unknown kinds evaluate as NOTHING in the leaf union — the query
+    // would silently lose clauses — and an empty/leafless registry has
+    // no defined fold depth. A NULL kind is unknown too: it is named
+    // "<null>" so collect_set (which skips NULLs) reports it.
     val knownKinds = Set("bool", "term", "range", "phrase", "prefix", "wildcard")
     val depthOf = when(col("path") === "", lit(0))
       .otherwise(size(split(col("path"), "/")))
+    val kind = coalesce(col("kind"), lit("<null>"))
     val vRow = registry.agg(
-      collect_set(when(!col("kind").isInCollection(knownKinds), col("kind"))).as("bad"),
+      collect_set(when(!kind.isInCollection(knownKinds), kind)).as("bad"),
       max(depthOf).as("d")).head()
     val badKinds = vRow.getSeq[String](0)
     require(badKinds.isEmpty,
@@ -2035,11 +2037,11 @@ object Search {
       "percolateBool needs a non-empty registry with at least one leaf clause")
     val maxDepth = vRow.getInt(1)
 
-    // r18: one term-keyed exchange shared by BOTH corpus-term
-    // consumers (df stats, candidate join) via ReusedExchange — the
-    // percolateDsl rationale and the same pruning-alignment tricks
-    // (explicit isNotNull, df counts the id column); replaces the r17
-    // cache+count+final-localCheckpoint triple.
+    // one term-keyed exchange shared by BOTH corpus-term consumers
+    // (df stats, candidate join) via ReusedExchange — the percolateDsl
+    // rationale and the same pruning-alignment tricks (explicit
+    // isNotNull, df counts the id column); nothing is cached or
+    // checkpointed.
     val docTerms = docs
       .select(col(idCol).as("id"), explode(Analyzer.termSet(col(textCol))).as("term"))
       .where(col("id").isNotNull)

@@ -1,7 +1,8 @@
 package graft.sim
 
 import graft.dedup.Vectors
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.index.{IndexArtifacts, PackedCodec}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.Num
@@ -89,7 +90,6 @@ object Ann {
     * runs the compiled DotProductSim kernel — `planes` kernel calls
     * per row, not `planes` interpreted aggregate() folds. */
   def srpBucket(vec: Column, dim: Int, table: Int, planes: Int): Column = {
-    import org.apache.spark.sql.GraftBridge
     val bits = (0 until planes).map { p =>
       val dotp = GraftBridge.column(graft.expr.DotProductSim(
         GraftBridge.expression(vec),
@@ -683,7 +683,6 @@ object Ann {
       queryVecs: Seq[Seq[Double]],
       k: Int): DataFrame = {
     require(queryVecs.nonEmpty, "maxSimTopK needs at least one query vector")
-    import org.apache.spark.sql.GraftBridge
     val dots = queryVecs.zipWithIndex.map { case (q, i) =>
       GraftBridge.column(graft.expr.DotProductSim(
         GraftBridge.expression(col(vecCol)),
@@ -854,7 +853,6 @@ object Ann {
       clauses: Seq[(Seq[Double], Int)], // (query_vector, k_per_clause)
       k: Int): DataFrame = {
     require(clauses.nonEmpty, "multi-knn needs at least one clause")
-    import org.apache.spark.sql.GraftBridge
     val windows = clauses.map { case (qv, kc) =>
       val q = array(qv.map(lit): _*)
       corpus.select(col(idCol).as("id"),
@@ -873,255 +871,83 @@ object Ann {
       .limit(k)
   }
 
-  /** ES 8.16+ BBQ (`bbq_flat` / `bbq_hnsw` storage): binary
-    * quantization to ONE BIT per dimension — 32× smaller than float32,
-    * 4× smaller than int8. The coarse pass never touches the float
-    * vectors: it scores the ASYMMETRIC estimate `dot(q, sign(v))`
-    * from the packed bits alone (the query stays full precision —
-    * that asymmetry is what makes 1-bit storage rankable), keeps a
-    * top-(k·oversample) window, and only that window's raw vectors
-    * are read for the exact-cosine rescore via a broadcast semi-join.
-    * At 100 TB the corpus-wide pass reads two longs per doc.
+  /** Quantized-storage knn with an exact rescore — ES knn
+    * `rescore_vector.oversample` over `int8_hnsw` / `int4_hnsw` / BBQ
+    * storage (the `PackedCodec` table). The codec's lossy score ranks
+    * a COARSE top-(k·oversample) window off the packed frame alone;
+    * only that window's raw vectors are then read, via a broadcast
+    * semi-join, for the exact cosine, and the true top-k survives. At
+    * 100 TB the corpus-wide pass reads packed bytes (4x / 8x / 32x
+    * fewer than float32), never the float column. Output: (id, cosine,
+    * <codec.scoreName>), both scores rounded to 4 places.
     *
-    * Bits pack into two 32-bit halves (lo = dims 1..32, hi = 33..64)
-    * so the DuckDB oracle's BIGINT arithmetic replicates the packing
-    * and the bit-probe math exactly; dims ≤ 64. */
-  def bbqTopK(
+    * This on-the-fly form packs in-plan; `packedTopKIndexed` reads the
+    * frame the write path persisted. Both rank the same packed rows,
+    * so they are answer-equal by construction and share one oracle
+    * SQL. The scalar codecs' packed scores equal the dequantized
+    * cosine of the raw vector exactly (spec-pinned), which is what
+    * lets the DuckDB oracle replay the dequant math, not the bytes. */
+  def packedTopK(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
+      codec: PackedCodec,
       queryVec: Seq[Double],
       k: Int,
       oversample: Int): DataFrame = {
-    // null vectors pack as all-zero bits, whose estimate -sum(q) can
-    // OUTRANK every real doc when the query sums negative — they'd
-    // flood the k*oversample coarse window and evict real candidates
     val live = corpus.where(col(vecCol).isNotNull)
-    val coarse = bbqCoarse(bbqPack(live, idCol, vecCol, queryVec.size),
-      queryVec, k * oversample)
-    bbqRescore(live, idCol, vecCol, coarse, queryVec, k)
+    packedRescore(live, idCol, vecCol, codec.pack(live, idCol, vecCol, queryVec.size),
+      codec, queryVec, k, oversample)
   }
 
-  /** Sign-bit packing: (id, b_lo, b_hi) — two longs per doc, 32x
-    * smaller than float64. The stored-artifact frame. */
-  def bbqPack(
-      corpus: DataFrame, idCol: String, vecCol: String, dim: Int): DataFrame = {
-    require(dim >= 1 && dim <= 64, "bbq packing supports 1..64 dims")
-    val v = col(vecCol).cast("array<double>")
-    val lo = (0 until math.min(32, dim)).map(i =>
-      when(element_at(v, i + 1) > 0.0, lit(1L << i)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    val hi =
-      if (dim <= 32) lit(0L)
-      else (32 until dim).map(i =>
-        when(element_at(v, i + 1) > 0.0, lit(1L << (i - 32))).otherwise(lit(0L)))
-        .reduce(_ + _)
-    corpus.where(col(vecCol).isNotNull)
-      .select(col(idCol).as("id"), lo.as("b_lo"), hi.as("b_hi"))
+  /** `packedTopK` over the PERSISTED pack-once artifact
+    * (`graft.index.<codec>`): the packing was paid at write time, and
+    * the coarse pass reads only the packed table. None when the
+    * artifact is missing or stale — callers fall back to the on-the-
+    * fly form. */
+  def packedTopKIndexed(
+      spark: SparkSession,
+      indexPath: String,
+      idCol: String,
+      vecCol: String,
+      codec: PackedCodec,
+      queryVec: Seq[Double],
+      k: Int,
+      oversample: Int,
+      fmt: String = "parquet"): Option[DataFrame] =
+    IndexArtifacts.loadPacked(spark, codec, indexPath, vecCol, Some(idCol)).map(packed =>
+      packedRescore(IndexArtifacts.liveVectors(spark, indexPath, vecCol, fmt),
+        idCol, vecCol, packed, codec, queryVec, k, oversample))
+
+  private def packedRescore(
+      live: DataFrame, idCol: String, vecCol: String, packed: DataFrame,
+      codec: PackedCodec, queryVec: Seq[Double], k: Int, oversample: Int): DataFrame = {
+    val score = codec.scoreName
+    windowRescore(live, idCol, vecCol,
+      packed.select(col("id"), codec.coarse(queryVec).as(score)), col(score).desc,
+      k * oversample, queryVec, k)((coarse, cosine) =>
+      Seq(coarse("id"), cosine, Num.round(coarse(score), 4).as(score)))
   }
 
-  /** Coarse window off the packed bits alone: asymmetric
-    * dot(q, sign(v)) with a fixed ascending-dim fold order so the
-    * float sum is identical on both engines. */
-  private def bbqCoarse(
-      packed: DataFrame, queryVec: Seq[Double], window: Int): DataFrame = {
-    val dim = queryVec.size
-    val est = (0 until dim).map { i =>
-      val bits = if (i < 32) col("b_lo") else col("b_hi")
-      val mask = 1L << (if (i < 32) i else i - 32)
-      when(bits.bitwiseAND(lit(mask)) =!= 0L, lit(queryVec(i)))
-        .otherwise(lit(-queryVec(i)))
-    }.reduce(_ + _)
-    packed.select(col("id"), est.as("bscore"))
-      .orderBy(col("bscore").desc, col("id").asc)
-      .limit(window)
-  }
-
-  private def bbqRescore(
+  /** The coarse-window -> exact-rescore body every quantized top-k runs
+    * (packed codecs, PQ, IVFADC): keep the `window` best rows of the
+    * lossy-`scored` (id, score) frame by `coarseOrder` (id ascending on
+    * ties), join only those ids back to the raw vectors — broadcast, so
+    * O(window) float rows are read, never streamed — and keep the top-k
+    * by exact cosine, id ascending on ties. `out` lays out the result
+    * row from the coarse frame and the rounded `cosine` column. */
+  private def windowRescore(
       live: DataFrame, idCol: String, vecCol: String,
-      coarse: DataFrame, queryVec: Seq[Double], k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    val q = array(queryVec.map(lit): _*)
+      scored: DataFrame, coarseOrder: Column, window: Int,
+      queryVec: Seq[Double], k: Int)(out: (DataFrame, Column) => Seq[Column]): DataFrame = {
+    val coarse = scored.orderBy(coarseOrder, col("id").asc).limit(window)
     val exact = GraftBridge.column(graft.expr.CosineSim(
-      GraftBridge.expression(col(vecCol)), GraftBridge.expression(q)))
+      GraftBridge.expression(col(vecCol)),
+      GraftBridge.expression(array(queryVec.map(lit): _*))))
     // DATAFRAME-qualified join key: the unqualified col(idCol) is
     // ambiguous when the caller's id column is literally named "id"
     live.join(broadcast(coarse), live(idCol) === coarse("id"))
-      .select(coarse("id"),
-        graft.util.Num.round(exact, 4).as("cosine"),
-        graft.util.Num.round(coarse("bscore"), 4).as("bscore"))
-      .orderBy(col("cosine").desc, col("id").asc)
-      .limit(k)
-  }
-
-  /** int8 over the PERSISTED pack-once artifact (graft.index.int8):
-    * the coarse pass reads 8 + dim bytes per doc (4x less than the
-    * float column) and scores with Int8PackedCosine, which agrees
-    * EXACTLY with QuantizedCosine over the unpacked vector — so this
-    * is answer-equal to knnRescoreTopK and shares its oracle SQL.
-    * None when the artifact is missing or stale. */
-  def knnRescoreInt8Indexed(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      queryVec: Seq[Double],
-      k: Int,
-      oversample: Int,
-      fmt: String = "parquet"): Option[DataFrame] =
-    graft.index.IndexArtifacts.loadInt8(spark, indexPath, vecCol, Some(idCol))
-      .map { packed =>
-        import org.apache.spark.sql.GraftBridge
-        val q = array(queryVec.map(lit): _*)
-        val coarseScore = GraftBridge.column(graft.expr.Int8PackedCosine(
-          GraftBridge.expression(col("pk")), GraftBridge.expression(q)))
-        val coarse = packed.select(col("id"), coarseScore.as("qscore"))
-          .orderBy(col("qscore").desc, col("id").asc)
-          .limit(k * oversample)
-        val live = spark.read.format(fmt).load(indexPath)
-          .where(col(vecCol).isNotNull)
-        val exact = GraftBridge.column(graft.expr.CosineSim(
-          GraftBridge.expression(col(vecCol)), GraftBridge.expression(q)))
-        live.join(broadcast(coarse), live(idCol) === coarse("id"))
-          .select(coarse("id"),
-            graft.util.Num.round(exact, 4).as("cosine"),
-            graft.util.Num.round(coarse("qscore"), 4).as("quantized"))
-          .orderBy(col("cosine").desc, col("id").asc)
-          .limit(k)
-      }
-
-  /** BBQ over the PERSISTED pack-once artifact (graft.index.bbq):
-    * the coarse pass reads (id, b_lo, b_hi) — 16 bytes per doc, 32x
-    * fewer than the float column, packed at write time — and only the
-    * oversampled window\u0027s raw vectors load for the exact rescore.
-    * Answer-equal to bbqTopK by construction (same oracle SQL). None
-    * when the artifact is missing or stale. */
-  def bbqTopKIndexed(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      queryVec: Seq[Double],
-      k: Int,
-      oversample: Int,
-      fmt: String = "parquet"): Option[DataFrame] =
-    graft.index.IndexArtifacts.loadBbq(spark, indexPath, vecCol, Some(idCol))
-      .map { packed =>
-        val coarse = bbqCoarse(packed, queryVec, k * oversample)
-        val live = spark.read.format(fmt).load(indexPath)
-          .where(col(vecCol).isNotNull)
-        bbqRescore(live, idCol, vecCol, coarse, queryVec, k)
-      }
-
-  /** ES 8.18 `int4_hnsw`: the half-byte middle point between int8
-    * (4x) and 1-bit BBQ (32x) — 8x-compressed storage with an
-    * oversampled exact rescore. The coarse pass reads ONLY the packed
-    * artifact (8 bytes of scale + dim/2 code bytes per doc, two int4
-    * codes per byte — Int4Pack/Int4PackedCosine kernels); the
-    * oversampled window's raw vectors rescore exactly via a broadcast
-    * semi-join, the bbqTopK shape. The packed score is EXACTLY the
-    * dequantized-cosine (Int4Cosine) of the unpacked vector —
-    * spec-pinned — which is what makes the DuckDB oracle (which
-    * replays the dequant math, not the bytes) valid. */
-  def knnRescoreInt4TopK(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queryVec: Seq[Double],
-      k: Int,
-      oversample: Int): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    val q = array(queryVec.map(lit): _*)
-    // null vectors: same flood hazard bbqTopK documents
-    val live = corpus.where(col(vecCol).isNotNull)
-    // the stored artifact: (id, packed half-byte codes)
-    val packed = live.select(col(idCol).as("id"),
-      GraftBridge.column(graft.expr.Int4Pack(
-        GraftBridge.expression(col(vecCol).cast("array<double>")))).as("pk"))
-    val coarseScore = GraftBridge.column(graft.expr.Int4PackedCosine(
-      GraftBridge.expression(col("pk")), GraftBridge.expression(q)))
-    val coarse = packed.select(col("id"), coarseScore.as("qscore"))
-      .orderBy(col("qscore").desc, col("id").asc)
-      .limit(k * oversample)
-    val exact = GraftBridge.column(graft.expr.CosineSim(
-      GraftBridge.expression(col(vecCol)), GraftBridge.expression(q)))
-    live.join(broadcast(coarse), live(idCol) === coarse("id"))
-      .select(coarse("id"),
-        graft.util.Num.round(exact, 4).as("cosine"),
-        graft.util.Num.round(coarse("qscore"), 4).as("quantized"))
-      .orderBy(col("cosine").desc, col("id").asc)
-      .limit(k)
-  }
-
-  /** int4 over the PERSISTED pack-once artifact (graft.index.int4):
-    * the coarse pass reads the (id, packed) table — ~8x fewer bytes
-    * than the float column, and the packing cost was paid at WRITE
-    * time — and only the oversampled window's float vectors load for
-    * the exact rescore. Answer-equal to knnRescoreInt4TopK by
-    * construction (the artifact persists exactly the frame it packs
-    * per query — same oracle SQL). None when the artifact is missing
-    * or stale — callers fall back to the on-the-fly form. */
-  def knnRescoreInt4Indexed(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      queryVec: Seq[Double],
-      k: Int,
-      oversample: Int,
-      fmt: String = "parquet"): Option[DataFrame] =
-    graft.index.IndexArtifacts.loadInt4(spark, indexPath, vecCol, Some(idCol))
-      .map { packed =>
-        import org.apache.spark.sql.GraftBridge
-        val q = array(queryVec.map(lit): _*)
-        val coarseScore = GraftBridge.column(graft.expr.Int4PackedCosine(
-          GraftBridge.expression(col("pk")), GraftBridge.expression(q)))
-        val coarse = packed.select(col("id"), coarseScore.as("qscore"))
-          .orderBy(col("qscore").desc, col("id").asc)
-          .limit(k * oversample)
-        val live = spark.read.format(fmt).load(indexPath)
-          .where(col(vecCol).isNotNull)
-        val exact = GraftBridge.column(graft.expr.CosineSim(
-          GraftBridge.expression(col(vecCol)), GraftBridge.expression(q)))
-        live.join(broadcast(coarse), live(idCol) === coarse("id"))
-          .select(coarse("id"),
-            graft.util.Num.round(exact, 4).as("cosine"),
-            graft.util.Num.round(coarse("qscore"), 4).as("quantized"))
-          .orderBy(col("cosine").desc, col("id").asc)
-          .limit(k)
-      }
-
-  /** ES 8.18 knn `rescore_vector.oversample`: the quantized index
-    * (int8 storage) ranks a COARSE top-(k * oversample) window with
-    * its lossy score, then the raw vectors rescore exactly and keep
-    * the true top-k. At 100 TB this is the whole point of quantized
-    * storage — the corpus-wide pass touches only int8-compressed data
-    * (4x less IO, here modeled by the one-pass QuantizedCosine
-    * kernel), and full-precision vectors are read for O(k *
-    * oversample) rows via a broadcast semi-join, never streamed. */
-  def knnRescoreTopK(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queryVec: Seq[Double],
-      k: Int,
-      oversample: Int): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    val q = array(queryVec.map(lit): _*)
-    def score(fn: (org.apache.spark.sql.catalyst.expressions.Expression,
-                   org.apache.spark.sql.catalyst.expressions.Expression) =>
-                  org.apache.spark.sql.catalyst.expressions.Expression) =
-      GraftBridge.column(fn(
-        GraftBridge.expression(col(vecCol)), GraftBridge.expression(q)))
-    val coarse = corpus
-      .select(col(idCol).as("id"),
-        score(graft.expr.QuantizedCosine(_, _)).as("qscore"))
-      .orderBy(col("qscore").desc, col("id").asc)
-      .limit(k * oversample)
-    corpus.join(broadcast(coarse), corpus(idCol) === coarse("id"))
-      .select(coarse("id"),
-        graft.util.Num.round(score(graft.expr.CosineSim(_, _)), 4).as("cosine"),
-        graft.util.Num.round(coarse("qscore"), 4).as("quantized"))
+      .select(out(coarse, Num.round(exact, 4).as("cosine")): _*)
       .orderBy(col("cosine").desc, col("id").asc)
       .limit(k)
   }
@@ -1235,7 +1061,6 @@ object Ann {
       k: Int,
       iters: Int = 5,
       sampleN: Int = 65536): Array[Double] = {
-    import org.apache.spark.sql.GraftBridge
     val sample = corpus.where(col(vecCol).isNotNull)
       .select(col(idCol).as("id"),
         pqNormalized(col(vecCol).cast("array<double>")).as("v"))
@@ -1312,7 +1137,6 @@ object Ann {
   def pqEncodeFrame(
       corpus: DataFrame, idCol: String, vecCol: String,
       cb: Array[Double], m: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
     corpus.where(col(vecCol).isNotNull)
       .select(col(idCol).as("id"),
         GraftBridge.column(graft.expr.PqEncode(
@@ -1357,7 +1181,7 @@ object Ann {
     * value). */
   @volatile var lastNprobeResolved: Option[Int] = None
 
-  /** The r14 recall-ledger sizing rule, as an API-level guard: the
+  /** The recall-ledger sizing rule, as an API-level guard: the
     * coarse ADC window (k·oversample) must cover at least 1/(m·k) of
     * the corpus. The ledger's measured cliff — 4x16 codes at 50k
     * vectors / window 400 reads 1-2/10 recall while 8x64 at the same
@@ -1409,7 +1233,7 @@ object Ann {
     * entry points call it directly because the per-list size
     * aggregation already gives them the probed mass exactly (no
     * second candidate scan). Auto (oversample = 0) sizes window =
-    * mass/(m·ck) — the r15-measured prescription, floor 4; explicit
+    * mass/(m·ck) — the measured prescription, floor 4; explicit
     * windows publish `lastPqSizingWarning` when the rule flags them. */
   private def resolveWindowFromMass(
       mass: Long, k: Int, oversample: Int,
@@ -1430,7 +1254,7 @@ object Ann {
 
   /** The window rule + sizing guard, shared by ALL FOUR quantized
     * entry points (pqTopK / pqTopKIndexed / ivfAdcTopK /
-    * ivfAdcTopKIndexed) so a rule change can never reopen the r15
+    * ivfAdcTopKIndexed) so a rule change can never reopen a
     * guard hole by missing one copy — the rule itself lives in
     * `resolveWindowFromMass`; this form prices a candidate FRAME
     * (live vectors or stored codes). Auto (oversample = 0) pays one
@@ -1456,7 +1280,7 @@ object Ann {
   /** The sqrt(nLists) probe-spread floor, shared by the IVFADC rail
     * and the JSON knn leg so the two warnings can't drift: a TRAINED
     * (balanced) coarse quantizer spreads the true neighborhood across
-    * several lists — measured r16 on the 500k structured corpus,
+    * several lists — measured on the 500k structured corpus,
     * kmeans coarse read 0/10 recall at nprobe 1-2 and 10/10 at 4 of
     * 16, where any probed-MASS rule alone would admit nprobe 1 (each
     * balanced list already carries 1/16 of the corpus). ceil(sqrt(n))
@@ -1476,8 +1300,8 @@ object Ann {
     else None
   }
 
-  /** The nprobe rail (r17) — the same silent-recall-cliff guard the
-    * window got in r15/r16, one knob over, shared by BOTH IVFADC
+  /** The nprobe rail — the same silent-recall-cliff guard the
+    * window rule is, one knob over, shared by BOTH IVFADC
     * entry points. `listSizes` is the per-list assignment mass (ONE
     * narrow partial aggregation — nLists rows reach the driver);
     * `probeOrder` is ALL cent_ids in probe order (query cosine desc,
@@ -1538,7 +1362,6 @@ object Ann {
       m: Int = 4,
       codebookSize: Int = 16,
       codebooks: Option[Array[Double]] = None): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
     require(queryVec.nonEmpty && queryVec.length % m == 0,
       s"query dim ${queryVec.length} does not split into $m subspaces")
     // window rule + guard (shared resolveWindow): auto pays one full
@@ -1555,32 +1378,25 @@ object Ann {
       pqSampleCodebooks(corpus, idCol, vecCol, m, codebookSize))
     require(cb.length == m * codebookSize * dsub,
       s"codebook ${cb.length} != $m x $codebookSize x $dsub")
-    val lut = pqLut(queryVec, cb, m, codebookSize)
     // the stored artifact shape: (id, m code bytes) over unit vectors
-    val encoded = pqEncodeFrame(corpus, idCol, vecCol, cb, m, codebookSize)
-    val adc = GraftBridge.column(graft.expr.PqAdc(
-      GraftBridge.expression(col("pq")), lut.toSeq, codebookSize))
-    // L2 ADC: SMALLEST distance wins the window
-    val coarse = encoded.select(col("id"), adc.as("adc"))
-      .orderBy(col("adc").asc, col("id").asc)
-      .limit(coarseWindow(k, os))
-    pqRescore(corpus.where(col(vecCol).isNotNull), idCol, vecCol, coarse, queryVec, k)
+    pqRescore(corpus.where(col(vecCol).isNotNull), idCol, vecCol,
+      pqEncodeFrame(corpus, idCol, vecCol, cb, m, codebookSize),
+      queryVec, cb, m, codebookSize, coarseWindow(k, os), k)
   }
 
-  /** Exact-cosine rescore of a coarse ADC window against the raw
-    * vectors — shared by the on-the-fly and persisted PQ paths. */
+  /** ADC-rank a (id, pq) codes frame under the per-query LUT — L2,
+    * so the SMALLEST distance wins the `window` — then rescore the
+    * window exactly. Output: (id, adc, cosine). Shared by the on-the-
+    * fly and persisted PQ and IVFADC paths. */
   private def pqRescore(
-      live: DataFrame, idCol: String, vecCol: String,
-      coarse: DataFrame, queryVec: Seq[Double], k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    val q = array(queryVec.map(lit): _*)
-    val exact = GraftBridge.column(graft.expr.CosineSim(
-      GraftBridge.expression(col(vecCol)), GraftBridge.expression(q)))
-    live.join(broadcast(coarse), live(idCol) === coarse("id"))
-      .select(coarse("id"), coarse("adc"),
-        graft.util.Num.round(exact, 4).as("cosine"))
-      .orderBy(col("cosine").desc, col("id").asc)
-      .limit(k)
+      live: DataFrame, idCol: String, vecCol: String, codes: DataFrame,
+      queryVec: Seq[Double], cb: Array[Double], m: Int, ck: Int,
+      window: Int, k: Int): DataFrame = {
+    val adc = GraftBridge.column(graft.expr.PqAdc(
+      GraftBridge.expression(col("pq")), pqLut(queryVec, cb, m, ck).toSeq, ck))
+    windowRescore(live, idCol, vecCol, codes.select(col("id"), adc.as("adc")),
+      col("adc").asc, window, queryVec, k)((coarse, cosine) =>
+      Seq(coarse("id"), coarse("adc"), cosine))
   }
 
   /** PQ over the PERSISTED pack-once artifact (graft.index.pq): the
@@ -1600,21 +1416,13 @@ object Ann {
       k: Int,
       oversample: Int,
       fmt: String = "parquet"): Option[DataFrame] =
-    graft.index.IndexArtifacts.loadPq(spark, indexPath, vecCol, Some(idCol))
+    IndexArtifacts.loadPq(spark, indexPath, vecCol, Some(idCol))
       .map { case ((m, ck), cb, codes) =>
-        import org.apache.spark.sql.GraftBridge
         // window rule + guard off the stored codes count — the
         // persisted form is the one that meets real corpus sizes
         val os: Long = resolveWindow(codes, k, oversample, m, ck, "vector")
-        val lut = pqLut(queryVec, cb, m, ck)
-        val adc = GraftBridge.column(graft.expr.PqAdc(
-          GraftBridge.expression(col("pq")), lut.toSeq, ck))
-        val coarse = codes.select(col("id"), adc.as("adc"))
-          .orderBy(col("adc").asc, col("id").asc)
-          .limit(coarseWindow(k, os))
-        val live = spark.read.format(fmt).load(indexPath)
-          .where(col(vecCol).isNotNull)
-        pqRescore(live, idCol, vecCol, coarse, queryVec, k)
+        pqRescore(IndexArtifacts.liveVectors(spark, indexPath, vecCol, fmt), idCol, vecCol,
+          codes, queryVec, cb, m, ck, coarseWindow(k, os), k)
       }
 
   /** Per-row coarse-list assignment as ONE declarative expression
@@ -1623,8 +1431,8 @@ object Ann {
     * round-4 cosine argmax with lowest-cent_id tie-break as
     * `assignToCentroids`, with NO crossJoin/groupBy exchange and
     * nothing to persist or release — the map-only form the probed-
-    * member filter wants (the r16 form persisted a shuffled
-    * assignment frame per query and leaked the cache handle). */
+    * member filter wants (no per-query persisted assignment frame,
+    * so no cache handle to leak). */
   private def assignedCentCol(
       vec: Column, cents: Array[(Long, Array[Double])]): Column = {
     val scored = cents.map { case (cid, cv) =>
@@ -1662,7 +1470,7 @@ object Ann {
     * IVF assignment/probing reuse the seed-centroid + round-4 cosine
     * contract of ivfTopK; the ADC math is pqTopK's 1e-6 fixed point —
     * both already oracle-mirrored, so the composition is too.
-    * nprobe = 0 (r17) resolves by the auto rule (`resolveNprobe`);
+    * nprobe = 0 resolves by the auto rule (`resolveNprobe`);
     * an explicit nprobe publishes `lastNprobeWarning` when the rail
     * flags it. */
   def ivfAdcTopK(
@@ -1678,7 +1486,6 @@ object Ann {
       codebookSize: Int = 16,
       codebooks: Option[Array[Double]] = None,
       coarseCents: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
     require(nprobe >= 0 && nprobe <= nCentroids,
       s"nprobe $nprobe of $nCentroids (0 = auto rule-sized)")
     require(oversample >= 0, s"bad oversample $oversample (0 = auto rule-sized)")
@@ -1697,19 +1504,19 @@ object Ann {
     // assignment expression — nCentroids rows reach the driver. This
     // feeds BOTH rails (nprobe and window) with exact masses, so the
     // window guard needs no second candidate scan and nothing is
-    // cached across jobs (the r16 persist + its leaked handle are gone)
+    // cached across jobs
     val sizes = live
       .select(assignedCentCol(vcast, cents).as("cent_id"))
       .groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    // r17: the nprobe rail — auto (0) walks probed mass to the window
+    // the nprobe rail — auto (0) walks probed mass to the window
     // rule's threshold with the sqrt(nLists) spread floor; explicit
-    // nprobe warns when under-massed/under-spread (the r16 verdict's
-    // measured cliff: kmeans coarse 0/10 at nprobe 1-2, 10/10 at 4)
+    // nprobe warns when under-massed/under-spread (measured cliff:
+    // kmeans coarse 0/10 at nprobe 1-2, 10/10 at 4)
     val np = resolveNprobe(sizes, probeOrder, nprobe, k, oversample, m, codebookSize)
     val probed = probeOrder.take(np)
     val probedMass = probed.iterator.map(sizes.getOrElse(_, 0L)).sum
-    // r16 window rule + guard: the candidate corpus is the PROBED
+    // window rule + guard: the candidate corpus is the PROBED
     // lists' rows — mass known exactly from the size aggregation
     val os: Long = resolveWindowFromMass(
       probedMass, k, oversample, m, codebookSize, s"$probedMass-candidate probed")
@@ -1719,20 +1526,13 @@ object Ann {
       pqSampleCodebooks(corpus, idCol, vecCol, m, codebookSize))
     require(cb.length == m * codebookSize * (queryVec.length / m),
       s"codebook ${cb.length} != $m x $codebookSize x ${queryVec.length / m}")
-    val lut = pqLut(queryVec, cb, m, codebookSize)
-    val adc = GraftBridge.column(graft.expr.PqAdc(
-      GraftBridge.expression(col("pq")), lut.toSeq, codebookSize))
     // membership is a map-side FILTER (the assignment expression
     // against the probed id set), so only nprobe/nCentroids of the
-    // corpus is ever PQ-encoded — the r16 form encoded everything and
-    // semi-joined the window down afterwards
-    val coarse = pqEncodeFrame(
-        live.where(assignedCentCol(vcast, cents).isin(probed: _*)),
-        idCol, vecCol, cb, m, codebookSize)
-      .select(col("id"), adc.as("adc"))
-      .orderBy(col("adc").asc, col("id").asc)
-      .limit(coarseWindow(k, os))
-    pqRescore(live, idCol, vecCol, coarse, queryVec, k)
+    // corpus is ever PQ-encoded, never the whole corpus
+    pqRescore(live, idCol, vecCol,
+      pqEncodeFrame(live.where(assignedCentCol(vcast, cents).isin(probed: _*)),
+        idCol, vecCol, cb, m, codebookSize),
+      queryVec, cb, m, codebookSize, coarseWindow(k, os), k)
   }
 
   /** IVFADC over the PERSISTED artifacts — the production shape: the
@@ -1757,12 +1557,9 @@ object Ann {
       nprobe: Int,
       fmt: String = "parquet"): Option[DataFrame] =
     for {
-      (centsDf, assignments) <- graft.index.IndexArtifacts
-        .loadIvf(spark, indexPath, vecCol, Some(idCol))
-      ((m, ck), cb, codes) <- graft.index.IndexArtifacts
-        .loadPq(spark, indexPath, vecCol, Some(idCol))
+      (centsDf, assignments) <- IndexArtifacts.loadIvf(spark, indexPath, vecCol, Some(idCol))
+      ((m, ck), cb, codes) <- IndexArtifacts.loadPq(spark, indexPath, vecCol, Some(idCol))
     } yield {
-      import org.apache.spark.sql.GraftBridge
       val cents = centsDf.select(col("cent_id"), col("cv")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       require(nprobe >= 0 && nprobe <= cents.length,
@@ -1770,7 +1567,7 @@ object Ann {
       val probeOrder = probeOrderOf(cents, queryVec)
       // per-list mass from the STORED assignment table — one narrow
       // partial aggregation, nLists rows to the driver; feeds both
-      // the r17 nprobe rail and the window rule with exact masses
+      // the nprobe rail and the window rule with exact masses
       val sizes = assignments
         .groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -1778,20 +1575,13 @@ object Ann {
       val probed = probeOrder.take(np)
       val probedMass = probed.iterator.map(sizes.getOrElse(_, 0L)).sum
       val member = assignments.where(col("cent_id").isin(probed: _*)).select(col("id"))
-      // the same r16 guard + auto as the on-the-fly IVFADC form; the
+      // the same guard + auto as the on-the-fly IVFADC form; the
       // probed mass is exact from the size aggregation, so the rule
       // pays no candidate scan at all here
       val os: Long = resolveWindowFromMass(
         probedMass, k, oversample, m, ck, s"$probedMass-candidate probed")
-      val lut = pqLut(queryVec, cb, m, ck)
-      val adc = GraftBridge.column(graft.expr.PqAdc(
-        GraftBridge.expression(col("pq")), lut.toSeq, ck))
-      val coarse = codes.join(member, Seq("id"), "left_semi")
-        .select(col("id"), adc.as("adc"))
-        .orderBy(col("adc").asc, col("id").asc)
-        .limit(coarseWindow(k, os))
-      val live = spark.read.format(fmt).load(indexPath)
-        .where(col(vecCol).isNotNull)
-      pqRescore(live, idCol, vecCol, coarse, queryVec, k)
+      pqRescore(IndexArtifacts.liveVectors(spark, indexPath, vecCol, fmt), idCol, vecCol,
+        codes.join(member, Seq("id"), "left_semi"),
+        queryVec, cb, m, ck, coarseWindow(k, os), k)
     }
 }

@@ -716,49 +716,25 @@ object Connector {
           s"unknown graft.index.vectors.fit: $other")
       }
     }
-    // persisted int4 quantized vectors (`graft.index.int4` = vector
-    // column): half-byte codes packed ONCE at write time (the ES 8.18
-    // int4_hnsw storage shape), so the quantized coarse scan reads
-    // ~8x fewer bytes than the float column on every future query.
-    // APPEND packs only the new docs (refreshInt4's audited path).
-    cfg.get("graft.index.int4").foreach { vecCol =>
-      val idCol = cfg.getOrElse("graft.mapping.id",
-        throw new IllegalArgumentException(
-          "graft.index.int4 needs graft.mapping.id (the packed doc id)"))
-      val packedDir = new Path(
-        graft.index.IndexArtifacts.int4Dir(path, vecCol) + "/packed")
-      if (op == "append" && fs.exists(packedDir))
-        graft.index.IndexArtifacts.refreshInt4(spark, path, idCol, vecCol, fmt)
-      else
-        graft.index.IndexArtifacts.buildInt4(spark, path, idCol, vecCol, fmt)
-    }
-    // persisted int8 codes (`graft.index.int8` = vector column): the
-    // ES-default 4x storage packed ONCE at write time. APPEND packs
-    // only the new docs.
-    cfg.get("graft.index.int8").foreach { vecCol =>
-      val idCol = cfg.getOrElse("graft.mapping.id",
-        throw new IllegalArgumentException(
-          "graft.index.int8 needs graft.mapping.id (the packed doc id)"))
-      val packedI8 = new Path(
-        graft.index.IndexArtifacts.int8Dir(path, vecCol) + "/packed")
-      if (op == "append" && fs.exists(packedI8))
-        graft.index.IndexArtifacts.refreshInt8(spark, path, idCol, vecCol, fmt)
-      else
-        graft.index.IndexArtifacts.buildInt8(spark, path, idCol, vecCol, fmt)
-    }
-    // persisted BBQ sign bits (`graft.index.bbq` = vector column):
-    // (id, b_lo, b_hi) packed ONCE at write time — 32x less IO for
-    // the coarse pass. APPEND packs only the new docs.
-    cfg.get("graft.index.bbq").foreach { vecCol =>
-      val idCol = cfg.getOrElse("graft.mapping.id",
-        throw new IllegalArgumentException(
-          "graft.index.bbq needs graft.mapping.id (the packed doc id)"))
-      val packedBbq = new Path(
-        graft.index.IndexArtifacts.bbqDir(path, vecCol) + "/packed")
-      if (op == "append" && fs.exists(packedBbq))
-        graft.index.IndexArtifacts.refreshBbq(spark, path, idCol, vecCol, fmt)
-      else
-        graft.index.IndexArtifacts.buildBbq(spark, path, idCol, vecCol, fmt)
+    // persisted packed vectors (`graft.index.<codec>` = vector column,
+    // one option per PackedCodec: int4, int8, bbq): codes packed ONCE
+    // at write time — the ES int4_hnsw / int8_hnsw / BBQ segment
+    // storage — so every future quantized coarse scan reads the packed
+    // table instead of the float column. APPEND packs only the new
+    // docs (refreshPacked's audited path).
+    graft.index.PackedCodec.all.foreach { codec =>
+      val opt = s"graft.index.${codec.name}"
+      cfg.get(opt).foreach { vecCol =>
+        val idCol = cfg.getOrElse("graft.mapping.id",
+          throw new IllegalArgumentException(
+            s"$opt needs graft.mapping.id (the packed doc id)"))
+        val packedDir = new Path(
+          graft.index.IndexArtifacts.packedDir(codec, path, vecCol) + "/packed")
+        if (op == "append" && fs.exists(packedDir))
+          graft.index.IndexArtifacts.refreshPacked(spark, codec, path, idCol, vecCol, fmt)
+        else
+          graft.index.IndexArtifacts.buildPacked(spark, codec, path, idCol, vecCol, fmt)
+      }
     }
     // persisted PQ codes (`graft.index.pq` = vector column, optional
     // `.m`/`.k`): m code bytes per doc packed ONCE at write time under

@@ -150,9 +150,9 @@ class AnnTextSpec extends SparkSpec {
     // brute force (oversample wide enough at this scale)
     val emb = Tables.embeddings(spark, sfDir)
     val qv = (1 to 64).map(i => math.sin(i * 0.37))
-    val int4 = Ann.knnRescoreInt4TopK(emb, "vec_id", "embedding", qv, k = 5, oversample = 8)
+    val int4 = Ann.packedTopK(emb, "vec_id", "embedding", graft.index.PackedCodec.Int4, qv, k = 5, oversample = 8)
       .select("id", "cosine").as[(Long, Double)].collect().toSeq
-    val brute = Ann.knnRescoreTopK(emb, "vec_id", "embedding", qv, k = 5, oversample = 8)
+    val brute = Ann.packedTopK(emb, "vec_id", "embedding", graft.index.PackedCodec.Int8, qv, k = 5, oversample = 8)
       .select("id", "cosine").as[(Long, Double)].collect().toSeq
     assert(int4 == brute, s"int4 window missed the true top-k: $int4 vs $brute")
   }
@@ -209,7 +209,7 @@ class AnnTextSpec extends SparkSpec {
     val qv = (1 to 64).map(i => math.sin(i * 0.37))
     val pqRows = Ann.pqTopK(emb, "vec_id", "embedding", qv, k = 5, oversample = 20,
       codebooks = Some(dist)).select("id").as[Long].collect().toSeq
-    val brute = Ann.knnRescoreTopK(emb, "vec_id", "embedding", qv, k = 5, oversample = 8)
+    val brute = Ann.packedTopK(emb, "vec_id", "embedding", graft.index.PackedCodec.Int8, qv, k = 5, oversample = 8)
       .select("id").as[Long].collect().toSet
     assert(pqRows.count(brute.contains) >= 3,
       s"lloyd-dist PQ recall@5 too low: ${pqRows.count(brute.contains)}/5")
@@ -422,7 +422,7 @@ class AnnTextSpec extends SparkSpec {
     val pq = Ann.pqTopK(emb, "vec_id", "embedding", qv, k = 5, oversample = 20,
       codebooks = Some(fitted))
     val pqRows = pq.select("id", "cosine").as[(Long, Double)].collect().toSeq
-    val brute = Ann.knnRescoreTopK(emb, "vec_id", "embedding", qv, k = 5, oversample = 8)
+    val brute = Ann.packedTopK(emb, "vec_id", "embedding", graft.index.PackedCodec.Int8, qv, k = 5, oversample = 8)
       .select("id", "cosine").as[(Long, Double)].collect().toMap
     val recall = pqRows.count { case (id, _) => brute.contains(id) }
     assert(recall >= 3, s"trained PQ recall@5 too low: $recall/5 ($pqRows)")
@@ -639,8 +639,8 @@ class AnnTextSpec extends SparkSpec {
       else Seq(1.0f / i, 1.0f, 0.1f * (i % 7), 0.0f)
       (i.toLong, v)
     }.toDF("vec_id", "embedding")
-    val out = graft.sim.Ann.knnRescoreTopK(
-      corpus, "vec_id", "embedding", Seq(1.0, 0.0, 0.0, 0.0),
+    val out = graft.sim.Ann.packedTopK(
+      corpus, "vec_id", "embedding", graft.index.PackedCodec.Int8, Seq(1.0, 0.0, 0.0, 0.0),
       k = 3, oversample = 5)
       .as[(Long, Double, Double)].collect().toSeq
     assert(out.head._1 == 1L && out.head._2 == 1.0)

@@ -1,20 +1,36 @@
 package graft
 
-import graft.index.IndexArtifacts
+import graft.index.{IndexArtifacts, PackedCodec}
 import graft.search.Search
 import org.apache.spark.sql.functions._
 
 /** Analyze-once persisted index artifacts: build-at-write, bit-equal
   * scoring in both regimes, postings pushdown, and freshness across
   * appends and the crash-safe swap. */
-class IndexArtifactsSpec extends SparkSpec {
+class IndexArtifactsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+
+  /** Per-spec scratch root: every index this spec writes lives here.
+    * Kept short (pid-keyed, not a random temp name): plan assertions
+    * look for artifact table names inside the scan location, which
+    * Spark abbreviates past spark.sql.maxMetadataStringLength. */
+  private lazy val root = {
+    val d = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"gi${ProcessHandle.current().pid()}")
+    org.apache.commons.io.FileUtils.deleteDirectory(d)
+    d.mkdirs()
+    d.getPath
+  }
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    finally super.afterAll()
 
   private def topk(df: org.apache.spark.sql.DataFrame) =
     df.orderBy(col("score").desc, col("id").asc).limit(10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
   test("bm25 over persisted artifacts is bit-equal to on-the-fly; stale artifacts fall back") {
-    val out = "/tmp/graft_idxspec_bm25"
+    val out = s"$root/bm25"
     val docs = Tables.documents(spark, sfDir)
     graft.sources.Connector.save(docs, out, Map(
       "graft.write.operation" -> "overwrite",
@@ -64,7 +80,7 @@ class IndexArtifactsSpec extends SparkSpec {
   }
 
   test("multi-field graft.index.analysis builds one artifact dir per field") {
-    val out = "/tmp/graft_idxspec_multi"
+    val out = s"$root/multi"
     val docs = Tables.documents(spark, sfDir)
     graft.sources.Connector.save(docs, out, Map(
       "graft.write.operation" -> "overwrite",
@@ -90,7 +106,7 @@ class IndexArtifactsSpec extends SparkSpec {
 
   test("persisted IVF: artifact path equals fit-per-query; appends route incrementally to existing lists") {
     import graft.sim.Ann
-    val out = "/tmp/graft_idxspec_ivf"
+    val out = s"$root/ivf"
     val e = Tables.embeddings(spark, sfDir)
     graft.sources.Connector.save(e, out, Map(
       "graft.write.operation" -> "overwrite",
@@ -148,7 +164,7 @@ class IndexArtifactsSpec extends SparkSpec {
 
   test("persisted HNSW: frozen graphs answer deterministically with brute-force-grade recall; stale falls back") {
     import graft.sim.Ann
-    val out = "/tmp/graft_idxspec_hnsw"
+    val out = s"$root/hnsw"
     val e = Tables.embeddings(spark, sfDir)
     graft.sources.Connector.save(e, out, Map(
       "graft.write.operation" -> "overwrite",
@@ -183,8 +199,8 @@ class IndexArtifactsSpec extends SparkSpec {
 
   test("connector readMetadata _score reads persisted postings on a single fresh index") {
     import graft.sources.Connector.implicits._
-    val withArt = "/tmp/graft_idxspec_conn_art"
-    val without = "/tmp/graft_idxspec_conn_raw"
+    val withArt = s"$root/conn_art"
+    val without = s"$root/conn_raw"
     val docs = Tables.documents(spark, sfDir)
     graft.sources.Connector.save(docs, withArt, Map(
       "graft.write.operation" -> "overwrite",
@@ -231,7 +247,7 @@ class IndexArtifactsSpec extends SparkSpec {
   }
 
   test("crash-safe swap replaces artifacts with the index: an upsert leaves no stale pairing") {
-    val out = "/tmp/graft_idxspec_swap"
+    val out = s"$root/swap"
     val docs = Tables.documents(spark, sfDir)
     val cfg = Map(
       "graft.mapping.id" -> "doc_id",
@@ -263,7 +279,7 @@ class IndexArtifactsSpec extends SparkSpec {
   }
 
   test("incremental analysis append: merged artifacts bit-equal a full rebuild; unsafe appends fall back") {
-    val out = "/tmp/graft_idxspec_bm25inc"
+    val out = s"$root/bm25inc"
     val docs = Tables.documents(spark, sfDir)
     val half1 = docs.where(col("doc_id") % 2 === 0)
     val half2 = docs.where(col("doc_id") % 2 === 1)
@@ -310,7 +326,7 @@ class IndexArtifactsSpec extends SparkSpec {
 
   test("persisted minhash: indexed cross screen equals on-the-fly; appends route only new docs") {
     import graft.dedup.Dedup
-    val out = "/tmp/graft_idxspec_minhash"
+    val out = s"$root/minhash"
     val docs = Tables.documents(spark, sfDir)
     val ref = docs.where(col("doc_id") % 2 === 0)
     // new side carries guaranteed near-dups: clones of ref docs under
@@ -367,54 +383,58 @@ class IndexArtifactsSpec extends SparkSpec {
   }
 
   test("ensureArtifact: build-once reuse, atomic visibility, stale-generation sweep (r14)") {
-    val kind = s"spectest${System.nanoTime()}"
-    val user = System.getProperty("user.name")
-    // a stale sibling from an "earlier testdata generation"
-    val stale = new java.io.File(s"/tmp/graft_${kind}_${user}_oldfp")
-    stale.mkdirs()
-    new java.io.FileWriter(new java.io.File(stale, "junk")).append("x").close()
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    spark.conf.set("graft.artifacts.root", root)
+    try {
+      val kind = s"spectest${System.nanoTime()}"
+      val user = System.getProperty("user.name")
+      // a stale sibling from an "earlier testdata generation"
+      val stale = new java.io.File(s"$root/graft_${kind}_${user}_oldfp")
+      stale.mkdirs()
+      new java.io.FileWriter(new java.io.File(stale, "junk")).append("x").close()
 
-    var builds = 0
-    def ensure() = IndexArtifacts.ensureArtifact(kind, "fp12345678")(
-      p => new java.io.File(p, "_done").exists())(
-      stage => {
-        builds += 1
-        val d = new java.io.File(stage)
-        d.mkdirs()
-        // the loaded() probe must never see a half-written dir at the
-        // FINAL path: _done is written inside staging, pre-rename
-        new java.io.FileWriter(new java.io.File(d, "_done")).append("ok").close()
-      })
-    val dir1 = ensure()
-    assert(builds == 1 && new java.io.File(dir1, "_done").exists())
-    assert(!stale.exists(), "stale generation must be swept on build")
-    // second call: loaded() sees the artifact, no rebuild, same path
-    assert(ensure() == dir1 && builds == 1)
-    // no staging leftovers
-    val leftovers = new java.io.File("/tmp").listFiles()
-      .filter(_.getName.contains(s"graft_${kind}_${user}_fp12345678_stage"))
-    assert(leftovers.isEmpty, leftovers.mkString(","))
-    IndexArtifacts.ensureArtifact(kind, "ignored")(_ => true)(_ => ()) // cleanup no-op
-    new java.io.File(dir1).listFiles().foreach(_.delete()); new java.io.File(dir1).delete()
+      var builds = 0
+      def ensure() = IndexArtifacts.ensureArtifact(kind, "fp12345678")(
+        p => new java.io.File(p, "_done").exists())(
+        stage => {
+          builds += 1
+          val d = new java.io.File(stage)
+          d.mkdirs()
+          // the loaded() probe must never see a half-written dir at the
+          // FINAL path: _done is written inside staging, pre-rename
+          new java.io.FileWriter(new java.io.File(d, "_done")).append("ok").close()
+        })
+      val dir1 = ensure()
+      assert(builds == 1 && new java.io.File(dir1, "_done").exists())
+      assert(!stale.exists(), "stale generation must be swept on build")
+      // second call: loaded() sees the artifact, no rebuild, same path
+      assert(ensure() == dir1 && builds == 1)
+      // no staging leftovers
+      val leftovers = new java.io.File(root).listFiles()
+        .filter(_.getName.contains(s"graft_${kind}_${user}_fp12345678_stage"))
+      assert(leftovers.isEmpty, leftovers.mkString(","))
+      IndexArtifacts.ensureArtifact(kind, "ignored")(_ => true)(_ => ()) // cleanup no-op
+      new java.io.File(dir1).listFiles().foreach(_.delete()); new java.io.File(dir1).delete()
+    } finally spark.conf.unset("graft.artifacts.root")
   }
 
   test("persisted int4: packed coarse scan, answer-equal to on-the-fly, audited appends (r14)") {
-    val out = "/tmp/graft_idxspec_int4"
+    val out = s"$root/int4"
     val emb = Tables.embeddings(spark, sfDir).limit(150)
     graft.sources.Connector.save(emb, out, Map(
       "graft.write.operation" -> "overwrite",
       "graft.mapping.id" -> "vec_id",
       "graft.index.int4" -> "embedding"))
-    val packed = IndexArtifacts.loadInt4(spark, out, "embedding", Some("vec_id")).get
+    val packed = IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("vec_id")).get
     assert(packed.count() == 150)
     // a wrong expected id column reads as absent
-    assert(IndexArtifacts.loadInt4(spark, out, "embedding", Some("other")).isEmpty)
+    assert(IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("other")).isEmpty)
 
     val qv = (1 to 64).map(i => math.cos(i * 0.29))
-    val idx = graft.sim.Ann.knnRescoreInt4Indexed(
-      spark, out, "vec_id", "embedding", qv, k = 5, oversample = 4).get
-    val fly = graft.sim.Ann.knnRescoreInt4TopK(
-      spark.read.parquet(out), "vec_id", "embedding", qv, k = 5, oversample = 4)
+    val idx = graft.sim.Ann.packedTopKIndexed(
+      spark, out, "vec_id", "embedding", PackedCodec.Int4, qv, k = 5, oversample = 4).get
+    val fly = graft.sim.Ann.packedTopK(
+      spark.read.parquet(out), "vec_id", "embedding", PackedCodec.Int4, qv, k = 5, oversample = 4)
     assert(idx.collect().toSeq == fly.collect().toSeq && idx.count() == 5)
     // the IO claim: the indexed plan's scans include the packed table
     // (the artifact IS what the coarse pass reads)
@@ -426,13 +446,13 @@ class IndexArtifactsSpec extends SparkSpec {
       "graft.write.operation" -> "append",
       "graft.mapping.id" -> "vec_id",
       "graft.index.int4" -> "embedding"))
-    val p2 = IndexArtifacts.loadInt4(spark, out, "embedding", Some("vec_id")).get
+    val p2 = IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("vec_id")).get
     assert(p2.count() == 154 && p2.where(col("id") >= 9000000L).count() == 4)
     // a colliding raw append trips the audit -> full rebuild, fresh
     emb.limit(1).write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshInt4(spark, out, "vec_id", "embedding")
-    assert(IndexArtifacts.loadInt4(spark, out, "embedding", Some("vec_id")).get.count() == 155)
+    IndexArtifacts.refreshPacked(spark, PackedCodec.Int4, out, "vec_id", "embedding")
+    assert(IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("vec_id")).get.count() == 155)
 
     // null-VECTOR rows are unpackable data, not audit failures: the
     // coverage identity counts the packable subset, so this append
@@ -444,14 +464,14 @@ class IndexArtifactsSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
       .write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshInt4(spark, out, "vec_id", "embedding")
-    val p3 = IndexArtifacts.loadInt4(spark, out, "embedding", Some("vec_id")).get
+    IndexArtifacts.refreshPacked(spark, PackedCodec.Int4, out, "vec_id", "embedding")
+    val p3 = IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("vec_id")).get
     assert(p3.count() == 156 && p3.where(col("id") === 9100000L).count() == 1)
     assert(p3.where(col("id") === 9100001L).count() == 0)
   }
 
   test("persisted PQ: frozen codebook, codes-only coarse scan, audited appends (r14)") {
-    val out = "/tmp/graft_idxspec_pq"
+    val out = s"$root/pq"
     val emb = Tables.embeddings(spark, sfDir).limit(150)
     graft.sources.Connector.save(emb, out, Map(
       "graft.write.operation" -> "overwrite",
@@ -493,7 +513,7 @@ class IndexArtifactsSpec extends SparkSpec {
   }
 
   test("persisted PQ, lloyd fit: trained codebooks stored, appends and rebuilds keep the fit (r14)") {
-    val out = "/tmp/graft_idxspec_pqlloyd"
+    val out = s"$root/pqlloyd"
     val emb = Tables.embeddings(spark, sfDir).limit(150)
     graft.sources.Connector.save(emb, out, Map(
       "graft.write.operation" -> "overwrite",
@@ -528,7 +548,7 @@ class IndexArtifactsSpec extends SparkSpec {
   }
 
   test("persisted PQ, lloyd-dist fit: distributed codebooks stored, clean appends encode under the frozen model (r15)") {
-    val out = "/tmp/graft_idxspec_pqlloyddist"
+    val out = s"$root/pqlloyddist"
     val emb = Tables.embeddings(spark, sfDir).where(col("vec_id") < 150)
     graft.sources.Connector.save(emb, out, Map(
       "graft.write.operation" -> "overwrite",
@@ -562,7 +582,7 @@ class IndexArtifactsSpec extends SparkSpec {
   }
 
   test("persisted IVFADC over the lloyd-dist fit: stored codebook IS the dist model, hyperparams survive rebuilds (r15)") {
-    val out = "/tmp/graft_idxspec_ivfadcdist"
+    val out = s"$root/ivfadcdist"
     val emb = Tables.embeddings(spark, sfDir).where(col("vec_id") < 200)
     graft.sources.Connector.save(emb, out, Map(
       "graft.write.operation" -> "overwrite",
@@ -601,7 +621,7 @@ class IndexArtifactsSpec extends SparkSpec {
   }
 
   test("ivfListStats: per-list populations, empty lists as zero, imbalance factor (r15)") {
-    val out = "/tmp/graft_idxspec_ivfstats"
+    val out = s"$root/ivfstats"
     // 40 vectors over 32 seed centroids: several lists stay empty and
     // must report 0, not vanish from the frame
     val emb = Tables.embeddings(spark, sfDir).where(col("vec_id") < 40)
@@ -628,22 +648,22 @@ class IndexArtifactsSpec extends SparkSpec {
   }
 
   test("persisted BBQ: sign bits packed once, coarse scan off 16 bytes/doc, audited appends (r14)") {
-    val out = "/tmp/graft_idxspec_bbq"
+    val out = s"$root/bbq"
     val emb = Tables.embeddings(spark, sfDir).limit(150)
     graft.sources.Connector.save(emb, out, Map(
       "graft.write.operation" -> "overwrite",
       "graft.mapping.id" -> "vec_id",
       "graft.index.bbq" -> "embedding"))
-    val packed = IndexArtifacts.loadBbq(spark, out, "embedding", Some("vec_id")).get
+    val packed = IndexArtifacts.loadPacked(spark, PackedCodec.Bbq, out, "embedding", Some("vec_id")).get
     assert(packed.count() == 150)
     assert(packed.columns.toSeq == Seq("id", "b_lo", "b_hi"))
-    assert(IndexArtifacts.loadBbq(spark, out, "embedding", Some("other")).isEmpty)
+    assert(IndexArtifacts.loadPacked(spark, PackedCodec.Bbq, out, "embedding", Some("other")).isEmpty)
 
     val qv = (1 to 64).map(i => math.cos(i * 0.29))
-    val idx = graft.sim.Ann.bbqTopKIndexed(
-      spark, out, "vec_id", "embedding", qv, k = 5, oversample = 4).get
-    val fly = graft.sim.Ann.bbqTopK(
-      spark.read.parquet(out), "vec_id", "embedding", qv, k = 5, oversample = 4)
+    val idx = graft.sim.Ann.packedTopKIndexed(
+      spark, out, "vec_id", "embedding", PackedCodec.Bbq, qv, k = 5, oversample = 4).get
+    val fly = graft.sim.Ann.packedTopK(
+      spark.read.parquet(out), "vec_id", "embedding", PackedCodec.Bbq, qv, k = 5, oversample = 4)
     assert(idx.collect().toSeq == fly.collect().toSeq && idx.count() == 5)
     assert(idx.queryExecution.executedPlan.toString.contains("packed"))
 
@@ -653,13 +673,13 @@ class IndexArtifactsSpec extends SparkSpec {
       "graft.write.operation" -> "append",
       "graft.mapping.id" -> "vec_id",
       "graft.index.bbq" -> "embedding"))
-    val p2 = IndexArtifacts.loadBbq(spark, out, "embedding", Some("vec_id")).get
+    val p2 = IndexArtifacts.loadPacked(spark, PackedCodec.Bbq, out, "embedding", Some("vec_id")).get
     assert(p2.count() == 154 && p2.where(col("id") >= 9000000L).count() == 4)
     // a colliding raw append trips the audit -> full rebuild, fresh
     emb.limit(1).write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshBbq(spark, out, "vec_id", "embedding")
-    assert(IndexArtifacts.loadBbq(spark, out, "embedding", Some("vec_id")).get.count() == 155)
+    IndexArtifacts.refreshPacked(spark, PackedCodec.Bbq, out, "vec_id", "embedding")
+    assert(IndexArtifacts.loadPacked(spark, PackedCodec.Bbq, out, "embedding", Some("vec_id")).get.count() == 155)
   }
 
   test("persisted int8: packed score bit-equals the inline quantized cosine; audited appends (r14)") {
@@ -687,24 +707,24 @@ class IndexArtifactsSpec extends SparkSpec {
       .foreach { case (id, d, p) => assert(d == p, s"id $id: packed $p != direct $d") }
 
     // artifact round trip + audited append
-    val out = "/tmp/graft_idxspec_int8"
+    val out = s"$root/int8"
     val emb = Tables.embeddings(spark, sfDir).limit(150)
     graft.sources.Connector.save(emb, out, Map(
       "graft.write.operation" -> "overwrite",
       "graft.mapping.id" -> "vec_id",
       "graft.index.int8" -> "embedding"))
     val qv64 = (1 to 64).map(i => math.cos(i * 0.29))
-    val idx = graft.sim.Ann.knnRescoreInt8Indexed(
-      spark, out, "vec_id", "embedding", qv64, k = 5, oversample = 4).get
-    val fly = graft.sim.Ann.knnRescoreTopK(
-      spark.read.parquet(out), "vec_id", "embedding", qv64, k = 5, oversample = 4)
+    val idx = graft.sim.Ann.packedTopKIndexed(
+      spark, out, "vec_id", "embedding", PackedCodec.Int8, qv64, k = 5, oversample = 4).get
+    val fly = graft.sim.Ann.packedTopK(
+      spark.read.parquet(out), "vec_id", "embedding", PackedCodec.Int8, qv64, k = 5, oversample = 4)
     assert(idx.collect().toSeq == fly.collect().toSeq && idx.count() == 5)
     val extra = emb.limit(4).withColumn("vec_id", col("vec_id") + lit(9000000L))
     graft.sources.Connector.save(extra, out, Map(
       "graft.write.operation" -> "append",
       "graft.mapping.id" -> "vec_id",
       "graft.index.int8" -> "embedding"))
-    val p2 = IndexArtifacts.loadInt8(spark, out, "embedding", Some("vec_id")).get
+    val p2 = IndexArtifacts.loadPacked(spark, PackedCodec.Int8, out, "embedding", Some("vec_id")).get
     assert(p2.count() == 154 && p2.where(col("id") >= 9000000L).count() == 4)
   }
 
@@ -712,7 +732,7 @@ class IndexArtifactsSpec extends SparkSpec {
     // -- minhash: a colliding append is invisible to the anti-join
     // (its row would be missing from the artifact behind a fresh
     // stamp); the audit's coverage identity catches it
-    val out = "/tmp/graft_idxspec_audit_mh"
+    val out = s"$root/audit_mh"
     val docs = Tables.documents(spark, sfDir).limit(60)
     graft.sources.Connector.save(docs, out, Map(
       "graft.write.operation" -> "overwrite",
@@ -746,7 +766,7 @@ class IndexArtifactsSpec extends SparkSpec {
     assert(IndexArtifacts.loadMinhash(spark, out, "text", Some("doc_id")).isDefined)
 
     // -- IVF: same audit class on the assignments table
-    val vout = "/tmp/graft_idxspec_audit_ivf"
+    val vout = s"$root/audit_ivf"
     val emb = Tables.embeddings(spark, sfDir).limit(100)
     graft.sources.Connector.save(emb, vout, Map(
       "graft.write.operation" -> "overwrite",

@@ -174,4 +174,27 @@ class KernelPropertySpec extends AnyFunSuite {
       }
     })
   }
+
+  test("ipInRangesKernel == dotted-quad arithmetic; octet digit runs past 3 throw") {
+    val octet = Gen.choose(0, 255)
+    val quad = Gen.listOfN(4, octet)
+    // [value, value + 1): membership is exactly "the parsed value"
+    def hit(ip: String, v: Long): Boolean = HashKernels.ipInRangesKernel(
+      UTF8String.fromString(ip), Array(v), Array(1L))
+    check(Prop.forAll(quad) { os =>
+      val v = os.foldLeft(0L)((acc, o) => (acc << 8) + o)
+      hit(os.mkString("."), v) && !hit(os.mkString("."), v + 1)
+    })
+    // a 4+ digit run is malformed, never a silently shifted value —
+    // 19+ digits would also overflow the accumulator
+    val long = for {
+      os <- quad
+      at <- Gen.choose(0, 3)
+      run <- Gen.choose(4, 25).flatMap(Gen.listOfN(_, Gen.numChar)).map(_.mkString)
+    } yield os.map(_.toString).updated(at, run).mkString(".")
+    check(Prop.forAll(long) { ip =>
+      Prop(intercept[IllegalArgumentException](hit(ip, 0L))
+        .getMessage.startsWith("bad dotted-quad ip"))
+    })
+  }
 }

@@ -73,6 +73,22 @@ class SearchSpec extends SparkSpec {
       s"unexpected: $got")
   }
 
+  test("percolateBool: a NULL clause kind is rejected as unknown, never silently dropped") {
+    val pdocs = Seq((1L, "fast join", 150L)).toDF("doc_id", "text", "n_chars")
+    val n = None: Option[String]
+    val nd = None: Option[Double]
+    val ni = None: Option[Int]
+    // qA's must[join] has no kind: dropped, qA would match on fast alone
+    val registry = Seq(
+      ("qA", "must.0", Some("term"), Some("fast"), n, nd, nd, n, ni),
+      ("qA", "must.1", n, Some("join"), n, nd, nd, n, ni))
+      .toDF("query_id", "path", "kind", "term",
+        "range_field", "range_min", "range_max", "phrase", "msm")
+    val e = intercept[IllegalArgumentException](
+      Search.percolateBool(pdocs, "doc_id", "text", registry, Seq("n_chars")).collect())
+    assert(e.getMessage.contains("unknown clause kind(s) <null>"), e.getMessage)
+  }
+
   test("percolate over a JSON query registry (percolator-index form)") {
     val r = graft.search.Search.percolateJson(docs, "doc_id", Seq(
       "q_quick" -> """{"match": {"text": "quick"}}""",
