@@ -20,12 +20,15 @@ import graft.util.Num
   * move O(docs * bands) small rows, never the full text. Exact Jaccard
   * verification runs only on LSH candidates.
   *
-  * CACHING CONTRACT: the LSH/CC operators pin intermediate caches
-  * (shingle sets, banded signatures, edge lists) that stay referenced
-  * by the returned plan — call `spark.catalog.clearCache()` (or
-  * unpersist selectively) between unrelated jobs, and prefer
-  * checkpointing the intermediates to parquet at cluster scale. The
-  * caches are materialized EAGERLY in dependency order on purpose:
+  * CACHING CONTRACT: the MinHash/LSH screens materialize their
+  * shingle sets and banded signatures as eager local checkpoints,
+  * outside the CacheManager, released with the returned plan. Other
+  * operators pin intermediate caches (edge lists, candidate frames)
+  * that stay referenced by the returned plan — call
+  * `spark.catalog.clearCache()` (or unpersist selectively) between
+  * unrelated jobs, and prefer checkpointing the intermediates to
+  * parquet at cluster scale. Intermediates are materialized EAGERLY
+  * in dependency order on purpose:
   * left lazy, concurrent consumer branches of one action each
   * recompute the full upstream pipeline while racing to fill them.
   */
@@ -172,34 +175,17 @@ object Dedup {
     minhashLshUnsorted(docs, idCol, textCol, threshold, numHashes, bands)
       .orderBy(col("id1").asc, col("id2").asc)
 
-  /** CROSS-corpus near-dup screen: which docs of a NEW corpus
-    * near-duplicate ANY doc of a REFERENCE corpus (dedup a fresh crawl
-    * against the existing training set — the incremental-ingest
-    * staple). Same banded-LSH shape as `minhashLsh`, but candidates
-    * join NEW bands against REF bands only: new×new and ref×ref pairs
-    * never materialize, so the candidate volume is bounded by the
-    * cross collision rate however dense each corpus's internal
-    * duplication is. Ids stay side-tagged columns (they may collide
-    * across corpora), and the verify reads each side's own shingle
-    * cache. Returns (new_id, ref_id, jaccard) pairs ≥ threshold. */
-  /** One corpus side of a banded-LSH screen, shared by the self-join
-    * (`minhashLshUnsorted`) and cross-corpus (`minhashLshCross`)
-    * flavors so the spread heuristic / shingle projection /
-    * eager-cache contract / band construction cannot drift between
-    * them: (cached shingle frame `idAlias`/`shAlias`, band frame
-    * `idAlias`/`band`). The shingle cache is EAGER — banding and the
-    * verify join both read it, and a lazy cache would race both
-    * branches into recomputing the shingle stage (see minhashLsh). */
   /** The (shingles, bands) frames of one corpus under the artifact's
     * canonical aliases — what `IndexArtifacts.buildMinhash` persists.
-    * The shingle frame comes back CACHED (same contract as the query
-    * path); the builder unpersists after writing. */
+    * The shingle frame comes back CACHED, so the builder releases it
+    * as soon as it has written. */
   def minhashArtifactFrames(
       docs: DataFrame, idCol: String, textCol: String,
       numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
     require(bands >= 1 && numHashes % bands == 0,
       s"bands must divide numHashes evenly: numHashes=$numHashes bands=$bands")
-    shingleBandSide(docs, idCol, textCol, "id", "sh", numHashes, bands)
+    shingleBandSide(docs, idCol, textCol, "id", "sh", numHashes, bands,
+      pin = { sh => val c = sh.cache(); c.count(); c })
   }
 
   /** Artifact-REFRESH variant: the shingle frame is LOCALCHECKPOINTED
@@ -227,21 +213,34 @@ object Dedup {
     (sh, banded)
   }
 
+  /** One corpus side of a banded-LSH screen, shared by the self-join
+    * (`minhashLshUnsorted`) and cross-corpus (`minhashLshCross`)
+    * flavors so the spread heuristic / shingle projection /
+    * eager-materialize contract / band construction cannot drift
+    * between them: (materialized shingle frame `idAlias`/`shAlias`,
+    * band frame `idAlias`/`band`). The shingle frame is materialized
+    * EAGERLY by `pin` — banding and the verify join both read it, and
+    * a lazy one would race both branches into recomputing the shingle
+    * stage (see minhashLsh). The screens pin with an eager
+    * localCheckpoint: one job, like cache+count, but outside the
+    * CacheManager — the returned plan is lazy, so a cache could never
+    * be unpersisted and every screen would leave an entry that each
+    * later query's cache lookup scans. The checkpoint's blocks go
+    * with the plan (ContextCleaner). */
   private def shingleBandSide(
       docs: DataFrame, idCol: String, textCol: String,
       idAlias: String, shAlias: String,
-      numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
+      numHashes: Int, bands: Int,
+      pin: DataFrame => DataFrame = _.localCheckpoint(true)): (DataFrame, DataFrame) = {
     val rowsPerBand = numHashes / bands
     // spread ONLY under-partitioned input (see the minhashLsh note:
     // re-shuffling an already-wide 100 TB corpus would be the cost)
     val par = docs.sparkSession.sparkContext.defaultParallelism
     val spread = if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
-    val sh = spread.select(
+    val sh = pin(spread.select(
       col(idCol).as(idAlias),
       Analyzer.shingles(Analyzer.tokens(col(textCol))).as(shAlias))
-      .where(size(col(shAlias)) > 0)
-      .cache()
-    sh.count()
+      .where(size(col(shAlias)) > 0))
     val banded = sh.select(
       col(idAlias),
       explode(bandKeys(minhashSig(col(shAlias), numHashes),
@@ -249,6 +248,16 @@ object Dedup {
     (sh, banded)
   }
 
+  /** CROSS-corpus near-dup screen: which docs of a NEW corpus
+    * near-duplicate ANY doc of a REFERENCE corpus (dedup a fresh crawl
+    * against the existing training set — the incremental-ingest
+    * staple). Same banded-LSH shape as `minhashLsh`, but candidates
+    * join NEW bands against REF bands only: new×new and ref×ref pairs
+    * never materialize, so the candidate volume is bounded by the
+    * cross collision rate however dense each corpus's internal
+    * duplication is. Ids stay side-tagged columns (they may collide
+    * across corpora), and the verify reads each side's own shingle
+    * frame. Returns (new_id, ref_id, jaccard) pairs ≥ threshold. */
   def minhashLshCross(
       newDocs: DataFrame,
       refDocs: DataFrame,
@@ -329,15 +338,15 @@ object Dedup {
       s"bands must divide numHashes evenly: numHashes=$numHashes bands=$bands " +
         "(a non-divisor silently truncates the signature; bands > numHashes " +
         "degenerates every band key to the band index = all-pairs cross join)")
-    // the shared side pipeline (spread heuristic, eager shingle cache,
-    // band construction — one definition with minhashLshCross). At
-    // 100 TB: checkpoint to parquet instead of memory cache.
+    // the shared side pipeline (spread heuristic, eager shingle
+    // checkpoint, band construction — one definition with
+    // minhashLshCross). At 100 TB: checkpoint to parquet instead.
     val (sh, banded0) =
       shingleBandSide(docs, idCol, textCol, "id", "sh", numHashes, bands)
-    // cache + eager: the self-join's two sides would otherwise EACH
-    // recompute the 32-seed signature kernel from the shingle cache
-    val banded = banded0.cache()
-    banded.count()
+    // eager, and outside the CacheManager like the shingles: the
+    // self-join's two sides would otherwise EACH recompute the
+    // 32-seed signature kernel from the shingle frame
+    val banded = banded0.localCheckpoint(true)
 
     val candidates = banded.as("a")
       .join(banded.as("b"), col("a.band") === col("b.band") && col("a.id") < col("b.id"))

@@ -4,6 +4,7 @@ import graft.analysis.Analyzer
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.json4s.{JBool, JDouble, JInt, JString, JValue}
 
 /** Analyze-once persisted index artifacts — the Spark-native analog of
@@ -176,6 +177,83 @@ object IndexArtifacts {
     md.digest(lines.sorted.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
   }
+
+  // ---- request-path reads: schema inferred once per fingerprint ----
+
+  /** Per-session bound on remembered schemas: past it the least
+    * recently read (path, format) is forgotten and infers again. */
+  private val SchemaCacheCap = 256
+
+  /** A remembered schema and what a hit must match besides its key:
+    * the directory's fingerprint and the session's confs at inference
+    * time (a conf such as `spark.sql.parquet.binaryAsString` changes
+    * what the same files infer to). */
+  private final case class InferredSchema(
+      fingerprint: String, confs: Map[String, String], schema: StructType)
+
+  /** session -> (fs-qualified path, format) -> schema; weak on the
+    * session, so a dropped session's entries go with it. */
+  private val inferredSchemas = new java.util.WeakHashMap[
+    SparkSession, java.util.LinkedHashMap[(String, String), InferredSchema]]()
+
+  private def schemasOf(
+      spark: SparkSession): java.util.LinkedHashMap[(String, String), InferredSchema] =
+    inferredSchemas.synchronized {
+      var m = inferredSchemas.get(spark)
+      if (m == null) {
+        m = new java.util.LinkedHashMap[(String, String), InferredSchema](16, 0.75f, true) {
+          override def removeEldestEntry(
+              e: java.util.Map.Entry[(String, String), InferredSchema]): Boolean =
+            size() > SchemaCacheCap
+        }
+        inferredSchemas.put(spark, m)
+      }
+      m
+    }
+
+  /** `spark.read.format(format).load(path)` for the request path, with
+    * the directory's `dataFingerprint` alongside (None for a glob or a
+    * path the walk cannot list — those read exactly as before, so a
+    * missing index raises the read's own error).
+    *
+    * Schema inference launches a Spark job (parquet reads a footer);
+    * the schema is remembered per (session, fs-qualified path, format)
+    * with the fingerprint and session confs it was inferred under, and
+    * a read with all three unchanged passes it to
+    * `spark.read.schema(..)`, which launches none. Only the schema is
+    * reused: Spark still lists the files on every read, so a hit
+    * never addresses deleted files, and any append, overwrite or swap
+    * changes the fingerprint — the same trust contract as artifact
+    * freshness. */
+  def readFingerprinted(
+      spark: SparkSession, path: String, format: String = "parquet"): (DataFrame, Option[String]) = {
+    val fp =
+      if (path.exists("*?[]{}\\".contains(_))) None
+      else try Some(dataFingerprint(spark, path)) catch { case _: java.io.IOException => None }
+    fp match {
+      case None => (spark.read.format(format).load(path), None)
+      case Some(f) =>
+        val p = new Path(path)
+        val key = (p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .makeQualified(p).toString, format)
+        val confs = spark.conf.getAll
+        val schemas = schemasOf(spark)
+        val hit = schemas.synchronized(Option(schemas.get(key)))
+          .filter(e => e.fingerprint == f && e.confs == confs)
+        val df = hit match {
+          case Some(e) => spark.read.schema(e.schema).format(format).load(path)
+          case None =>
+            val inferred = spark.read.format(format).load(path)
+            schemas.synchronized(schemas.put(key, InferredSchema(f, confs, inferred.schema)))
+            inferred
+        }
+        (df, fp)
+    }
+  }
+
+  /** [[readFingerprinted]] without the fingerprint. */
+  def read(spark: SparkSession, path: String, format: String = "parquet"): DataFrame =
+    readFingerprinted(spark, path, format)._1
 
   private def metaPath(dir: String): Path = new Path(s"$dir/_graft_meta.json")
 
@@ -451,26 +529,38 @@ object IndexArtifacts {
 
   /** Load the artifacts if present AND fresh; None means missing or
     * stale — callers fall back to on-the-fly analysis. Returns
-    * (postings, df, stats). `requireCleanIds`: the filter-context
-    * semi-join rewrite needs unique non-null ids (see buildAnalysis). */
+    * ((postings, df, stats), ids_clean): the filter-context semi-join
+    * rewrite needs unique non-null ids (see buildAnalysis), scoring
+    * does not, so one load serves both. */
+  def loadAnalysisAudited(
+      spark: SparkSession,
+      indexPath: String,
+      textCol: String,
+      expectIdCol: Option[String] = None,
+      knownFp: => Option[String] = None)
+      : Option[((DataFrame, DataFrame, DataFrame), Boolean)] = {
+    val dir = analysisDir(indexPath, textCol)
+    freshMeta(spark, indexPath, dir, expectIdCol, knownFp).map { m =>
+      val tables = (
+        read(spark, s"$dir/postings"), read(spark, s"$dir/df"), read(spark, s"$dir/stats"))
+      (tables, m \ "ids_clean" match {
+        case JBool(clean) => clean
+        case _ => false
+      })
+    }
+  }
+
+  /** [[loadAnalysisAudited]]'s (postings, df, stats); with
+    * `requireCleanIds`, None unless the build audited the ids clean. */
   def loadAnalysis(
       spark: SparkSession,
       indexPath: String,
       textCol: String,
       expectIdCol: Option[String] = None,
       knownFp: => Option[String] = None,
-      requireCleanIds: Boolean = false): Option[(DataFrame, DataFrame, DataFrame)] = {
-    val dir = analysisDir(indexPath, textCol)
-    freshMeta(spark, indexPath, dir, expectIdCol, knownFp)
-      .filter(m => !requireCleanIds || (m \ "ids_clean" match {
-        case JBool(clean) => clean
-        case _ => false
-      }))
-      .map(_ => (
-        spark.read.parquet(s"$dir/postings"),
-        spark.read.parquet(s"$dir/df"),
-        spark.read.parquet(s"$dir/stats")))
-  }
+      requireCleanIds: Boolean = false): Option[(DataFrame, DataFrame, DataFrame)] =
+    loadAnalysisAudited(spark, indexPath, textCol, expectIdCol, knownFp)
+      .collect { case (tables, clean) if clean || !requireCleanIds => tables }
 
   // ---- persisted near-dup dedup artifact (MinHash/LSH) -------------
 
@@ -574,9 +664,7 @@ object IndexArtifacts {
     freshMeta(spark, indexPath, dir, expectIdCol)
       .filter(m => metaInt(m, "num_hashes").contains(numHashes) &&
         metaInt(m, "bands").contains(bands))
-      .map(_ => (
-        spark.read.parquet(s"$dir/shingles"),
-        spark.read.parquet(s"$dir/bands")))
+      .map(_ => (read(spark, s"$dir/shingles"), read(spark, s"$dir/bands")))
   }
 
   // ---- persisted vector index (IVF) --------------------------------
@@ -695,8 +783,7 @@ object IndexArtifacts {
       expectIdCol: Option[String] = None): Option[(DataFrame, DataFrame)] = {
     val dir = vectorsDir(indexPath, vecCol)
     freshMeta(spark, indexPath, dir, expectIdCol).map(_ => (
-      spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/assignments")))
+      read(spark, s"$dir/centroids"), read(spark, s"$dir/assignments")))
   }
 
   // ---- persisted packed vectors (PackedCodec: int4, int8, BBQ) -----
@@ -780,7 +867,7 @@ object IndexArtifacts {
       vecCol: String,
       expectIdCol: Option[String] = None): Option[DataFrame] = {
     val dir = packedDir(codec, indexPath, vecCol)
-    freshMeta(spark, indexPath, dir, expectIdCol).map(_ => spark.read.parquet(s"$dir/packed"))
+    freshMeta(spark, indexPath, dir, expectIdCol).map(_ => read(spark, s"$dir/packed"))
   }
 
   // ---- persisted product-quantization codes (PQ) -------------------
@@ -874,7 +961,7 @@ object IndexArtifacts {
   private def pqCodebook(
       spark: SparkSession, dir: String, meta: JValue): Option[((Int, Int), Array[Double])] =
     for (m <- metaInt(meta, "m"); k <- metaInt(meta, "k")) yield
-      ((m, k), spark.read.parquet(s"$dir/codebook").head().getSeq[Double](0).toArray)
+      ((m, k), read(spark, s"$dir/codebook").head().getSeq[Double](0).toArray)
 
   /** Fresh ((m, k), codebook, codes frame) or None. */
   def loadPq(
@@ -885,6 +972,6 @@ object IndexArtifacts {
     val dir = pqDir(indexPath, vecCol)
     freshMeta(spark, indexPath, dir, expectIdCol)
       .flatMap(meta => pqCodebook(spark, dir, meta))
-      .map { case (mk, cb) => (mk, cb, spark.read.parquet(s"$dir/codes")) }
+      .map { case (mk, cb) => (mk, cb, read(spark, s"$dir/codes")) }
   }
 }

@@ -580,26 +580,19 @@ object Search {
     * all-on-the-fly form in any mix (same stats, same fold order).
     * `excludeFields` (runtime-mapped names that shadow stored columns)
     * always score on the fly — their values are not what the write
-    * path analyzed. */
+    * path analyzed. `analysisOf(field)` is the field's fresh
+    * (postings, df, stats) or None (`IndexArtifacts.loadAnalysis`). */
   def bm25BoolClausesScoresAuto(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
+      analysisOf: String => Option[(DataFrame, DataFrame, DataFrame)],
       docs: DataFrame,
       idCol: String,
       clauses: Seq[(String, String)],
       excludeFields: Set[String] = Set.empty,
       k1: Double = 1.2,
-      b: Double = 0.75,
-      knownFp: => Option[String] = None): DataFrame = {
+      b: Double = 0.75): DataFrame = {
     require(clauses.nonEmpty, "bm25BoolClausesScoresAuto needs at least one clause")
-    // forced only if some field's meta EXISTS (loadAnalysis consults
-    // the fingerprint after the cheap meta check) — an index with no
-    // artifacts never pays the dir walk
-    lazy val fp: Option[String] = knownFp.orElse(Some(
-      graft.index.IndexArtifacts.dataFingerprint(spark, indexPath)))
     val art = clauses.map(_._1).distinct.filterNot(excludeFields)
-      .map(f => f -> graft.index.IndexArtifacts.loadAnalysis(
-        spark, indexPath, f, expectIdCol = Some(idCol), knownFp = fp))
+      .map(f => f -> analysisOf(f))
       .toMap
     val (indexed, fly) = clauses.partition(c => art.get(c._1).exists(_.isDefined))
     val idxFrames = indexed.map { case (f, q) =>

@@ -30,11 +30,15 @@ object Ann {
     * 100 MB broadcast, the sane ceiling for a 4 GB driver. */
   val MaxQueryRows = 100000
 
-  /** Enforce [[MaxQueryRows]] cheaply: `limit(cap+1).count()` stops
+  /** Enforce [[MaxQueryRows]] cheaply: a frame whose optimized plan
+    * is statically bounded under the cap (the one-row `knnSearch`
+    * literal) launches no job; otherwise `limit(cap+1).count()` stops
     * scanning as soon as cap+1 rows exist — it never counts an
     * unbounded frame. */
   private def requireBoundedQueries(queries: DataFrame, op: String): Unit = {
-    val n = queries.limit(MaxQueryRows + 1).count()
+    val n = queries.queryExecution.optimizedPlan.maxRows
+      .filter(_ <= MaxQueryRows)
+      .getOrElse(queries.limit(MaxQueryRows + 1).count())
     require(n <= MaxQueryRows,
       s"$op: query frame exceeds the $MaxQueryRows-row broadcast cap " +
         "(ANN queries are collected/broadcast to every task; split the " +

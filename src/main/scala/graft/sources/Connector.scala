@@ -69,13 +69,17 @@ object Connector {
             // restore it here too, or a read issued between the crash
             // and the next write fails on a missing directory
             Connector.recoverSwap(spark, p)
-            val (frame, concrete, plain) = Connector.resolveAlias(spark, p) match {
+            // one dir walk per part: its fingerprint keys the schema
+            // cache and is the artifact freshness fingerprint below
+            val (frame, concrete, plain, fp) = Connector.resolveAlias(spark, p) match {
               case Some((target, filter)) =>
                 Connector.recoverSwap(spark, target)
-                val t = spark.read.format(format).load(target)
+                val (t, fp) = graft.index.IndexArtifacts.readFingerprinted(spark, target, format)
                 (filter.fold(t)(f => t.where(EsQuery.compile(f, idField))),
-                  target, filter.isEmpty)
-              case None => (spark.read.format(format).load(p), p, true)
+                  target, filter.isEmpty, fp)
+              case None =>
+                val (t, fp) = graft.index.IndexArtifacts.readFingerprinted(spark, p, format)
+                (t, p, true, fp)
             }
             // per-part concrete index tag: ES metadata reports each
             // hit's ACTUAL index (alias resolved), not the comma-list
@@ -90,22 +94,29 @@ object Connector {
                 spark.sparkContext.hadoopConfiguration).makeQualified(cp).toString
               frame.withColumn("__graft_src_index", lit(qualified))
             } else frame
-            (tagged, concrete, plain)
+            (tagged, concrete, plain, fp)
           }
         // the `_score` path can read persisted analysis artifacts only
         // when the read resolved to exactly ONE unfiltered index —
         // artifacts carry that index's full corpus stats, which a
         // union or an alias filter would silently misstate
-        val artifactIndexPath: Option[String] = parts match {
-          case Array((_, concrete, true)) => Some(concrete)
-          case _ => None
+        val (artifactIndexPath, readFp) = parts match {
+          case Array((_, concrete, true, fp)) => (Some(concrete), fp)
+          case _ => (None, None)
         }
-        // one dir walk per read: every artifact lookup below (match
-        // rewrite + one per scoring field) reuses this fingerprint
-        // instead of re-listing and re-hashing the index files
-        lazy val artifactFp: Option[String] =
-          artifactIndexPath.map(p =>
-            graft.index.IndexArtifacts.dataFingerprint(spark, p))
+        // every artifact lookup below (match rewrite + one per scoring
+        // field) reuses the read's fingerprint instead of re-listing
+        // and re-hashing the index files
+        lazy val artifactFp: Option[String] = artifactIndexPath.map(p =>
+          readFp.getOrElse(graft.index.IndexArtifacts.dataFingerprint(spark, p)))
+        // one analysis load per field per request: the match rewrite
+        // and the metadata scoring share the meta read and the frames
+        val analysisLoads =
+          scala.collection.mutable.Map.empty[String, Option[((DataFrame, DataFrame, DataFrame), Boolean)]]
+        def analysisOf(f: String): Option[((DataFrame, DataFrame, DataFrame), Boolean)] =
+          analysisLoads.getOrElseUpdate(f, artifactIndexPath.flatMap(p =>
+            graft.index.IndexArtifacts.loadAnalysisAudited(
+              spark, p, f, expectIdCol = Some(idField), knownFp = artifactFp)))
         // allow_no_indices=true (the ES default for wildcard
         // expressions): a pattern matching nothing yields zero hits,
         // not an error. With no matched index there is no schema, so
@@ -156,14 +167,11 @@ object Connector {
             // request's behavior depend on artifact freshness)
             terms = graft.analysis.Analyzer.analyze(text)
             if terms.nonEmpty
-            p <- artifactIndexPath
-            // requireCleanIds: the semi-join is row-set-equal to the
+            // clean ids only: the semi-join is row-set-equal to the
             // predicate only when the build audited ids as unique and
             // non-null (a null id never joins; a duplicate id
             // over-matches sibling rows)
-            (postings, _, _) <- graft.index.IndexArtifacts.loadAnalysis(
-              spark, p, f, expectIdCol = Some(idField), knownFp = artifactFp,
-              requireCleanIds = true)
+            ((postings, _, _), true) <- analysisOf(f)
           } yield df0.join(
             postings.where(col("term").isin(terms: _*))
               .select(col("id").as("__graft_mid")),
@@ -239,10 +247,9 @@ object Connector {
             // (bit-identical; runtime fields that shadow a stored
             // column are excluded from the artifact path).
             val scored = artifactIndexPath match {
-              case Some(p) => graft.search.Search.bm25BoolClausesScoresAuto(
-                spark, p, df0, idField, scoring,
-                excludeFields = runtimeFields.map(_._1).toSet,
-                knownFp = artifactFp)
+              case Some(_) => graft.search.Search.bm25BoolClausesScoresAuto(
+                f => analysisOf(f).map(_._1), df0, idField, scoring,
+                excludeFields = runtimeFields.map(_._1).toSet)
               case None => graft.search.Search
                 .bm25BoolClausesScores(df0, idField, scoring)
             }
@@ -268,7 +275,7 @@ object Connector {
           idField: String = "_id",
           format: String = "parquet"): DataFrame = {
         Connector.recoverSwap(spark, path)
-        val schema = spark.read.format(format).load(path).schema
+        val schema = graft.index.IndexArtifacts.read(spark, path, format).schema
         val s0 = spark.readStream.schema(schema).format(format).load(path)
         if (query == null) s0 else s0.where(EsQuery.compile(query, idField))
       }
@@ -308,7 +315,7 @@ object Connector {
         * introspection, no data read. */
       def fieldCaps(path: String, format: String = "parquet"): DataFrame = {
         Connector.recoverSwap(spark, path)
-        val schema = spark.read.format(format).load(path).schema
+        val schema = graft.index.IndexArtifacts.read(spark, path, format).schema
         import org.apache.spark.sql.types._
         val rows = schema.fields.map { f =>
           val primitive = f.dataType match {

@@ -91,6 +91,23 @@ class AnnTextSpec extends SparkSpec {
     }
   }
 
+  test("ANN query-frame cap: a statically bounded query frame is checked with no job") {
+    val one = spark.range(1).select(lit(-1L).as("vec_id"),
+      array(lit(1.0f), lit(0.0f), lit(0.0f), lit(0.0f)).as("embedding"))
+    var brute: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { brute = Ann.bruteForceTopK(vecs, one, "vec_id", "embedding", 2) } == 0)
+    assert(brute.select("id").as[Long].collect().toSeq == Seq(1L, 2L))
+    val body = """{"knn": {"field": "embedding", "query_vector": [1.0, 0.0, 0.0, 0.0], """ +
+      """"k": 2, "num_candidates": 100000}}"""
+    var knn: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { knn = Ann.knnSearch(vecs, "vec_id", body) } == 0)
+    assert(knn.select("id").as[Long].collect().toSeq == Seq(1L, 2L))
+    // a generator has no static row bound: the eager capped count runs
+    val unbounded = vecs.select(col("vec_id"), explode(array(col("embedding"))).as("embedding"))
+      .where(col("vec_id") === 3)
+    assert(jobsLaunchedBy(Ann.bruteForceTopK(vecs, unbounded, "vec_id", "embedding", 2)) >= 1)
+  }
+
   test("ANN query-frame cap: an unbounded query frame fails LOUDLY") {
     // the broadcast contract is bounded queries vs unbounded corpus;
     // exceeding MaxQueryRows must be an IllegalArgumentException with

@@ -200,4 +200,19 @@ class ConnectorHardeningSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("es.read.metadata"), e.getMessage)
   }
+
+  test("a missing index raises the read's own error; missingAsEmpty and empty patterns read as zero hits") {
+    val base = Files.createTempDirectory("graft_hard_missing")
+    try {
+      val missing = s"$base/nope"
+      val direct = intercept[Exception](spark.read.format("parquet").load(missing))
+      val viaGraft = intercept[Exception](spark.graftDF(missing))
+      assert(direct.isInstanceOf[org.apache.spark.sql.AnalysisException])
+      assert(viaGraft.getClass == direct.getClass)
+      assert(viaGraft.getMessage == direct.getMessage)
+      assert(spark.graftDF(missing, missingAsEmpty = true).count() == 0L)
+      val none = spark.graftDF(s"$base/nothing-*")
+      assert(none.columns.isEmpty && none.count() == 0L)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
+  }
 }

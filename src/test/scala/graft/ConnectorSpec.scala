@@ -7,8 +7,22 @@ import graft.sources.Connector
 import graft.sources.Connector.implicits._
 import org.apache.spark.sql.functions._
 
-class ConnectorSpec extends SparkSpec {
+class ConnectorSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
+
+  /** Per-spec scratch root: every index this spec writes lives here,
+    * deleted when the spec ends. */
+  private lazy val specRoot = {
+    val d = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"gc${ProcessHandle.current().pid()}")
+    org.apache.commons.io.FileUtils.deleteDirectory(d)
+    d.mkdirs()
+    d.toPath
+  }
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteDirectory(specRoot.toFile)
+    finally super.afterAll()
 
   test("Query-DSL JSON compiles to the same results as the Scala DSL") {
     val docs = Tables.documents(spark, sfDir)
@@ -87,7 +101,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("delete operation removes the batch's ids, leaves the rest") {
-    val dir = Files.createTempDirectory("graft_del").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_del").toString + "/idx"
     val cfg = Map("graft.mapping.id" -> "id")
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").saveToGraft(dir, cfg)
     Seq((2L, "x"), (9L, "x")).toDF("id", "v") // 9 absent: not_found is a no-op
@@ -98,7 +112,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("swap crash recovery: a leftover _graft_old index is restored on the next save") {
     import java.nio.file.{Files => JFiles, Paths}
-    val dir = Files.createTempDirectory("graft_crash").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_crash").toString + "/idx"
     val cfg = Map("graft.mapping.id" -> "id")
     Seq((1L, "a")).toDF("id", "v").saveToGraft(dir, cfg)
     // simulate a crash between "rename live aside" and "rename tmp in":
@@ -113,7 +127,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("connector roundtrip: index write, JSON-query read, upsert semantics") {
-    val dir = Files.createTempDirectory("graft_index").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_index").toString + "/idx"
     val v1 = Seq((1L, "alpha", 1), (2L, "beta", 1), (3L, "gamma", 1)).toDF("id", "name", "ver")
     v1.saveToGraft(dir, Map("graft.mapping.id" -> "id"))
     assert(spark.graftDF(dir).count() == 3)
@@ -174,7 +188,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("json-format index: same bulk semantics over es.input.json-style storage") {
-    val dir = Files.createTempDirectory("graft_json").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_json").toString + "/idx"
     val cfg = Map("graft.mapping.id" -> "id", "graft.format" -> "json")
     Seq((1L, "a"), (2L, "b")).toDF("id", "name").saveToGraft(dir, cfg)
     Seq((2L, "b2"), (3L, "c")).toDF("id", "name").saveToGraft(dir, cfg)
@@ -232,7 +246,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("updateByQuery / deleteByQuery: one-pass swap, NULL-safe match") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_ubq").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_ubq").toString + "/idx"
     Seq((1L, "en", 10L), (2L, "de", 20L), (3L, "en", 30L))
       .toDF("doc_id", "lang", "score")
       .write.parquet(dir)
@@ -251,7 +265,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("ingest pipeline: uri_parts and user_agent structured extraction") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_ingest4").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_ingest4").toString + "/idx"
     val pipeline = """{"processors": [
       {"uri_parts": {"field": "u", "target_field": "url"}},
       {"user_agent": {"field": "ua", "target_field": "agent"}}]}"""
@@ -405,7 +419,7 @@ class ConnectorSpec extends SparkSpec {
     import java.nio.file.Files
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val base = Files.createTempDirectory("graft_map").toString
+    val base = Files.createTempDirectory(specRoot, "graft_map").toString
     val dir = s"$base/idx"
     Seq((1L, "t", 1.5, Array(0.1f, 0.2f), Seq("a", "b")))
       .toDF("id", "name", "score", "vec", "tags")
@@ -509,7 +523,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("index templates: applied at creation only, priority wins, cfg overrides") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_tmpl").toString
+    val base = Files.createTempDirectory(specRoot, "graft_tmpl").toString
     val tdir = s"$base/templates"
     Connector.putTemplate(spark, tdir, "logs_low",
       """{"index_patterns": ["logs-*"], "priority": 1,
@@ -540,7 +554,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("_clone and _snapshot/_restore: copies, manifests, crash-safe restore") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_snap").toString
+    val base = Files.createTempDirectory(specRoot, "graft_snap").toString
     val idx = s"$base/logs"
     Seq((1L, "a"), (2L, "b")).toDF("doc_id", "v").write.parquet(idx)
     // clone: byte copy, refuses existing targets
@@ -563,7 +577,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("updateByQueryScript: ctx._source assignments compile and see the snapshot") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_ubqs").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_ubqs").toString + "/idx"
     Seq((1L, 10.0, 2.0), (2L, 20.0, 3.0), (3L, 5.0, 4.0))
       .toDF("doc_id", "price", "factor")
       .write.parquet(dir)
@@ -587,7 +601,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("updateByQueryScript: self-reference and re-assignment thread sequentially") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_ubqs2").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_ubqs2").toString + "/idx"
     Seq((1L, 3.0)).toDF("doc_id", "v").write.parquet(dir)
     // v = v + 1 (→4); v = v * 10 (reads NEW v → 40); w = v - 2 (→38)
     Connector.updateByQueryScript(spark, dir, """{"term": {"doc_id": 1}}""",
@@ -600,7 +614,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("updateByQuery: multi-column set sees the ORIGINAL snapshot") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_ubq2").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_ubq2").toString + "/idx"
     Seq((1L, 10L), (2L, 20L), (3L, 30L))
       .toDF("doc_id", "score")
       .write.parquet(dir)
@@ -625,7 +639,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("index patterns: graftDF expands globs like ES logs-*") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_pat").toString
+    val base = Files.createTempDirectory(specRoot, "graft_pat").toString
     Seq((1L, "a")).toDF("id", "v").write.parquet(s"$base/logs-2026-01")
     Seq((2L, "b")).toDF("id", "v").write.parquet(s"$base/logs-2026-02")
     Seq((9L, "x")).toDF("id", "v").write.parquet(s"$base/other")
@@ -656,7 +670,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("_analyze_disk_usage: per-field bytes from parquet footers") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_du").toString
+    val base = Files.createTempDirectory(specRoot, "graft_du").toString
     val docs = (1 to 200).map(i => (i.toLong, "body text " * 50 + i, i % 7))
       .toDF("id", "body", "small")
     Connector.save(docs, s"$base/idx", Map("graft.write.operation" -> "append"))
@@ -670,7 +684,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("z-order write: per-file ranges narrow on BOTH dimensions") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_z").toString
+    val base = Files.createTempDirectory(specRoot, "graft_z").toString
     // a 64x64 grid: linear sort on x leaves every file spanning the
     // full y range; the z curve gives compact rectangles
     val grid = (for { x <- 0 until 64; y <- 0 until 64 }
@@ -717,7 +731,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("dynamic write resources: media-{type} and logs-{ts|date} patterns") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_dyn").toString
+    val base = Files.createTempDirectory(specRoot, "graft_dyn").toString
     val batch = Seq(
       (1L, "image", "2026-03-01 10:00:00"),
       (2L, "audio", "2026-03-01 11:00:00"),
@@ -747,7 +761,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("saveDynamic computes the batch exactly once regardless of target count") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_dyn1p").toString
+    val base = Files.createTempDirectory(specRoot, "graft_dyn1p").toString
     // 200 rows over 20 distinct targets; an accumulator in a narrow
     // stage counts how many times each source partition is COMPUTED —
     // the high-cardinality-dynamic-write guard: a per-target filtered
@@ -769,7 +783,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("filtered aliases resolve transparently through graftDF") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_alias").toString
+    val base = Files.createTempDirectory(specRoot, "graft_alias").toString
     Seq((1L, "en"), (2L, "de"), (3L, "en"))
       .toDF("doc_id", "lang").write.parquet(s"$base/idx")
     // plain alias: all rows
@@ -787,7 +801,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("rollover: write alias repoints at maxDocs; writes go through the alias") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_roll").toString
+    val base = Files.createTempDirectory(specRoot, "graft_roll").toString
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "v")
       .write.parquet(s"$base/idx-000001")
     Connector.putAlias(spark, s"$base/w", s"$base/idx-000001")
@@ -807,7 +821,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("graftCount and fieldCaps") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_caps").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_caps").toString + "/idx"
     Seq((1L, "en", Seq(1.0)), (2L, "de", Seq(2.0)), (3L, "en", Seq(3.0)))
       .toDF("doc_id", "lang", "vec").write.parquet(dir)
     assert(spark.graftCount(dir) == 3L)
@@ -821,7 +835,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("runtime_mappings: query references runtime fields like mapped ones") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_rt").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_rt").toString + "/idx"
     Seq((1L, 100L, "en"), (2L, 250L, "en"), (3L, 900L, "de"))
       .toDF("doc_id", "n", "lang").write.parquet(dir)
     val out = spark.graftDF(dir,
@@ -843,7 +857,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("ingest pipeline: processor chain shapes docs at write time") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_ingest").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_ingest").toString + "/idx"
     val pipeline = """{"processors": [
       {"set": {"field": "source", "value": "bulk"}},
       {"lowercase": {"field": "name"}},
@@ -870,7 +884,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("ingest pipeline: dissect/grok/date/kv/json/script processors") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_ingest2").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_ingest2").toString + "/idx"
     val pipeline = """{"processors": [
       {"dissect": {"field": "line", "pattern": "%{lvl} %{msg}"}},
       {"grok": {"field": "msg", "patterns": ["%{WORD:verb} %{NUMBER:ms:int}"]}},
@@ -898,7 +912,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("ingest pipeline: csv/split/join/append/urldecode/bytes/fingerprint/foreach/drop") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_ingest3").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_ingest3").toString + "/idx"
     val pipeline = """{"processors": [
       {"csv": {"field": "row", "target_fields": ["city", "pop"], "separator": ";"}},
       {"split": {"field": "path", "separator": "/"}},
@@ -931,7 +945,7 @@ class ConnectorSpec extends SparkSpec {
 
   test("write-side mapping include/exclude keep the id column alive") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_wmap").toString
+    val base = Files.createTempDirectory(specRoot, "graft_wmap").toString
     val df = Seq((1L, "a", 10, "secret")).toDF("doc_id", "v", "n", "internal")
     df.saveToGraft(s"$base/inc", Map(
       "graft.mapping.id" -> "doc_id", "graft.mapping.include" -> "v, n"))
@@ -956,7 +970,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("bucketed storage: co-located join plans with NO exchange") {
-    val base = Files.createTempDirectory("graft_bucket").toString
+    val base = Files.createTempDirectory(specRoot, "graft_bucket").toString
     val facts = (1L to 5000L).toDF("k").withColumn("v", col("k") % 97)
     val dims = (1L to 5000L).toDF("k").withColumn("w", col("k") % 31)
     Connector.saveBucketed(facts, "graft_bkt_facts", base + "/facts", "k", 8)
@@ -981,7 +995,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("_source filter prunes the scan; _count pushes its predicate") {
-    val dir = Files.createTempDirectory("graft_srcf").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_srcf").toString + "/idx"
     Seq((1L, "en", 2.0, 3.0)).toDF("id", "lang", "v1", "v2").write.parquet(dir)
     val pruned = graft.dsl.SearchBody
       .applySourceFilter(spark.read.parquet(dir), """["id", "v1"]""")
@@ -996,7 +1010,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("_cat/indices + _validate/query") {
-    val base = Files.createTempDirectory("graft_cat").toString
+    val base = Files.createTempDirectory(specRoot, "graft_cat").toString
     (1L to 10L).toDF("id").write.parquet(base + "/idx_a")
     (1L to 25L).toDF("id").write.parquet(base + "/idx_b")
     val cat = Connector.catIndices(spark, base)
@@ -1009,7 +1023,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("_reindex: query filter + ingest pipeline + bulk-path id semantics") {
-    val base = Files.createTempDirectory("graft_reindex").toString
+    val base = Files.createTempDirectory(specRoot, "graft_reindex").toString
     val src = base + "/src"
     Seq((1L, "en", 100L), (2L, "de", 300L), (3L, "en", 500L), (4L, "fr", 700L))
       .toDF("id", "lang", "n").write.parquet(src)
@@ -1034,7 +1048,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("_forcemerge compacts to N files, content and count preserved") {
-    val dir = Files.createTempDirectory("graft_fm").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_fm").toString + "/idx"
     val df = (1L to 200L).toDF("id").withColumn("v", col("id") * 3)
     df.repartition(16).write.parquet(dir)
     assert(spark.read.parquet(dir).inputFiles.length == 16)
@@ -1047,7 +1061,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("_shrink coalesces to fewer shards; _split repartitions to more") {
-    val base = Files.createTempDirectory("graft_resize").toString
+    val base = Files.createTempDirectory(specRoot, "graft_resize").toString
     val src = base + "/src"
     (1L to 100L).toDF("id").repartition(8).write.parquet(src)
     Connector.resize(spark, src, base + "/small", 2)
@@ -1061,7 +1075,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("PIT: an open point-in-time pins its generation across swaps") {
-    val dir = Files.createTempDirectory("graft_pit").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_pit").toString + "/idx"
     val cfg = Map("graft.mapping.id" -> "id")
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").saveToGraft(dir, cfg)
 
@@ -1091,7 +1105,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("data streams: append-only generations behind a write alias") {
-    val base = Files.createTempDirectory("graft_ds").toString + "/logs"
+    val base = Files.createTempDirectory(specRoot, "graft_ds").toString + "/logs"
     val probe = Seq((1L, "a")).toDF("id", "v")
     Connector.createDataStream(spark, base, probe)
     Connector.appendToDataStream(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), base)
@@ -1143,7 +1157,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("index sorting: sorted writes produce disjoint per-file key ranges") {
-    val dir = Files.createTempDirectory("graft_sort").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_sort").toString + "/idx"
     val rows = (1L to 400L).map(i => ((i * 131) % 400, s"v$i"))
     rows.toDF("k", "v").repartition(8) // deliberately scrambled input
       .saveToGraft(dir, Map("graft.index.sort" -> "k", "graft.mapping.id" -> "k",
@@ -1171,7 +1185,7 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("field include/exclude wildcards; _cat/count and _cat/aliases") {
-    val root = Files.createTempDirectory("graft_cat").toString
+    val root = Files.createTempDirectory(specRoot, "graft_cat").toString
     val dir = root + "/widx"
     Seq((1L, 2.0, 3.0, "x"), (2L, 4.0, 5.0, "y"))
       .toDF("id", "v_min", "v_max", "k")
@@ -1208,5 +1222,97 @@ class ConnectorSpec extends SparkSpec {
     val colToks = Seq("The QUICK-brown fox2!").toDF("t")
       .select(graft.analysis.Analyzer.tokens($"t")).as[Seq[String]].collect().head
     assert(out.map(_._1) == colToks)
+  }
+
+  // ---- request-path schema cache (IndexArtifacts.readFingerprinted) ----
+
+  test("schema cache: a cached read equals an uncached spark.read, routing partitions included") {
+    val docs = Seq((1L, "en", 10, Option("a")), (2L, "de", 20, None), (3L, "en", 30, Option("c")))
+      .toDF("doc_id", "lang", "n", "note")
+    val plain = Files.createTempDirectory(specRoot, "graft_sc").toString + "/idx"
+    val routed = Files.createTempDirectory(specRoot, "graft_scr").toString + "/idx"
+    docs.saveToGraft(plain, Map("graft.mapping.id" -> "doc_id"))
+    docs.saveToGraft(routed, Map("graft.mapping.id" -> "doc_id", "graft.mapping.routing" -> "lang"))
+    for (dir <- Seq(plain, routed)) {
+      spark.graftDF(dir).schema
+      var cached: org.apache.spark.sql.DataFrame = null
+      // no inference job: the schema came from the cache
+      assert(jobsLaunchedBy { cached = spark.graftDF(dir) } == 0)
+      val uncached = spark.read.parquet(dir)
+      // names, types, nullability and order, partition columns included
+      assert(cached.schema == uncached.schema)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("doc_id").collect().toSeq
+      assert(rows(cached) == rows(uncached))
+    }
+    assert(spark.read.parquet(routed).columns.toSeq == Seq("doc_id", "n", "note", "lang"))
+  }
+
+  test("schema cache: the next read after an append or an index upsert sees the new rows") {
+    val dir = Files.createTempDirectory(specRoot, "graft_scu").toString + "/idx"
+    val cfg = Map("graft.mapping.id" -> "id")
+    def rows() = spark.graftDF(dir).as[(Long, String)].collect().toMap
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").saveToGraft(dir, cfg)
+    assert(rows() == Map(1L -> "a", 2L -> "b"))
+    Seq((3L, "c")).toDF("id", "v").saveToGraft(dir, cfg + ("graft.write.operation" -> "append"))
+    assert(rows() == Map(1L -> "a", 2L -> "b", 3L -> "c"))
+    Seq((2L, "b2"), (4L, "d")).toDF("id", "v").saveToGraft(dir, cfg)
+    assert(rows() == Map(1L -> "a", 2L -> "b2", 3L -> "c", 4L -> "d"))
+  }
+
+  test("schema cache: the next read after an overwrite that adds a column sees the column") {
+    val dir = Files.createTempDirectory(specRoot, "graft_sco").toString + "/idx"
+    val cfg = Map("graft.mapping.id" -> "id")
+    Seq((1L, "a")).toDF("id", "v").saveToGraft(dir, cfg)
+    assert(spark.graftDF(dir).columns.toSeq == Seq("id", "v"))
+    Seq((1L, "a", 7)).toDF("id", "v", "w")
+      .saveToGraft(dir, cfg + ("graft.write.operation" -> "overwrite"))
+    val after = spark.graftDF(dir)
+    assert(after.columns.toSeq == Seq("id", "v", "w"))
+    assert(after.select("w").as[Int].collect().toSeq == Seq(7))
+  }
+
+  test("schema cache: an alias repoint reads the new target") {
+    val base = Files.createTempDirectory(specRoot, "graft_sca").toString
+    Seq((1L, "en"), (2L, "de")).toDF("doc_id", "lang").write.parquet(s"$base/idx-a")
+    Seq((3L, "fr", 0.5)).toDF("doc_id", "lang", "w").write.parquet(s"$base/idx-b")
+    Connector.putAlias(spark, s"$base/cur", s"$base/idx-a")
+    assert(spark.graftDF(s"$base/cur").select("doc_id").as[Long].collect().toSet == Set(1L, 2L))
+    Connector.putAlias(spark, s"$base/cur", s"$base/idx-b")
+    val after = spark.graftDF(s"$base/cur")
+    assert(after.columns.toSeq == Seq("doc_id", "lang", "w"))
+    assert(after.select("doc_id").as[Long].collect().toSeq == Seq(3L))
+  }
+
+  test("schema cache: a session conf that changes inference is part of the key") {
+    val dir = Files.createTempDirectory(specRoot, "graft_scc").toString + "/idx"
+    Seq((1L, 7)).toDF("id", "shard").write.partitionBy("shard").parquet(dir)
+    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    def shardType() = spark.graftDF(dir).schema("shard").dataType
+    assert(shardType() == org.apache.spark.sql.types.IntegerType)
+    spark.conf.set(key, "false")
+    try {
+      assert(shardType() == org.apache.spark.sql.types.StringType)
+      assert(spark.graftDF(dir).select("shard").as[String].collect().toSeq == Seq("7"))
+    } finally spark.conf.unset(key)
+    assert(shardType() == org.apache.spark.sql.types.IntegerType)
+  }
+
+  test("schema cache: a second read of an unchanged index launches no job") {
+    val dir = Files.createTempDirectory(specRoot, "graft_scj").toString + "/idx"
+    Seq((1L, "merge sort runs"), (2L, "window join"), (3L, "sort merge join"))
+      .toDF("doc_id", "text")
+      .saveToGraft(dir, Map("graft.mapping.id" -> "doc_id", "graft.index.analysis" -> "text"))
+    val matchQ = """{"match": {"text": "merge join"}}"""
+    // the first read of a directory infers its schema with a job
+    assert(jobsLaunchedBy(spark.graftDF(dir)) >= 1)
+    assert(jobsLaunchedBy(spark.graftDF(dir)) == 0)
+    // the artifact tables a match / scored read loads are cached too
+    spark.graftDF(dir, matchQ, idField = "doc_id", readMetadata = true)
+    assert(jobsLaunchedBy(spark.graftDF(dir, matchQ, idField = "doc_id")) == 0)
+    assert(jobsLaunchedBy(
+      spark.graftDF(dir, matchQ, idField = "doc_id", readMetadata = true)) == 0)
+    val scored = spark.graftDF(dir, matchQ, idField = "doc_id", readMetadata = true)
+      .select("doc_id", "_score").as[(Long, Double)].collect().toMap
+    assert(scored.keySet == Set(1L, 2L, 3L) && scored.values.forall(_ > 0.0))
   }
 }

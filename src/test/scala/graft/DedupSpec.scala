@@ -336,6 +336,31 @@ class DedupSpec extends SparkSpec {
       (4L, 1L, "all alone here")))
   }
 
+  test("minhash screens leave the CacheManager unchanged; repeated screens agree") {
+    val ref = Seq((1L, base),
+      (2L, "completely different words about spark catalyst optimizer internals plans"))
+      .toDF("id", "text")
+    val fresh = Seq((10L, base + " x"),
+      (11L, "a new document about something else entirely written today")).toDF("id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_cm")
+    try {
+      val idx = s"$dir/idx"
+      graft.sources.Connector.save(ref, idx,
+        Map("graft.mapping.id" -> "id", "graft.index.minhash" -> "text"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Long, Long, Double)].collect().toSeq
+      val before = org.apache.spark.sql.CacheEntries.count(spark)
+      val cross = (1 to 3).map(_ => rows(Dedup.minhashLshCross(fresh, ref, "id", "text", 0.5)))
+      val indexed = (1 to 3).map(_ =>
+        rows(Dedup.minhashLshCrossIndexed(spark, fresh, idx, "id", "text", 0.5).get))
+      val self = (1 to 3).map(_ => rows(Dedup.minhashLsh(ref.union(fresh), "id", "text", 0.5)))
+      assert(org.apache.spark.sql.CacheEntries.count(spark) == before)
+      assert(cross.distinct.size == 1 && indexed.distinct == cross.distinct)
+      assert(cross.head.map(p => (p._1, p._2)) == Seq((10L, 1L)))
+      assert(self.distinct.size == 1 && self.head.map(p => (p._1, p._2)) == Seq((1L, 10L)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("incremental dedup: new docs drop only against OLD near-dups") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again today"
