@@ -114,11 +114,12 @@ private[graft] object EntriesPipeline {
         docs.where(pmod(col("doc_id"), lit(2)) === 0),
         "doc_id", "text", 0.8)
     }),
-    // dedup-once (r13b): the "existing training set" half persists its
+    // dedup-once: the "existing training set" half persists its
     // shingles + band keys as an index artifact at write time; the
     // "new crawl" half dedups against it WITHOUT the ref corpus ever
     // re-tokenizing — hash-equal to on-the-fly q_dedup_cross (same
-    // oracle SQL), the incremental-ingest steady state
+    // oracle SQL), the incremental-ingest steady state. A new half
+    // within Dedup's lookup caps takes the eager lookup regime
     "q_dedup_cross_indexed" -> ((s, d) => {
       val docs = t(s, d, "documents")
       // source-fingerprint-keyed dir: repeated runs reuse the fresh

@@ -1,10 +1,23 @@
 package graft.dedup
 
+import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration.Duration
+
 import graft.analysis.Analyzer
-import graft.expr.{MinHashSig, SimHash32}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.expr.{HashKernels, MinHashSig, SimHash32}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType,
+  StringType, StructType}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import graft.util.Num
 
 /** Large-scale dedup operators for training-data pipelines.
@@ -22,7 +35,9 @@ import graft.util.Num
   *
   * CACHING CONTRACT: the MinHash/LSH screens materialize their
   * shingle sets and banded signatures as eager local checkpoints,
-  * outside the CacheManager, released with the returned plan. Other
+  * outside the CacheManager, released with the returned plan (the
+  * indexed screen's probed side is a persisted RDD, also outside it,
+  * released when its lookup returns or with the join's plan). Other
   * operators pin intermediate caches (edge lists, candidate frames)
   * that stay referenced by the returned plan — call
   * `spark.catalog.clearCache()` (or unpersist selectively) between
@@ -201,17 +216,29 @@ object Dedup {
       numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
     require(bands >= 1 && numHashes % bands == 0,
       s"bands must divide numHashes evenly: numHashes=$numHashes bands=$bands")
-    val rowsPerBand = numHashes / bands
-    val sh = docs.select(
-      col(idCol).as("id"),
-      Analyzer.shingles(Analyzer.tokens(col(textCol))).as("sh"))
-      .where(size(col("sh")) > 0)
-      .localCheckpoint(true)
-    val banded = sh.select(
-      col("id"),
-      explode(bandKeys(minhashSig(col("sh"), numHashes), bands, rowsPerBand)).as("band"))
-    (sh, banded)
+    val sh = sideShingles(docs, idCol, textCol, "id", "sh").localCheckpoint(true)
+    (sh, sideBands(sh, "id", "sh", numHashes, bands))
   }
+
+  /** The (`idAlias`, `shAlias`) shingle sets of one corpus side; docs
+    * with no shingle drop. Lazy. */
+  private def sideShingles(
+      docs: DataFrame, idCol: String, textCol: String,
+      idAlias: String, shAlias: String): DataFrame =
+    docs.select(
+      col(idCol).as(idAlias),
+      Analyzer.shingles(Analyzer.tokens(col(textCol))).as(shAlias))
+      .where(size(col(shAlias)) > 0)
+
+  /** The band-key column of a shingle-set column. */
+  private def bandKeyArray(shCol: Column, numHashes: Int, bands: Int): Column =
+    bandKeys(minhashSig(shCol, numHashes), bands, numHashes / bands)
+
+  /** (`idAlias`, `band`): one row per band key of each shingle set. */
+  private def sideBands(
+      sh: DataFrame, idAlias: String, shAlias: String,
+      numHashes: Int, bands: Int): DataFrame =
+    sh.select(col(idAlias), explode(bandKeyArray(col(shAlias), numHashes, bands)).as("band"))
 
   /** One corpus side of a banded-LSH screen, shared by the self-join
     * (`minhashLshUnsorted`) and cross-corpus (`minhashLshCross`)
@@ -232,21 +259,39 @@ object Dedup {
       idAlias: String, shAlias: String,
       numHashes: Int, bands: Int,
       pin: DataFrame => DataFrame = _.localCheckpoint(true)): (DataFrame, DataFrame) = {
-    val rowsPerBand = numHashes / bands
     // spread ONLY under-partitioned input (see the minhashLsh note:
     // re-shuffling an already-wide 100 TB corpus would be the cost)
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val spread = if (docs.rdd.getNumPartitions < par) docs.repartition(par) else docs
-    val sh = pin(spread.select(
-      col(idCol).as(idAlias),
-      Analyzer.shingles(Analyzer.tokens(col(textCol))).as(shAlias))
-      .where(size(col(shAlias)) > 0))
-    val banded = sh.select(
-      col(idAlias),
-      explode(bandKeys(minhashSig(col(shAlias), numHashes),
-        bands, rowsPerBand)).as("band"))
-    (sh, banded)
+    val spread =
+      if (narrow(docs)) docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+      else docs
+    val sh = pin(sideShingles(spread, idCol, textCol, idAlias, shAlias))
+    (sh, sideBands(sh, idAlias, shAlias, numHashes, bands))
   }
+
+  /** Fewer partitions than the default parallelism: one core per
+    * partition leaves cores idle. */
+  private def narrow(docs: DataFrame): Boolean =
+    docs.rdd.getNumPartitions < docs.sparkSession.sparkContext.defaultParallelism
+
+  /** The cross screen's candidate join and exact verify: new bands
+    * (`new_id`, `band`) join reference bands (`ref_id`, `band`); the
+    * distinct (new_id, ref_id) candidates join both shingle frames
+    * (`new_id`, `new_sh`) and (`ref_id`, `ref_sh`) on their ids, so
+    * null ids never pair and a repeated id pairs every row holding it.
+    * Returns (new_id, ref_id, jaccard ≥ threshold) sorted by
+    * (new_id, ref_id). */
+  private def crossVerify(
+      shNew: DataFrame, bandNew: DataFrame,
+      shRef: DataFrame, bandRef: DataFrame,
+      threshold: Double): DataFrame =
+    bandNew.join(bandRef, "band")
+      .select(col("new_id"), col("ref_id")).distinct()
+      .join(shNew, "new_id").join(shRef, "ref_id")
+      .withColumn("jaccard", Num.round(GraftBridge.column(graft.expr.JaccardSim(
+        GraftBridge.expression(col("new_sh")), GraftBridge.expression(col("ref_sh")))), 4))
+      .where(col("jaccard") >= threshold)
+      .select(col("new_id"), col("ref_id"), col("jaccard"))
+      .orderBy(col("new_id").asc, col("ref_id").asc)
 
   /** CROSS-corpus near-dup screen: which docs of a NEW corpus
     * near-duplicate ANY doc of a REFERENCE corpus (dedup a fresh crawl
@@ -272,33 +317,80 @@ object Dedup {
       shingleBandSide(newDocs, idCol, textCol, "new_id", "new_sh", numHashes, bands)
     val (shRef, bandRef) =
       shingleBandSide(refDocs, idCol, textCol, "ref_id", "ref_sh", numHashes, bands)
-    val candidates = bandNew.join(bandRef, "band")
-      .select(col("new_id"), col("ref_id")).distinct()
-    candidates
-      .join(shNew, "new_id").join(shRef, "ref_id")
-      .withColumn("jaccard", Num.round(GraftBridge.column(graft.expr.JaccardSim(
-        GraftBridge.expression(col("new_sh")), GraftBridge.expression(col("ref_sh")))), 4))
-      .where(col("jaccard") >= threshold)
-      .select(col("new_id"), col("ref_id"), col("jaccard"))
-      .orderBy(col("new_id").asc, col("ref_id").asc)
+    crossVerify(shNew, bandNew, shRef, bandRef, threshold)
   }
 
+  /** Lookup-regime cap on the screened side of `minhashLshCrossIndexed`:
+    * docs with at least one shingle. Measured crossover (4-core
+    * container, 4,000-doc index, median screen time): the lookup leads
+    * at 1,000 docs (770 vs 1,007 ms) and trails at 3,000 (1,942 vs
+    * 1,717 ms). */
+  val LookupSideCap: Int = 1024
+
+  /** Lookup-regime cap on the band-hit rows one screen brings to the
+    * driver, and on its candidates' shingle rows. Measured crossover
+    * (40,000-doc index of 400 repeated texts): the lookup leads at
+    * 202,400 hit rows (2,559 vs 2,808 ms) and ties at 320,000 (3,782 vs
+    * 3,835 ms). */
+  val LookupHitCap: Int = 200000
+
+  /** Lookup-regime cap on the bytes (UnsafeRow sizes) each of the
+    * lookup's three reads brings to the driver. A row cap alone does not
+    * bound them: a shingle row holds one 3-gram string per token, so a
+    * 1,500-token page is about 40 KB where a band row is about 90 B.
+    * The cap bounds driver memory, not speed: against 2,400 such pages
+    * the lookup still leads with 92 MB of shingle rows (1,904 vs
+    * 3,332 ms), and the three reads together hold at most 3 x 64 MB. */
+  val LookupByteCap: Long = 64L << 20
+
   /** Cross-corpus near-dup screen against a PERSISTED minhash artifact
-    * (IndexArtifacts.buildMinhash) — dedup-once: the historical corpus
+    * (IndexArtifacts.buildMinhash) — dedup-once: the reference corpus
     * is never re-tokenized or re-minhashed; its shingle sets and band
-    * keys read back as narrow columnar tables. Only the NEW side (the
-    * daily crawl) pays shingle+signature compute, and with a small new
-    * side AQE broadcasts its bands so the reference table streams
-    * map-side — the 100 TB corpus neither shuffles nor recomputes. No
-    * forced broadcast hint: a bulk backfill's new side can be huge,
-    * and AQE picks the join strategy per run (the keepFirstByKey
-    * lesson). Answer-equal to `minhashLshCross` by construction (the
-    * artifact persists exactly the frames `shingleBandSide` computes).
-    * Returns None when the artifact is missing, stale, or was built
-    * with different (idCol, numHashes, bands) — callers fall back to
-    * the on-the-fly cross screen. */
+    * keys read back as columnar tables, and only the NEW side (the
+    * crawl batch) pays shingle + signature compute. Two regimes return
+    * identical rows in identical (new_id, ref_id) order under an
+    * identical schema, nullability included:
+    *
+    *  - LOOKUP, for a side of at most `LookupSideCap` docs whose band
+    *    keys hit at most `LookupHitCap` artifact rows, with each read
+    *    under `LookupByteCap` bytes. EAGER: its three jobs run inside
+    *    this call — the side's (id, shingles, band keys) to the driver;
+    *    the `bands` rows whose band is IN those keys; the `shingles`
+    *    rows whose id is IN the candidate ref ids. Each collect keeps at
+    *    most its caps, and the screen adds no exchange to any of the
+    *    three. The shingle read is not started when the candidates
+    *    times the batch's mean shingle row passes the byte cap. Pairs verify on the driver with
+    *    `HashKernels.jaccardKernel` and `Num.roundDouble`, bit-identical
+    *    to the join's `JaccardSim` and `Num.round`. The result is a
+    *    local frame: collecting it launches no job. The rows reaching
+    *    the driver are the batch, its hits and its candidates' shingle
+    *    sets, however large the corpus.
+    *  - JOIN, for every other input: a read over a cap, duplicate
+    *    non-null side ids, or ids that are not integral or string. It
+    *    runs after the probes that found it: a side of at least one
+    *    partition per core reuses the rows the side probe computed
+    *    (one job, under the join's description, fills any the probe
+    *    left), and a narrower one checkpoints its shingles eagerly,
+    *    each probe task having stopped at the cap. The returned plan
+    *    is lazy and joins the side's band keys with the whole `bands`
+    *    table and the candidates with the whole `shingles` table. AQE
+    *    picks each join's strategy per run: against a small corpus it
+    *    broadcasts the reference tables, against a large one it
+    *    shuffles. No broadcast hint is forced, because a bulk
+    *    backfill's side can be huge (the keepFirstByKey lesson).
+    *
+    * Null ids never pair and empty-shingle docs drop in both, and both
+    * answer as `minhashLshCross` would against the reference corpus:
+    * the artifact persists exactly the frames `shingleBandSide`
+    * computes. Every job this call launches carries a job description
+    * naming the regime and the numbers behind the choice (side docs,
+    * band keys, hit rows, candidate refs; on a join, the reason); the
+    * caller's description is restored afterwards. Returns None when
+    * the artifact is missing, stale, or was built with different
+    * (idCol, numHashes, bands) — callers fall back to the on-the-fly
+    * cross screen. */
   def minhashLshCrossIndexed(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       newDocs: DataFrame,
       indexPath: String,
       idCol: String,
@@ -306,23 +398,254 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 32,
       bands: Int = 8): Option[DataFrame] =
+    minhashLshCrossIndexedCapped(spark, newDocs, indexPath, idCol, textCol,
+      threshold, numHashes, bands, LookupSideCap, LookupHitCap, LookupByteCap)
+
+  /** The local property `SparkContext.setJobDescription` sets. */
+  private val JobDescription = "spark.job.description"
+
+  /** Job descriptions of the lookup regime. */
+  private val Lookup = "minhash screen lookup: "
+  private def sideProbe(sideCap: Int, byteCap: Long): String =
+    s"side probe, caps $sideCap docs, $byteCap bytes"
+
+  /** `minhashLshCrossIndexed` under explicit lookup caps (the row caps
+    * below Int.MaxValue); a negative `sideCap` takes the join regime
+    * without probing the side. */
+  private[graft] def minhashLshCrossIndexedCapped(
+      spark: SparkSession,
+      newDocs: DataFrame,
+      indexPath: String,
+      idCol: String,
+      textCol: String,
+      threshold: Double,
+      numHashes: Int,
+      bands: Int,
+      sideCap: Int,
+      hitCap: Int,
+      byteCap: Long): Option[DataFrame] =
     graft.index.IndexArtifacts
       .loadMinhash(spark, indexPath, textCol, Some(idCol), numHashes, bands)
-      .map { case (refSh, refBands) =>
-        val (shNew, bandNew) =
-          shingleBandSide(newDocs, idCol, textCol, "new_id", "new_sh", numHashes, bands)
-        val candidates = bandNew
-          .join(refBands.select(col("id").as("ref_id"), col("band")), "band")
-          .select(col("new_id"), col("ref_id")).distinct()
-        candidates
-          .join(shNew, "new_id")
-          .join(refSh.select(col("id").as("ref_id"), col("sh").as("ref_sh")), "ref_id")
-          .withColumn("jaccard", Num.round(GraftBridge.column(graft.expr.JaccardSim(
-            GraftBridge.expression(col("new_sh")), GraftBridge.expression(col("ref_sh")))), 4))
-          .where(col("jaccard") >= threshold)
-          .select(col("new_id"), col("ref_id"), col("jaccard"))
-          .orderBy(col("new_id").asc, col("ref_id").asc)
+      .map { case (sh, bandTable) =>
+        val refSh = sh.select(col("id").as("ref_id"), col("sh").as("ref_sh"))
+        val refBands = bandTable.select(col("id").as("ref_id"), col("band"))
+        val sc = spark.sparkContext
+        val caller = sc.getLocalProperty(JobDescription)
+        try {
+          // planning the side runs the stages of an input with a shuffle
+          if (sideCap >= 0) sc.setJobDescription(Lookup + sideProbe(sideCap, byteCap))
+          val probed =
+            if (sideCap < 0) None else Some(probedSide(newDocs, idCol, textCol, numHashes, bands))
+          val looked = probed.fold[Either[String, DataFrame]](Left("lookup off")) {
+            case (side, _) =>
+              lookupScreen(side, refSh, refBands, threshold, sideCap, hitCap, byteCap)
+          }
+          looked.fold({ why =>
+            sc.setJobDescription(s"minhash screen join: $why")
+            val (shNew, bandNew) = probed.collect { case (side, Some(rows)) =>
+              // eager, like shingleBandSide's checkpoint: every partition
+              // the probe left uncomputed fills now, not raced by the
+              // join's two branches (most are kept blocks already)
+              rows.count()
+              keyedSide(side)
+            }.getOrElse(
+              shingleBandSide(newDocs, idCol, textCol, "new_id", "new_sh", numHashes, bands))
+            crossVerify(shNew, bandNew, refSh, refBands, threshold)
+          }, { local =>
+            probed.flatMap(_._2).foreach(_.unpersist(blocking = false))
+            local
+          })
+        } finally sc.setLocalProperty(JobDescription, caller)
       }
+
+  /** The screened side as the lookup probes it: (`new_id`, `new_sh`,
+    * `band_keys`), and the persisted rows under it, if any. A side of at
+    * least one partition per core reads through an RDD persisted
+    * MEMORY_AND_DISK: the probe's tasks compute and keep their whole
+    * partitions, a join after the probe reads those rows instead of
+    * shingling and hashing the side again, and the blocks go when the
+    * lookup returns or with the join's plan (ContextCleaner). Not a
+    * lazy `localCheckpoint`: that truncates the lineage at the end of
+    * whichever of the join's jobs ends first, under jobs still running
+    * on it. A narrower side is not persisted, so each probe task stops
+    * at the cap, and the join spreads it over the cores as
+    * `shingleBandSide` does. */
+  private def probedSide(
+      newDocs: DataFrame, idCol: String, textCol: String,
+      numHashes: Int, bands: Int): (DataFrame, Option[RDD[InternalRow]]) = {
+    val keyed = sideShingles(newDocs, idCol, textCol, "new_id", "new_sh")
+      .withColumn("band_keys", bandKeyArray(col("new_sh"), numHashes, bands))
+    if (narrow(newDocs)) (keyed, None)
+    else {
+      val rows = keyed.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+      (GraftBridge.internalRowsFrame(keyed.sparkSession, rows, keyed.schema), Some(rows))
+    }
+  }
+
+  /** A `probedSide` frame as the join's (shingle frame, band frame). */
+  private def keyedSide(side: DataFrame): (DataFrame, DataFrame) =
+    (side.select(col("new_id"), col("new_sh")),
+      side.select(col("new_id"), explode(col("band_keys")).as("band")))
+
+  /** The lookup regime of `minhashLshCrossIndexed`: its local result,
+    * or Left(why the join has to run) — an input over a cap, or one
+    * whose ids the driver-side verify cannot compare exactly as the
+    * join does. */
+  private def lookupScreen(
+      side: DataFrame, refSh: DataFrame, refBands: DataFrame, threshold: Double,
+      sideCap: Int, hitCap: Int, byteCap: Long): Either[String, DataFrame] = {
+    val spark = side.sparkSession
+    // the join regime's schema, from its analyzed plan alone (no job)
+    val schema = {
+      val (shNew, bandNew) = keyedSide(side)
+      crossVerify(shNew, bandNew, refSh, refBands, threshold).schema
+    }
+    val newType = schema("new_id").dataType
+    val refType = schema("ref_id").dataType
+    if (!lookupIdType(newType) || !lookupIdType(refType))
+      return Left(s"ids $newType/$refType are not integral or string")
+    def bounded(df: DataFrame, cap: Int, job: String): Either[String, Array[UnsafeRow]] = {
+      spark.sparkContext.setJobDescription(Lookup + job)
+      collectAtMost(df, cap, byteCap)
+    }
+    def kb(rows: Array[UnsafeRow]): String =
+      s"${(rows.map(_.getSizeInBytes.toLong).sum + 1023) / 1024} KB"
+
+    val sideRows = bounded(side, sideCap, sideProbe(sideCap, byteCap)) match {
+      case Right(rows) => rows
+      case Left(over) => return Left(s"side over cap: $over")
+    }
+    val live = sideRows.filterNot(_.isNullAt(0))
+    val newSh = live.map(r => r.get(0, newType) -> r.getArray(1)).toMap
+    if (newSh.size < live.length) return Left(s"duplicate ids among ${sideRows.length} side docs")
+    val byKey = live
+      .flatMap(r => r.getArray(2).toArray[UTF8String](StringType).map(_ -> r.get(0, newType)))
+      .groupMap(_._1)(_._2)
+    val sized = s"side docs ${sideRows.length} (${kb(sideRows)}), band keys ${byKey.size}"
+
+    val hits =
+      if (byKey.isEmpty) Array.empty[UnsafeRow]
+      else bounded(refBands.where(col("band").isin(byKey.keys.map(_.toString).toSeq: _*)),
+        hitCap, s"$sized; hit probe, caps $hitCap rows, $byteCap bytes") match {
+        case Right(rows) => rows
+        case Left(over) => return Left(s"hits over cap: $sized, hit probe $over")
+      }
+    val pairs = hits.filterNot(_.isNullAt(0))
+      .flatMap(h => byKey(h.getUTF8String(1)).map(n => (n, h.get(0, refType))))
+      .distinct
+    val refs = pairs.map(_._2).distinct
+    val hit = s"$sized, hit rows ${hits.length} (${kb(hits)}), candidate refs ${refs.length}"
+    // a shingle read its byte cap would stop is not started: candidates
+    // near-copy the batch, so the batch's mean shingle row predicts theirs
+    if (refs.nonEmpty) {
+      val meanSh =
+        newSh.values.map(_.asInstanceOf[UnsafeArrayData].getSizeInBytes.toLong).sum / newSh.size
+      val predicted = refs.length * (meanSh + 24)
+      if (predicted > byteCap)
+        return Left(s"shingles over cap: $hit, about $predicted bytes predicted")
+    }
+
+    val refRows =
+      if (refs.isEmpty) Array.empty[UnsafeRow]
+      else bounded(refSh.where(col("ref_id").isin(
+        refs.map(CatalystTypeConverters.convertToScala(_, refType)).toSeq: _*)),
+        hitCap, s"$hit; shingle read, caps $hitCap rows, $byteCap bytes") match {
+        case Right(rows) => rows
+        case Left(over) => return Left(s"shingles over cap: $hit, shingle read $over")
+      }
+    val refShs = refRows.filterNot(_.isNullAt(1)).groupMap(_.get(0, refType))(_.getArray(1))
+
+    val found = for {
+      (n, r) <- pairs
+      rsh <- refShs.getOrElse(r, Array.empty[ArrayData])
+      j = Num.roundDouble(HashKernels.jaccardKernel(newSh(n), rsh), 4)
+      if j >= threshold
+    } yield (n, r, j)
+    val toNew = CatalystTypeConverters.createToScalaConverter(newType)
+    val toRef = CatalystTypeConverters.createToScalaConverter(refType)
+    val rows = found
+      .sorted(Ordering.Tuple3(idOrdering(newType), idOrdering(refType), Ordering.Double.TotalOrdering))
+      .map { case (n, r, j) => Row(toNew(n), toRef(r), j) }
+    Right(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+  }
+
+  /** Id types whose driver-side equality, hashing and order match
+    * Spark's join equality and sort. */
+  private def lookupIdType(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => t == StringType
+  }
+
+  /** Spark's ascending sort on catalyst values of a `lookupIdType`:
+    * numeric, or UTF-8 byte order for strings. */
+  private def idOrdering(t: DataType): Ordering[Any] =
+    if (t == StringType) Ordering.fromLessThan[Any](
+      (a, b) => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String]) < 0)
+    else Ordering.by[Any, Long](_.asInstanceOf[Number].longValue)
+
+  /** The rows of `df` when it has at most `cap` of them and they take at
+    * most `byteCap` bytes as UnsafeRows, else Left(which cap it passed).
+    * One job over every partition: each task ships at most `cap + 1`
+    * rows and stops at the first row that takes it past its share of
+    * the bytes, `byteCap` over the number of tasks that can run at once
+    * (the default parallelism, or fewer partitions); the driver keeps at
+    * most `cap` rows and `byteCap` bytes, and cancels the job once a
+    * task passes its share or the kept rows would pass a cap. So the
+    * results that reach the driver stay under about twice `byteCap`
+    * plus one row per task, whatever the parallelism. Runs as a SQL
+    * execution, so query listeners and the SQL metrics see it like any
+    * collect. */
+  private def collectAtMost(
+      df: DataFrame, cap: Int, byteCap: Long): Either[String, Array[UnsafeRow]] = {
+    require(cap < Int.MaxValue, s"cap $cap leaves no room for the overflow row")
+    val qe = df.queryExecution
+    val schema = df.schema
+    val sc = df.sparkSession.sparkContext
+    SQLExecution.withNewExecutionId(qe, Some("collectAtMost")) {
+      val rdd = qe.toRdd
+      val slots = math.max(1, math.min(sc.defaultParallelism, rdd.partitions.length))
+      val share = math.max(1L, byteCap / slots)
+      val kept = ArrayBuffer.empty[UnsafeRow]
+      var keptBytes = 0L
+      val over = Promise[String]()
+      val job = sc.submitJob(rdd,
+        (rows: Iterator[InternalRow]) => takeAtMost(rows, schema, cap + 1, share),
+        rdd.partitions.indices,
+        (_: Int, part: (Array[UnsafeRow], Long)) => {
+          val (rows, bytes) = part
+          if (kept.length + rows.length > cap) over.trySuccess(s"over $cap rows")
+          else if (bytes > share || keptBytes + bytes > byteCap)
+            over.trySuccess(s"over $byteCap bytes")
+          else if (!over.isCompleted) { kept ++= rows; keptBytes += bytes }
+        },
+        ())
+      Await.ready(Future.firstCompletedOf(Seq(job, over.future))(ExecutionContext.parasitic),
+        Duration.Inf)
+      over.future.value match {
+        case Some(why) => job.cancel(); Left(why.get)
+        case None => Await.result(job, Duration.Inf); Right(kept.toArray)
+      }
+    }
+  }
+
+  /** A task's side of `collectAtMost`: copies of its first rows, up to
+    * `n` rows or through the first row that takes them past `bytes`,
+    * with their summed size. */
+  private def takeAtMost(rows: Iterator[InternalRow], schema: StructType,
+      n: Int, bytes: Long): (Array[UnsafeRow], Long) = {
+    lazy val toUnsafe = UnsafeProjection.create(schema)
+    val out = ArrayBuffer.empty[UnsafeRow]
+    var size = 0L
+    while (rows.hasNext && out.length < n && size <= bytes) {
+      val row = rows.next() match {
+        case u: UnsafeRow => u.copy()
+        case r => toUnsafe(r).copy()
+      }
+      out += row
+      size += row.getSizeInBytes
+    }
+    (out.toArray, size)
+  }
 
   /** `minhashLsh` without the final presentation sort — the input shape
     * for consumers that immediately reshuffle (e.g. `dedupClusters`),

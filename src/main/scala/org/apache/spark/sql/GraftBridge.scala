@@ -12,6 +12,14 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A frame over an RDD of catalyst rows laid out as `schema`, read
+    * as they are (no round trip through `Row`). */
+  def internalRowsFrame(
+      spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** The literal value of a `lit(...)` column, if it is one. Spark 4's
     * Column wraps a ColumnNode; a literal arrives as either the node
     * form or (post-conversion) a catalyst Literal — handle both. */

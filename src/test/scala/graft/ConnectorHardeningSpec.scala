@@ -11,11 +11,13 @@ import org.apache.spark.sql.functions._
   * silent-wrong-results class the DuckDB oracle can't see (PIT +
   * pattern interplay, alias filters across maintenance ops, bulk
   * determinism, schema drift). */
-class ConnectorHardeningSpec extends SparkSpec {
+class ConnectorHardeningSpec extends SparkSpec with SpecTempRoot {
   import spark.implicits._
 
+  override protected def tempRootPrefix = "gh"
+
   test("pattern reads exclude retired generations, pits and spool machinery") {
-    val base = Files.createTempDirectory("graft_hard_pat").toString
+    val base = Files.createTempDirectory(specRoot, "graft_hard_pat").toString
     val cfg = Map("graft.mapping.id" -> "id")
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").saveToGraft(s"$base/logs-1", cfg)
     // open a PIT (creates logs-1_graft_pits), then swap-upsert so the
@@ -40,7 +42,7 @@ class ConnectorHardeningSpec extends SparkSpec {
   }
 
   test("saveDynamic rejects path-unsafe resolved names before ANY target writes") {
-    val base = Files.createTempDirectory("graft_hard_dyn").toString
+    val base = Files.createTempDirectory(specRoot, "graft_hard_dyn").toString
     val batch = Seq((1L, "image"), (2L, "video/mp4"), (3L, "audio"))
       .toDF("id", "media_type")
     val e = intercept[IllegalArgumentException] {
@@ -58,7 +60,7 @@ class ConnectorHardeningSpec extends SparkSpec {
   }
 
   test("rollover carries the alias filter to the next generation") {
-    val base = Files.createTempDirectory("graft_hard_roll").toString
+    val base = Files.createTempDirectory(specRoot, "graft_hard_roll").toString
     Seq((1L, "a", 1L), (2L, "a", 2L), (3L, "b", 3L))
       .toDF("id", "tenant", "n").write.parquet(s"$base/idx-000001")
     Connector.putAlias(spark, s"$base/write_a", s"$base/idx-000001",
@@ -73,7 +75,7 @@ class ConnectorHardeningSpec extends SparkSpec {
   }
 
   test("upsert into an existing index resolves in-batch duplicate ids by arrival order") {
-    val base = Files.createTempDirectory("graft_hard_dup").toString + "/idx"
+    val base = Files.createTempDirectory(specRoot, "graft_hard_dup").toString + "/idx"
     val cfg = Map("graft.mapping.id" -> "id")
     Seq((1L, "orig")).toDF("id", "v").saveToGraft(base, cfg)
     // the same id twice in one batch: bulk order says the LAST wins —
@@ -87,7 +89,7 @@ class ConnectorHardeningSpec extends SparkSpec {
   }
 
   test("snapshot restore retires a PIT-pinned generation instead of deleting it") {
-    val base = Files.createTempDirectory("graft_hard_snap").toString
+    val base = Files.createTempDirectory(specRoot, "graft_hard_snap").toString
     val idx = s"$base/idx"
     val cfg = Map("graft.mapping.id" -> "id")
     Seq((1L, "a")).toDF("id", "v").saveToGraft(idx, cfg)
@@ -104,7 +106,7 @@ class ConnectorHardeningSpec extends SparkSpec {
   }
 
   test("op=update is a PARTIAL merge: omitted columns keep their stored values") {
-    val dir = Files.createTempDirectory("graft_hard_upd").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_hard_upd").toString + "/idx"
     val cfg = Map("graft.mapping.id" -> "id")
     Seq((1L, "alice", "a@x.io"), (2L, "bob", "b@x.io"))
       .toDF("id", "name", "email").saveToGraft(dir, cfg)
@@ -121,7 +123,7 @@ class ConnectorHardeningSpec extends SparkSpec {
   }
 
   test("pattern reads tolerate schema drift between indices (nulls, like ES)") {
-    val base = Files.createTempDirectory("graft_hard_drift").toString
+    val base = Files.createTempDirectory(specRoot, "graft_hard_drift").toString
     Seq((1L, "x")).toDF("id", "a").write.parquet(s"$base/d-1")
     Seq((2L, 9L)).toDF("id", "b").write.parquet(s"$base/d-2")
     val got = spark.graftDF(s"$base/d-*")
@@ -131,7 +133,7 @@ class ConnectorHardeningSpec extends SparkSpec {
   }
 
   test("delete/update _by_query through a filtered alias touch only the alias view") {
-    val base = Files.createTempDirectory("graft_hard_alias").toString
+    val base = Files.createTempDirectory(specRoot, "graft_hard_alias").toString
     val idx = s"$base/idx"
     Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 10L))
       .toDF("id", "tenant", "n").write.parquet(idx)
@@ -151,7 +153,7 @@ class ConnectorHardeningSpec extends SparkSpec {
   }
 
   test("readMetadata _index reports each row's concrete index, alias resolved") {
-    val base = Files.createTempDirectory("graft_hard_meta").toString
+    val base = Files.createTempDirectory(specRoot, "graft_hard_meta").toString
     Seq((1L, "x")).toDF("id", "v").write.parquet(s"$base/m-1")
     Seq((2L, "y")).toDF("id", "v").write.parquet(s"$base/m-2")
     Connector.putAlias(spark, s"$base/al", s"$base/m-2")
@@ -166,7 +168,7 @@ class ConnectorHardeningSpec extends SparkSpec {
   }
 
   test("readMetadata composes with a FULL scoring body: one _score, body's value wins") {
-    val base = Files.createTempDirectory("graft_hard_bodymeta").toString
+    val base = Files.createTempDirectory(specRoot, "graft_hard_bodymeta").toString
     Seq((1L, "fast hash join plan"), (2L, "slow nested loop"), (3L, "fast merge"))
       .toDF("id", "text").write.parquet(s"$base/idx")
     // a body carrying a scoring section (min_score) plus a match query:
@@ -191,7 +193,7 @@ class ConnectorHardeningSpec extends SparkSpec {
   }
 
   test("readMetadata + aggs/suggest body fails with a named error, not a missing id") {
-    val base = Files.createTempDirectory("graft_hard_aggmeta").toString
+    val base = Files.createTempDirectory(specRoot, "graft_hard_aggmeta").toString
     Seq((1L, "en"), (2L, "de")).toDF("id", "lang").write.parquet(s"$base/idx")
     val e = intercept[IllegalArgumentException] {
       spark.graftDF(s"$base/idx",
@@ -202,7 +204,7 @@ class ConnectorHardeningSpec extends SparkSpec {
   }
 
   test("a missing index raises the read's own error; missingAsEmpty and empty patterns read as zero hits") {
-    val base = Files.createTempDirectory("graft_hard_missing")
+    val base = Files.createTempDirectory(specRoot, "graft_hard_missing")
     try {
       val missing = s"$base/nope"
       val direct = intercept[Exception](spark.read.format("parquet").load(missing))

@@ -7,22 +7,10 @@ import graft.sources.Connector
 import graft.sources.Connector.implicits._
 import org.apache.spark.sql.functions._
 
-class ConnectorSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class ConnectorSpec extends SparkSpec with SpecTempRoot {
   import spark.implicits._
 
-  /** Per-spec scratch root: every index this spec writes lives here,
-    * deleted when the spec ends. */
-  private lazy val specRoot = {
-    val d = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"gc${ProcessHandle.current().pid()}")
-    org.apache.commons.io.FileUtils.deleteDirectory(d)
-    d.mkdirs()
-    d.toPath
-  }
-
-  override def afterAll(): Unit =
-    try org.apache.commons.io.FileUtils.deleteDirectory(specRoot.toFile)
-    finally super.afterAll()
+  override protected def tempRootPrefix = "gc"
 
   test("Query-DSL JSON compiles to the same results as the Scala DSL") {
     val docs = Tables.documents(spark, sfDir)

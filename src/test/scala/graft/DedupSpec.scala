@@ -3,8 +3,10 @@ package graft
 import graft.dedup.{Dedup, Vectors}
 import org.apache.spark.sql.functions._
 
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with SpecTempRoot {
   import spark.implicits._
+
+  override protected def tempRootPrefix = "gd"
 
   private val base = "the quick brown fox jumps over the lazy dog again and again today"
 
@@ -342,7 +344,7 @@ class DedupSpec extends SparkSpec {
       .toDF("id", "text")
     val fresh = Seq((10L, base + " x"),
       (11L, "a new document about something else entirely written today")).toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_cm")
+    val dir = java.nio.file.Files.createTempDirectory(specRoot, "graft_dedup_cm")
     try {
       val idx = s"$dir/idx"
       graft.sources.Connector.save(ref, idx,
@@ -351,11 +353,16 @@ class DedupSpec extends SparkSpec {
         df.as[(Long, Long, Double)].collect().toSeq
       val before = org.apache.spark.sql.CacheEntries.count(spark)
       val cross = (1 to 3).map(_ => rows(Dedup.minhashLshCross(fresh, ref, "id", "text", 0.5)))
+      // the indexed screen in each regime: lookup (the default for a
+      // 2-doc batch) and the join, forced
       val indexed = (1 to 3).map(_ =>
         rows(Dedup.minhashLshCrossIndexed(spark, fresh, idx, "id", "text", 0.5).get))
+      val indexedJoin = (1 to 3).map(_ => rows(Dedup.minhashLshCrossIndexedCapped(
+        spark, fresh, idx, "id", "text", 0.5, 32, 8, sideCap = -1, hitCap = -1, byteCap = -1).get))
       val self = (1 to 3).map(_ => rows(Dedup.minhashLsh(ref.union(fresh), "id", "text", 0.5)))
       assert(org.apache.spark.sql.CacheEntries.count(spark) == before)
       assert(cross.distinct.size == 1 && indexed.distinct == cross.distinct)
+      assert(indexedJoin.distinct == cross.distinct)
       assert(cross.head.map(p => (p._1, p._2)) == Seq((10L, 1L)))
       assert(self.distinct.size == 1 && self.head.map(p => (p._1, p._2)) == Seq((1L, 10L)))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)

@@ -7,23 +7,13 @@ import org.apache.spark.sql.functions._
 /** Analyze-once persisted index artifacts: build-at-write, bit-equal
   * scoring in both regimes, postings pushdown, and freshness across
   * appends and the crash-safe swap. */
-class IndexArtifactsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
 
-  /** Per-spec scratch root: every index this spec writes lives here.
-    * Kept short (pid-keyed, not a random temp name): plan assertions
-    * look for artifact table names inside the scan location, which
-    * Spark abbreviates past spark.sql.maxMetadataStringLength. */
-  private lazy val root = {
-    val d = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"gi${ProcessHandle.current().pid()}")
-    org.apache.commons.io.FileUtils.deleteDirectory(d)
-    d.mkdirs()
-    d.getPath
-  }
-
-  override def afterAll(): Unit =
-    try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    finally super.afterAll()
+  /** Kept short: plan assertions look for artifact table names inside
+    * the scan location, which Spark abbreviates past
+    * spark.sql.maxMetadataStringLength. */
+  override protected def tempRootPrefix = "gi"
+  private lazy val root = specRoot.toString
 
   private def topk(df: org.apache.spark.sql.DataFrame) =
     df.orderBy(col("score").desc, col("id").asc).limit(10)
@@ -351,9 +341,24 @@ class IndexArtifactsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     val fly = rows(Dedup.minhashLshCross(
       nu, spark.read.parquet(out), "doc_id", "text", 0.8))
     assert(indexed == fly && indexed.nonEmpty)
-    // the indexed plan reads the persisted frames — the ref corpus
-    // itself (its text column) appears nowhere in the scan set
-    val scans = indexedDf.queryExecution.executedPlan.toString
+    // the 253-doc batch takes the lookup regime: its eager jobs read
+    // the batch's own source and the persisted frames, never the index
+    // data (the ref corpus and its text column)
+    val mhDir = IndexArtifacts.minhashDir(out, "text")
+    val lookup = launchedBy(Dedup.minhashLshCrossIndexed(spark, nu, out, "doc_id", "text", 0.8))
+    val locations = lookup.plans.flatMap(p =>
+      "Location: \\w+ \\[([^\\]]*)\\]".r.findAllMatchIn(p).flatMap(_.group(1).split(", ")))
+    assert(lookup.descriptions.nonEmpty &&
+      lookup.descriptions.forall(_.startsWith("minhash screen lookup:")), lookup.descriptions)
+    assert(locations.exists(_.endsWith(s"$mhDir/bands")) &&
+      locations.exists(_.endsWith(s"$mhDir/shingles")), locations)
+    assert(locations.forall(l => l.endsWith(s"$mhDir/bands") ||
+      l.endsWith(s"$mhDir/shingles") || l.contains(sfDir)), locations)
+    // the join regime's plan reads the persisted frames as well
+    val joinDf = Dedup.minhashLshCrossIndexedCapped(
+      spark, nu, out, "doc_id", "text", 0.8, 32, 8, sideCap = -1, hitCap = -1, byteCap = -1).get
+    assert(rows(joinDf) == fly)
+    val scans = joinDf.queryExecution.executedPlan.toString
     assert(scans.contains("shingles") && scans.contains("bands"), scans.take(2000))
 
     // APPEND with the option: only the new docs pay shingle compute;
