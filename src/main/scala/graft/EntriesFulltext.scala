@@ -205,7 +205,7 @@ private[graft] object EntriesFulltext {
       Search.bm25TopK(t(s, d, "documents"), "doc_id", "text", "fast hash join", 10)),
     // analyze-once persisted index: write the corpus with
     // graft.index.analysis, score the SAME query from the persisted
-    // postings/df/stats artifacts — hash-equal to on-the-fly q_bm25
+    // postings artifact and its meta — hash-equal to on-the-fly q_bm25
     // (same oracle SQL), but the corpus tokenize is paid at write time
     "q_bm25_indexed" -> ((s, d) => {
       // index dir keyed by the SOURCE file's fingerprint: repeated

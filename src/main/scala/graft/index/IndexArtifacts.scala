@@ -19,11 +19,14 @@ import org.json4s.{JBool, JDouble, JInt, JString, JValue}
   * out of pattern/cat listings like all machinery paths):
   *
   * {{{
-  * <index>/_graft_analysis/<textCol>/postings/   (term, id, tf, dl) — inverted index
-  * <index>/_graft_analysis/<textCol>/df/         (term, df)         — document frequency
-  * <index>/_graft_analysis/<textCol>/stats/      (n_docs, avgdl)    — 1 row
-  * <index>/_graft_analysis/<textCol>/_graft_meta.json  fingerprint   — commit point
+  * <index>/_graft_analysis/<textCol>/postings/   (term, id, dl, tf) — inverted index
+  * <index>/_graft_analysis/<textCol>/doclen/     (id, dl)           — every doc; refresh's known ids
+  * <index>/_graft_analysis/<textCol>/_graft_meta.json  fingerprint, n_docs, n_dl, dl_sum — commit point
   * }}}
+  *
+  * BM25 needs nothing else: a term's df is the count of its postings
+  * rows (one per (term, doc)), which the query's own `term IN (...)`
+  * slice holds, and n_docs / avgdl = dl_sum / n_dl come from the meta.
   *
   * Scale shape: the build pays ONE corpus tokenize + one (term,id)
   * exchange — the same work every single BM25 query pays today — and
@@ -360,9 +363,10 @@ object IndexArtifacts {
 
   /** Build (or rebuild) the analysis artifacts for one text column.
     * One corpus tokenize; postings land range-partitioned + sorted by
-    * term for query-time row-group pruning. The df table derives from
-    * the PERSISTED postings (not a second tokenize), and the meta
-    * fingerprint is written last as the commit point. */
+    * term for query-time row-group pruning, and the meta is written
+    * last as the commit point. A rebuild starts from an empty dir,
+    * deleting the meta first: a crash mid-delete leaves no commit
+    * point, and no table an earlier layout wrote survives. */
   def buildAnalysis(
       spark: SparkSession,
       indexPath: String,
@@ -370,42 +374,31 @@ object IndexArtifacts {
       textCol: String,
       fmt: String = "parquet"): Unit = {
     val dir = analysisDir(indexPath, textCol)
+    val fs = metaPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(metaPath(dir), false)
+    fs.delete(new Path(dir), true)
     val docs = spark.read.format(fmt).load(indexPath)
-    // pinned for the build: postings, stats and the id-cleanliness
-    // audit are three actions over the tokenized frame — unpinned,
-    // each would re-scan and re-tokenize the corpus (at cluster scale
-    // prefer checkpointing the projected frame if it outgrows storage)
+    // pinned for the build: postings, doclen and the audit are three
+    // actions over the tokenized frame — unpinned, each would re-scan
+    // and re-tokenize the corpus (at cluster scale prefer
+    // checkpointing the projected frame if it outgrows storage)
     val toks = docs.select(
       col(idCol).as("id"), Analyzer.tokens(col(textCol)).as("toks"))
       .withColumn("dl", size(col("toks")).cast("double"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      toks
-        .select(col("id"), col("dl"), explode(col("toks")).as("term"))
-        .groupBy(col("term"), col("id"), col("dl"))
-        .agg(count(lit(1)).cast("double").as("tf"))
-        .repartitionByRange(col("term"))
-        .sortWithinPartitions(col("term"))
-        .write.mode("overwrite").parquet(s"$dir/postings")
-      // one row per (term, doc) -> count per term IS the document freq
-      spark.read.parquet(s"$dir/postings")
-        .groupBy(col("term")).agg(count(lit(1)).cast("double").as("df"))
-        .write.mode("overwrite").parquet(s"$dir/df")
-      // the exact stats frame bm25ComponentsFromToks computes on the
-      // fly: n_docs counts EVERY doc (null text incl), avgdl skips nulls
-      toks.agg(
-        count(lit(1)).cast("double").as("n_docs"),
-        avg(col("dl")).as("avgdl"))
-        .write.mode("overwrite").parquet(s"$dir/stats")
-      // per-doc lengths, every doc (dl null for null text): the
-      // known-id set + stats merge base an incremental append reads
+      postingsOf(toks).write.mode("overwrite").parquet(s"$dir/postings")
+      // per-doc lengths, every doc: the known-id set an incremental
+      // append anti-joins against
       toks.select(col("id"), col("dl"))
         .write.mode("overwrite").parquet(s"$dir/doclen")
-      // id-cleanliness audit, recorded in the meta: the filter-context
-      // postings SEMI-JOIN rewrite is row-set-equal to the predicate
-      // path only when ids are unique and non-null (a null id never
-      // joins; a duplicated id over-matches its sibling rows) — score
-      // paths tolerate both, so they check freshness only
+      // the meta's corpus stats match what bm25ComponentsFromToks
+      // computes on the fly: n_docs counts EVERY doc (null text incl),
+      // avgdl = dl_sum / n_dl is avg(dl). The id-cleanliness audit
+      // rides along: the filter-context postings SEMI-JOIN rewrite is
+      // row-set-equal to the predicate path only when ids are unique
+      // and non-null (a null id never joins; a duplicated id
+      // over-matches its sibling rows) — score paths tolerate both
       val audit = toks.agg(
         count(lit(1)).as("n"),
         count(col("id")).as("n_nonnull"),
@@ -420,6 +413,19 @@ object IndexArtifacts {
         if (audit.isNullAt(4)) 0.0 else audit.getDouble(4))
     } finally toks.unpersist(false)
   }
+
+  /** (term, id, dl, tf) postings of a tokenized (id, toks, dl) frame,
+    * one row per (term, id, dl) group, range-partitioned and sorted by
+    * term: every segment, base build or append, keeps the row-group
+    * pruning a `term IN (...)` read relies on (the Lucene segment
+    * analogy). */
+  private def postingsOf(toks: DataFrame): DataFrame =
+    toks
+      .select(col("id"), col("dl"), explode(col("toks")).as("term"))
+      .groupBy(col("term"), col("id"), col("dl"))
+      .agg(count(lit(1)).cast("double").as("tf"))
+      .repartitionByRange(col("term"))
+      .sortWithinPartitions(col("term"))
 
   /** dl values are integer token counts, so the double sums here are
     * EXACT below 2^53 total tokens — the merged avgdl an append
@@ -440,14 +446,13 @@ object IndexArtifacts {
     * is indistinguishable from "nothing changed" here; any mutation
     * that changes counts or ids is caught by the append audit and
     * rebuilt. Only docs absent from the stored doclen table tokenize;
-    * their postings/doclen rows append, the df table merges
-    * (vocabulary-sized work), and the stats scalars merge EXACTLY
-    * (integer-valued doubles). Falls back to a full `buildAnalysis`
-    * when the increment cannot be proven safe: an appended id that
-    * already exists would leave its new row invisible to the postings
-    * (silently wrong scores), null ids cannot be anti-joined away on
-    * the next refresh, and a pre-incremental meta lacks the merge
-    * scalars. */
+    * their postings/doclen rows append and the meta's corpus scalars
+    * merge EXACTLY (integer-valued doubles). Falls back to a full
+    * `buildAnalysis` when the increment cannot be proven safe: an
+    * appended id that already exists would leave its new row invisible
+    * to the postings (silently wrong scores), null ids cannot be
+    * anti-joined away on the next refresh, and a meta without the
+    * merge scalars has nothing to merge into. */
   def refreshAnalysis(
       spark: SparkSession,
       indexPath: String,
@@ -456,15 +461,13 @@ object IndexArtifacts {
       fmt: String = "parquet"): Unit = {
     val dir = analysisDir(indexPath, textCol)
     val merge = readMeta(spark, dir).flatMap { m =>
-      (m \ "id_col", m \ "ids_clean", m \ "n_docs", m \ "n_dl", m \ "dl_sum") match {
-        case (JString(idc), JBool(clean), JInt(nd), JInt(ndl), JDouble(ds))
-            if idc == idCol =>
-          Some((clean, nd.toLong, ndl.toLong, ds))
+      (m \ "id_col", analysisScalars(m)) match {
+        case (JString(idc), Some(s)) if idc == idCol => Some(s)
         case _ => None
       }
     }
     if (merge.isEmpty) return buildAnalysis(spark, indexPath, idCol, textCol, fmt)
-    val (oldClean, oldNDocs, oldNDl, oldDlSum) = merge.get
+    val AnalysisScalars(oldClean, oldNDocs, oldNDl, oldDlSum) = merge.get
 
     val data = spark.read.format(fmt).load(indexPath)
     val toks = unindexed(data, idCol, spark.read.parquet(s"$dir/doclen")).select(
@@ -483,84 +486,54 @@ object IndexArtifacts {
       }
       val nFresh = audit.getLong(0)
       if (nFresh > 0) {
-        // checkpointed (rows, not lineage): the appends below write
-        // into paths this lineage reads via the anti-join — a lineage-
-        // carrying frame would be recomputed by recacheByPath
-        val freshPost = toks
-          .select(col("id"), col("dl"), explode(col("toks")).as("term"))
-          .groupBy(col("term"), col("id"), col("dl"))
-          .agg(count(lit(1)).cast("double").as("tf"))
-          // term-sorted like the base build: appended segments keep
-          // the row-group pruning property (term IN skips their row
-          // groups too — the Lucene new-segment analogy)
-          .repartitionByRange(col("term"))
-          .sortWithinPartitions(col("term"))
-          .localCheckpoint(true)
-        val freshDl = toks.select(col("id"), col("dl")).localCheckpoint(true)
-        freshPost.write.mode("append").parquet(s"$dir/postings")
-        freshDl.write.mode("append").parquet(s"$dir/doclen")
-        // vocabulary-sized df merge, checkpointed before overwriting
-        // the table it reads
-        val mergedDf = spark.read.parquet(s"$dir/df")
-          .unionByName(freshPost.groupBy(col("term"))
-            .agg(count(lit(1)).cast("double").as("df")))
-          .groupBy(col("term")).agg(sum(col("df")).as("df"))
-          .localCheckpoint(true)
-        mergedDf.write.mode("overwrite").parquet(s"$dir/df")
-        freshPost.unpersist(false); freshDl.unpersist(false); mergedDf.unpersist(false)
+        postingsOf(toks).write.mode("append").parquet(s"$dir/postings")
+        // doclen appends LAST: `toks` anti-joins doclen, so the write
+        // re-caches it by path, and nothing reads `toks` afterwards
+        toks.select(col("id"), col("dl")).write.mode("append").parquet(s"$dir/doclen")
       }
-      val nDocs = oldNDocs + nFresh
-      val nDl = oldNDl + audit.getLong(3)
-      val dlSum = oldDlSum + (if (audit.isNullAt(4)) 0.0 else audit.getDouble(4))
-      import spark.implicits._
-      Seq((nDocs.toDouble, if (nDl > 0) dlSum / nDl else Double.NaN))
-        .toDF("n_docs", "avgdl")
-        .select(col("n_docs"),
-          when(isnan(col("avgdl")), lit(null).cast("double"))
-            .otherwise(col("avgdl")).as("avgdl"))
-        .write.mode("overwrite").parquet(s"$dir/stats")
       // merged cleanliness: no cross overlap (audited), fresh batch
       // internally distinct, old batch was clean
-      val idsClean = oldClean && nFresh == audit.getLong(2)
-      writeAnalysisMeta(spark, indexPath, dir, idCol, textCol, idsClean,
-        nDocs, nDl, dlSum)
+      writeAnalysisMeta(spark, indexPath, dir, idCol, textCol,
+        oldClean && nFresh == audit.getLong(2),
+        oldNDocs + nFresh, oldNDl + audit.getLong(3),
+        oldDlSum + (if (audit.isNullAt(4)) 0.0 else audit.getDouble(4)))
     } finally toks.unpersist(false)
   }
 
-  /** Load the artifacts if present AND fresh; None means missing or
-    * stale — callers fall back to on-the-fly analysis. Returns
-    * ((postings, df, stats), ids_clean): the filter-context semi-join
-    * rewrite needs unique non-null ids (see buildAnalysis), scoring
-    * does not, so one load serves both. */
-  def loadAnalysisAudited(
-      spark: SparkSession,
-      indexPath: String,
-      textCol: String,
-      expectIdCol: Option[String] = None,
-      knownFp: => Option[String] = None)
-      : Option[((DataFrame, DataFrame, DataFrame), Boolean)] = {
-    val dir = analysisDir(indexPath, textCol)
-    freshMeta(spark, indexPath, dir, expectIdCol, knownFp).map { m =>
-      val tables = (
-        read(spark, s"$dir/postings"), read(spark, s"$dir/df"), read(spark, s"$dir/stats"))
-      (tables, m \ "ids_clean" match {
-        case JBool(clean) => clean
-        case _ => false
-      })
-    }
-  }
+  /** The analysis meta's ids_clean flag and corpus scalars (n_docs,
+    * n_dl, dl_sum); None when the meta lacks any of them. */
+  private final case class AnalysisScalars(
+      idsClean: Boolean, nDocs: Long, nDl: Long, dlSum: Double)
 
-  /** [[loadAnalysisAudited]]'s (postings, df, stats); with
-    * `requireCleanIds`, None unless the build audited the ids clean. */
+  private def analysisScalars(meta: JValue): Option[AnalysisScalars] =
+    (meta \ "ids_clean", meta \ "n_docs", meta \ "n_dl", meta \ "dl_sum") match {
+      case (JBool(clean), JInt(nd), JInt(ndl), JDouble(ds)) =>
+        Some(AnalysisScalars(clean, nd.toLong, ndl.toLong, ds))
+      case _ => None
+    }
+
+  /** A fresh analysis artifact: the postings table, the corpus
+    * statistics BM25 reads (n_docs, and avgdl = dl_sum / n_dl, bit-
+    * equal to avg(dl) over the docs), and whether the build audited
+    * the ids unique and non-null — the filter-context semi-join
+    * rewrite needs that, scoring does not. */
+  final case class Analysis(postings: DataFrame, nDocs: Double, avgdl: Double, idsClean: Boolean)
+
+  /** Load the analysis artifact if present AND fresh; None means
+    * missing, stale, or a meta without the corpus scalars — callers
+    * fall back to on-the-fly analysis, which scores bit-equal. */
   def loadAnalysis(
       spark: SparkSession,
       indexPath: String,
       textCol: String,
       expectIdCol: Option[String] = None,
-      knownFp: => Option[String] = None,
-      requireCleanIds: Boolean = false): Option[(DataFrame, DataFrame, DataFrame)] =
-    loadAnalysisAudited(spark, indexPath, textCol, expectIdCol, knownFp)
-      .collect { case (tables, clean) if clean || !requireCleanIds => tables }
+      knownFp: => Option[String] = None): Option[Analysis] = {
+    val dir = analysisDir(indexPath, textCol)
+    freshMeta(spark, indexPath, dir, expectIdCol, knownFp).flatMap(analysisScalars).map { s =>
+      Analysis(read(spark, s"$dir/postings"), s.nDocs.toDouble,
+        s.dlSum / s.nDl.toDouble, s.idsClean)
+    }
+  }
 
   // ---- persisted near-dup dedup artifact (MinHash/LSH) -------------
 

@@ -434,13 +434,12 @@ object Search {
 
   /** Per-(doc, field) BM25 over SEVERAL fields in ONE corpus tokenize
     * pass — the shared kernel behind queryStringTopK / multiMatchTopK /
-    * multiMatchPhraseTopK. The old shape ran a full bm25Scores pass
-    * PER FIELD (scan count linear in |fields|); here one scan emits
-    * (id, field, toks) via an exploded struct array, and per-field
-    * df/avgdl/n_docs all derive from that stream, so the scan count is
-    * CONSTANT in the field count. Per-field statistics are exactly the
-    * single-field ones (the explode keeps every doc for every field),
-    * so scores are bit-identical to the per-field bm25Scores path.
+    * multiMatchPhraseTopK. One scan emits (id, field, toks) via an
+    * exploded struct array, and per-field df/avgdl/n_docs all derive
+    * from that stream, so the scan count is constant in the field
+    * count. Per-field statistics are exactly the single-field ones
+    * (the explode keeps every doc for every field), so scores are
+    * bit-identical to the per-field bm25Scores path.
     *
     * `gates`: an optional per-field predicate (phrase match) carried
     * NEXT TO the score — df/idf stay index-wide (ES semantics: the
@@ -482,29 +481,20 @@ object Search {
       .where(col("term").isin(q: _*))
       .groupBy(col("id"), col("field"), col("gate"), col("dl"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
-    // per-(field, term) document frequency: <= |fields|*|q| rows -> broadcast
-    val dfreq = tf.groupBy(col("field"), col("term"))
-      .agg(count(lit(1)).cast("double").as("df"))
-    val idf = log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val tfPart = col("tf") * (k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl")))
-    tf.join(broadcast(dfreq), Seq("field", "term"))
-      .join(broadcast(stats), Seq("field"))
-      .withColumn("term_score", idf * tfPart)
+    bm25TermScores(tf, Seq("field"), Left(stats), k1, b)
       .groupBy(col("id"), col("field"), col("gate"))
       .agg(Num.round(sum(col("term_score")), 4).as("score"))
   }
 
   /** Per-CLAUSE BM25 for a bool query's scoring clauses in ONE corpus
     * tokenize pass — the `_search`-body / readMetadata `_score`
-    * formula (sum of each clause's single-field BM25, each rounded to
-    * 4 like bm25Scores) without the old one-corpus-pass-per-clause
-    * union. Clauses are keyed by INDEX, not field name: two clauses on
-    * the same field (must match f:t1 + should match f:t2) keep
-    * independent term statistics and per-clause rounding, exactly like
-    * the per-clause bm25Scores union they replace. Per-clause
-    * df/avgdl/n_docs equal the single-field ones (the explode keeps
-    * every doc for every clause), so the result is bit-identical.
+    * formula: the sum of each clause's single-field BM25, each rounded
+    * to 4 like bm25Scores. Clauses are keyed by INDEX, not field name:
+    * two clauses on the same field (must match f:t1 + should match
+    * f:t2) keep independent term statistics and per-clause rounding.
+    * Per-clause df/avgdl/n_docs equal the single-field ones (the
+    * explode keeps every doc for every clause), so each clause score
+    * is bit-identical to bm25Scores on its field.
     * Returns (id, score) for docs with a nonzero clause score. */
   def bm25BoolClausesScores(
       docs: DataFrame,
@@ -552,24 +542,15 @@ object Search {
       .where(allowed)
       .groupBy(col("id"), col("clause"), col("dl"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
-    val dfreq = tf.groupBy(col("clause"), col("term"))
-      .agg(count(lit(1)).cast("double").as("df"))
-    val idf = log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val tfPart = col("tf") * (k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl")))
-    tf.join(broadcast(dfreq), Seq("clause", "term"))
-      .join(broadcast(stats), Seq("clause"))
-      .withColumn("term_score", idf * tfPart)
-      // per-clause rounding FIRST (bit-compat with the per-clause
-      // bm25Scores path and its oracles); the doc sum happens in
-      // bm25BoolClausesScores / the Auto mixed fold — ONE final
-      // rounding layer wherever the clauses came from
+    bm25TermScores(tf, Seq("clause"), Left(stats), k1, b)
+      // per-clause rounding FIRST (bit-compat with bm25Scores and its
+      // oracles); the doc sum happens in bm25BoolClausesScores / the
+      // Auto mixed fold — ONE final rounding layer wherever the
+      // clauses came from
       .groupBy(col("id"), col("clause"))
       .agg(Num.round(sum(col("term_score")), 4).as("cscore"))
       .select(col("id"), col("cscore"))
   }
-
-
 
   /** Artifact-aware bm25BoolClausesScores for the connector's
     * readMetadata `_score` path: a clause whose field carries FRESH
@@ -580,10 +561,10 @@ object Search {
     * all-on-the-fly form in any mix (same stats, same fold order).
     * `excludeFields` (runtime-mapped names that shadow stored columns)
     * always score on the fly — their values are not what the write
-    * path analyzed. `analysisOf(field)` is the field's fresh
-    * (postings, df, stats) or None (`IndexArtifacts.loadAnalysis`). */
+    * path analyzed. `analysisOf(field)` is the field's fresh artifact
+    * or None (`IndexArtifacts.loadAnalysis`). */
   def bm25BoolClausesScoresAuto(
-      analysisOf: String => Option[(DataFrame, DataFrame, DataFrame)],
+      analysisOf: String => Option[graft.index.IndexArtifacts.Analysis],
       docs: DataFrame,
       idCol: String,
       clauses: Seq[(String, String)],
@@ -596,12 +577,9 @@ object Search {
       .toMap
     val (indexed, fly) = clauses.partition(c => art.get(c._1).exists(_.isDefined))
     val idxFrames = indexed.map { case (f, q) =>
-      val (postings, dfTable, stats) = art(f).get
       val ts = Analyzer.analyze(q)
       require(ts.nonEmpty, s"bm25 clause analyzed to zero tokens: $q")
-      bm25ScorePostings(
-        postings.where(col("term").isin(ts: _*)),
-        dfTable.where(col("term").isin(ts: _*)), stats, k1, b)
+      bm25ArtifactTermScores(art(f).get, ts, k1, b)
         .groupBy(col("id"))
         .agg(Num.round(sum(col("term_score")), 4).as("cscore"))
     }
@@ -729,25 +707,52 @@ object Search {
       .groupBy(col("id"))
       .agg(Num.round(sum(col("term_score")), 4).as("score"))
 
-  // the BM25 formula, single-sourced so the on-the-fly path and the
-  // persisted-artifact path (bm25ScoresIndexed) cannot drift: both
-  // score a (term, id, tf, dl) posting frame joined to (term, df) and
-  // the 1-row (n_docs, avgdl) stats
-  private def bm25IdfExpr: Column =
-    log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-  private def bm25TfPartExpr(k1: Double, b: Double): Column =
-    col("tf") * (k1 + 1.0) /
+  /** The BM25 formula, the one place every scoring path computes it.
+    * `tf` holds (`keys`..., term, id, dl, tf) rows for the query's
+    * terms, one row per (keys, term, doc), so counting them per
+    * (keys, term) IS each term's document frequency. `stats` gives
+    * (n_docs, avgdl) per `keys`: a frame of corpus stats when scoring
+    * on the fly, the artifact meta's two scalars on the artifact path.
+    * Adds df, n_docs, avgdl, idf and term_score to every tf row.
+    *
+    * idf = ln(1 + (N - df + 0.5)/(df + 0.5))          [Lucene BM25]
+    * tfp = tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)) */
+  private def bm25TermScores(
+      tf: DataFrame,
+      keys: Seq[String],
+      stats: Either[DataFrame, (Double, Double)],
+      k1: Double,
+      b: Double): DataFrame = {
+    // <= |keys| * |terms| rows -> broadcast
+    val df = tf.groupBy((keys :+ "term").map(col): _*)
+      .agg(count(lit(1)).cast("double").as("df"))
+    val withDf = tf.join(broadcast(df), keys :+ "term")
+    val withStats = stats match {
+      case Left(rows) if keys.isEmpty => withDf.crossJoin(broadcast(rows))
+      case Left(rows) => withDf.join(broadcast(rows), keys)
+      case Right((nDocs, avgdl)) =>
+        withDf.withColumn("n_docs", lit(nDocs)).withColumn("avgdl", lit(avgdl))
+    }
+    val tfPart = col("tf") * (k1 + 1.0) /
       (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("dl") / col("avgdl")))
-  private def bm25ScorePostings(
-      postings: DataFrame,
-      df: DataFrame,
-      stats: DataFrame,
+    withStats
+      .withColumn("idf", bm25Idf(col("n_docs"), col("df")))
+      .withColumn("term_score", col("idf") * tfPart)
+  }
+
+  private def bm25Idf(nDocs: Column, df: Column): Column =
+    log(lit(1.0) + (nDocs - df + lit(0.5)) / (df + lit(0.5)))
+
+  /** [[bm25TermScores]] over a fresh analysis artifact: the postings
+    * slice of the query's terms (`term IN` pushes into the term-sorted
+    * parquet and prunes row groups) with the meta's corpus stats. */
+  private def bm25ArtifactTermScores(
+      a: graft.index.IndexArtifacts.Analysis,
+      terms: Seq[String],
       k1: Double,
       b: Double): DataFrame =
-    postings.join(broadcast(df), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", bm25IdfExpr)
-      .withColumn("term_score", col("idf") * bm25TfPartExpr(k1, b))
+    bm25TermScores(a.postings.where(col("term").isin(terms: _*)), Nil,
+      Right((a.nDocs, a.avgdl)), k1, b)
 
   private def bm25ComponentsFromToks(
       toksDf: DataFrame,
@@ -770,10 +775,7 @@ object Search {
       .groupBy(col("id"), col("dl"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
 
-    // document frequency per query term: <= |q| rows -> broadcast.
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).cast("double").as("df"))
-
-    bm25ScorePostings(tf, df, stats, k1, b)
+    bm25TermScores(tf, Nil, Left(stats), k1, b)
   }
 
   /** BM25 over PERSISTED analysis artifacts (graft.index.analysis,
@@ -800,13 +802,8 @@ object Search {
     require(q.nonEmpty, s"bm25 query analyzed to zero tokens: $query")
     graft.index.IndexArtifacts.loadAnalysis(
       spark, indexPath, textCol, expectIdCol = Some(idCol)) match {
-      case Some((postings, dfTable, stats)) =>
-        bm25ScorePostings(
-          postings.where(col("term").isin(q: _*)),
-          // df for the query's terms only (<= |q| rows -> broadcast);
-          // the values are index-wide document frequencies either way
-          dfTable.where(col("term").isin(q: _*)),
-          stats, k1, b)
+      case Some(a) =>
+        bm25ArtifactTermScores(a, q, k1, b)
           .groupBy(col("id"))
           .agg(Num.round(sum(col("term_score")), 4).as("score"))
       case None =>
@@ -820,8 +817,8 @@ object Search {
   /** `_explain` for one document: the BM25 term-by-term breakdown
     * (tf, df, idf, weight) with INDEX-WIDE statistics, exactly as ES
     * explains a hit. The doc-id filter pushes below the join on the
-    * postings side; the df/stats branches still see the whole corpus
-    * (that's the semantics, not an accident). */
+    * postings side; df and the corpus stats still see the whole
+    * corpus (that's the semantics, not an accident). */
   def explainScore(
       docs: DataFrame,
       idCol: String,
@@ -1782,8 +1779,7 @@ object Search {
         .cast("double").as(s"df_$t"))
     val statCols = "n_docs" +: terms.map(t => s"df_$t")
     val stats = docs.agg(statAggs.head, statAggs.tail: _*)
-    def idf(u: String): Column =
-      log(lit(1.0) + (col("n_docs") - col(s"df_$u") + lit(0.5)) / (col(s"df_$u") + lit(0.5)))
+    def idf(u: String): Column = bm25Idf(col("n_docs"), col(s"df_$u"))
     // materialize each term's window ONCE as a named column before the
     // scoring tree references it — the full-text regex is the dominant
     // cost, and inside the struct/score expressions it would be

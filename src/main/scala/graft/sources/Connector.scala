@@ -112,10 +112,10 @@ object Connector {
         // one analysis load per field per request: the match rewrite
         // and the metadata scoring share the meta read and the frames
         val analysisLoads =
-          scala.collection.mutable.Map.empty[String, Option[((DataFrame, DataFrame, DataFrame), Boolean)]]
-        def analysisOf(f: String): Option[((DataFrame, DataFrame, DataFrame), Boolean)] =
+          scala.collection.mutable.Map.empty[String, Option[graft.index.IndexArtifacts.Analysis]]
+        def analysisOf(f: String): Option[graft.index.IndexArtifacts.Analysis] =
           analysisLoads.getOrElseUpdate(f, artifactIndexPath.flatMap(p =>
-            graft.index.IndexArtifacts.loadAnalysisAudited(
+            graft.index.IndexArtifacts.loadAnalysis(
               spark, p, f, expectIdCol = Some(idField), knownFp = artifactFp)))
         // allow_no_indices=true (the ES default for wildcard
         // expressions): a pattern matching nothing yields zero hits,
@@ -171,9 +171,10 @@ object Connector {
             // predicate only when the build audited ids as unique and
             // non-null (a null id never joins; a duplicate id
             // over-matches sibling rows)
-            ((postings, _, _), true) <- analysisOf(f)
+            a <- analysisOf(f)
+            if a.idsClean
           } yield df0.join(
-            postings.where(col("term").isin(terms: _*))
+            a.postings.where(col("term").isin(terms: _*))
               .select(col("id").as("__graft_mid")),
             col(idField) === col("__graft_mid"), "left_semi")
         val df1 =
@@ -248,7 +249,7 @@ object Connector {
             // column are excluded from the artifact path).
             val scored = artifactIndexPath match {
               case Some(_) => graft.search.Search.bm25BoolClausesScoresAuto(
-                f => analysisOf(f).map(_._1), df0, idField, scoring,
+                analysisOf, df0, idField, scoring,
                 excludeFields = runtimeFields.map(_._1).toSet)
               case None => graft.search.Search
                 .bm25BoolClausesScores(df0, idField, scoring)
@@ -650,17 +651,17 @@ object Connector {
     // column): build AFTER the data landed/swapped, so the recorded
     // fingerprint describes the live files queries will read. The ES
     // analog: the server analyzes at index time so queries never
-    // re-tokenize; here the postings/df/stats side tables play the
-    // Lucene index's role (graft.index.IndexArtifacts).
+    // re-tokenize; here the postings side table and the meta's corpus
+    // stats play the Lucene index's role (graft.index.IndexArtifacts).
     cfg.get("graft.index.analysis").foreach { spec =>
       val idCol = cfg.getOrElse("graft.mapping.id",
         throw new IllegalArgumentException(
           "graft.index.analysis needs graft.mapping.id (the posting doc id)"))
       // comma list = several analyzed fields, one artifact dir each
       // (ES analyzes every mapped text field at index time). APPEND
-      // analyzes only the new documents (refreshAnalysis merges
-      // postings/df/stats incrementally and falls back to a full
-      // rebuild when the increment isn't provably safe) — the same
+      // analyzes only the new documents (refreshAnalysis appends their
+      // postings and merges the meta's corpus stats, falling back to a
+      // full rebuild when the increment isn't provably safe) — the same
       // incremental indexing an ES server does per bulk request.
       spec.split(",").map(_.trim).filter(_.nonEmpty).foreach { textCol =>
         if (op == "append")

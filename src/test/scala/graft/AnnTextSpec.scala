@@ -4,7 +4,9 @@ import graft.sim.Ann
 import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 
-class AnnTextSpec extends SparkSpec {
+class AnnTextSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "ga"
+
   import spark.implicits._
 
   private def vecs = Seq(
@@ -230,6 +232,31 @@ class AnnTextSpec extends SparkSpec {
       .select("id").as[Long].collect().toSet
     assert(pqRows.count(brute.contains) >= 3,
       s"lloyd-dist PQ recall@5 too low: ${pqRows.count(brute.contains)}/5")
+    // and on clustered vectors (a shared center per cluster plus small
+    // per-vector noise, the shape real embeddings have): recall@10
+    // against the int8-rescored truth, whose top 10 are distinct ids
+    def h(a: Long, b: Long): Double = {
+      var z = a * 0x9E3779B97F4A7C15L + b * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      ((z ^ (z >>> 31)) & 0xFFFFFFL).toDouble / (1 << 24) - 0.5
+    }
+    val clustered = spark.range(2000).as[Long].map { id =>
+      (id, Array.tabulate(64)(i =>
+        (h((id % 64) * 131L + 7L, i.toLong) + 0.15 * h(id * 31L + 3L, i.toLong)).toFloat))
+    }.toDF("vec_id", "embedding")
+    val cq = (0 until 64).map(i => (i * 37 % 100) / 100.0 - 0.5)
+    val truth = Ann.packedTopK(clustered, "vec_id", "embedding", graft.index.PackedCodec.Int8,
+      cq, k = 10, oversample = 8).select("id").as[Long].collect().toSet
+    assert(truth.size == 10, truth)
+    // 8 subspaces x 64 codes, window 80: 9/10 measured. 4 x 16
+    // codebooks fit on this corpus find none of these ten, even at
+    // window 400.
+    val clusteredRecall = Ann.pqTopK(clustered, "vec_id", "embedding", cq, k = 10,
+      oversample = 8, m = 8, codebookSize = 64, codebooks = Some(
+        Ann.pqFitCodebooksDist(clustered, "vec_id", "embedding", m = 8, k = 64)))
+      .select("id").as[Long].collect().count(truth.contains)
+    assert(clusteredRecall >= 7, s"clustered lloyd-dist PQ recall@10 too low: $clusteredRecall/10")
   }
 
   test("PQ sizing guard: under-sized coarse windows warn off the r14 ledger rule (r15)") {
@@ -338,7 +365,7 @@ class AnnTextSpec extends SparkSpec {
       Ann.ivfAdcTopK(emb, "vec_id", "embedding", qv, k = 5, oversample = -1,
         nCentroids = 16, nprobe = 4))
     // the PERSISTED entry point carries the same guard + auto
-    val out = s"/tmp/graft_spec_ivfadc_guard_${System.getProperty("user.name")}"
+    val out = s"$specRoot/ivfadc_guard"
     graft.sources.Connector.save(emb, out, Map(
       "graft.write.operation" -> "overwrite",
       "graft.mapping.id" -> "vec_id",
@@ -389,7 +416,7 @@ class AnnTextSpec extends SparkSpec {
     assert(Ann.lastNprobeWarning.isEmpty, "well-probed explicit nprobe warned spuriously")
     // the PERSISTED entry point carries the same rail: auto equals its
     // explicit twin off the STORED assignment's list sizes
-    val out = s"/tmp/graft_spec_ivfadc_nprobe_${System.getProperty("user.name")}"
+    val out = s"$specRoot/ivfadc_nprobe"
     graft.sources.Connector.save(emb, out, Map(
       "graft.write.operation" -> "overwrite",
       "graft.mapping.id" -> "vec_id",

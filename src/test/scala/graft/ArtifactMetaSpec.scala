@@ -8,14 +8,10 @@ import org.apache.spark.sql.functions._
   * number formatting), and artifacts written in that layout must keep
   * loading. Also pins the shared append audit: a colliding-id append
   * rebuilds every packed codec instead of dropping the collided row. */
-class ArtifactMetaSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class ArtifactMetaSpec extends SparkSpec with SpecTempRoot {
 
-  private lazy val root =
-    java.nio.file.Files.createTempDirectory("graft_metaspec").toString
-
-  override def afterAll(): Unit =
-    try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-    finally super.afterAll()
+  override protected def tempRootPrefix = "gam"
+  private lazy val root = specRoot.toString
 
   // 6 docs, 21 tokens, 4-dim vectors (PQ m=2 splits them; k=4 <= 6 docs)
   private lazy val corpus = {
@@ -51,8 +47,7 @@ class ArtifactMetaSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     (IndexArtifacts.analysisDir(out, "text"),
       """{"fingerprint":"FP","id_col":"id","text_col":"text","ids_clean":true,""" +
         """"n_docs":6,"n_dl":6,"dl_sum":21.0}""",
-      () => IndexArtifacts.loadAnalysis(spark, out, "text", Some("id"),
-        requireCleanIds = true).isDefined),
+      () => IndexArtifacts.loadAnalysis(spark, out, "text", Some("id")).exists(_.idsClean)),
     (IndexArtifacts.minhashDir(out, "text"),
       """{"fingerprint":"FP","id_col":"id","text_col":"text","num_hashes":32,"bands":8}""",
       () => IndexArtifacts.loadMinhash(spark, out, "text", Some("id")).isDefined),
@@ -111,5 +106,30 @@ class ArtifactMetaSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       assert(packed.get.count() == 7, s"${codec.name}: rebuild must cover every data row")
       assert(packed.get.where(col("id") === 1L).count() == 2, codec.name)
     }
+  }
+
+  test("an analysis dir with the df and stats tables an earlier layout wrote loads, scores and rebuilds clean") {
+    val fresh = s"$root/analysis_fresh"
+    val legacy = s"$root/analysis_legacy"
+    Seq(fresh, legacy).foreach(save(_, "graft.index.analysis" -> "text"))
+    // the earlier layout: df counted from the postings, a 1-row stats
+    // table, beside today's postings, doclen and meta
+    val dir = IndexArtifacts.analysisDir(legacy, "text")
+    val postings = spark.read.parquet(s"$dir/postings")
+    postings.groupBy(col("term")).agg(count(lit(1)).cast("double").as("df"))
+      .write.parquet(s"$dir/df")
+    postings.select(col("id"), col("dl")).distinct()
+      .agg(count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl"))
+      .write.parquet(s"$dir/stats")
+    def listing = new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet
+    assert(listing == Set("postings", "doclen", "df", "stats", "_graft_meta.json"))
+    assert(IndexArtifacts.loadAnalysis(spark, legacy, "text", Some("id")).isDefined)
+    def scores(out: String) = graft.search.Search
+      .bm25ScoresIndexed(spark, out, "id", "text", "alpha theta omicron pi")
+      .orderBy(col("id")).collect().toSeq
+    assert(scores(legacy) == scores(fresh) && scores(legacy).size == 3)
+    IndexArtifacts.buildAnalysis(spark, legacy, "id", "text")
+    assert(listing == Set("postings", "doclen", "_graft_meta.json"))
+    assert(scores(legacy) == scores(fresh))
   }
 }

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** The pure-JDK media codecs (real zlib PNG, real RIFF PCM) and the
   * Spark pixel-decode path built on them. */
-class CodecsSpec extends SparkSpec {
+class CodecsSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "gco"
+
   import spark.implicits._
 
   // test-side chunk writer: lets the spec craft PNGs the encoder never
@@ -454,7 +456,7 @@ class CodecsSpec extends SparkSpec {
   test("Spark JPEG path: persisted generation-time stats equal the re-decode, distributed (r15)") {
     val docs = spark.range(0, 40).select(col("id").as("doc_id"))
     val tbl = Multimodal.jpegMediaTable(spark, docs)
-    val out = "/tmp/graft_spec_jpeg"
+    val out = s"$specRoot/jpeg"
     tbl.write.mode("overwrite").parquet(out)
     val stored = spark.read.parquet(out)
     val recomputed = Multimodal.jpegPixelStats(spark, stored)

@@ -7,11 +7,13 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 
-class DefaultSourceSpec extends SparkSpec {
+class DefaultSourceSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "gds"
+
   import spark.implicits._
 
   private lazy val idx: String = {
-    val dir = Files.createTempDirectory("graft_dsv1").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_dsv1").toString + "/idx"
     Tables.documents(spark, sfDir).write.parquet(dir)
     dir
   }
@@ -91,14 +93,14 @@ class DefaultSourceSpec extends SparkSpec {
     // 2) the primary connector read path (graftDF = v1 parquet + the
     // compiled ES predicate) DOES plan dynamic partition pruning on a
     // routing-partitioned index joined to a selective dim
-    val dir = Files.createTempDirectory("graft_dpp").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_dpp").toString + "/idx"
     Tables.documents(spark, sfDir).write.partitionBy("lang").parquet(dir)
     import graft.sources.Connector.implicits._
     val fact = spark.graftDF(dir, """{"range": {"n_chars": {"gte": 0}}}""")
     // the DPP rule requires a SELECTIVE predicate on the pruning side —
     // and it must survive optimization, so the dim is file-backed (a
     // filtered LocalRelation constant-folds to an unfiltered one)
-    val dimDir = Files.createTempDirectory("graft_dpp_dim").toString + "/dim"
+    val dimDir = Files.createTempDirectory(specRoot, "graft_dpp_dim").toString + "/dim"
     Seq(("en", 1), ("de", 2), ("fr", 3)).toDF("lang", "tag").write.parquet(dimDir)
     val dim = spark.read.parquet(dimDir).where(col("tag") === 1)
     val joined = fact.join(broadcast(dim), Seq("lang"))
@@ -110,7 +112,7 @@ class DefaultSourceSpec extends SparkSpec {
   }
 
   test("format(graft): write modes map to connector operations") {
-    val dir = Files.createTempDirectory("graft_dsv1w").toString + "/w"
+    val dir = Files.createTempDirectory(specRoot, "graft_dsv1w").toString + "/w"
     Seq((1L, "a"), (2L, "b")).toDF("id", "name")
       .write.format("graft").option("graft.mapping.id", "id").save(dir)
     Seq((2L, "b2"), (3L, "c")).toDF("id", "name")
@@ -121,7 +123,7 @@ class DefaultSourceSpec extends SparkSpec {
   }
 
   test("DSv2 write path: append/overwrite plan as v2 and keep bulk semantics") {
-    val dir = Files.createTempDirectory("graft_dsv2w").toString + "/w"
+    val dir = Files.createTempDirectory(specRoot, "graft_dsv2w").toString + "/w"
     // first write: no mode -> v1 fallback -> operation "index"
     Seq((1L, "a")).toDF("id", "name")
       .write.format("graft").option("graft.mapping.id", "id").save(dir)
@@ -192,7 +194,7 @@ class DefaultSourceSpec extends SparkSpec {
   }
 
   test("INSERT INTO a graft catalog table routes through the bulk path") {
-    val dir = Files.createTempDirectory("graft_sqlins").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_sqlins").toString + "/idx"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.format("graft")
       .option("graft.mapping.id", "id").save(dir)
     spark.sql("DROP TABLE IF EXISTS graft_ins")

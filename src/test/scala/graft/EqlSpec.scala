@@ -3,7 +3,9 @@ package graft
 import graft.dsl.Eql
 import org.apache.spark.sql.functions._
 
-class EqlSpec extends SparkSpec {
+class EqlSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "ge"
+
   import spark.implicits._
 
   // (event_id, user_id, ts_ns, event_type, value)
@@ -121,7 +123,7 @@ class EqlSpec extends SparkSpec {
       (4L, 8L, 100L * us, "a", 0.0),
       (5L, 8L, 300L * us, "b", 0.0))
     // route through run() with a temp parquet dir shaped like events
-    val dir = java.nio.file.Files.createTempDirectory("eqlm").toString
+    val dir = java.nio.file.Files.createTempDirectory(specRoot, "eqlm").toString
     // ts as a raw µs long — one of the two magnitudes
     // Tables.normalizeEvents accepts
     df.withColumn("ts", expr("ts_ns div 1000"))

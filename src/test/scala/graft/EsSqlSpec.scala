@@ -2,7 +2,9 @@ package graft
 
 import graft.dsl.EsSql
 
-class EsSqlSpec extends SparkSpec {
+class EsSqlSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "gq"
+
   import spark.implicits._
 
   test("plain ANSI SQL routes through spark.sql") {
@@ -102,7 +104,7 @@ class EsSqlSpec extends SparkSpec {
   test("cursor over a PIT-pinned read stays stable under concurrent writes") {
     import graft.sources.Connector
     import graft.sources.Connector.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sqlcur")
+    val dir = java.nio.file.Files.createTempDirectory(specRoot, "graft_sqlcur")
       .toString + "/idx"
     val cfg = Map("graft.mapping.id" -> "id")
     (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v").saveToGraft(dir, cfg)

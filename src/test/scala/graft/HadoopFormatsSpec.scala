@@ -12,14 +12,16 @@ import org.apache.spark.sql.functions._
 /** The MapReduce-classic surface (EsInput/OutputFormat analogs) driven
   * directly through the Hadoop format contracts — splits, record
   * readers, the FileOutputFormat commit protocol — no job runner. */
-class HadoopFormatsSpec extends SparkSpec {
+class HadoopFormatsSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "ghf"
+
   import spark.implicits._
 
   private def taskCtx(conf: Configuration) = new TaskAttemptContextImpl(
     conf, new TaskAttemptID(new TaskID(new JobID("graft", 1), TaskType.MAP, 0), 0))
 
   test("GraftInputFormat reads a Spark-written index as (id, MapWritable) pairs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mrin").toString + "/idx"
+    val dir = java.nio.file.Files.createTempDirectory(specRoot, "graft_mrin").toString + "/idx"
     val docs = Tables.documents(spark, sfDir).limit(40)
     graft.sources.Connector.save(docs, dir, Map(
       "graft.write.operation" -> "overwrite",
@@ -55,7 +57,7 @@ class HadoopFormatsSpec extends SparkSpec {
   }
 
   test("GraftOutputFormat writes through the commit protocol; Spark reads it back") {
-    val out = java.nio.file.Files.createTempDirectory("graft_mrout").toString + "/idx"
+    val out = java.nio.file.Files.createTempDirectory(specRoot, "graft_mrout").toString + "/idx"
     val conf = new Configuration(false)
     conf.set("graft.output.schema",
       "message doc { optional int64 doc_id; optional binary text (UTF8); optional double score; }")
@@ -86,8 +88,8 @@ class HadoopFormatsSpec extends SparkSpec {
   }
 
   test("round trip: InputFormat -> OutputFormat -> InputFormat preserves documents") {
-    val src = java.nio.file.Files.createTempDirectory("graft_mrrt").toString + "/src"
-    val dst = java.nio.file.Files.createTempDirectory("graft_mrrt").toString + "/dst"
+    val src = java.nio.file.Files.createTempDirectory(specRoot, "graft_mrrt").toString + "/src"
+    val dst = java.nio.file.Files.createTempDirectory(specRoot, "graft_mrrt").toString + "/dst"
     Tables.documents(spark, sfDir).limit(10).select("doc_id", "text")
       .write.parquet(src)
 

@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   * Hive contracts — SerDe object inspectors, getHiveRecordWriter, the
   * mapred-classic input format, decomposePredicate — no Hive runtime
   * and no Spark in the read/write loop (the HadoopFormatsSpec pattern). */
-class HiveHandlerSpec extends SparkSpec {
+class HiveHandlerSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "ghv"
+
   import spark.implicits._
 
   private val COLS = "doc_id,text,n_chars"
@@ -46,7 +48,7 @@ class HiveHandlerSpec extends SparkSpec {
   }
 
   test("storage handler: Hive-style WRITE (SerDe + getHiveRecordWriter) then READ (classic format + SerDe)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hive").toString
+    val dir = java.nio.file.Files.createTempDirectory(specRoot, "graft_hive").toString
     val handler = new GraftStorageHandler()
     assert(handler.getInputFormatClass == classOf[GraftClassicInputFormat])
     assert(handler.getSerDeClass == classOf[GraftSerDe])
@@ -111,7 +113,7 @@ class HiveHandlerSpec extends SparkSpec {
   }
 
   test("pushdown JSON reaches the parquet scan: classic reader returns only matching rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hivepd").toString + "/idx"
+    val dir = java.nio.file.Files.createTempDirectory(specRoot, "graft_hivepd").toString + "/idx"
     Tables.documents(spark, sfDir).limit(50).select("doc_id", "text", "n_chars")
       .write.parquet(dir)
 

@@ -79,7 +79,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     assert(IndexArtifacts.loadAnalysis(spark, out, "text").isDefined)
     assert(IndexArtifacts.loadAnalysis(spark, out, "source").isDefined)
     // each field's postings reflect ITS OWN analyzed tokens
-    val srcTerms = IndexArtifacts.loadAnalysis(spark, out, "source").get._1
+    val srcTerms = IndexArtifacts.loadAnalysis(spark, out, "source").get.postings
       .select(col("term")).distinct()
       .collect().map(_.getString(0)).toSet
     val expected = docs.select(
@@ -289,17 +289,21 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     val fly = topk(Search.bm25Scores(spark.read.parquet(out), "doc_id", "text", "fast hash join"))
     assert(indexed == fly && indexed.nonEmpty)
 
-    // and bit-equal to a FULL REBUILD's artifacts: stats + df identical
-    val mergedStats = spark.read.parquet(s"$dir/stats").head()
-    val mergedDf = spark.read.parquet(s"$dir/df")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    // and equal to a FULL REBUILD: the meta's corpus scalars (dl_sum
+    // EXACT, so avgdl is too) and every term's postings count (its df)
+    def state() = {
+      val meta = org.json4s.jackson.JsonMethods.parse(new String(
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/_graft_meta.json")),
+        "UTF-8"))
+      val scalars = Seq("n_docs", "n_dl", "dl_sum").map(k => k -> (meta \ k))
+      val df = spark.read.parquet(s"$dir/postings").groupBy("term").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      (scalars, df)
+    }
+    val merged = state()
     IndexArtifacts.buildAnalysis(spark, out, "doc_id", "text")
-    val rebuiltStats = spark.read.parquet(s"$dir/stats").head()
-    val rebuiltDf = spark.read.parquet(s"$dir/df")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(mergedStats.getDouble(0) == rebuiltStats.getDouble(0))
-    assert(mergedStats.getDouble(1) == rebuiltStats.getDouble(1)) // avgdl EXACT
-    assert(mergedDf == rebuiltDf)
+    assert(state() == merged)
+    assert(merged._1.forall(_._2 != org.json4s.JNothing), merged._1)
 
     // an append whose ids collide with stored ones cannot be merged —
     // the refresh must fall back to a full rebuild and stay correct
@@ -310,8 +314,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     val flyDup = topk(Search.bm25Scores(spark.read.parquet(out), "doc_id", "text", "fast hash join"))
     assert(afterDup == flyDup && afterDup.nonEmpty)
     // duplicated ids -> the strict semi-join rewrite must see unclean ids
-    assert(IndexArtifacts.loadAnalysis(
-      spark, out, "text", Some("doc_id"), requireCleanIds = true).isEmpty)
+    assert(IndexArtifacts.loadAnalysis(spark, out, "text", Some("doc_id")).exists(!_.idsClean))
   }
 
   test("persisted minhash: indexed cross screen equals on-the-fly; appends route only new docs") {

@@ -3,7 +3,9 @@ package graft
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.functions._
 
-class MultimodalSpec extends SparkSpec {
+class MultimodalSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "gm"
+
   import spark.implicits._
 
   test("media table: opaque binary + typed metadata, mime partition-able") {
@@ -54,13 +56,13 @@ class MultimodalSpec extends SparkSpec {
 
   test("routing write partitions the index directory by the routing column") {
     import graft.sources.Connector.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_route").toString + "/idx"
+    val dir = java.nio.file.Files.createTempDirectory(specRoot, "graft_route").toString + "/idx"
     Tables.documents(spark, sfDir).limit(50)
       .saveToGraft(dir, Map("graft.mapping.id" -> "doc_id", "graft.mapping.routing" -> "lang"))
     val parts = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
     assert(parts.exists(_.startsWith("lang=")))
     // multi-index read: "idx1,idx2" unions two indices
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_route2").toString + "/idx"
+    val dir2 = java.nio.file.Files.createTempDirectory(specRoot, "graft_route2").toString + "/idx"
     Tables.documents(spark, sfDir).where(col("doc_id") >= 50).limit(25)
       .saveToGraft(dir2, Map("graft.mapping.id" -> "doc_id", "graft.mapping.routing" -> "lang"))
     assert(spark.graftDF(s"$dir,$dir2").count() == 75)

@@ -10,11 +10,13 @@ import org.apache.spark.sql.functions._
   * or swaps mid-pagination. The first test also DOCUMENTS the drift
   * un-pinned paging suffers — each page re-planning against the live
   * directory picks up rows appended behind the cursor. */
-class PagingPitSpec extends SparkSpec {
+class PagingPitSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "gp"
+
   import spark.implicits._
 
   private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString + "/idx"
+    java.nio.file.Files.createTempDirectory(specRoot, tag).toString + "/idx"
 
   test("pitScrollPages: page union is invariant across a mid-pagination APPEND; un-pinned paging drifts") {
     val dir = freshDir("graft_pitscroll")

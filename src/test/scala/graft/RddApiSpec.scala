@@ -5,10 +5,12 @@ import java.nio.file.Files
 import graft.rdd.GraftRddApi.implicits._
 import org.apache.spark.sql.functions._
 
-class RddApiSpec extends SparkSpec {
+class RddApiSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "grd"
+
 
   test("RDD roundtrip: saveToGraft maps -> graftRDD (id, fields) pairs") {
-    val dir = Files.createTempDirectory("graft_rdd").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_rdd").toString + "/idx"
     val docs: Seq[Map[String, Any]] = Seq(
       Map("id" -> 1L, "name" -> "alpha", "score" -> 0.5),
       Map("id" -> 2L, "name" -> "beta", "score" -> 1.5, "extra" -> "x"),
@@ -24,7 +26,7 @@ class RddApiSpec extends SparkSpec {
   }
 
   test("RDD writes share connector upsert semantics") {
-    val dir = Files.createTempDirectory("graft_rdd2").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_rdd2").toString + "/idx"
     spark.sparkContext.parallelize(Seq[Map[String, Any]](
       Map("id" -> 1L, "v" -> "old"), Map("id" -> 2L, "v" -> "keep")))
       .saveToGraft(dir, Map("graft.mapping.id" -> "id"))
@@ -36,7 +38,7 @@ class RddApiSpec extends SparkSpec {
   }
 
   test("graftRDD applies the ES query before the map conversion") {
-    val dir = Files.createTempDirectory("graft_rdd3").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_rdd3").toString + "/idx"
     Tables.documents(spark, sfDir).write.parquet(dir)
     val en = spark.graftRDD(dir, """{"term": {"lang": "en"}}""", idField = "doc_id")
     val direct = Tables.documents(spark, sfDir)
@@ -45,7 +47,7 @@ class RddApiSpec extends SparkSpec {
   }
 
   test("inferSchema widens long/double conflicts and rejects incompatible ones") {
-    val dir = Files.createTempDirectory("graft_rdd4").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_rdd4").toString + "/idx"
     // field `v` arrives as Int in one doc and Double in another: the
     // merged mapping must be double regardless of partition order
     spark.sparkContext.parallelize(Seq[Map[String, Any]](
@@ -67,7 +69,7 @@ class RddApiSpec extends SparkSpec {
   }
 
   test("JSON RDD forms: saveJsonToGraft roundtrips through graftJsonRDD; malformed loud") {
-    val dir = Files.createTempDirectory("graft_rdd_json").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_rdd_json").toString + "/idx"
     val docs = Seq(
       """{"id": 1, "name": "alpha", "score": 0.5}""",
       """{"id": 2, "name": "beta"}""")

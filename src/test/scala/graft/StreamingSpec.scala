@@ -6,13 +6,15 @@ import graft.search.Search
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "gs"
+
   import spark.implicits._
 
   /** Stage the events parquet into a directory so it can drive a file
     * stream source. */
   private lazy val streamDir: String = {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = Files.createTempDirectory(specRoot, "graft_stream").toString
     Files.copy(
       Paths.get(s"$sfDir/events.parquet"),
       Paths.get(s"$dir/events.parquet"),
@@ -204,8 +206,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming WARC ingestion: landing-dir arrivals parse, dedup state spans batches, GraftSink indexes (r16)") {
     import graft.sources.Warc
     import graft.streaming.GraftSink
-    val landing = Files.createTempDirectory("graft_warc_landing").toString
-    val stage = Files.createTempDirectory("graft_warc_stage").toString
+    val landing = Files.createTempDirectory(specRoot, "graft_warc_landing").toString
+    val stage = Files.createTempDirectory(specRoot, "graft_warc_stage").toString
     // land a range of doc ids as ONE real .warc.gz file (body text is
     // id-determined, so re-landing an id is an exact duplicate)
     def land(ids: Range, tag: String): Unit = {
@@ -222,13 +224,13 @@ class StreamingSpec extends SparkSpec {
         }
     }
     land(0 until 20, "b1")
-    val idx = Files.createTempDirectory("graft_warc_idx").toString + "/idx"
+    val idx = Files.createTempDirectory(specRoot, "graft_warc_idx").toString + "/idx"
     // readStream -> strip -> gate -> state dedup -> the existing
     // connector sink (append: deduped rows are new documents)
     val q = GraftSink.startAppend(
       Warc.crawlExtract(Warc.warcStreamDF(spark, landing), minChars = 50),
       idx, Map.empty,
-      Files.createTempDirectory("graft_warc_ck").toString)
+      Files.createTempDirectory(specRoot, "graft_warc_ck").toString)
     try {
       q.processAllAvailable()
       assert(spark.read.parquet(idx).count() == 20)
@@ -250,8 +252,8 @@ class StreamingSpec extends SparkSpec {
 
   test("bounded-state crawl dedup: watermark TTL caps state; late duplicates re-admit (r17)") {
     import graft.sources.Warc
-    val landing = Files.createTempDirectory("graft_warcb_landing").toString
-    val stage = Files.createTempDirectory("graft_warcb_stage").toString
+    val landing = Files.createTempDirectory(specRoot, "graft_warcb_landing").toString
+    val stage = Files.createTempDirectory(specRoot, "graft_warcb_stage").toString
     def land(ids: Range, tag: String, date: String): Unit = {
       val dir = s"$stage/$tag"
       Warc.saveWarc(spark.range(ids.start, ids.end).coalesce(1).select(
@@ -307,18 +309,18 @@ class StreamingSpec extends SparkSpec {
     // Connector.save's append -> refreshAnalysis, so the BM25
     // artifacts stay fresh CONTINUOUSLY — the ES behavior (documents
     // analyzed per bulk request), not rebuild-per-batch
-    val srcDir = Files.createTempDirectory("graft_cidx_src").toString
+    val srcDir = Files.createTempDirectory(specRoot, "graft_cidx_src").toString
     val docs = Tables.documents(spark, sfDir).limit(60)
     docs.where(col("doc_id") % 2 === 0).coalesce(1).write.parquet(s"$srcDir/b1")
     docs.where(col("doc_id") % 2 === 1).coalesce(1).write.parquet(s"$srcDir/b2")
     // flat staging dir with one parquet file per batch
-    val stage = Files.createTempDirectory("graft_cidx_stage").toString
+    val stage = Files.createTempDirectory(specRoot, "graft_cidx_stage").toString
     Seq("b1", "b2").foreach { b =>
       val f = new java.io.File(s"$srcDir/$b").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       Files.copy(f.toPath, Paths.get(s"$stage/$b.parquet"))
     }
-    val idx = Files.createTempDirectory("graft_cidx").toString + "/idx"
+    val idx = Files.createTempDirectory(specRoot, "graft_cidx").toString + "/idx"
     val stream = spark.readStream
       .schema(docs.schema)
       .option("maxFilesPerTrigger", 1)
@@ -326,12 +328,12 @@ class StreamingSpec extends SparkSpec {
     val q = GraftSink.startAppend(stream, idx, Map(
       "graft.mapping.id" -> "doc_id",
       "graft.index.analysis" -> "text"),
-      Files.createTempDirectory("graft_cidx_ck").toString)
+      Files.createTempDirectory(specRoot, "graft_cidx_ck").toString)
     try q.processAllAvailable() finally q.stop()
 
     // artifacts fresh after the last batch, ids clean across batches
     assert(graft.index.IndexArtifacts.loadAnalysis(
-      spark, idx, "text", Some("doc_id"), requireCleanIds = true).isDefined)
+      spark, idx, "text", Some("doc_id")).exists(_.idsClean))
     val indexed = Search.bm25ScoresIndexed(spark, idx, "doc_id", "text", "fast hash join")
       .orderBy(col("score").desc, col("id").asc).limit(10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -462,7 +464,7 @@ class StreamingSpec extends SparkSpec {
 
   test("graftStream: streaming read of an index with an ES query applied") {
     import graft.sources.Connector.implicits._
-    val dir = Files.createTempDirectory("graft_rstream").toString + "/idx"
+    val dir = Files.createTempDirectory(specRoot, "graft_rstream").toString + "/idx"
     Tables.documents(spark, sfDir).write.parquet(dir)
     val q = spark.graftStream(dir, """{"term": {"lang": "en"}}""", idField = "doc_id")
       .groupBy(col("lang")).agg(count(lit(1)).as("n"))
@@ -487,7 +489,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("transform continuous pivot: dest index converges to the batch pivot") {
-    val base = Files.createTempDirectory("graft_transform").toString
+    val base = Files.createTempDirectory(specRoot, "graft_transform").toString
     val src = s"$base/src"; val dest = s"$base/dest"; val ckpt = s"$base/ckpt"
     Seq((1L, "en", 10.0), (2L, "en", 20.0), (3L, "de", 5.0))
       .toDF("doc_id", "lang", "v").write.parquet(src)
@@ -511,7 +513,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("transform continuous latest: dest upserts converge to batch latest") {
-    val base = Files.createTempDirectory("graft_tlatest").toString
+    val base = Files.createTempDirectory(specRoot, "graft_tlatest").toString
     val src = s"$base/src"; val dest = s"$base/dest"; val ckpt = s"$base/ckpt"
     Seq((1L, 10L, 100L, "a", 1.0), (2L, 20L, 150L, "b", 2.0))
       .toDF("event_id", "user_id", "ts_us", "event_type", "value")

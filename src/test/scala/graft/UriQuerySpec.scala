@@ -6,7 +6,9 @@ import graft.dsl.{EsQuery, UriQuery}
 import graft.streaming.GraftSink
 import org.apache.spark.sql.functions._
 
-class UriQuerySpec extends SparkSpec {
+class UriQuerySpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "gu"
+
   import spark.implicits._
 
   private def docs = Tables.documents(spark, sfDir)
@@ -119,12 +121,12 @@ class UriQuerySpec extends SparkSpec {
   }
 
   test("streaming sink: micro-batch upsert into an index is idempotent-shaped") {
-    val stage = Files.createTempDirectory("graft_sink_in").toString
+    val stage = Files.createTempDirectory(specRoot, "graft_sink_in").toString
     Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       java.nio.file.Paths.get(s"$stage/events.parquet"))
-    val idxDir = Files.createTempDirectory("graft_sink_idx").toString + "/idx"
-    val ckpt = Files.createTempDirectory("graft_sink_ckpt").toString
+    val idxDir = Files.createTempDirectory(specRoot, "graft_sink_idx").toString + "/idx"
+    val ckpt = Files.createTempDirectory(specRoot, "graft_sink_ckpt").toString
 
     val stream = spark.readStream.schema(Tables.eventsSchema).parquet(stage)
       .transform(Tables.normalizeEvents)

@@ -6,14 +6,13 @@ import org.apache.spark.sql.functions._
 /** The WARC (ISO 28500 / Common Crawl) source: byte-level parser,
   * HTTP response splitting, the one-gzip-member-per-record write
   * layout, and the streaming distributed read. */
-class WarcSpec extends SparkSpec {
+class WarcSpec extends SparkSpec with SpecTempRoot {
+  override protected def tempRootPrefix = "gw"
+
   import spark.implicits._
 
-  private def tmpDir(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_warc_$tag").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmpDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(specRoot, s"graft_warc_$tag").toString
 
   test("record round trip: responseRecord -> records recovers every field") {
     val body = "hello <b>warc</b> éü".getBytes("UTF-8")
