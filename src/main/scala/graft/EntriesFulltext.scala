@@ -212,11 +212,9 @@ private[graft] object EntriesFulltext {
       // runs (bench, verify) reuse the fresh artifacts — the whole
       // point of analyze-once — while a regenerated testdata file
       // changes the key and forces a rebuild
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/documents.parquet").take(12)
       // staged build + atomic rename: concurrent runs can't read a
       // half-written artifact, stale generations get swept
-      val out = graft.index.IndexArtifacts.ensureArtifact("bm25idx", srcFp)(
+      val out = graft.index.IndexArtifacts.ensureArtifact("bm25idx", s"$d/documents.parquet")(
         p => graft.index.IndexArtifacts.loadAnalysis(s, p, "text").nonEmpty)(
         stage => graft.sources.Connector.save(t(s, d, "documents"), stage, Map(
           "graft.write.operation" -> "overwrite",

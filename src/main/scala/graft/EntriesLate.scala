@@ -26,8 +26,7 @@ private[graft] object EntriesLate {
     * and reused while `fresh` accepts it. */
   private def embeddingsIndex(s: SparkSession, d: String, kind: String,
       opts: (String, String)*)(fresh: String => Boolean): String = {
-    val srcFp = IndexArtifacts.dataFingerprint(s, s"$d/embeddings.parquet").take(12)
-    IndexArtifacts.ensureArtifact(kind, srcFp)(fresh)(stage =>
+    IndexArtifacts.ensureArtifact(kind, s"$d/embeddings.parquet")(fresh)(stage =>
       graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
         "graft.write.operation" -> "overwrite",
         "graft.mapping.id" -> "vec_id") ++ opts))
@@ -162,12 +161,10 @@ private[graft] object EntriesLate {
       // fingerprint-keyed artifact (the bm25_indexed precedent) and
       // repeat runs reuse it; the oracle reads the static copy the
       // key refreshes from the artifact each run
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/embeddings.parquet").take(12)
       // FS-API probe, not java.io.File: the artifact root may be a
       // URI (hdfs://, s3a://) — a local-File probe would always miss
       // and retrain every run only to discard the staging copy
-      val cbDir = graft.index.IndexArtifacts.ensureArtifact("pqdistcb", srcFp)(
+      val cbDir = graft.index.IndexArtifacts.ensureArtifact("pqdistcb", s"$d/embeddings.parquet")(
         p => {
           val cp = new org.apache.hadoop.fs.Path(s"$p/codebook")
           cp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(cp)
@@ -222,9 +219,7 @@ private[graft] object EntriesLate {
         .select(col("vec_id"),
           zip_with(col("cv"), col("ev"), (c, x) => c + lit(0.15) * x).as("embedding"))
       val dsub = 8
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/embeddings.parquet").take(12)
-      val cbDir = graft.index.IndexArtifacts.ensureArtifact("pqclustcb", srcFp)(
+      val cbDir = graft.index.IndexArtifacts.ensureArtifact("pqclustcb", s"$d/embeddings.parquet")(
         p => {
           val cp = new org.apache.hadoop.fs.Path(s"$p/codebook")
           cp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(cp)

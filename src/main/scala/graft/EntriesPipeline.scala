@@ -125,11 +125,9 @@ private[graft] object EntriesPipeline {
       // source-fingerprint-keyed dir: repeated runs reuse the fresh
       // artifact (the dedup-once contract); regenerated testdata
       // changes the key and rebuilds
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/documents.parquet").take(12)
       // staged build + atomic rename: concurrent runs can't read a
       // half-written artifact, stale generations get swept
-      val out = graft.index.IndexArtifacts.ensureArtifact("mhidx", srcFp)(
+      val out = graft.index.IndexArtifacts.ensureArtifact("mhidx", s"$d/documents.parquet")(
         p => graft.index.IndexArtifacts.loadMinhash(s, p, "text", Some("doc_id")).nonEmpty)(
         stage => graft.sources.Connector.save(
           docs.where(pmod(col("doc_id"), lit(2)) === 0), stage, Map(
@@ -253,11 +251,9 @@ private[graft] object EntriesPipeline {
       // source-fingerprint-keyed dir: repeated runs reuse the fresh
       // artifact (the analyze-once contract); regenerated testdata
       // changes the key and rebuilds
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/embeddings.parquet").take(12)
       // staged build + atomic rename: concurrent runs can't read a
       // half-written artifact, stale generations get swept
-      val out = graft.index.IndexArtifacts.ensureArtifact("ivfidx", srcFp)(
+      val out = graft.index.IndexArtifacts.ensureArtifact("ivfidx", s"$d/embeddings.parquet")(
         p => graft.index.IndexArtifacts.loadIvf(s, p, "embedding").nonEmpty)(
         stage => graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
           "graft.write.operation" -> "overwrite",
@@ -274,9 +270,7 @@ private[graft] object EntriesPipeline {
     // oracle re-derives the full assignment from the seed-quantizer
     // CTEs q_ann_ivf shares, then counts per list
     "q_ivf_list_stats" -> ((s, d) => {
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/embeddings.parquet").take(12)
-      val out = graft.index.IndexArtifacts.ensureArtifact("ivfidx", srcFp)(
+      val out = graft.index.IndexArtifacts.ensureArtifact("ivfidx", s"$d/embeddings.parquet")(
         p => graft.index.IndexArtifacts.loadIvf(s, p, "embedding").nonEmpty)(
         stage => graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
           "graft.write.operation" -> "overwrite",
@@ -1191,9 +1185,7 @@ private[graft] object EntriesPipeline {
     "q_tokens_bpe_dist" -> ((s, d) => {
       import s.implicits._
       val docs = t(s, d, "documents")
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/documents.parquet").take(12)
-      val mDir = graft.index.IndexArtifacts.ensureArtifact("bpedist", srcFp)(
+      val mDir = graft.index.IndexArtifacts.ensureArtifact("bpedist", s"$d/documents.parquet")(
         p => {
           val mp = new org.apache.hadoop.fs.Path(s"$p/merges")
           mp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(mp)

@@ -39,9 +39,7 @@ private[graft] object EntriesWrite {
     // a header, HTTP-split or gzip-member bug anywhere breaks the hash
     "q_warc_roundtrip" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/documents.parquet").take(12)
-      val dir = graft.index.IndexArtifacts.ensureArtifact("warc", srcFp)(
+      val dir = graft.index.IndexArtifacts.ensureArtifact("warc", s"$d/documents.parquet")(
         p => graft.index.IndexArtifacts.fsDirExists(s, p))(
         stage => graft.sources.Warc.saveWarc(
           docs.select(
@@ -86,9 +84,7 @@ private[graft] object EntriesWrite {
     // mirror: WARC parse, HTTP split, strip, WET serialize and WET
     // parse must all agree to land on identical md5s
     "q_wet_roundtrip" -> ((s, d) => {
-      val srcFp = graft.index.IndexArtifacts
-        .dataFingerprint(s, s"$d/documents.parquet").take(12)
-      val wetDir = graft.index.IndexArtifacts.ensureArtifact("wet", srcFp)(
+      val wetDir = graft.index.IndexArtifacts.ensureArtifact("wet", s"$d/documents.parquet")(
         p => graft.index.IndexArtifacts.fsDirExists(s, p))(stage => {
           val warcDir = EntryShared.ensureWarcHtml(s, d)
           graft.sources.Warc.saveWet(

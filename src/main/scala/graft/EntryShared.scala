@@ -29,9 +29,7 @@ private[graft] object EntryShared {
     * with per-key copies, the artifact's bytes would depend on which
     * key built first if one copy were ever edited. */
   def ensureWarcHtml(s: SparkSession, d: String): String = {
-    val srcFp = graft.index.IndexArtifacts
-      .dataFingerprint(s, s"$d/documents.parquet").take(12)
-    graft.index.IndexArtifacts.ensureArtifact("warchtml", srcFp)(
+    graft.index.IndexArtifacts.ensureArtifact("warchtml", s"$d/documents.parquet")(
       p => graft.index.IndexArtifacts.fsDirExists(s, p))(
       stage => graft.sources.Warc.saveWarc(
         t(s, d, "documents").select(

@@ -90,9 +90,8 @@ object Dedup {
     * executor broadcast budget; above it a forced broadcast hint is a
     * 100 TB hazard (a realistic 10–30% crawl dup rate yields 10^9+
     * drop ids = tens of GB, and the hint removes AQE's ability to
-    * degrade to a shuffle, so executors OOM instead). Override per
-    * session with spark conf `graft.dedup.broadcastDropLimit`. */
-  val DefaultBroadcastDropLimit: Long = 4000000L
+    * degrade to a shuffle, so executors OOM instead). */
+  val BroadcastDropLimit: Long = 4000000L
 
   /** The generic form of exactDedupKeep: min-id keeper per arbitrary
     * dedup KEY expression (content md5, rolling fingerprint, canonical
@@ -102,24 +101,25 @@ object Dedup {
     *
     * The anti-join strategy is SIZE-ADAPTIVE: the drop-id frame is
     * pinned (MEMORY_AND_DISK — ids only, spills cleanly) and counted
-    * with one narrow agg. Below `graft.dedup.broadcastDropLimit`
-    * (default 4M rows) it broadcasts into the left_anti join — the
-    * corpus text never enters an exchange. Above it the hint is
-    * OMITTED: the plain left_anti lets AQE pick the strategy, and the
-    * drops side still only shuffles 8-byte ids. Forcing the broadcast
-    * unconditionally (the pre-r13 form) was correct at every measured
-    * scale but had a cliff: past the broadcast budget the job OOMs
-    * executors rather than degrading to a shuffle. The count makes
-    * this operator EAGER (it runs the keep window once, into the
-    * cache, at call time); the pinned id frame follows the file-level
-    * caching contract above. */
-  def keepFirstByKey(docs: DataFrame, idCol: String, key: Column): DataFrame = {
+    * with one narrow agg. Below `BroadcastDropLimit` (4M rows) it
+    * broadcasts into the left_anti join — the corpus text never enters
+    * an exchange. Above it the hint is OMITTED: the plain left_anti
+    * lets AQE pick the strategy, and the drops side still only
+    * shuffles 8-byte ids. An unconditional broadcast is correct at
+    * every scale below the broadcast budget but has a cliff past it:
+    * the job OOMs executors rather than degrading to a shuffle. The
+    * count makes this operator EAGER (it runs the keep window once,
+    * into the cache, at call time); the pinned id frame follows the
+    * file-level caching contract above. */
+  def keepFirstByKey(docs: DataFrame, idCol: String, key: Column): DataFrame =
+    keepFirstByKeyCapped(docs, idCol, key, BroadcastDropLimit)
+
+  /** `keepFirstByKey` under an explicit drop-count broadcast limit. */
+  private[graft] def keepFirstByKeyCapped(
+      docs: DataFrame, idCol: String, key: Column, limit: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.storage.StorageLevel
     val w = Window.partitionBy(col("__h")).orderBy(col("__i"))
-    val limit = docs.sparkSession.conf
-      .get("graft.dedup.broadcastDropLimit", DefaultBroadcastDropLimit.toString)
-      .toLong
     val drops = docs
       .where(key.isNotNull)
       .select(col(idCol).as("__i"), key.as("__h"))
@@ -190,45 +190,28 @@ object Dedup {
     minhashLshUnsorted(docs, idCol, textCol, threshold, numHashes, bands)
       .orderBy(col("id1").asc, col("id2").asc)
 
-  /** The (shingles, bands) frames of one corpus under the artifact's
-    * canonical aliases — what `IndexArtifacts.buildMinhash` persists.
-    * The shingle frame comes back CACHED, so the builder releases it
-    * as soon as it has written. */
-  def minhashArtifactFrames(
+  /** (`idAlias`, `shAlias`) shingle sets of `docs`, one row per doc
+    * (empty sets included). Lazy. */
+  private[graft] def shingleSets(
       docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"bands must divide numHashes evenly: numHashes=$numHashes bands=$bands")
-    shingleBandSide(docs, idCol, textCol, "id", "sh", numHashes, bands,
-      pin = { sh => val c = sh.cache(); c.count(); c })
-  }
-
-  /** Artifact-REFRESH variant: the shingle frame is LOCALCHECKPOINTED
-    * (data, not lineage). The caller appends into a path this frame's
-    * lineage reads (the stored shingles, via the new-docs anti-join) —
-    * with a mere cache, Spark's recacheByPath recomputes the plan
-    * against the just-grown table after the first write, the anti-join
-    * then excludes everything, and the bands append writes EMPTY rows
-    * (observed; spec-pinned). A checkpoint carries rows, so later
-    * writes can't invalidate it. */
-  def minhashArtifactFramesCut(
-      docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"bands must divide numHashes evenly: numHashes=$numHashes bands=$bands")
-    val sh = sideShingles(docs, idCol, textCol, "id", "sh").localCheckpoint(true)
-    (sh, sideBands(sh, "id", "sh", numHashes, bands))
-  }
-
-  /** The (`idAlias`, `shAlias`) shingle sets of one corpus side; docs
-    * with no shingle drop. Lazy. */
-  private def sideShingles(
-      docs: DataFrame, idCol: String, textCol: String,
-      idAlias: String, shAlias: String): DataFrame =
+      idAlias: String = "id", shAlias: String = "sh"): DataFrame =
     docs.select(
       col(idCol).as(idAlias),
       Analyzer.shingles(Analyzer.tokens(col(textCol))).as(shAlias))
-      .where(size(col(shAlias)) > 0)
+
+  /** The shingle sets of one corpus side; docs with no shingle drop. */
+  private def sideShingles(
+      docs: DataFrame, idCol: String, textCol: String,
+      idAlias: String, shAlias: String): DataFrame =
+    shingleSets(docs, idCol, textCol, idAlias, shAlias).where(size(col(shAlias)) > 0)
+
+  /** (id, band) rows of an (id, sh) shingle frame — the band table the
+    * MinHash artifact persists. */
+  private[graft] def bandRows(sh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    require(bands >= 1 && numHashes % bands == 0,
+      s"bands must divide numHashes evenly: numHashes=$numHashes bands=$bands")
+    sideBands(sh, "id", "sh", numHashes, bands)
+  }
 
   /** The band-key column of a shingle-set column. */
   private def bandKeyArray(shCol: Column, numHashes: Int, bands: Int): Column =
@@ -246,27 +229,27 @@ object Dedup {
     * eager-materialize contract / band construction cannot drift
     * between them: (materialized shingle frame `idAlias`/`shAlias`,
     * band frame `idAlias`/`band`). The shingle frame is materialized
-    * EAGERLY by `pin` — banding and the verify join both read it, and
-    * a lazy one would race both branches into recomputing the shingle
-    * stage (see minhashLsh). The screens pin with an eager
-    * localCheckpoint: one job, like cache+count, but outside the
-    * CacheManager — the returned plan is lazy, so a cache could never
-    * be unpersisted and every screen would leave an entry that each
-    * later query's cache lookup scans. The checkpoint's blocks go
-    * with the plan (ContextCleaner). */
+    * EAGERLY — banding and the verify join both read it, and a lazy
+    * one would race both branches into recomputing the shingle stage
+    * (see minhashLsh) — by an eager localCheckpoint: one job, like
+    * cache+count, but outside the CacheManager — the returned plan is
+    * lazy, so a cache could never be unpersisted and every screen
+    * would leave an entry that each later query's cache lookup scans.
+    * The checkpoint's blocks go with the plan (ContextCleaner). */
   private def shingleBandSide(
       docs: DataFrame, idCol: String, textCol: String,
       idAlias: String, shAlias: String,
-      numHashes: Int, bands: Int,
-      pin: DataFrame => DataFrame = _.localCheckpoint(true)): (DataFrame, DataFrame) = {
-    // spread ONLY under-partitioned input (see the minhashLsh note:
-    // re-shuffling an already-wide 100 TB corpus would be the cost)
-    val spread =
-      if (narrow(docs)) docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      else docs
-    val sh = pin(sideShingles(spread, idCol, textCol, idAlias, shAlias))
+      numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
+    val sh = sideShingles(spread(docs), idCol, textCol, idAlias, shAlias).localCheckpoint(true)
     (sh, sideBands(sh, idAlias, shAlias, numHashes, bands))
   }
+
+  /** `docs` over every core when `narrow`; ONLY under-partitioned input
+    * spreads (see the minhashLsh note: re-shuffling an already-wide
+    * 100 TB corpus would be the cost). */
+  private[graft] def spread(docs: DataFrame): DataFrame =
+    if (narrow(docs)) docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    else docs
 
   /** Fewer partitions than the default parallelism: one core per
     * partition leaves cores idle. */
@@ -344,7 +327,7 @@ object Dedup {
   val LookupByteCap: Long = 64L << 20
 
   /** Cross-corpus near-dup screen against a PERSISTED minhash artifact
-    * (IndexArtifacts.buildMinhash) — dedup-once: the reference corpus
+    * (`ArtifactKind.Minhash`) — dedup-once: the reference corpus
     * is never re-tokenized or re-minhashed; its shingle sets and band
     * keys read back as columnar tables, and only the NEW side (the
     * crawl batch) pays shingle + signature compute. Two regimes return
@@ -721,8 +704,8 @@ object Dedup {
     *
     * Scale: 16-bit bands give 65,536 buckets per band, so expected
     * candidate pairs are ~ n^2 / 2^17 per band under a uniform
-    * signature distribution — 256x fewer than the r1 32-bit/8-bit
-    * banding, and the signature entropy (64 bits over md5 votes) keeps
+    * signature distribution — 256x fewer than 32-bit/8-bit
+    * banding would give, and the signature entropy (64 bits over md5 votes) keeps
     * buckets near-uniform. Residual hazard at 100x is template-heavy
     * corpora collapsing onto few signatures; that skew is exactly what
     * AQE skew-join (on in GraftSession) splits at runtime.
@@ -769,12 +752,10 @@ object Dedup {
     * (a 9-round convergence on a long-chain pair graph is ~3 s of
     * pure per-round overhead at ANY input size below millions of
     * edges). The count is free: the edge cache is materialized
-    * eagerly anyway. Same size-adaptive shape as
-    * `graft.dedup.broadcastDropLimit` — the regime switch is counted,
-    * not guessed, and above the ceiling the published distributed
-    * recipe runs. Override with spark conf
-    * `graft.dedup.ccLocalEdgeLimit` (0 disables the local regime). */
-  val DefaultCcLocalEdgeLimit: Long = 4000000L
+    * eagerly anyway. Same size-adaptive shape as `BroadcastDropLimit`
+    * — the regime switch is counted, not guessed, and above the
+    * ceiling the published distributed recipe runs. */
+  val CcLocalEdgeLimit: Long = 4000000L
 
   /** Near-duplicate CLUSTERS from a verified pair list: connected
     * components — every document ends up labeled with the smallest
@@ -782,54 +763,50 @@ object Dedup {
     * cluster id a pipeline keeps / drops against (pairs alone
     * under-delete: a~b, b~c must collapse to ONE survivor).
     *
-    * Three regimes behind one contract, chosen by the COUNTED pair
-    * cardinality (spark conf `graft.dedup.ccAlgorithm` pins one
-    * explicitly: `local` | `minlabel` | `lss`; default `auto`):
+    * Two regimes behind one contract, chosen by the COUNTED pair
+    * cardinality:
     *
-    *   - `local` (pairs <= `graft.dedup.ccLocalEdgeLimit`, default
-    *     4M): collect the verified pairs — already a blocked/banded
-    *     candidate set orders of magnitude smaller than the corpus —
-    *     and run path-compressed union-find on the driver. Exact,
-    *     and immune to the per-round fixed cost that dominates the
-    *     distributed loops at small edge counts.
+    *   - `local` (pairs <= `CcLocalEdgeLimit`): collect the verified
+    *     pairs — already a blocked/banded candidate set orders of
+    *     magnitude smaller than the corpus — and run path-compressed
+    *     union-find on the driver. Exact, and immune to the per-round
+    *     fixed cost that dominates the distributed loop at small edge
+    *     counts.
     *   - `minlabel` (above the limit): min-label + pointer-jumping
     *     propagation — O(log diameter) rounds, each one edge join +
-    *     min-agg + label self-join. The measured winner of the r14
-    *     chain A/B (200k-node path, diameter 2*10^5: 19 rounds /
-    *     20.0 s vs lss's 19 rounds / 31.5 s — pointer jumping matches
-    *     lss's round count at about half the per-round cost, because
-    *     lss pays two star ops + the fixpoint check per round).
-    *   - `lss`: alternating large-star/small-star (Kiveris et al.
-    *     2014, "Connected Components in MapReduce and Beyond"; also
-    *     what GraphFrames ships). Kept selectable for the regime it
-    *     is published for — edge sets that DWARF the node set (heavy
-    *     LSH banding fan-out, skewed mega-components): its edge set
-    *     monotonically contracts toward the |V|-sized star forest,
-    *     while minlabel re-joins the FULL edge set every round. On
-    *     path graphs it shows its O(log^2) worst case (the A/B
-    *     above), so it is not the default.
+    *     min-agg + label self-join. On a 200k-node path (diameter
+    *     2*10^5) it converged in 19 rounds / 20.0 s, where alternating
+    *     large-star/small-star (Kiveris et al. 2014) took the same 19
+    *     rounds at 31.5 s: each of its rounds pays two star ops + a
+    *     fixpoint check.
     *
-    * All regimes return the identical exact labeling (the specs pin
-    * all three on the same graphs, including a diameter-1000 chain);
-    * non-convergence of the iterative forms throws rather than
-    * silently returning non-minimal labels. */
-  def dedupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
-    val algo = spark.conf.get("graft.dedup.ccAlgorithm", "auto")
-    val limit = spark.conf
-      .get("graft.dedup.ccLocalEdgeLimit", DefaultCcLocalEdgeLimit.toString).toLong
+    * Both regimes return the identical exact labeling (the specs pin
+    * them on the same graphs, including a diameter-1000 chain);
+    * non-convergence of the iterative form throws rather than
+    * silently returning non-minimal labels. Every job carries a job
+    * description naming the regime and the pair count. */
+  def dedupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame =
+    dedupClustersCapped(pairs, maxIters, CcLocalEdgeLimit)
+
+  /** `dedupClusters` under an explicit local-regime pair limit (a
+    * negative one always takes the distributed regime). */
+  private[graft] def dedupClustersCapped(
+      pairs: DataFrame, maxIters: Int, localEdgeLimit: Long): DataFrame = {
+    val sc = pairs.sparkSession.sparkContext
+    val caller = sc.getLocalProperty(JobDescription)
     // ONE materialization of the (expensive) upstream pair pipeline,
-    // shared by every regime; the count doubles as the regime switch
+    // shared by both regimes; the count doubles as the regime switch
     val pr = pairs.select(col("id1"), col("id2")).cache()
-    val nPairs = pr.count()
-    require(Set("auto", "local", "minlabel", "lss").contains(algo),
-      s"graft.dedup.ccAlgorithm must be auto|local|minlabel|lss, got '$algo'")
-    val out =
-      if (algo == "local" || (algo == "auto" && nPairs <= limit)) ccLocal(pr)
-      else if (algo == "lss") ccLargeSmallStar(pr, maxIters)
-      else ccMinLabel(pr, maxIters)
-    pr.unpersist()
-    out
+    try {
+      sc.setJobDescription("connected components: counting pairs")
+      val nPairs = pr.count()
+      val regime = if (nPairs <= localEdgeLimit) "local" else "minlabel"
+      sc.setJobDescription(s"connected components: $regime, $nPairs pairs")
+      if (regime == "local") ccLocal(pr) else ccMinLabel(pr, maxIters)
+    } finally {
+      pr.unpersist()
+      sc.setLocalProperty(JobDescription, caller)
+    }
   }
 
   /** Spark-SQL-consistent ordering for the id types the pair
@@ -847,7 +824,7 @@ object Dedup {
   }
 
   /** Driver union-find regime: exact min-reachable-id labels over a
-    * COUNTED, bounded pair list (see DefaultCcLocalEdgeLimit). Path
+    * COUNTED, bounded pair list (see CcLocalEdgeLimit). Path
     * compression + union by size; the component minimum rides on the
     * root, so labeling is one find() per node after the union pass. */
   private def ccLocal(pr: DataFrame): DataFrame = {
@@ -898,84 +875,8 @@ object Dedup {
       .orderBy(col("doc_id").asc)
   }
 
-  /** Alternating large-star/small-star (Kiveris et al. 2014): the
-    * distributed at-scale regime. Edges live canonically as
-    * (child > parent) pointer pairs; large-star hangs every
-    * strictly-larger neighbor of a node onto the minimum of its
-    * closed neighborhood, small-star does the same for the
-    * smaller-or-equal neighbors. Both operators only ever REPLACE a
-    * node's parents with smaller ones, so the edge set monotonically
-    * descends to the star forest rooted at component minima — which
-    * is exactly the (doc, min reachable id) labeling. Convergence is
-    * detected by an exact consecutive-round fixpoint (anti-joins both
-    * ways on the checkpointed edge frames — edge-set-sized, tiny next
-    * to a corpus); a fixpoint of BOTH operators is provably the star
-    * forest, so the check is exact, not probabilistic. */
-  private def ccLargeSmallStar(pr: DataFrame, maxIters: Int): DataFrame = {
-    def truncate(df: DataFrame): DataFrame = graft.util.Stages.truncate(df)
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.select(explode(array(
-          struct(col("a"), col("b")),
-          struct(col("b").as("a"), col("a").as("b")))).as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-      val mins = sym.groupBy(col("a"))
-        .agg(min(col("b")).as("nmin"))
-        .select(col("a"), least(col("a"), col("nmin")).as("m"))
-      sym.where(col("b") > col("a"))
-        .join(mins, "a")
-        .select(col("b").as("a"), col("m").as("b"))
-        .where(col("a") =!= col("b"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = e.select(
-        greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
-        .where(col("a") =!= col("b"))
-      val mins = dir.groupBy(col("a")).agg(min(col("b")).as("m"))
-      dir.join(mins, "a")
-        .select(explode(array(col("b"), col("a"))).as("x"), col("m"))
-        .where(col("x") =!= col("m"))
-        .select(col("x").as("a"), col("m").as("b"))
-        .distinct()
-    }
-    // canonical start: dedup + drop self-loops once, then iterate
-    var edges = truncate(
-      pr.select(col("id1").as("a"), col("id2").as("b"))
-        .where(col("a") =!= col("b")).distinct())
-    var iter = 0
-    var converged = false
-    var prevCount = edges.count()
-    while (!converged && iter < maxIters) {
-      val t0 = System.nanoTime()
-      val next = truncate(smallStar(largeStar(edges)))
-      // exact fixpoint: both diffs empty <=> identical edge sets. The
-      // anti-joins only run once the cheap necessary condition (equal
-      // edge counts on the already-materialized frames) holds — while
-      // the star forest is still contracting, the count gate skips
-      // the two heavy passes
-      val nextCount = next.count()
-      converged = nextCount == prevCount &&
-        next.join(edges, Seq("a", "b"), "left_anti").isEmpty &&
-        edges.join(next, Seq("a", "b"), "left_anti").isEmpty
-      prevCount = nextCount
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(
-          f"[cc-lss] round $iter: ${(System.nanoTime() - t0) / 1e9}%.2f s converged=$converged")
-      edges = next
-      iter += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"dedupClusters(lss) did not converge in $maxIters rounds")
-    // at the fixpoint `edges` IS the star forest (child -> component
-    // min); roots label themselves
-    edges.select(col("a").as("doc_id"), col("b").as("cluster_id"))
-      .union(edges.select(col("b").as("doc_id"), col("b").as("cluster_id")).distinct())
-      .orderBy(col("doc_id").asc)
-  }
-
-  /** Min-label propagation + pointer jumping — the pre-r14 formulation,
-    * kept selectable (`graft.dedup.ccAlgorithm` = minlabel) for A/B
-    * probes against lss on high-diameter graphs. */
+  /** Min-label propagation + pointer jumping: the distributed regime
+    * of dedupClusters. */
   private def ccMinLabel(pr: DataFrame, maxIters: Int): DataFrame = {
     // both orientations from ONE scan: a union of two selects over the
     // same (expensive, uncached) pair pipeline computes it twice —
@@ -1032,7 +933,6 @@ object Dedup {
       // batching made the sf0.1 keeper 34% SLOWER (3.3 -> 4.5 s).
       // Same recompute hazard the edges cache above exists for.
       val lblOfLbl = labels.select(col("id").as("lbl"), col("lbl").as("llbl"))
-      val t0 = System.nanoTime()
       // carry the previous label alongside the new one so the
       // convergence check is a count over the checkpointed frame —
       // the truncate() already materialized every partition
@@ -1045,9 +945,6 @@ object Dedup {
           coalesce(col("llbl"), col("lbl"))).as("lbl"),
           col("lbl").as("old")))
       converged = next.where(col("lbl") =!= col("old")).count() == 0
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(
-          f"[cc] round $iter: ${(System.nanoTime() - t0) / 1e9}%.2f s converged=$converged")
       labels = next.select(col("id"), col("lbl"))
       iter += 1
     }
@@ -1150,8 +1047,8 @@ object Dedup {
     // pushes left-anti through a Union-shaped left side, duplicating
     // the right side per branch, and an uncached `confirmed` would
     // recompute the whole bloom+verify pipeline once per union branch
-    // (the dedupIncrementalNewIds r8 trap; measured 9x super-linear
-    // at the 30x probe before this cache). Eager localCheckpoint, not
+    // (the same trap dedupIncrementalNewIds avoids; 9x super-linear at
+    // the 30x probe without this cache). Eager localCheckpoint, not
     // cache(): it materializes once AND releases with the plan — a
     // cache() here leaked executor storage for the session lifetime.
     val confirmed = candidates
@@ -1414,16 +1311,15 @@ object Dedup {
     import spark.implicits._
     val v = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r17: assignment as ONE map-only expression over the driver-side
+    // assignment is ONE map-only expression over the driver-side
     // centroids (they are on the driver anyway — the mean update
-    // collects them every round). The r16 form crossJoined a broadcast
-    // centroid frame and re-grouped by id, shuffling ~N FULL VECTORS
-    // per Lloyd round. r18: the r17 argmax built the centroids into a
-    // k x dim LITERAL tree (struct-max over k cosine structs) — a
-    // multi-million-node Catalyst tree at the 1e4-centroid target;
-    // BestCentroid ships the same table as one codegen reference
-    // object and computes the identical round-4 argmax (lowest-cent
-    // tie-break) in one compiled loop.
+    // collects them every round): a crossJoin with a broadcast
+    // centroid frame re-grouped by id would shuffle ~N FULL VECTORS
+    // per Lloyd round, and an argmax built as a k x dim LITERAL tree
+    // (struct-max over k cosine structs) is a multi-million-node
+    // Catalyst tree at the 1e4-centroid target. BestCentroid ships the
+    // table as one codegen reference object and computes the round-4
+    // argmax (lowest-cent tie-break) in one compiled loop.
     def best(cents: Seq[(Long, Seq[Double])]): Column =
       Dedup.bestCentroidCol(cents)
     try {
@@ -1491,12 +1387,12 @@ object Dedup {
     * hash-shuffle — at 1e9 docs x 1e4 centroids that is the
     * difference between a 1e13-row shuffle and a 1e9-row one. */
   private def semanticAssign(v: DataFrame, nCentroids: Int): DataFrame = {
-    // r17: seeds are nCentroids rows by contract — collect them and
-    // assign via ONE map-only argmax expression (round-4 cosine,
-    // lowest-cent tie-break) instead of the r16 crossJoin + re-group,
-    // which shuffled ~N pre-combined vector rows. r18: the argmax is
-    // the compiled BestCentroid kernel over one reference-object
-    // centroid table, not a k x dim literal tree (see bestCentroidCol).
+    // seeds are nCentroids rows by contract — collect them and assign
+    // via ONE map-only argmax expression (round-4 cosine, lowest-cent
+    // tie-break); a crossJoin + re-group would shuffle ~N pre-combined
+    // vector rows. The argmax is the compiled BestCentroid kernel over
+    // one reference-object centroid table, not a k x dim literal tree
+    // (see bestCentroidCol).
     val spark = v.sparkSession
     import spark.implicits._
     val seeds: Seq[(Long, Seq[Double])] = v.orderBy(col("id").asc).limit(nCentroids)
@@ -1560,8 +1456,8 @@ object Dedup {
     * assignment is stage-truncated ONCE up front, so both its
     * consumers (the pair screen's centroid-block join and the final
     * keeper fold) read materialized blocks instead of each re-running
-    * the corpus×centroids assignment pass — the r13 keeper paid that
-    * broadcast scan twice. */
+    * the corpus×centroids assignment pass (a broadcast scan each would
+    * otherwise pay). */
   def semanticDedupKeep(
       emb: DataFrame,
       idCol: String,

@@ -1,26 +1,26 @@
 package graft.index
 
-import graft.analysis.Analyzer
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.json4s.{JBool, JDouble, JInt, JString, JValue}
 
-/** Analyze-once persisted index artifacts — the Spark-native analog of
-  * what an ES server amortizes across queries by maintaining a Lucene
-  * index (elasticsearch-hadoop delegates all of this to the server;
-  * graft re-expresses it as columnar side tables beside the index
-  * directory).
+/** Persisted index artifacts — the Spark-native analog of what an ES
+  * server amortizes across queries by maintaining a Lucene index
+  * (elasticsearch-hadoop delegates all of this to the server; graft
+  * re-expresses it as columnar side tables beside the index
+  * directory). `ArtifactKind.all` lists the kinds; every kind takes the
+  * one lifecycle in `maintain`, and loads read a fresh artifact back.
   *
   * Layout (inside the index directory — every name is underscore-
   * prefixed, so Spark's hidden-path filter keeps artifact files out of
   * ordinary reads of the index, and the `_graft_` infix keeps the dir
-  * out of pattern/cat listings like all machinery paths):
+  * out of pattern/cat listings like all machinery paths), e.g. BM25:
   *
   * {{{
   * <index>/_graft_analysis/<textCol>/postings/   (term, id, dl, tf) — inverted index
-  * <index>/_graft_analysis/<textCol>/doclen/     (id, dl)           — every doc; refresh's known ids
+  * <index>/_graft_analysis/<textCol>/doclen/     (id, dl)           — every doc; an append's known ids
   * <index>/_graft_analysis/<textCol>/_graft_meta.json  fingerprint, n_docs, n_dl, dl_sum — commit point
   * }}}
   *
@@ -29,14 +29,12 @@ import org.json4s.{JBool, JDouble, JInt, JString, JValue}
   * slice holds, and n_docs / avgdl = dl_sum / n_dl come from the meta.
   *
   * Scale shape: the build pays ONE corpus tokenize + one (term,id)
-  * exchange — the same work every single BM25 query pays today — and
-  * every subsequent query reads only the postings of ITS OWN terms:
+  * exchange — the same work every single BM25 query pays on the fly —
+  * and every subsequent query reads only the postings of ITS OWN terms:
   * postings are range-partitioned and sorted by term, so a
   * `term IN (...)` predicate prunes whole files and row groups via
   * parquet min/max stats. Query-time cost becomes proportional to the
-  * matched postings, not the corpus (at 100 TB, the difference between
-  * re-reading 100 TB of text per query and reading a few MB of posting
-  * rows).
+  * matched postings, not the corpus.
   *
   * Freshness: `_graft_meta.json` records an md5 fingerprint of the
   * live data files (relative path, length, mtime of every non-hidden
@@ -84,21 +82,23 @@ object IndexArtifacts {
     catch { case _: java.io.FileNotFoundException => false }
   }
 
-  /** Build-once artifact directory keyed by source fingerprint, safe
-    * against CONCURRENT builders and stale generations:
-    * `loaded(finalDir)` probes for a fresh artifact; when absent,
-    * `build(stagingDir)` runs into a process-unique sibling path and
-    * the result is ATOMICALLY renamed into place — two concurrent
-    * harness runs over the same testdata can never observe a
+  /** Build-once artifact directory keyed by the fingerprint of the
+    * source at `srcPath`, safe against CONCURRENT builders and stale
+    * generations: `loaded(finalDir)` probes for a fresh artifact; when
+    * absent, `build(stagingDir)` runs into a process-unique sibling
+    * path and the result is ATOMICALLY renamed into place — two
+    * concurrent harness runs over the same testdata can never observe a
     * partially-written artifact at the final path, and the rename
     * loser just deletes its staging copy and reads the winner's.
-    * Sibling dirs from EARLIER testdata generations (same kind+user
-    * prefix, different fingerprint) are best-effort swept, so the root
-    * stops accumulating one artifact tree per regeneration. */
-  def ensureArtifact(kind: String, srcFp: String)
+    * Sibling dirs of EARLIER generations of the same source (same
+    * kind, user and source, other fingerprint) are best-effort swept,
+    * so the root stops accumulating one artifact tree per
+    * regeneration, while artifacts of other sources (another scale's
+    * testdata) stay. */
+  def ensureArtifact(kind: String, srcPath: String)
       (loaded: String => Boolean)(build: String => Unit): String = {
-    val user = System.getProperty("user.name")
-    val prefix = s"graft_${kind}_${user}_"
+    val prefix = artifactPrefix(kind, srcPath)
+    val srcFp = dataFingerprint(SparkSession.active, srcPath).take(12)
     val root = new Path(artifactRoot)
     val fs = root.getFileSystem(hadoopConf)
     val finalPath = new Path(root, s"$prefix$srcFp")
@@ -112,7 +112,8 @@ object IndexArtifacts {
       else p.toString
     val finalDir = external(finalPath)
     if (!loaded(finalDir)) {
-      // sweep stale generations (same kind+user, other fingerprint)
+      // sweep stale generations (same kind, user and source; other
+      // fingerprint)
       try fs.listStatus(root).foreach { st =>
         val n = st.getPath.getName
         if (n.startsWith(prefix) && n != s"$prefix$srcFp")
@@ -150,7 +151,19 @@ object IndexArtifacts {
     finalDir
   }
 
-  // ---- shared artifact lifecycle: meta, freshness, append audit ----
+  /** `graft_<kind>_<user>_<short hash of the qualified source path>_`:
+    * the name prefix every generation of one source's artifact shares. */
+  private[graft] def artifactPrefix(kind: String, srcPath: String): String = {
+    val src = new Path(srcPath)
+    val qualified = src.getFileSystem(hadoopConf).makeQualified(src).toString
+    s"graft_${kind}_${System.getProperty("user.name")}_${md5Hex(qualified).take(8)}_"
+  }
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+
+  // ---- artifact freshness: the data fingerprint ----
 
   /** md5 over the sorted (relative path, length, mtime) of every
     * non-hidden file under the index dir — changes on any append,
@@ -176,9 +189,7 @@ object IndexArtifacts {
         }
       }
     walk(root)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(lines.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+    md5Hex(lines.sorted.mkString("\n"))
   }
 
   // ---- request-path reads: schema inferred once per fingerprint ----
@@ -261,7 +272,7 @@ object IndexArtifacts {
   private def metaPath(dir: String): Path = new Path(s"$dir/_graft_meta.json")
 
   /** Stamp an artifact dir with the live-data fingerprint — its commit
-    * point, written LAST by every build and refresh. `fields` follow
+    * point, written LAST by every build and append. `fields` follow
     * the fingerprint in order: strings print quoted and unescaped,
     * doubles with one decimal, everything else as-is. The layout is
     * byte-stable, so artifacts already on disk keep loading. */
@@ -281,7 +292,8 @@ object IndexArtifacts {
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
-  /** The parsed meta JSON of an artifact dir, or None when absent. */
+  /** The parsed meta JSON of an artifact dir, or None when absent or
+    * unreadable (a write cut short). */
   private def readMeta(spark: SparkSession, dir: String): Option[JValue] = {
     val path = metaPath(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -289,13 +301,14 @@ object IndexArtifacts {
     val in = fs.open(path)
     try Some(org.json4s.jackson.JsonMethods.parse(
       scala.io.Source.fromInputStream(in, "UTF-8").mkString))
+    catch { case scala.util.control.NonFatal(_) => None }
     finally in.close()
   }
 
-  private def metaStr(meta: JValue, field: String): Option[String] =
+  private[index] def metaStr(meta: JValue, field: String): Option[String] =
     meta \ field match { case JString(s) => Some(s); case _ => None }
 
-  private def metaInt(meta: JValue, field: String): Option[Int] =
+  private[index] def metaInt(meta: JValue, field: String): Option[Int] =
     meta \ field match { case JInt(i) => Some(i.toInt); case _ => None }
 
   /** The meta of a FRESH artifact: present, its fingerprint equal to
@@ -308,7 +321,7 @@ object IndexArtifacts {
     * missing or stale: callers fall back to the on-the-fly path. */
   private def freshMeta(
       spark: SparkSession, indexPath: String, dir: String,
-      expectIdCol: Option[String] = None,
+      expectIdCol: Option[String],
       knownFp: => Option[String] = None): Option[JValue] =
     readMeta(spark, dir).filter { meta =>
       (metaStr(meta, "fingerprint"), metaStr(meta, "id_col")) match {
@@ -319,193 +332,143 @@ object IndexArtifacts {
       }
     }
 
+  // ---- the artifact lifecycle: one build and append path per kind ----
+
+  /** Bring `kind`'s artifact on column `c` in step with the index
+    * data: the one write path of every artifact kind (`Connector.save`
+    * calls it after the data landed or swapped, so the recorded
+    * fingerprint describes the live files queries read).
+    *
+    * APPEND: when `append` and the meta parses for the kind and was
+    * built on `idCol`, only the docs absent from the kind's `known`
+    * table encode, under the state the build froze (the ES segment
+    * shape: an index analyzes only the new documents). The one
+    * `auditAppend` must pass and the increment must be encodable; then
+    * the meta goes, the tables append, and the merged meta is written
+    * last — no table changes under a meta, so a crash mid-append leaves
+    * no commit point and the next write rebuilds.
+    *
+    * REBUILD, every other case (not an append; no meta or one that does
+    * not parse; another id column; a refused audit; a drifted packed
+    * dimension): delete the meta, then the dir, so a crash mid-delete
+    * leaves no commit point and no table an earlier layout wrote
+    * survives; freeze the state over the whole corpus — under the
+    * parameters a parsed meta recorded, else the options — encode it,
+    * and write the meta last.
+    *
+    * Trust contract: index mutations flow through Connector.save. An
+    * out-of-band file swap that keeps ids and row count reads as
+    * "nothing changed"; one that changes either fails the audit. */
+  def maintain(
+      spark: SparkSession,
+      kind: ArtifactKind,
+      indexPath: String,
+      idCol: String,
+      c: String,
+      append: Boolean,
+      opts: Map[String, String] = Map.empty,
+      fmt: String = "parquet"): Unit = {
+    val dir = kind.dir(indexPath, c)
+    val data = kind.rows(spark.read.format(fmt).load(indexPath), c)
+    lazy val known = spark.read.parquet(s"$dir/${kind.known}")
+    val meta = (if (append) readMeta(spark, dir) else None)
+      .filter(metaStr(_, "id_col").contains(idCol))
+    val frozen = meta.flatMap(kind.thaw(spark, dir, _, kind.prepare(
+      data.join(known.select(col("id").as("__known_id")), col(idCol) === col("__known_id"), "semi"),
+      idCol, c)))
+    val appended = frozen.exists { f =>
+      val docs = kind.prepare(unindexed(data, idCol, known), idCol, c)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try auditAppend(docs, kind, data, known.count()) match {
+        case Some(t) if t.getLong(0) == 0 || f.accepts(docs) =>
+          deleteMeta(spark, dir)
+          if (t.getLong(0) > 0)
+            f.tables(docs).foreach(tb => tb.rows.write.mode("append").parquet(s"$dir/${tb.name}"))
+          commit(spark, kind, indexPath, dir, idCol, c, f.fields(t))
+          true
+        case _ => false
+      } finally docs.unpersist(false)
+    }
+    if (!appended)
+      rebuild(spark, kind, indexPath, dir, idCol, c, data, opts, meta.filter(_ => frozen.isDefined))
+  }
+
+  private def rebuild(
+      spark: SparkSession, kind: ArtifactKind, indexPath: String, dir: String,
+      idCol: String, c: String, data: DataFrame,
+      opts: Map[String, String], recorded: Option[JValue]): Unit = {
+    deleteMeta(spark, dir).delete(new Path(dir), true)
+    // pinned for the build: the fit, every table and the tally read it,
+    // and each would otherwise re-scan and re-encode the corpus
+    val docs = kind.prepare(kind.whole(data), idCol, c)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val f = kind.freeze(spark, dir, docs, opts, recorded)
+      f.tables(docs).foreach(tb => tb.built(tb.rows).write.mode("overwrite").parquet(s"$dir/${tb.name}"))
+      commit(spark, kind, indexPath, dir, idCol, c,
+        f.fields(if (kind.stats.isEmpty) Row.empty else tally(docs, kind)))
+    } finally docs.unpersist(false)
+  }
+
+  /** Deletes the meta; returns its filesystem. */
+  private def deleteMeta(spark: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem = {
+    val fs = metaPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(metaPath(dir), false)
+    fs
+  }
+
+  private def commit(
+      spark: SparkSession, kind: ArtifactKind, indexPath: String, dir: String,
+      idCol: String, c: String, fields: Seq[(String, Any)]): Unit =
+    writeMeta(spark, indexPath, dir, Seq("id_col" -> idCol, kind.colField -> c) ++ fields: _*)
+
   /** Data rows whose id is absent from an artifact's stored `id`
-    * column — the increment a refresh adds. The stored ids rename
+    * column — the increment an append encodes. The stored ids rename
     * before the join: an index whose own id column is literally "id"
     * would otherwise make the condition ambiguous. */
   private def unindexed(data: DataFrame, idCol: String, stored: DataFrame): DataFrame =
     data.join(stored.select(col("id").as("__known_id")),
       col(idCol) === col("__known_id"), "left_anti")
 
-  /** The append audit every incremental refresh runs before appending
-    * `fresh`: the anti-join SILENTLY drops an appended row whose id
-    * collides with a stored one (absent from the artifact behind a
-    * fresh meta stamp) and KEEPS null-id rows (null never equals). The
-    * batch must be non-null, internally distinct (unless `distinct` is
-    * false — the analysis artifact records duplicates in its ids_clean
-    * flag instead), and account for every data row not already stored
-    * (`data.count() == stored + n`). One aggregation, with `extra`
-    * columns riding along; the counts run only once the batch checks
-    * pass. Some(row of n, n_nonnull, n_distinct, extra...) when the
-    * append is safe, None when the caller must rebuild. */
+  /** (n, n_nonnull, n_distinct, the kind's stats...) over prepared docs. */
+  private def tally(docs: DataFrame, kind: ArtifactKind): Row =
+    docs.agg(count(lit(1)), count(col("id")) +: countDistinct(col("id")) +: kind.stats: _*).head()
+
+  /** The append audit over the prepared increment `docs`: the anti-join
+    * SILENTLY drops an appended row whose id collides with a stored one
+    * (absent from the artifact behind a fresh meta stamp) and KEEPS
+    * null-id rows (null never equals). The increment must be non-null,
+    * internally distinct (unless the kind records repeated ids in its
+    * meta instead), and account for every covered data row not already
+    * stored (`data.count() == stored + n`). The counts run only once
+    * the increment checks pass. Some(tally) when the append is safe,
+    * None when the artifact must rebuild. */
   private def auditAppend(
-      fresh: DataFrame, id: Column, data: DataFrame, stored: => Long,
-      distinct: Boolean = true, extra: Seq[Column] = Nil): Option[Row] = {
-    val audit = fresh.agg(count(lit(1)), count(id) +: countDistinct(id) +: extra: _*).head()
-    val n = audit.getLong(0)
-    if (n == audit.getLong(1) && (!distinct || n == audit.getLong(2)) &&
-        data.count() == stored + n) Some(audit)
+      docs: DataFrame, kind: ArtifactKind, data: DataFrame, stored: => Long): Option[Row] = {
+    val t = tally(docs, kind)
+    val n = t.getLong(0)
+    if (n == t.getLong(1) && (!kind.distinctIds || n == t.getLong(2)) &&
+        data.count() == stored + n) Some(t)
     else None
   }
 
-  /** The index's rows with a non-null vector — what every vector
-    * artifact packs and every exact rescore reads. */
+  /** The index's rows with a non-null vector — what every packed
+    * artifact covers and every exact rescore reads. */
   def liveVectors(
       spark: SparkSession, indexPath: String, vecCol: String, fmt: String): DataFrame =
     spark.read.format(fmt).load(indexPath).where(col(vecCol).isNotNull)
 
-  // ---- analysis (BM25 postings) ------------------------------------
-
-  val AnalysisDirName = "_graft_analysis"
+  // ---- loads: a fresh artifact's frames, or None ------------------
 
   def analysisDir(indexPath: String, textCol: String): String =
-    s"$indexPath/$AnalysisDirName/$textCol"
-
-  /** Build (or rebuild) the analysis artifacts for one text column.
-    * One corpus tokenize; postings land range-partitioned + sorted by
-    * term for query-time row-group pruning, and the meta is written
-    * last as the commit point. A rebuild starts from an empty dir,
-    * deleting the meta first: a crash mid-delete leaves no commit
-    * point, and no table an earlier layout wrote survives. */
-  def buildAnalysis(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      textCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = analysisDir(indexPath, textCol)
-    val fs = metaPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(metaPath(dir), false)
-    fs.delete(new Path(dir), true)
-    val docs = spark.read.format(fmt).load(indexPath)
-    // pinned for the build: postings, doclen and the audit are three
-    // actions over the tokenized frame — unpinned, each would re-scan
-    // and re-tokenize the corpus (at cluster scale prefer
-    // checkpointing the projected frame if it outgrows storage)
-    val toks = docs.select(
-      col(idCol).as("id"), Analyzer.tokens(col(textCol)).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("double"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      postingsOf(toks).write.mode("overwrite").parquet(s"$dir/postings")
-      // per-doc lengths, every doc: the known-id set an incremental
-      // append anti-joins against
-      toks.select(col("id"), col("dl"))
-        .write.mode("overwrite").parquet(s"$dir/doclen")
-      // the meta's corpus stats match what bm25ComponentsFromToks
-      // computes on the fly: n_docs counts EVERY doc (null text incl),
-      // avgdl = dl_sum / n_dl is avg(dl). The id-cleanliness audit
-      // rides along: the filter-context postings SEMI-JOIN rewrite is
-      // row-set-equal to the predicate path only when ids are unique
-      // and non-null (a null id never joins; a duplicated id
-      // over-matches its sibling rows) — score paths tolerate both
-      val audit = toks.agg(
-        count(lit(1)).as("n"),
-        count(col("id")).as("n_nonnull"),
-        countDistinct(col("id")).as("n_distinct"),
-        count(col("dl")).as("n_dl"),
-        sum(col("dl")).as("dl_sum")).head()
-      val idsClean = !audit.isNullAt(0) &&
-        audit.getLong(0) == audit.getLong(1) &&
-        audit.getLong(0) == audit.getLong(2)
-      writeAnalysisMeta(spark, indexPath, dir, idCol, textCol, idsClean,
-        audit.getLong(0), audit.getLong(3),
-        if (audit.isNullAt(4)) 0.0 else audit.getDouble(4))
-    } finally toks.unpersist(false)
-  }
-
-  /** (term, id, dl, tf) postings of a tokenized (id, toks, dl) frame,
-    * one row per (term, id, dl) group, range-partitioned and sorted by
-    * term: every segment, base build or append, keeps the row-group
-    * pruning a `term IN (...)` read relies on (the Lucene segment
-    * analogy). */
-  private def postingsOf(toks: DataFrame): DataFrame =
-    toks
-      .select(col("id"), col("dl"), explode(col("toks")).as("term"))
-      .groupBy(col("term"), col("id"), col("dl"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-      .repartitionByRange(col("term"))
-      .sortWithinPartitions(col("term"))
-
-  /** dl values are integer token counts, so the double sums here are
-    * EXACT below 2^53 total tokens — the merged avgdl an append
-    * produces is bit-equal to a full rebuild's avg(). */
-  private def writeAnalysisMeta(
-      spark: SparkSession, indexPath: String, dir: String,
-      idCol: String, textCol: String, idsClean: Boolean,
-      nDocs: Long, nDl: Long, dlSum: Double): Unit =
-    writeMeta(spark, indexPath, dir, "id_col" -> idCol, "text_col" -> textCol,
-      "ids_clean" -> idsClean, "n_docs" -> nDocs, "n_dl" -> nDl, "dl_sum" -> dlSum)
-
-  /** Incremental analysis append — the daily-ingest shape for the BM25
-    * artifact (an ES index analyzes only the new documents; a full
-    * rebuild per append would pay the whole-corpus tokenize ES never
-    * pays). Trust contract: index mutations flow through
-    * Connector.save (the same contract an ES index has with its API) —
-    * an out-of-band file replacement that preserves ids and row count
-    * is indistinguishable from "nothing changed" here; any mutation
-    * that changes counts or ids is caught by the append audit and
-    * rebuilt. Only docs absent from the stored doclen table tokenize;
-    * their postings/doclen rows append and the meta's corpus scalars
-    * merge EXACTLY (integer-valued doubles). Falls back to a full
-    * `buildAnalysis` when the increment cannot be proven safe: an
-    * appended id that already exists would leave its new row invisible
-    * to the postings (silently wrong scores), null ids cannot be
-    * anti-joined away on the next refresh, and a meta without the
-    * merge scalars has nothing to merge into. */
-  def refreshAnalysis(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      textCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = analysisDir(indexPath, textCol)
-    val merge = readMeta(spark, dir).flatMap { m =>
-      (m \ "id_col", analysisScalars(m)) match {
-        case (JString(idc), Some(s)) if idc == idCol => Some(s)
-        case _ => None
-      }
-    }
-    if (merge.isEmpty) return buildAnalysis(spark, indexPath, idCol, textCol, fmt)
-    val AnalysisScalars(oldClean, oldNDocs, oldNDl, oldDlSum) = merge.get
-
-    val data = spark.read.format(fmt).load(indexPath)
-    val toks = unindexed(data, idCol, spark.read.parquet(s"$dir/doclen")).select(
-      col(idCol).as("id"), Analyzer.tokens(col(textCol)).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("double"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // coverage counts against the stored n_docs; duplicate fresh ids
-      // only clear ids_clean below
-      val audit = auditAppend(toks, col("id"), data, oldNDocs, distinct = false,
-        extra = Seq(count(col("dl")), sum(col("dl")))) match {
-        case Some(a) => a
-        case None =>
-          toks.unpersist(false)
-          return buildAnalysis(spark, indexPath, idCol, textCol, fmt)
-      }
-      val nFresh = audit.getLong(0)
-      if (nFresh > 0) {
-        postingsOf(toks).write.mode("append").parquet(s"$dir/postings")
-        // doclen appends LAST: `toks` anti-joins doclen, so the write
-        // re-caches it by path, and nothing reads `toks` afterwards
-        toks.select(col("id"), col("dl")).write.mode("append").parquet(s"$dir/doclen")
-      }
-      // merged cleanliness: no cross overlap (audited), fresh batch
-      // internally distinct, old batch was clean
-      writeAnalysisMeta(spark, indexPath, dir, idCol, textCol,
-        oldClean && nFresh == audit.getLong(2),
-        oldNDocs + nFresh, oldNDl + audit.getLong(3),
-        oldDlSum + (if (audit.isNullAt(4)) 0.0 else audit.getDouble(4)))
-    } finally toks.unpersist(false)
-  }
+    ArtifactKind.Analysis.dir(indexPath, textCol)
 
   /** The analysis meta's ids_clean flag and corpus scalars (n_docs,
     * n_dl, dl_sum); None when the meta lacks any of them. */
-  private final case class AnalysisScalars(
+  private[index] final case class AnalysisScalars(
       idsClean: Boolean, nDocs: Long, nDl: Long, dlSum: Double)
 
-  private def analysisScalars(meta: JValue): Option[AnalysisScalars] =
+  private[index] def analysisScalars(meta: JValue): Option[AnalysisScalars] =
     (meta \ "ids_clean", meta \ "n_docs", meta \ "n_dl", meta \ "dl_sum") match {
       case (JBool(clean), JInt(nd), JInt(ndl), JDouble(ds)) =>
         Some(AnalysisScalars(clean, nd.toLong, ndl.toLong, ds))
@@ -535,94 +498,8 @@ object IndexArtifacts {
     }
   }
 
-  // ---- persisted near-dup dedup artifact (MinHash/LSH) -------------
-
-  val MinhashDirName = "_graft_minhash"
-
   def minhashDir(indexPath: String, textCol: String): String =
-    s"$indexPath/$MinhashDirName/$textCol"
-
-  /** Build the dedup-once artifact: per-doc shingle sets and LSH band
-    * keys persisted beside the index, so deduping every future crawl
-    * against this corpus never re-tokenizes or re-minhashes it
-    * (Dedup.minhashLshCrossIndexed). The shingle table is the exact
-    * verify's price — corpus-token-scale on disk, the same trade a
-    * Lucene index makes storing positions; the band table is 8 short
-    * strings per doc. Both land sorted for locality; the meta records
-    * (numHashes, bands) because band keys from a DIFFERENT banding
-    * would join garbage — loads param-check before trusting them. */
-  def buildMinhash(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      textCol: String,
-      numHashes: Int = 32,
-      bands: Int = 8,
-      fmt: String = "parquet"): Unit = {
-    val dir = minhashDir(indexPath, textCol)
-    val docs = spark.read.format(fmt).load(indexPath)
-    val (sh, banded) =
-      graft.dedup.Dedup.minhashArtifactFrames(docs, idCol, textCol, numHashes, bands)
-    try {
-      sh.write.mode("overwrite").parquet(s"$dir/shingles")
-      banded.repartitionByRange(col("band")).sortWithinPartitions(col("band"))
-        .write.mode("overwrite").parquet(s"$dir/bands")
-    } finally sh.unpersist(false)
-    writeMinhashMeta(spark, indexPath, dir, idCol, textCol, numHashes, bands)
-  }
-
-  /** Incremental add (the daily-ingest shape): shingle+band ONLY the
-    * docs absent from the stored artifact, append, re-stamp. Banding
-    * params come from the stored meta — an append can't change them.
-    * The append audit guards minhashLshCrossIndexed's "answer-equal
-    * to the on-the-fly screen by construction" contract. Old
-    * EMPTY-SHINGLE docs are never stored (both build paths filter
-    * size(sh)>0), so they legitimately reappear in the increment each
-    * refresh and are filtered again — the coverage identity counts
-    * them on the fresh side, consistently. */
-  def refreshMinhash(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      textCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = minhashDir(indexPath, textCol)
-    val (numHashes, bands) = readMeta(spark, dir)
-      .flatMap(m => for {
-        idc <- metaStr(m, "id_col"); nh <- metaInt(m, "num_hashes"); nb <- metaInt(m, "bands")
-      } yield {
-        require(idc == idCol,
-          s"minhash artifact was built on id '$idc', refresh asked for '$idCol'")
-        (nh, nb)
-      })
-      .getOrElse(sys.error(s"refreshMinhash: no artifact meta under $dir"))
-    val known = spark.read.parquet(s"$dir/shingles")
-    val data = spark.read.format(fmt).load(indexPath)
-    val fresh = unindexed(data, idCol, known)
-    auditAppend(fresh, col(idCol), data, known.count()) match {
-      case None => buildMinhash(spark, indexPath, idCol, textCol, numHashes, bands, fmt)
-      case Some(audit) =>
-        if (audit.getLong(0) > 0) {
-          // the Cut variant checkpoints: this method writes into the
-          // very path the anti-join reads, and a lineage-carrying frame
-          // would be recomputed (empty) by recacheByPath after the
-          // first write
-          val (sh, banded) =
-            graft.dedup.Dedup.minhashArtifactFramesCut(fresh, idCol, textCol, numHashes, bands)
-          try {
-            sh.write.mode("append").parquet(s"$dir/shingles")
-            banded.write.mode("append").parquet(s"$dir/bands")
-          } finally sh.unpersist(false)
-        }
-        writeMinhashMeta(spark, indexPath, dir, idCol, textCol, numHashes, bands)
-    }
-  }
-
-  private def writeMinhashMeta(
-      spark: SparkSession, indexPath: String, dir: String, idCol: String, textCol: String,
-      numHashes: Int, bands: Int): Unit =
-    writeMeta(spark, indexPath, dir, "id_col" -> idCol, "text_col" -> textCol,
-      "num_hashes" -> numHashes, "bands" -> bands)
+    ArtifactKind.Minhash.dir(indexPath, textCol)
 
   /** Fresh (shingles, bands) frames, or None when missing, stale, or
     * built under different (idCol, numHashes, bands). */
@@ -640,38 +517,8 @@ object IndexArtifacts {
       .map(_ => (read(spark, s"$dir/shingles"), read(spark, s"$dir/bands")))
   }
 
-  // ---- persisted vector index (IVF) --------------------------------
-
-  val VectorsDirName = "_graft_vectors"
-
   def vectorsDir(indexPath: String, vecCol: String): String =
-    s"$indexPath/$VectorsDirName/$vecCol"
-
-  /** Build the IVF vector-index artifact: persist the coarse
-    * quantizer's centroids and the per-doc inverted-list assignments.
-    * `cents` is any (cent_id, cv) frame — Ann.seedCentroids for the
-    * deterministic default, Ann.kmeansCentroids for the fitted
-    * quantizer. The assignment pass (the corpus-sized cost) runs ONCE
-    * here; queries pay only probe+rank (Ann.ivfTopKIndexed). */
-  def buildIvf(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      cents: DataFrame,
-      fmt: String = "parquet"): Unit = {
-    val dir = vectorsDir(indexPath, vecCol)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    val stored = spark.read.parquet(s"$dir/centroids")
-    val corpus = spark.read.format(fmt).load(indexPath)
-    graft.sim.Ann.assignToCentroids(corpus, idCol, vecCol, stored)
-      // cluster the lists on disk: a probe of one list reads
-      // contiguous files instead of scattering over the corpus order
-      .repartitionByRange(col("cent_id"))
-      .sortWithinPartitions(col("cent_id"))
-      .write.mode("overwrite").parquet(s"$dir/assignments")
-    writeVectorsMeta(spark, indexPath, vecCol, idCol)
-  }
+    ArtifactKind.Ivf.dir(indexPath, vecCol)
 
   /** IVF list-balance report over the persisted assignments: one row
     * per centroid list with its population, plus min/max/avg and the
@@ -705,37 +552,8 @@ object IndexArtifacts {
         .orderBy(col("cent_id"))
     }
 
-  /** Incremental add — the daily-ingest shape: route ONLY documents
-    * absent from the stored assignments to the EXISTING centroid
-    * lists, append, and re-stamp the fingerprint. The quantizer never
-    * refits, so ingest cost is proportional to the new documents, not
-    * the corpus. */
-  def refreshIvf(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = vectorsDir(indexPath, vecCol)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val known = spark.read.parquet(s"$dir/assignments")
-    val data = spark.read.format(fmt).load(indexPath)
-    val fresh = unindexed(data, idCol, known)
-    auditAppend(fresh, col(idCol), data, known.count()) match {
-      case None =>
-        // checkpoint the centroid frame first: buildIvf OVERWRITES the
-        // very path this frame's lineage reads
-        buildIvf(spark, indexPath, idCol, vecCol, graft.util.Stages.truncate(cents), fmt)
-      case Some(audit) =>
-        if (audit.getLong(0) > 0)
-          graft.sim.Ann.assignToCentroids(fresh, idCol, vecCol, cents)
-            .write.mode("append").parquet(s"$dir/assignments")
-        writeVectorsMeta(spark, indexPath, vecCol, idCol)
-    }
-  }
-
-  /** Stamp a vector-artifact dir (IVF lists, HNSW graphs) with the
-    * live-data fingerprint — the artifact's commit point. */
+  /** Stamp a vector-artifact dir (the HNSW graph) with the live-data
+    * fingerprint — the artifact's commit point. */
   def writeVectorsMeta(
       spark: SparkSession, indexPath: String, vecKey: String, idCol: String): Unit =
     writeMeta(spark, indexPath, vectorsDir(indexPath, vecKey),
@@ -759,78 +577,8 @@ object IndexArtifacts {
       read(spark, s"$dir/centroids"), read(spark, s"$dir/assignments")))
   }
 
-  // ---- persisted packed vectors (PackedCodec: int4, int8, BBQ) -----
-
   def packedDir(codec: PackedCodec, indexPath: String, vecCol: String): String =
-    s"$indexPath/${codec.dirName}/$vecCol"
-
-  /** Pack-once artifact for a codec's quantized scan: one (id,
-    * packed...) table beside the index, the storage ES builds at
-    * segment-write time. Queries read ONLY this table for the coarse
-    * pass (Ann.packedTopKIndexed); the oversampled exact rescore
-    * touches the float vectors for O(k·oversample) rows via a
-    * broadcast semi-join. */
-  def buildPacked(
-      spark: SparkSession,
-      codec: PackedCodec,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      fmt: String = "parquet"): Unit = {
-    val corpus = spark.read.format(fmt).load(indexPath)
-    // the dimension probe (BBQ only) skips empty arrays: an empty
-    // vector must not define the packed layout
-    codec.pack(corpus, idCol, vecCol, corpus.select(size(col(vecCol)).as("d"))
-        .where(col("d") > 0).limit(1).head().getInt(0))
-      .write.mode("overwrite").parquet(s"${packedDir(codec, indexPath, vecCol)}/packed")
-    writePackedMeta(spark, codec, indexPath, idCol, vecCol)
-  }
-
-  /** Incremental add: pack ONLY the docs absent from the stored table,
-    * after the shared append audit over the packable (non-null-vector)
-    * subset — pack drops null-vector rows, so counting them would fail
-    * the coverage identity on every legitimate append and silently
-    * degrade refresh to full rebuilds. A dimension-bound codec also
-    * rebuilds when the appended dimension differs from the built one
-    * (or either side has no probe-able dimension): a drift would
-    * append bit layouts inconsistent with the stored rows. */
-  def refreshPacked(
-      spark: SparkSession,
-      codec: PackedCodec,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = packedDir(codec, indexPath, vecCol)
-    val known = spark.read.parquet(s"$dir/packed")
-    val data = liveVectors(spark, indexPath, vecCol, fmt)
-    val fresh = unindexed(data, idCol, known)
-    def rebuild(): Unit = buildPacked(spark, codec, indexPath, idCol, vecCol, fmt)
-    auditAppend(fresh, col(idCol), data, known.count()) match {
-      case None => rebuild()
-      case Some(audit) =>
-        if (audit.getLong(0) > 0) {
-          def dims(df: DataFrame): DataFrame =
-            df.select(size(col(vecCol)).as("d")).where(col("d") > 0)
-          lazy val builtDim = dims(data.join(known.select(col("id").as("__known_id")),
-            col(idCol) === col("__known_id"), "semi"))
-            .limit(1).collect().headOption.map(_.getInt(0))
-          if (codec.dimBound) {
-            val freshDims = dims(fresh).distinct().limit(2).collect().map(_.getInt(0))
-            if (freshDims.length != 1 || !builtDim.contains(freshDims.head)) return rebuild()
-          }
-          codec.pack(fresh, idCol, vecCol, builtDim.get)
-            .write.mode("append").parquet(s"$dir/packed")
-        }
-        writePackedMeta(spark, codec, indexPath, idCol, vecCol)
-    }
-  }
-
-  private def writePackedMeta(
-      spark: SparkSession, codec: PackedCodec, indexPath: String,
-      idCol: String, vecCol: String): Unit =
-    writeMeta(spark, indexPath, packedDir(codec, indexPath, vecCol),
-      "id_col" -> idCol, "vec_col" -> vecCol)
+    ArtifactKind.Packed(codec).dir(indexPath, vecCol)
 
   /** Fresh packed frame (the codec's `pack` schema) or None. */
   def loadPacked(
@@ -843,98 +591,12 @@ object IndexArtifacts {
     freshMeta(spark, indexPath, dir, expectIdCol).map(_ => read(spark, s"$dir/packed"))
   }
 
-  // ---- persisted product-quantization codes (PQ) -------------------
-
-  val PqDirName = "_graft_pq"
-
   def pqDir(indexPath: String, vecCol: String): String =
-    s"$indexPath/$PqDirName/$vecCol"
+    ArtifactKind.Pq.dir(indexPath, vecCol)
 
-  /** Pack-once PQ artifact: m code bytes per doc (the 128x storage
-    * point) plus the FROZEN codebook — exactly an ES segment's
-    * quantizer: trained/sampled at write time, appended rows encode
-    * under it unchanged. The coarse ADC pass reads only the codes
-    * table; the per-query LUT derives from the stored codebook. */
-  def buildPq(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      m: Int,
-      k: Int,
-      fmt: String = "parquet",
-      fit: String = "sample",
-      fitSampleN: Int = 65536,
-      fitIters: Int = 5): Unit = {
-    val dir = pqDir(indexPath, vecCol)
-    val corpus = spark.read.format(fmt).load(indexPath)
-    // `sample` = the deterministic first-k-by-id codebook — the same
-    // rule the on-the-fly pqTopK uses, so artifact and per-query
-    // paths are answer-equal while the first-k id set is unchanged
-    // (and the DuckDB oracle can rebuild it). `lloyd` = k-means-
-    // refined codebooks over the id-ordered sample (pqFitCodebooks) —
-    // the production recall point; queries are unchanged (the LUT
-    // derives from whatever codebook is STORED), only answer-equality
-    // with the on-the-fly sample form is traded away.
-    // `lloyd-dist` = the distributed unbiased fit (hash-ordered random
-    // sample, one Spark job per iteration — pqFitCodebooksDist): the
-    // production path at corpus scale, where the driver-side sample
-    // both caps and biases the codebook.
-    val cb = fit match {
-      case "sample" => graft.sim.Ann.pqSampleCodebooks(corpus, idCol, vecCol, m, k)
-      case "lloyd" => graft.sim.Ann.pqFitCodebooks(corpus, idCol, vecCol, m, k)
-      case "lloyd-dist" => graft.sim.Ann.pqFitCodebooksDist(
-        corpus, idCol, vecCol, m, k, iters = fitIters, sampleN = fitSampleN)
-      case other => throw new IllegalArgumentException(
-        s"unknown graft.index.pq.fit: $other (sample | lloyd | lloyd-dist)")
-    }
-    import spark.implicits._
-    Seq(cb.toSeq).toDF("cb").write.mode("overwrite").parquet(s"$dir/codebook")
-    graft.sim.Ann.pqEncodeFrame(corpus, idCol, vecCol, cb, m, k)
-      .write.mode("overwrite").parquet(s"$dir/codes")
-    writeMeta(spark, indexPath, dir, "id_col" -> idCol, "vec_col" -> vecCol,
-      "m" -> m, "k" -> k, "fit" -> fit, "fit_sample_n" -> fitSampleN, "fit_iters" -> fitIters)
-  }
-
-  /** Incremental add under the FROZEN codebook, with the shared append
-    * audit on the packable (non-null-vector) subset. A rebuild re-fits
-    * the SAME way the artifact was built, with the recorded fit
-    * hyperparams — a lloyd artifact silently rebuilt as sample would
-    * degrade recall behind a fresh meta stamp. */
-  def refreshPq(
-      spark: SparkSession,
-      indexPath: String,
-      idCol: String,
-      vecCol: String,
-      fmt: String = "parquet"): Unit = {
-    val dir = pqDir(indexPath, vecCol)
-    val (meta, (m, k), cb) = readMeta(spark, dir)
-      .flatMap(meta => pqCodebook(spark, dir, meta).map { case (mk, cb) => (meta, mk, cb) })
-      .getOrElse(sys.error(s"refreshPq without a built artifact at $dir"))
-    val fit = metaStr(meta, "fit").getOrElse("sample")
-    val fitSampleN = metaInt(meta, "fit_sample_n").getOrElse(65536)
-    val fitIters = metaInt(meta, "fit_iters").getOrElse(5)
-    val known = spark.read.parquet(s"$dir/codes")
-    val data = liveVectors(spark, indexPath, vecCol, fmt)
-    val fresh = unindexed(data, idCol, known)
-    auditAppend(fresh, col(idCol), data, known.count()) match {
-      case None =>
-        buildPq(spark, indexPath, idCol, vecCol, m, k, fmt, fit, fitSampleN, fitIters)
-      case Some(audit) =>
-        if (audit.getLong(0) > 0)
-          graft.sim.Ann.pqEncodeFrame(fresh, idCol, vecCol, cb, m, k)
-            .write.mode("append").parquet(s"$dir/codes")
-        writeMeta(spark, indexPath, dir, "id_col" -> idCol, "vec_col" -> vecCol,
-          "m" -> m, "k" -> k, "fit" -> fit, "fit_sample_n" -> fitSampleN,
-          "fit_iters" -> fitIters)
-    }
-  }
-
-  /** ((m, k), flat codebook) of a PQ artifact whose meta is `meta`. */
-  private def pqCodebook(
-      spark: SparkSession, dir: String, meta: JValue): Option[((Int, Int), Array[Double])] =
-    for (m <- metaInt(meta, "m"); k <- metaInt(meta, "k")) yield
-      ((m, k), read(spark, s"$dir/codebook").head().getSeq[Double](0).toArray)
+  /** The flat codebook a PQ artifact stores. */
+  private[index] def storedCodebook(spark: SparkSession, dir: String): Array[Double] =
+    read(spark, s"$dir/codebook").head().getSeq[Double](0).toArray
 
   /** Fresh ((m, k), codebook, codes frame) or None. */
   def loadPq(
@@ -944,7 +606,7 @@ object IndexArtifacts {
       expectIdCol: Option[String] = None): Option[((Int, Int), Array[Double], DataFrame)] = {
     val dir = pqDir(indexPath, vecCol)
     freshMeta(spark, indexPath, dir, expectIdCol)
-      .flatMap(meta => pqCodebook(spark, dir, meta))
-      .map { case (mk, cb) => (mk, cb, read(spark, s"$dir/codes")) }
+      .flatMap(meta => for (m <- metaInt(meta, "m"); k <- metaInt(meta, "k")) yield
+        ((m, k), storedCodebook(spark, dir), read(spark, s"$dir/codes")))
   }
 }

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * for `int8_hnsw` / `int4_hnsw` / BBQ, and the lossy score its coarse
   * knn pass runs over that storage. The codec table below is the ONE
   * place that knows which codecs exist; every layer is driven by it:
-  *  - write path: `Connector.save` builds/refreshes one artifact per
-  *    `graft.index.<name>` option (`IndexArtifacts.buildPacked` /
-  *    `refreshPacked`), stored under `<index>/_graft_<name>/<vecCol>/`;
+  *  - write path: `Connector.save` maintains one artifact per
+  *    `graft.index.<name>` option (`ArtifactKind.Packed`, through
+  *    `IndexArtifacts.maintain`), stored under `<index>/_graft_<name>/<vecCol>/`;
   *  - query path: `Ann.packedTopK` packs in-plan, `Ann.packedTopKIndexed`
   *    reads the persisted frame (`IndexArtifacts.loadPacked`) — both
   *    rank the same coarse window and rescore it exactly, so the two
@@ -23,8 +23,6 @@ sealed abstract class PackedCodec(
     val name: String,
     /** Output column carrying the coarse score beside the exact cosine. */
     val scoreName: String) {
-
-  def dirName: String = s"_graft_$name"
 
   /** True when the packed layout depends on the corpus dimension, so
     * an append must match the dimension the artifact was built with. */

@@ -213,7 +213,7 @@ object Ann {
     * rows instead of the N x |centroids| cross frame a row_number
     * window would hash-shuffle; the corpus-side pass is the 100 TB
     * cost, which is exactly why the write path persists its output
-    * (graft.index.IndexArtifacts.buildIvf) instead of re-running it
+    * (`graft.index.ArtifactKind.Ivf`) instead of re-running it
     * per query. */
   def assignToCentroids(
       corpus: DataFrame,

@@ -394,7 +394,7 @@ object Connector {
     * semantics at per-slice cost. A `{field}` routing with thousands
     * of targets (daily x tenant) therefore costs one batch scan plus
     * one slice-sized read per target — not O(targets) re-reads of a
-    * disk-spilled cache like the r8 filtered-loop shape. */
+    * disk-spilled cache, which a loop of filters over it would pay. */
   def saveDynamic(
       batch: DataFrame, root: String, pattern: String,
       cfg: Map[String, String] = Map.empty): Unit = {
@@ -647,133 +647,31 @@ object Connector {
       case other =>
         throw new IllegalArgumentException(s"unknown graft.write.operation: $other")
     }
-    // analyze-once index artifacts (`graft.index.analysis` = text
-    // column): build AFTER the data landed/swapped, so the recorded
-    // fingerprint describes the live files queries will read. The ES
-    // analog: the server analyzes at index time so queries never
-    // re-tokenize; here the postings side table and the meta's corpus
-    // stats play the Lucene index's role (graft.index.IndexArtifacts).
-    cfg.get("graft.index.analysis").foreach { spec =>
-      val idCol = cfg.getOrElse("graft.mapping.id",
-        throw new IllegalArgumentException(
-          "graft.index.analysis needs graft.mapping.id (the posting doc id)"))
-      // comma list = several analyzed fields, one artifact dir each
-      // (ES analyzes every mapped text field at index time). APPEND
-      // analyzes only the new documents (refreshAnalysis appends their
-      // postings and merges the meta's corpus stats, falling back to a
-      // full rebuild when the increment isn't provably safe) — the same
-      // incremental indexing an ES server does per bulk request.
-      spec.split(",").map(_.trim).filter(_.nonEmpty).foreach { textCol =>
-        if (op == "append")
-          graft.index.IndexArtifacts.refreshAnalysis(spark, path, idCol, textCol, fmt)
-        else
-          graft.index.IndexArtifacts.buildAnalysis(spark, path, idCol, textCol, fmt)
+    // index artifacts (`graft.index.<kind>` = column, a comma list for
+    // several, one artifact dir each — ES analyzes every mapped field
+    // at index time): maintained AFTER the data landed or swapped, so
+    // the recorded fingerprint describes the live files queries read.
+    // An APPEND encodes only the new documents over a meta it can read
+    // and rebuilds otherwise (IndexArtifacts.maintain) — the
+    // incremental indexing an ES server does per bulk request. Kind
+    // parameters are `graft.index.<kind>.<key>` options:
+    //   minhash.hashes = 32, minhash.bands = 8;
+    //   vectors.centroids = 16, vectors.fit = seed | kmeans | hnsw;
+    //   pq.m = 4, pq.k = 16, pq.fit = sample | lloyd | lloyd-dist,
+    //   pq.fit.sample_n = 65536, pq.fit.iters = 5.
+    graft.index.ArtifactKind.all.foreach { kind =>
+      cfg.get(kind.option).foreach { spec =>
+        val idCol = cfg.getOrElse("graft.mapping.id", throw new IllegalArgumentException(
+          s"${kind.option} needs graft.mapping.id (the artifact doc id)"))
+        spec.split(",").map(_.trim).filter(_.nonEmpty).foreach { c =>
+          // graph inserts are order-dependent: an HNSW graph rebuilds
+          // on every write (one corpus pass, the cost a segment merge
+          // pays in ES)
+          if (kind == graft.index.ArtifactKind.Ivf && cfg.get(s"${kind.option}.fit").contains("hnsw"))
+            graft.sim.Ann.buildHnsw(spark, path, idCol, c, fmt = fmt)
+          else graft.index.IndexArtifacts.maintain(spark, kind, path, idCol, c, op == "append", cfg, fmt)
+        }
       }
-    }
-    // persisted near-dup dedup artifact (`graft.index.minhash` = text
-    // column): shingle sets + LSH band keys computed once at write
-    // time, so every future crawl dedups against this corpus without
-    // re-tokenizing it (Dedup.minhashLshCrossIndexed). APPEND routes
-    // only the new docs through shingle+signature compute. Options:
-    //   graft.index.minhash.hashes = n (default 32)
-    //   graft.index.minhash.bands  = b (default 8)
-    cfg.get("graft.index.minhash").foreach { textCol =>
-      val idCol = cfg.getOrElse("graft.mapping.id",
-        throw new IllegalArgumentException(
-          "graft.index.minhash needs graft.mapping.id (the shingle doc id)"))
-      val nh = cfg.getOrElse("graft.index.minhash.hashes", "32").toInt
-      val nb = cfg.getOrElse("graft.index.minhash.bands", "8").toInt
-      val shDir = new Path(
-        graft.index.IndexArtifacts.minhashDir(path, textCol) + "/shingles")
-      if (op == "append" && fs.exists(shDir))
-        graft.index.IndexArtifacts.refreshMinhash(spark, path, idCol, textCol, fmt)
-      else
-        graft.index.IndexArtifacts.buildMinhash(spark, path, idCol, textCol, nh, nb, fmt)
-    }
-    // persisted IVF vector index (`graft.index.vectors` = vector
-    // column): the quantizer fits/seeds ONCE and the corpus-sized
-    // assignment pass runs at write time, so queries pay probe+rank
-    // only. An APPEND with existing centroids routes just the new
-    // docs to the existing lists (incremental, the daily-ingest
-    // shape); everything else rebuilds. Options:
-    //   graft.index.vectors.centroids = n (default 16)
-    //   graft.index.vectors.fit = seed | kmeans (default seed)
-    cfg.get("graft.index.vectors").foreach { vecCol =>
-      val idCol = cfg.getOrElse("graft.mapping.id",
-        throw new IllegalArgumentException(
-          "graft.index.vectors needs graft.mapping.id (the assignment doc id)"))
-      val n = cfg.getOrElse("graft.index.vectors.centroids", "16").toInt
-      val fit = cfg.getOrElse("graft.index.vectors.fit", "seed")
-      val centsDir = new Path(
-        graft.index.IndexArtifacts.vectorsDir(path, vecCol) + "/centroids")
-      fit match {
-        case "hnsw" =>
-          // graph inserts are order-dependent; an append rebuilds the
-          // artifact (per-partition build = one corpus pass, the same
-          // cost a segment merge pays in ES)
-          graft.sim.Ann.buildHnsw(spark, path, idCol, vecCol, fmt = fmt)
-        case _ if op == "append" && fs.exists(centsDir) =>
-          graft.index.IndexArtifacts.refreshIvf(spark, path, idCol, vecCol, fmt)
-        case "seed" | "kmeans" =>
-          val corpus = spark.read.format(fmt).load(path)
-          val cents =
-            if (fit == "seed") graft.sim.Ann.seedCentroids(corpus, idCol, vecCol, n)
-            else graft.sim.Ann.kmeansCentroids(corpus, idCol, vecCol, n)
-          graft.index.IndexArtifacts.buildIvf(spark, path, idCol, vecCol, cents, fmt)
-        case other => throw new IllegalArgumentException(
-          s"unknown graft.index.vectors.fit: $other")
-      }
-    }
-    // persisted packed vectors (`graft.index.<codec>` = vector column,
-    // one option per PackedCodec: int4, int8, bbq): codes packed ONCE
-    // at write time — the ES int4_hnsw / int8_hnsw / BBQ segment
-    // storage — so every future quantized coarse scan reads the packed
-    // table instead of the float column. APPEND packs only the new
-    // docs (refreshPacked's audited path).
-    graft.index.PackedCodec.all.foreach { codec =>
-      val opt = s"graft.index.${codec.name}"
-      cfg.get(opt).foreach { vecCol =>
-        val idCol = cfg.getOrElse("graft.mapping.id",
-          throw new IllegalArgumentException(
-            s"$opt needs graft.mapping.id (the packed doc id)"))
-        val packedDir = new Path(
-          graft.index.IndexArtifacts.packedDir(codec, path, vecCol) + "/packed")
-        if (op == "append" && fs.exists(packedDir))
-          graft.index.IndexArtifacts.refreshPacked(spark, codec, path, idCol, vecCol, fmt)
-        else
-          graft.index.IndexArtifacts.buildPacked(spark, codec, path, idCol, vecCol, fmt)
-      }
-    }
-    // persisted PQ codes (`graft.index.pq` = vector column, optional
-    // `.m`/`.k`): m code bytes per doc packed ONCE at write time under
-    // a codebook FROZEN at build — the ES-segment-quantizer shape.
-    // APPEND encodes only the new docs under the stored codebook
-    // (refreshPq's audited path).
-    cfg.get("graft.index.pq").foreach { vecCol =>
-      val idCol = cfg.getOrElse("graft.mapping.id",
-        throw new IllegalArgumentException(
-          "graft.index.pq needs graft.mapping.id (the coded doc id)"))
-      val m = cfg.getOrElse("graft.index.pq.m", "4").toInt
-      val k = cfg.getOrElse("graft.index.pq.k", "16").toInt
-      // sample = oracle-replayable deterministic codebooks (default);
-      // lloyd = k-means-refined over the driver-side sample;
-      // lloyd-dist = distributed unbiased Lloyd's (hash-ordered random
-      // sample, one job per iteration — the production fit at corpus
-      // scale). Appends and audit-triggered rebuilds keep the recorded
-      // fit either way.
-      val pqFit = cfg.getOrElse("graft.index.pq.fit", "sample")
-      // lloyd-dist hyperparams (`.fit.sample_n` / `.fit.iters`):
-      // recorded in the artifact meta so audits/rebuilds re-fit the
-      // same model the build trained
-      val pqFitSampleN = cfg.getOrElse("graft.index.pq.fit.sample_n", "65536").toInt
-      val pqFitIters = cfg.getOrElse("graft.index.pq.fit.iters", "5").toInt
-      val codesDir = new Path(
-        graft.index.IndexArtifacts.pqDir(path, vecCol) + "/codes")
-      if (op == "append" && fs.exists(codesDir))
-        graft.index.IndexArtifacts.refreshPq(spark, path, idCol, vecCol, fmt)
-      else
-        graft.index.IndexArtifacts.buildPq(
-          spark, path, idCol, vecCol, m, k, fmt, pqFit, pqFitSampleN, pqFitIters)
     }
   }
 

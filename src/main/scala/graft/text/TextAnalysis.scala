@@ -22,10 +22,6 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "de", "et", "les", "des", "en", "un", "du", "est"),
     "zh" -> Seq("de", "shi", "le", "bu", "wo", "zai", "you", "he", "ren", "ta"))
 
-  private def hitRatio(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => array_contains(lit(words.toArray), t))).cast("double") /
-      greatest(size(toks), lit(1)).cast("double")
-
   /** Language ID: argmax over per-language stopword-hit ratios, ties
     * broken by language code asc (deterministic). Output columns:
     * pred_lang, lang_score.

@@ -1,6 +1,6 @@
 package graft
 
-import graft.index.{IndexArtifacts, PackedCodec}
+import graft.index.{ArtifactKind, IndexArtifacts, PackedCodec}
 import org.apache.spark.sql.functions._
 
 /** On-disk compatibility of the artifact commit point: every artifact
@@ -100,7 +100,7 @@ class ArtifactMetaSpec extends SparkSpec with SpecTempRoot {
       corpus.where(col("id") === 1L).withColumn("text", lit("collided"))
         .write.mode("append").parquet(out)
       spark.catalog.refreshByPath(out)
-      IndexArtifacts.refreshPacked(spark, codec, out, "id", "vec")
+      IndexArtifacts.maintain(spark, ArtifactKind.Packed(codec), out, "id", "vec", append = true)
       val packed = IndexArtifacts.loadPacked(spark, codec, out, "vec", Some("id"))
       assert(packed.isDefined, codec.name)
       assert(packed.get.count() == 7, s"${codec.name}: rebuild must cover every data row")
@@ -128,8 +128,25 @@ class ArtifactMetaSpec extends SparkSpec with SpecTempRoot {
       .bm25ScoresIndexed(spark, out, "id", "text", "alpha theta omicron pi")
       .orderBy(col("id")).collect().toSeq
     assert(scores(legacy) == scores(fresh) && scores(legacy).size == 3)
-    IndexArtifacts.buildAnalysis(spark, legacy, "id", "text")
+    IndexArtifacts.maintain(spark, ArtifactKind.Analysis, legacy, "id", "text", append = false)
     assert(listing == Set("postings", "doclen", "_graft_meta.json"))
     assert(scores(legacy) == scores(fresh))
+  }
+
+  test("an append over an artifact whose build died before its meta rebuilds it") {
+    val out = s"$root/no_meta"
+    val opts = Seq("graft.index.minhash" -> "text", "graft.index.pq" -> "vec",
+      "graft.index.pq.m" -> "2", "graft.index.pq.k" -> "4")
+    save(out, opts: _*)
+    // a build that died between its tables and its meta: the tables
+    // (shingles/, codes/) stand, no commit point
+    val dirs = Seq(IndexArtifacts.minhashDir(out, "text"), IndexArtifacts.pqDir(out, "vec"))
+    dirs.foreach(d => new java.io.File(s"$d/_graft_meta.json").delete())
+    graft.sources.Connector.save(
+      corpus.where(col("id") === 6L).withColumn("id", lit(7L)), out,
+      Map("graft.write.operation" -> "append", "graft.mapping.id" -> "id") ++ opts)
+    assert(IndexArtifacts.loadMinhash(spark, out, "text", Some("id"))
+      .exists(_._1.where(col("id") === 7L).count() == 1))
+    assert(IndexArtifacts.loadPq(spark, out, "vec", Some("id")).exists(_._3.count() == 7))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import graft.index.IndexArtifacts
+import graft.index.{ArtifactKind, IndexArtifacts}
 import graft.search.Search
 import graft.sources.Connector
 import graft.sources.Connector.implicits._
@@ -97,13 +97,13 @@ class Bm25RegimeSpec extends SparkSpec with SpecTempRoot {
       cases += 1
       val idx = specRoot.resolve(s"idx$cases").toString
       frame(base).write.parquet(idx)
-      IndexArtifacts.buildAnalysis(spark, idx, "id", "text")
+      IndexArtifacts.maintain(spark, ArtifactKind.Analysis, idx, "id", "text", append = false)
       val doclen = s"${IndexArtifacts.analysisDir(idx, "text")}/doclen"
       val atBuild = regimesAgree(idx, qs, "build")
       val atAppends = batches.zipWithIndex.map { case (b, i) =>
         val before = listing(doclen)
         frame(b).write.mode("append").parquet(idx)
-        IndexArtifacts.refreshAnalysis(spark, idx, "id", "text")
+        IndexArtifacts.maintain(spark, ArtifactKind.Analysis, idx, "id", "text", append = true)
         // a merge appends to doclen; a rebuild starts it over
         if (before.subsetOf(listing(doclen))) merged += 1 else rebuilt += 1
         regimesAgree(idx, qs, s"append $i of $b")

@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import graft.dedup.Dedup
-import graft.index.IndexArtifacts
+import graft.index.{ArtifactKind, IndexArtifacts}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
@@ -33,7 +33,7 @@ class DedupRegimeSpec extends SparkSpec with SpecTempRoot {
   private def index(name: String, ref: Seq[Doc], idType: DataType): String = {
     val dir = specRoot.resolve(name).toString
     frame(ref, idType).write.parquet(dir)
-    IndexArtifacts.buildMinhash(spark, dir, "id", "text")
+    IndexArtifacts.maintain(spark, ArtifactKind.Minhash, dir, "id", "text", append = false)
     dir
   }
 

@@ -199,65 +199,51 @@ class DedupSpec extends SparkSpec with SpecTempRoot {
     assert(rc.forall(_._2 == 1L) && rc.length == 8)
   }
 
-  test("dedupClusters: local / lss / minlabel regimes agree (incl. diameter-1000 chain, string ids)") {
-    def withAlgo[T](algo: String)(f: => T): T = {
-      spark.conf.set("graft.dedup.ccAlgorithm", algo)
-      try f finally spark.conf.unset("graft.dedup.ccAlgorithm")
-    }
+  test("dedupClusters: local / minlabel regimes agree (incl. diameter-1000 chain, string ids)") {
+    // the local-regime pair limit forces each regime: every graph here
+    // is below Long.MaxValue pairs and above -1
+    def local(g: org.apache.spark.sql.DataFrame) = Dedup.dedupClustersCapped(g, 20, Long.MaxValue)
+    def minlabel(g: org.apache.spark.sql.DataFrame) = Dedup.dedupClustersCapped(g, 40, -1L)
     // mixed topology: two cliques bridged by a chain + an isolated pair
     val mixed = (Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 7L), (7L, 9L),
       (9L, 20L), (20L, 21L), (21L, 22L), (20L, 22L), (50L, 51L))).map { case (a, b) => (a, b, 0.9) }
       .toDF("id1", "id2", "jaccard")
     // diameter-1000 chain: the shape minlabel needs O(log d) rounds
-    // for and lss was added for — both must return the exact labeling
+    // for — it must return the exact labeling
     val chain = (1L to 1001L).sliding(2).map(s => (s.head, s.last, 0.9)).toSeq
       .toDF("id1", "id2", "jaccard")
     for (g <- Seq(mixed, chain)) {
-      val local = withAlgo("local") { Dedup.dedupClusters(g).as[(Long, Long)].collect().toMap }
-      val lss = withAlgo("lss") { Dedup.dedupClusters(g, maxIters = 40).as[(Long, Long)].collect().toMap }
-      val ml = withAlgo("minlabel") { Dedup.dedupClusters(g, maxIters = 40).as[(Long, Long)].collect().toMap }
-      assert(local == lss && local == ml)
-      assert(local.values.toSet.forall(c => local(c) == c)) // labels are component minima
+      val lc = local(g).as[(Long, Long)].collect().toMap
+      val ml = minlabel(g).as[(Long, Long)].collect().toMap
+      assert(lc == ml)
+      assert(lc.values.toSet.forall(c => lc(c) == c)) // labels are component minima
     }
     // string ids: the local comparator must mean what SQL min() means
     val sids = Seq(("b", "c", 0.9), ("a", "b", 0.9), ("x", "y", 0.9)).toDF("id1", "id2", "jaccard")
-    val ls = withAlgo("local") { Dedup.dedupClusters(sids).as[(String, String)].collect().toMap }
-    val ds = withAlgo("lss") { Dedup.dedupClusters(sids).as[(String, String)].collect().toMap }
+    val ls = local(sids).as[(String, String)].collect().toMap
+    val ds = minlabel(sids).as[(String, String)].collect().toMap
     assert(ls == ds && ls == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
   }
 
   test("dedupClusters: regime switch is counted — local plan below the edge limit, distributed above") {
     val pairs = Seq((1L, 2L, 0.9), (2L, 3L, 0.9)).toDF("id1", "id2", "jaccard")
-    // below the (default 4M) limit: the labeling solves on the driver;
-    // the returned plan reads a parallelized result, no Join in sight
+    // below the (4M) limit: the labeling solves on the driver; the
+    // returned plan reads a parallelized result, no Join in sight
     val below = Dedup.dedupClusters(pairs)
     // the driver-solved labeling reads back as ONE parallelized frame:
     // a single scan under the presentation sort, no aggregation
     val belowPlan = below.queryExecution.executedPlan.toString
     assert(belowPlan.contains("Scan ExistingRDD") && !belowPlan.contains("HashAggregate")
       && !belowPlan.contains("Union"), s"local regime plan drifted:\n$belowPlan")
-    // forcing the limit to 0 pushes the same input onto the distributed
-    // default (minlabel): the returned plan reads the final label
-    // checkpoint (the iteration's joins ran eagerly behind the lineage
-    // truncation); result stays identical. The lss regime's plan is
-    // the star-forest union (children + deduped roots).
-    spark.conf.set("graft.dedup.ccLocalEdgeLimit", "0")
-    try {
-      val above = Dedup.dedupClusters(pairs)
-      val abovePlan = above.queryExecution.executedPlan.toString
-      assert(abovePlan.contains("Scan ExistingRDD") && !abovePlan.contains("Union"),
-        s"minlabel regime plan drifted:\n$abovePlan")
-      assert(below.as[(Long, Long)].collect().toMap == above.as[(Long, Long)].collect().toMap)
-      spark.conf.set("graft.dedup.ccAlgorithm", "lss")
-      val lss = Dedup.dedupClusters(pairs)
-      val lssPlan = lss.queryExecution.executedPlan.toString
-      assert(lssPlan.contains("Union") && lssPlan.contains("HashAggregate"),
-        s"lss regime plan drifted:\n$lssPlan")
-      assert(below.as[(Long, Long)].collect().toMap == lss.as[(Long, Long)].collect().toMap)
-    } finally {
-      spark.conf.unset("graft.dedup.ccLocalEdgeLimit")
-      spark.conf.unset("graft.dedup.ccAlgorithm")
-    }
+    // a limit of 0 pushes the same input onto the distributed regime
+    // (minlabel): the returned plan reads the final label checkpoint
+    // (the iteration's joins ran eagerly behind the lineage
+    // truncation); result stays identical
+    val above = Dedup.dedupClustersCapped(pairs, 20, 0L)
+    val abovePlan = above.queryExecution.executedPlan.toString
+    assert(abovePlan.contains("Scan ExistingRDD") && !abovePlan.contains("Union"),
+      s"minlabel regime plan drifted:\n$abovePlan")
+    assert(below.as[(Long, Long)].collect().toMap == above.as[(Long, Long)].collect().toMap)
   }
 
   test("simhash: identical docs at hamming 0; pairs honor threshold") {
@@ -448,15 +434,11 @@ class DedupSpec extends SparkSpec with SpecTempRoot {
     // the limit-0 regime to trip (an sf0.001 corpus with no exact dups
     // has 0 drops, and 0 <= limit broadcasts in every regime)
     val docs = (1L to 50L).map(i => (i, s"text-${i % 10}")).toDF("doc_id", "text")
-    def planOf(limit: String): String = {
-      spark.conf.set("graft.dedup.broadcastDropLimit", limit)
-      try Dedup.exactDedupKeep(docs, "doc_id", "text")
-        .queryExecution.executedPlan.toString
-      finally spark.conf.unset("graft.dedup.broadcastDropLimit")
-    }
+    def keep(limit: Long) = Dedup.keepFirstByKeyCapped(docs, "doc_id", md5(col("text")), limit)
+    def planOf(limit: Long): String = keep(limit).queryExecution.executedPlan.toString
     // below-threshold regime: the hint is present — drop ids broadcast,
     // the corpus side never shuffles for the join
-    val below = planOf(Dedup.DefaultBroadcastDropLimit.toString)
+    val below = planOf(Dedup.BroadcastDropLimit)
     assert(below.contains("BroadcastHashJoin") && below.contains("LeftAnti"),
       below.take(2000))
     // above-threshold regime (limit forced to 0): the hint is ABSENT —
@@ -467,16 +449,12 @@ class DedupSpec extends SparkSpec with SpecTempRoot {
     // mask the hint's absence — at the scale this regime exists for,
     // those stats are past any broadcast budget).
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val above = try planOf("0")
+    val above = try planOf(0L)
       finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert(!above.contains("BroadcastHashJoin"), above.take(2000))
     assert(above.contains("LeftAnti"), above.take(2000))
     // both regimes keep the same answer
-    spark.conf.set("graft.dedup.broadcastDropLimit", "0")
-    val shuffled =
-      try Dedup.exactDedupKeep(docs, "doc_id", "text")
-        .select($"doc_id".as[Long]).collect().toSet
-      finally spark.conf.unset("graft.dedup.broadcastDropLimit")
+    val shuffled = keep(0L).select($"doc_id".as[Long]).collect().toSet
     val bcast = Dedup.exactDedupKeep(docs, "doc_id", "text")
       .select($"doc_id".as[Long]).collect().toSet
     assert(shuffled == bcast && bcast.nonEmpty)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.index.{IndexArtifacts, PackedCodec}
+import graft.index.{ArtifactKind, IndexArtifacts, PackedCodec}
 import graft.search.Search
 import org.apache.spark.sql.functions._
 
@@ -301,7 +301,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       (scalars, df)
     }
     val merged = state()
-    IndexArtifacts.buildAnalysis(spark, out, "doc_id", "text")
+    IndexArtifacts.maintain(spark, ArtifactKind.Analysis, out, "doc_id", "text", append = false)
     assert(state() == merged)
     assert(merged._1.forall(_._2 != org.json4s.JNothing), merged._1)
 
@@ -390,19 +390,29 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     assert(IndexArtifacts.loadMinhash(spark, out, "text").isEmpty)
   }
 
+  /** A one-file source dir whose content (and so fingerprint) is `v`. */
+  private def source(name: String, v: String): String = {
+    val d = new java.io.File(s"$root/$name")
+    d.mkdirs()
+    new java.io.FileWriter(new java.io.File(d, "part")).append(v).close()
+    d.getPath
+  }
+
   test("ensureArtifact: build-once reuse, atomic visibility, stale-generation sweep (r14)") {
     org.apache.spark.sql.SparkSession.setActiveSession(spark)
     spark.conf.set("graft.artifacts.root", root)
     try {
       val kind = s"spectest${System.nanoTime()}"
-      val user = System.getProperty("user.name")
+      val src = source(s"src_$kind", "v1")
+      val prefix = IndexArtifacts.artifactPrefix(kind, src)
+      val fp = IndexArtifacts.dataFingerprint(spark, src).take(12)
       // a stale sibling from an "earlier testdata generation"
-      val stale = new java.io.File(s"$root/graft_${kind}_${user}_oldfp")
+      val stale = new java.io.File(s"$root/${prefix}oldfp")
       stale.mkdirs()
       new java.io.FileWriter(new java.io.File(stale, "junk")).append("x").close()
 
       var builds = 0
-      def ensure() = IndexArtifacts.ensureArtifact(kind, "fp12345678")(
+      def ensure() = IndexArtifacts.ensureArtifact(kind, src)(
         p => new java.io.File(p, "_done").exists())(
         stage => {
           builds += 1
@@ -419,10 +429,30 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       assert(ensure() == dir1 && builds == 1)
       // no staging leftovers
       val leftovers = new java.io.File(root).listFiles()
-        .filter(_.getName.contains(s"graft_${kind}_${user}_fp12345678_stage"))
+        .filter(_.getName.contains(s"$prefix${fp}_stage"))
       assert(leftovers.isEmpty, leftovers.mkString(","))
-      IndexArtifacts.ensureArtifact(kind, "ignored")(_ => true)(_ => ()) // cleanup no-op
+      IndexArtifacts.ensureArtifact(kind, src)(_ => true)(_ => ()) // cleanup no-op
       new java.io.File(dir1).listFiles().foreach(_.delete()); new java.io.File(dir1).delete()
+    } finally spark.conf.unset("graft.artifacts.root")
+  }
+
+  test("ensureArtifact: two sources of one kind keep their artifacts, each built once") {
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    spark.conf.set("graft.artifacts.root", root)
+    try {
+      val kind = s"spectwo${System.nanoTime()}"
+      // two scales of one testdata table: same kind, other sources
+      val (a, b) = (source(s"a_$kind", "small"), source(s"b_$kind", "large"))
+      var builds = 0
+      def ensure(src: String) = IndexArtifacts.ensureArtifact(kind, src)(
+        p => new java.io.File(p, "_done").exists())(stage => {
+          builds += 1
+          new java.io.File(stage).mkdirs()
+          new java.io.FileWriter(new java.io.File(stage, "_done")).append("ok").close()
+        })
+      val dirs = Seq(a, b, a, b).map(ensure)
+      assert(builds == 2, s"alternating sources rebuilt: $builds builds")
+      assert(dirs.distinct.size == 2 && dirs.forall(d => new java.io.File(d, "_done").exists()))
     } finally spark.conf.unset("graft.artifacts.root")
   }
 
@@ -459,7 +489,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     // a colliding raw append trips the audit -> full rebuild, fresh
     emb.limit(1).write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshPacked(spark, PackedCodec.Int4, out, "vec_id", "embedding")
+    IndexArtifacts.maintain(spark, ArtifactKind.Packed(PackedCodec.Int4), out, "vec_id", "embedding", append = true)
     assert(IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("vec_id")).get.count() == 155)
 
     // null-VECTOR rows are unpackable data, not audit failures: the
@@ -472,7 +502,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       .toDF("vec_id", "embedding")
       .write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshPacked(spark, PackedCodec.Int4, out, "vec_id", "embedding")
+    IndexArtifacts.maintain(spark, ArtifactKind.Packed(PackedCodec.Int4), out, "vec_id", "embedding", append = true)
     val p3 = IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("vec_id")).get
     assert(p3.count() == 156 && p3.where(col("id") === 9100000L).count() == 1)
     assert(p3.where(col("id") === 9100001L).count() == 0)
@@ -515,7 +545,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     // a colliding raw append trips the audit -> full rebuild, fresh
     emb.limit(1).write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshPq(spark, out, "vec_id", "embedding")
+    IndexArtifacts.maintain(spark, ArtifactKind.Pq, out, "vec_id", "embedding", append = true)
     assert(IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id"))
       .get._3.count() == 155)
   }
@@ -545,7 +575,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     // degrade to the sample baseline
     emb.limit(1).write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshPq(spark, out, "vec_id", "embedding")
+    IndexArtifacts.maintain(spark, ArtifactKind.Pq, out, "vec_id", "embedding", append = true)
     val ((_, _), cbAfter, codesAfter) =
       IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id")).get
     assert(codesAfter.count() == 151)
@@ -581,7 +611,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       .where(col("vec_id") >= 150 && col("vec_id") < 160)
       .write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshPq(spark, out, "vec_id", "embedding")
+    IndexArtifacts.maintain(spark, ArtifactKind.Pq, out, "vec_id", "embedding", append = true)
     val ((_, _), cbAfter, codesAfter) =
       IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id")).get
     assert(codesAfter.count() == 160)
@@ -617,7 +647,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     // must re-fit lloyd-dist AT the recorded hyperparams, not defaults
     emb.limit(1).write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshPq(spark, out, "vec_id", "embedding")
+    IndexArtifacts.maintain(spark, ArtifactKind.Pq, out, "vec_id", "embedding", append = true)
     val ((_, _), cbAfter, codesAfter) =
       IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id")).get
     assert(codesAfter.count() == 201)
@@ -686,7 +716,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     // a colliding raw append trips the audit -> full rebuild, fresh
     emb.limit(1).write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshPacked(spark, PackedCodec.Bbq, out, "vec_id", "embedding")
+    IndexArtifacts.maintain(spark, ArtifactKind.Packed(PackedCodec.Bbq), out, "vec_id", "embedding", append = true)
     assert(IndexArtifacts.loadPacked(spark, PackedCodec.Bbq, out, "embedding", Some("vec_id")).get.count() == 155)
   }
 
@@ -751,7 +781,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     docs.limit(1).withColumn("text", lit("colliding fresh text payload"))
       .write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshMinhash(spark, out, "doc_id", "text")
+    IndexArtifacts.maintain(spark, ArtifactKind.Minhash, out, "doc_id", "text", append = true)
     val (sh, _) = IndexArtifacts.loadMinhash(spark, out, "text", Some("doc_id")).get
     // full rebuild: the artifact covers EVERY data row again (both
     // rows of the collided id), not old + nothing
@@ -770,7 +800,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       .withColumn("text", lit("null id doc"))
       .write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
-    IndexArtifacts.refreshMinhash(spark, out, "doc_id", "text")
+    IndexArtifacts.maintain(spark, ArtifactKind.Minhash, out, "doc_id", "text", append = true)
     assert(IndexArtifacts.loadMinhash(spark, out, "text", Some("doc_id")).isDefined)
 
     // -- IVF: same audit class on the assignments table
@@ -784,7 +814,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     val vCount0 = spark.read.parquet(vout).count()
     emb.limit(1).write.mode("append").parquet(vout) // exact id collision
     spark.catalog.refreshByPath(vout)
-    IndexArtifacts.refreshIvf(spark, vout, "vec_id", "embedding")
+    IndexArtifacts.maintain(spark, ArtifactKind.Ivf, vout, "vec_id", "embedding", append = true)
     // the audit rebuilt (meta fresh at the grown state) — assignment
     // rows are PER-ID (assignToCentroids groups), so the collided id
     // still resolves to exactly one list entry, covering every

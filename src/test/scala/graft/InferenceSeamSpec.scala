@@ -82,7 +82,6 @@ class InferenceSeamSpec extends SparkSpec {
     val media = graft.multimodal.Multimodal.mediaTable(docs.limit(10))
     val stubbed = graft.multimodal.Multimodal.decodeFeatures(spark, media)
       .collect().toSeq.sortBy(_.media_id)
-    val md = java.security.MessageDigest.getInstance("MD5")
     stubbed.foreach { f =>
       assert(f.feat_hash.length == 32) // md5 hex
     }
