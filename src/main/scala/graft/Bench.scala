@@ -36,7 +36,7 @@ object Bench {
     // entry is [gc_ms (int), storage_mb (double)]
     root.get("diag") match {
       case Some(JObject(ds)) => ds.foreach {
-        case JField(k, JArray(List(JInt(_) | JLong(_), JDouble(_)))) => ()
+        case JField(_, JArray(List(JInt(_) | JLong(_), JDouble(_)))) => ()
         case JField(k, other) => sys.error(s"bad diag entry '$k': $other")
       }
       case other => sys.error(s"summary missing diag map: $other")

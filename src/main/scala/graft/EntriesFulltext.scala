@@ -1,15 +1,8 @@
 package graft
 
-import graft.agg.Aggs
-import graft.dedup.Dedup
 import graft.dsl.QueryDsl
-import graft.rel.Relational
-import graft.search.{Search, Sorting}
-import graft.sim.Ann
-import graft.streaming.EventStreams
-import graft.text.TextAnalysis
-import graft.multimodal.Multimodal
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.search.Search
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Num
 import graft.EntryShared._
@@ -215,7 +208,8 @@ private[graft] object EntriesFulltext {
       // staged build + atomic rename: concurrent runs can't read a
       // half-written artifact, stale generations get swept
       val out = graft.index.IndexArtifacts.ensureArtifact("bm25idx", s"$d/documents.parquet")(
-        p => graft.index.IndexArtifacts.loadAnalysis(s, p, "text").nonEmpty)(
+        p => graft.index.IndexArtifacts.load(
+          s, graft.index.ArtifactKind.Analysis, p, "text").nonEmpty)(
         stage => graft.sources.Connector.save(t(s, d, "documents"), stage, Map(
           "graft.write.operation" -> "overwrite",
           "graft.mapping.id" -> "doc_id",

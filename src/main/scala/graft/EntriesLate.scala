@@ -1,16 +1,11 @@
 package graft
 
 import graft.agg.Aggs
-import graft.dedup.Dedup
-import graft.dsl.QueryDsl
-import graft.index.{IndexArtifacts, PackedCodec}
+import graft.index.{ArtifactKind, IndexArtifacts, PackedCodec}
 import graft.rel.Relational
-import graft.search.{Search, Sorting}
+import graft.search.Search
 import graft.sim.Ann
-import graft.streaming.EventStreams
-import graft.text.TextAnalysis
-import graft.multimodal.Multimodal
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Num
 import graft.EntryShared._
@@ -33,14 +28,14 @@ private[graft] object EntriesLate {
   }
 
   private def ivfAdcFresh(s: SparkSession, p: String): Boolean =
-    IndexArtifacts.loadPq(s, p, "embedding", Some("vec_id")).nonEmpty &&
-      IndexArtifacts.loadIvf(s, p, "embedding", Some("vec_id")).nonEmpty
+    IndexArtifacts.load(s, ArtifactKind.Pq, p, "embedding", Some("vec_id")).nonEmpty &&
+      IndexArtifacts.load(s, ArtifactKind.Ivf, p, "embedding", Some("vec_id")).nonEmpty
 
   /** Packed-codec knn over the persisted artifact — hash-equal to the
     * codec's on-the-fly key (same oracle SQL). */
   private def packedKnnPersisted(s: SparkSession, d: String, codec: PackedCodec): DataFrame = {
     val out = embeddingsIndex(s, d, s"${codec.name}idx", s"graft.index.${codec.name}" -> "embedding")(
-      p => IndexArtifacts.loadPacked(s, codec, p, "embedding").nonEmpty)
+      p => IndexArtifacts.load(s, ArtifactKind.Packed(codec), p, "embedding").nonEmpty)
     Ann.packedTopKIndexed(s, out, "vec_id", "embedding", codec, ScriptQv, k = 10, oversample = 4)
       .getOrElse(sys.error(s"${codec.name} artifact missing right after build"))
   }
@@ -252,7 +247,7 @@ private[graft] object EntriesLate {
     // to on-the-fly q_knn_pq (same oracle SQL)
     "q_knn_pq_persisted" -> ((s, d) => {
       val out = embeddingsIndex(s, d, "pqidx", "graft.index.pq" -> "embedding")(
-        p => IndexArtifacts.loadPq(s, p, "embedding").nonEmpty)
+        p => IndexArtifacts.load(s, ArtifactKind.Pq, p, "embedding").nonEmpty)
       graft.sim.Ann.pqTopKIndexed(s, out, "vec_id", "embedding",
         ScriptQv, k = 10, oversample = 4)
         .getOrElse(sys.error("pq artifact missing right after build"))
@@ -309,15 +304,14 @@ private[graft] object EntriesLate {
         "graft.index.pq.fit" -> "lloyd-dist")(ivfAdcFresh(s, _))
       // static oracle copies FROM the persisted model — 16 centroid
       // rows + 512 codebook rows, driver-tiny by contract
-      val (centsDf, _) = graft.index.IndexArtifacts
-        .loadIvf(s, out, "embedding", Some("vec_id")).get
-      centsDf.select(col("cent_id"), col("cv")).collect().toSeq
+      IndexArtifacts.load(s, ArtifactKind.Ivf, out, "embedding", Some("vec_id")).get
+        .state.cents.select(col("cent_id"), col("cv")).collect().toSeq
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
         .toDF("cent_id", "cv").coalesce(1)
         .write.mode("overwrite")
         .parquet(s"/tmp/graft_ivfadctr_cents_${System.getProperty("user.name")}")
-      val ((m, ck), cb, _) = graft.index.IndexArtifacts
-        .loadPq(s, out, "embedding", Some("vec_id")).get
+      val codes = IndexArtifacts.load(s, ArtifactKind.Pq, out, "embedding", Some("vec_id")).get.state
+      val (m, ck, cb) = (codes.p.m, codes.p.k, codes.cb)
       val dsub = 64 / m
       (for (sp <- 0 until m; c <- 0 until ck)
         yield (sp, c, (0 until dsub).map(i => cb((sp * ck + c) * dsub + i))))

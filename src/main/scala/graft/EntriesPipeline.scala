@@ -1,15 +1,10 @@
 package graft
 
-import graft.agg.Aggs
 import graft.dedup.Dedup
-import graft.dsl.QueryDsl
-import graft.rel.Relational
-import graft.search.{Search, Sorting}
 import graft.sim.Ann
-import graft.streaming.EventStreams
 import graft.text.TextAnalysis
 import graft.multimodal.Multimodal
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Num
 import graft.EntryShared._
@@ -128,7 +123,8 @@ private[graft] object EntriesPipeline {
       // staged build + atomic rename: concurrent runs can't read a
       // half-written artifact, stale generations get swept
       val out = graft.index.IndexArtifacts.ensureArtifact("mhidx", s"$d/documents.parquet")(
-        p => graft.index.IndexArtifacts.loadMinhash(s, p, "text", Some("doc_id")).nonEmpty)(
+        p => graft.index.IndexArtifacts.load(
+          s, graft.index.ArtifactKind.Minhash, p, "text", Some("doc_id")).nonEmpty)(
         stage => graft.sources.Connector.save(
           docs.where(pmod(col("doc_id"), lit(2)) === 0), stage, Map(
             "graft.write.operation" -> "overwrite",
@@ -241,7 +237,7 @@ private[graft] object EntriesPipeline {
     "q_ann_ivf" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       Ann.ivfTopK(e, e.where(col("vec_id") < 5), "vec_id", "embedding",
-        nCentroids = 16, nprobe = 4, k = 10)
+        Ann.seedCentroids(e, "vec_id", "embedding", 16), nprobe = 4, k = 10)
     }),
     // persisted IVF index: the write fits the quantizer and pays the
     // corpus assignment pass ONCE (graft.index.vectors); the query
@@ -254,7 +250,8 @@ private[graft] object EntriesPipeline {
       // staged build + atomic rename: concurrent runs can't read a
       // half-written artifact, stale generations get swept
       val out = graft.index.IndexArtifacts.ensureArtifact("ivfidx", s"$d/embeddings.parquet")(
-        p => graft.index.IndexArtifacts.loadIvf(s, p, "embedding").nonEmpty)(
+        p => graft.index.IndexArtifacts.load(
+          s, graft.index.ArtifactKind.Ivf, p, "embedding").nonEmpty)(
         stage => graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
           "graft.write.operation" -> "overwrite",
           "graft.mapping.id" -> "vec_id",
@@ -271,7 +268,8 @@ private[graft] object EntriesPipeline {
     // CTEs q_ann_ivf shares, then counts per list
     "q_ivf_list_stats" -> ((s, d) => {
       val out = graft.index.IndexArtifacts.ensureArtifact("ivfidx", s"$d/embeddings.parquet")(
-        p => graft.index.IndexArtifacts.loadIvf(s, p, "embedding").nonEmpty)(
+        p => graft.index.IndexArtifacts.load(
+          s, graft.index.ArtifactKind.Ivf, p, "embedding").nonEmpty)(
         stage => graft.sources.Connector.save(t(s, d, "embeddings"), stage, Map(
           "graft.write.operation" -> "overwrite",
           "graft.mapping.id" -> "vec_id",

@@ -1,17 +1,7 @@
 package graft
 
-import graft.agg.Aggs
-import graft.dedup.Dedup
-import graft.dsl.QueryDsl
-import graft.rel.Relational
-import graft.search.{Search, Sorting}
-import graft.sim.Ann
-import graft.streaming.EventStreams
-import graft.text.TextAnalysis
-import graft.multimodal.Multimodal
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.Num
 /** Shared fixtures for the SparkEntry registration files: table loader,
   * DuckDB oracle CTE fragments, deterministic query vectors, and
   * driver-side oracle-SQL builders. Registration-only code — every

@@ -408,10 +408,11 @@ object Dedup {
       hitCap: Int,
       byteCap: Long): Option[DataFrame] =
     graft.index.IndexArtifacts
-      .loadMinhash(spark, indexPath, textCol, Some(idCol), numHashes, bands)
-      .map { case (sh, bandTable) =>
-        val refSh = sh.select(col("id").as("ref_id"), col("sh").as("ref_sh"))
-        val refBands = bandTable.select(col("id").as("ref_id"), col("band"))
+      .load(spark, graft.index.ArtifactKind.Minhash, indexPath, textCol, Some(idCol))
+      .filter(_.state == graft.index.ArtifactKind.Banding(numHashes, bands))
+      .map { a =>
+        val refSh = a.table("shingles").select(col("id").as("ref_id"), col("sh").as("ref_sh"))
+        val refBands = a.table("bands").select(col("id").as("ref_id"), col("band"))
         val sc = spark.sparkContext
         val caller = sc.getLocalProperty(JobDescription)
         try {

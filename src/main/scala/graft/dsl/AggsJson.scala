@@ -164,7 +164,7 @@ object AggsJson {
         }
       // `missing` (the null-bucket count): one-row doc_count of docs
       // lacking the field
-      case JField(name, JObject(JField("missing", JObject(ms)) :: Nil)) :: Nil =>
+      case JField(_, JObject(JField("missing", JObject(ms)) :: Nil)) :: Nil =>
         val f = str(ms.toMap, "field", "missing")
         return df.where(col(f).isNull)
           .agg(count(lit(1)).as("doc_count"))
@@ -227,7 +227,7 @@ object AggsJson {
       // interval election needs a min/max pre-pass; the JSON node and
       // the Scala operator share one implementation, so the bucket
       // election cannot diverge)
-      case JField(name, JObject(JField("auto_date_histogram", JObject(as)) :: Nil)) :: Nil =>
+      case JField(_, JObject(JField("auto_date_histogram", JObject(as)) :: Nil)) :: Nil =>
         val m = as.toMap
         return graft.agg.Aggs.autoDateHistogramAgg(df,
           str(m, "field", "auto_date_histogram"),
@@ -254,7 +254,7 @@ object AggsJson {
       // `ip_range`: from-inclusive / to-exclusive dotted-quad bounds,
       // ES's "from-to" auto keys or explicit `key` — delegates to the
       // Scala kernel (one scan, N conditional counts)
-      case JField(name, JObject(JField("ip_range", JObject(irs)) :: Nil)) :: Nil =>
+      case JField(_, JObject(JField("ip_range", JObject(irs)) :: Nil)) :: Nil =>
         val m = irs.toMap
         val f = str(m, "field", "ip_range")
         val ranges: Seq[(String, Option[String], Option[String])] = m.get("ranges") match {
@@ -275,7 +275,7 @@ object AggsJson {
       // `date_histogram` with `min_doc_count: 0`: gap buckets
       // materialize (the chart-consumer contract) — the Scala kernel's
       // sequence() spine + broadcast left join, month granularity
-      case JField(name, JObject(JField("date_histogram", JObject(ds)) :: Nil)) :: Nil
+      case JField(_, JObject(JField("date_histogram", JObject(ds)) :: Nil)) :: Nil
           if ds.toMap.get("min_doc_count").exists(num(_) == 0) =>
         val m = ds.toMap
         require(m.get("calendar_interval").contains(JString("month")),
@@ -287,7 +287,7 @@ object AggsJson {
       // doc_count <= max_doc_count, rarest first. One partial-agged
       // groupBy + a HAVING predicate; never a global sort of the
       // full key space
-      case JField(name, JObject(JField("rare_terms", JObject(rs)) :: Nil)) :: Nil =>
+      case JField(_, JObject(JField("rare_terms", JObject(rs)) :: Nil)) :: Nil =>
         val m = rs.toMap
         val f = str(m, "field", "rare_terms")
         val maxDoc = m.get("max_doc_count").map(num(_).toLong).getOrElse(1L)
@@ -304,7 +304,7 @@ object AggsJson {
       // two-pass distributed-exact shape (global median, then median
       // of deviations). The GROUPED form would need a per-group median
       // joined back — route through the Scala operator for that.
-      case JField(name, JObject(
+      case JField(_, JObject(
           JField("median_absolute_deviation", JObject(ms)) :: Nil)) :: Nil =>
         val madUnknown = ms.toMap.keySet -- Set("field")
         require(madUnknown.isEmpty,
@@ -317,7 +317,7 @@ object AggsJson {
       // heteroscedastic = Welch (ES's default), homoscedastic =
       // pooled-variance Student. `paired` needs the pairing key ES
       // derives from doc identity — unsupported here, loud.
-      case JField(name, JObject(JField("t_test", JObject(ts)) :: Nil)) :: Nil =>
+      case JField(_, JObject(JField("t_test", JObject(ts)) :: Nil)) :: Nil =>
         val m = ts.toMap
         val ttUnknown = m.keySet -- Set("a", "b", "type")
         require(ttUnknown.isEmpty,
@@ -353,7 +353,7 @@ object AggsJson {
       // `matrix_stats`: pairwise moment matrix — the kernel computes
       // the two-field form (count / means / variances / covariance /
       // correlation in one partial-aggregated pass)
-      case JField(name, JObject(JField("matrix_stats", JObject(ms)) :: Nil)) :: Nil =>
+      case JField(_, JObject(JField("matrix_stats", JObject(ms)) :: Nil)) :: Nil =>
         val mxUnknown = ms.toMap.keySet -- Set("fields")
         require(mxUnknown.isEmpty,
           s"unsupported matrix_stats option(s): ${mxUnknown.toSeq.sorted.mkString(", ")}")
@@ -369,7 +369,7 @@ object AggsJson {
         return graft.agg.Aggs.matrixStats(df, fields(0), fields(1))
       // `variable_width_histogram`: equal-depth buckets on quantile
       // edges (one edge pre-pass + one bucketed agg pass, the kernel)
-      case JField(name, JObject(
+      case JField(_, JObject(
           JField("variable_width_histogram", JObject(vs)) :: Nil)) :: Nil =>
         val m = vs.toMap
         val vwUnknown = m.keySet -- Set("field", "buckets")
@@ -381,7 +381,7 @@ object AggsJson {
           m.get("buckets").map(num(_).toInt).getOrElse(10))
       // `ip_prefix`: /N network buckets via integer mask math, buckets
       // ordered by NUMERIC network value like ES
-      case JField(name, JObject(JField("ip_prefix", JObject(ps)) :: Nil)) :: Nil =>
+      case JField(_, JObject(JField("ip_prefix", JObject(ps)) :: Nil)) :: Nil =>
         val m = ps.toMap
         val ipUnknown = m.keySet -- Set("field", "prefix_length", "is_ipv6")
         require(ipUnknown.isEmpty,
@@ -397,7 +397,7 @@ object AggsJson {
       // `categorize_text` (ES ML): cluster semi-structured messages by
       // token pattern — variable (numeric) tokens drop, the first
       // max_matched_tokens surviving tokens form the category key
-      case JField(name, JObject(JField("categorize_text", JObject(cs)) :: Nil)) :: Nil =>
+      case JField(_, JObject(JField("categorize_text", JObject(cs)) :: Nil)) :: Nil =>
         val m = cs.toMap
         val ctUnknown = m.keySet -- Set("field", "max_matched_tokens")
         require(ctUnknown.isEmpty,
@@ -412,7 +412,7 @@ object AggsJson {
       // instead; `minimum_support_count` is the absolute-count form of
       // ES's minimum_support fraction (a fraction would need a count
       // pre-pass); set size is fixed at 2 (the kernel's pair shape).
-      case JField(name, JObject(
+      case JField(_, JObject(
           JField("frequent_item_sets", JObject(fs)) :: Nil)) :: Nil =>
         val m = fs.toMap
         val fiUnknown = m.keySet --
@@ -468,7 +468,7 @@ object AggsJson {
       // count) — ES infers the rate's date context from the parent,
       // which the flat metric compile cannot see, hence the dedicated
       // tree shape
-      case JField(name, JObject(spec)) :: Nil
+      case JField(_, JObject(spec)) :: Nil
           if spec.exists(_._1 == "date_histogram") && rateChild(spec.toMap).isDefined =>
         val m = spec.toMap
         val dh = m("date_histogram") match {
@@ -640,7 +640,7 @@ object AggsJson {
       // dedup/sampling key (graft determinism extension, like
       // random_sampler); the foreground predicate is the request's
       // query, threaded through fgPred.
-      case JField(name, JObject(JField("significant_text", JObject(st)) :: Nil)) :: Nil =>
+      case JField(_, JObject(JField("significant_text", JObject(st)) :: Nil)) :: Nil =>
         val m = st.toMap
         val stUnknown = m.keySet --
           Set("field", "key_field", "sample_probability", "min_doc_count", "size")
@@ -660,7 +660,7 @@ object AggsJson {
       // terms > geo_line: per-bucket polyline (the "vessel track"
       // shape) — delegates to the Scala kernel so the point ordering
       // and truncation cannot diverge
-      case JField(name, JObject(spec)) :: Nil
+      case JField(_, JObject(spec)) :: Nil
           if spec.exists(_._1 == "terms") && geoLineChild(spec.toMap).isDefined =>
         val m = spec.toMap
         val tf = m("terms") match {

@@ -201,10 +201,6 @@ object EsSql {
       fetchSize: Int): (DataFrame, Option[String]) =
     openCursorBy(() => run(spark, dir, sql), fetchSize)
 
-  /** Cursor over an already-compiled static frame. */
-  def openCursorOn(df: DataFrame, fetchSize: Int): (DataFrame, Option[String]) =
-    openCursorBy(() => df, fetchSize)
-
   /** Cursor over a frame THUNK, re-invoked per page: required for
     * sources whose file lists re-resolve on read — `Connector.pitDF`
     * in particular, where a concurrent write retires the pinned

@@ -4,14 +4,14 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.json4s.{JBool, JDouble, JInt, JString, JValue}
+import org.json4s.{JInt, JString, JValue}
 
 /** Persisted index artifacts — the Spark-native analog of what an ES
   * server amortizes across queries by maintaining a Lucene index
   * (elasticsearch-hadoop delegates all of this to the server; graft
   * re-expresses it as columnar side tables beside the index
   * directory). `ArtifactKind.all` lists the kinds; every kind takes the
-  * one lifecycle in `maintain`, and loads read a fresh artifact back.
+  * one lifecycle in `maintain`, and `load` reads a fresh artifact back.
   *
   * Layout (inside the index directory — every name is underscore-
   * prefixed, so Spark's hidden-path filter keeps artifact files out of
@@ -272,13 +272,16 @@ object IndexArtifacts {
   private def metaPath(dir: String): Path = new Path(s"$dir/_graft_meta.json")
 
   /** Stamp an artifact dir with the live-data fingerprint — its commit
-    * point, written LAST by every build and append. `fields` follow
-    * the fingerprint in order: strings print quoted and unescaped,
-    * doubles with one decimal, everything else as-is. The layout is
-    * byte-stable, so artifacts already on disk keep loading. */
-  private def writeMeta(
-      spark: SparkSession, indexPath: String, dir: String, fields: (String, Any)*): Unit = {
-    val json = (("fingerprint" -> dataFingerprint(spark, indexPath)) +: fields)
+    * point, written LAST by every build and append. The id column, the
+    * source column and the kind's `fields` follow the fingerprint in
+    * order: strings print quoted and unescaped, doubles with one
+    * decimal, everything else as-is. The layout is byte-stable, so
+    * artifacts already on disk keep loading. */
+  private def commit(
+      spark: SparkSession, kind: ArtifactKind, indexPath: String, dir: String,
+      idCol: String, c: String, fields: Seq[(String, Any)]): Unit = {
+    val json = (Seq("fingerprint" -> dataFingerprint(spark, indexPath),
+        "id_col" -> idCol, kind.colField -> c) ++ fields)
       .map { case (k, v) =>
         val value = v match {
           case s: String => "\"" + s + "\""
@@ -322,7 +325,7 @@ object IndexArtifacts {
   private def freshMeta(
       spark: SparkSession, indexPath: String, dir: String,
       expectIdCol: Option[String],
-      knownFp: => Option[String] = None): Option[JValue] =
+      knownFp: => Option[String]): Option[JValue] =
     readMeta(spark, dir).filter { meta =>
       (metaStr(meta, "fingerprint"), metaStr(meta, "id_col")) match {
         case (Some(fp), Some(idc)) =>
@@ -339,20 +342,20 @@ object IndexArtifacts {
     * calls it after the data landed or swapped, so the recorded
     * fingerprint describes the live files queries read).
     *
-    * APPEND: when `append` and the meta parses for the kind and was
-    * built on `idCol`, only the docs absent from the kind's `known`
-    * table encode, under the state the build froze (the ES segment
-    * shape: an index analyzes only the new documents). The one
+    * APPEND: when `append`, the kind `appends`, and the meta parses for
+    * the kind and was built on `idCol`, only the docs absent from the
+    * kind's `known` table encode, under the state the build froze (the
+    * ES segment shape: an index analyzes only the new documents). The one
     * `auditAppend` must pass and the increment must be encodable; then
     * the meta goes, the tables append, and the merged meta is written
     * last — no table changes under a meta, so a crash mid-append leaves
     * no commit point and the next write rebuilds.
     *
-    * REBUILD, every other case (not an append; no meta or one that does
-    * not parse; another id column; a refused audit; a drifted packed
-    * dimension): delete the meta, then the dir, so a crash mid-delete
-    * leaves no commit point and no table an earlier layout wrote
-    * survives; freeze the state over the whole corpus — under the
+    * REBUILD, every other case (not an append; a kind that does not
+    * append, the HNSW graph; no meta or one that does not parse; another
+    * id column; a refused audit; a drifted packed dimension): delete
+    * the meta, then the dir, so a crash mid-delete leaves no commit
+    * point and no table an earlier layout wrote survives; freeze the state over the whole corpus — under the
     * parameters a parsed meta recorded, else the options — encode it,
     * and write the meta last.
     *
@@ -371,11 +374,9 @@ object IndexArtifacts {
     val dir = kind.dir(indexPath, c)
     val data = kind.rows(spark.read.format(fmt).load(indexPath), c)
     lazy val known = spark.read.parquet(s"$dir/${kind.known}")
-    val meta = (if (append) readMeta(spark, dir) else None)
+    val meta = (if (append && kind.appends) readMeta(spark, dir) else None)
       .filter(metaStr(_, "id_col").contains(idCol))
-    val frozen = meta.flatMap(kind.thaw(spark, dir, _, kind.prepare(
-      data.join(known.select(col("id").as("__known_id")), col(idCol) === col("__known_id"), "semi"),
-      idCol, c)))
+    val frozen = meta.flatMap(kind.thaw(spark, dir, _, covered(kind, data, known, idCol, c)))
     val appended = frozen.exists { f =>
       val docs = kind.prepare(unindexed(data, idCol, known), idCol, c)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -417,10 +418,12 @@ object IndexArtifacts {
     fs
   }
 
-  private def commit(
-      spark: SparkSession, kind: ArtifactKind, indexPath: String, dir: String,
-      idCol: String, c: String, fields: Seq[(String, Any)]): Unit =
-    writeMeta(spark, indexPath, dir, Seq("id_col" -> idCol, kind.colField -> c) ++ fields: _*)
+  /** The prepared data rows whose id an artifact's stored `id` column
+    * lists — the docs it covers. */
+  private def covered(
+      kind: ArtifactKind, data: DataFrame, stored: DataFrame, idCol: String, c: String): DataFrame =
+    kind.prepare(data.join(stored.select(col("id").as("__known_id")),
+      col(idCol) === col("__known_id"), "semi"), idCol, c)
 
   /** Data rows whose id is absent from an artifact's stored `id`
     * column — the increment an append encodes. The stored ids rename
@@ -456,69 +459,54 @@ object IndexArtifacts {
     * artifact covers and every exact rescore reads. */
   def liveVectors(
       spark: SparkSession, indexPath: String, vecCol: String, fmt: String): DataFrame =
-    spark.read.format(fmt).load(indexPath).where(col(vecCol).isNotNull)
+    read(spark, indexPath, fmt).where(col(vecCol).isNotNull)
 
-  // ---- loads: a fresh artifact's frames, or None ------------------
+  // ---- the artifact read path: one load per kind ----
 
   def analysisDir(indexPath: String, textCol: String): String =
     ArtifactKind.Analysis.dir(indexPath, textCol)
 
-  /** The analysis meta's ids_clean flag and corpus scalars (n_docs,
-    * n_dl, dl_sum); None when the meta lacks any of them. */
-  private[index] final case class AnalysisScalars(
-      idsClean: Boolean, nDocs: Long, nDl: Long, dlSum: Double)
-
-  private[index] def analysisScalars(meta: JValue): Option[AnalysisScalars] =
-    (meta \ "ids_clean", meta \ "n_docs", meta \ "n_dl", meta \ "dl_sum") match {
-      case (JBool(clean), JInt(nd), JInt(ndl), JDouble(ds)) =>
-        Some(AnalysisScalars(clean, nd.toLong, ndl.toLong, ds))
-      case _ => None
-    }
-
-  /** A fresh analysis artifact: the postings table, the corpus
-    * statistics BM25 reads (n_docs, and avgdl = dl_sum / n_dl, bit-
-    * equal to avg(dl) over the docs), and whether the build audited
-    * the ids unique and non-null — the filter-context semi-join
-    * rewrite needs that, scoring does not. */
-  final case class Analysis(postings: DataFrame, nDocs: Double, avgdl: Double, idsClean: Boolean)
-
-  /** Load the analysis artifact if present AND fresh; None means
-    * missing, stale, or a meta without the corpus scalars — callers
-    * fall back to on-the-fly analysis, which scores bit-equal. */
-  def loadAnalysis(
-      spark: SparkSession,
-      indexPath: String,
-      textCol: String,
-      expectIdCol: Option[String] = None,
-      knownFp: => Option[String] = None): Option[Analysis] = {
-    val dir = analysisDir(indexPath, textCol)
-    freshMeta(spark, indexPath, dir, expectIdCol, knownFp).flatMap(analysisScalars).map { s =>
-      Analysis(read(spark, s"$dir/postings"), s.nDocs.toDouble,
-        s.dlSum / s.nDl.toDouble, s.idsClean)
-    }
-  }
-
   def minhashDir(indexPath: String, textCol: String): String =
     ArtifactKind.Minhash.dir(indexPath, textCol)
 
-  /** Fresh (shingles, bands) frames, or None when missing, stale, or
-    * built under different (idCol, numHashes, bands). */
-  def loadMinhash(
-      spark: SparkSession,
-      indexPath: String,
-      textCol: String,
-      expectIdCol: Option[String] = None,
-      numHashes: Int = 32,
-      bands: Int = 8): Option[(DataFrame, DataFrame)] = {
-    val dir = minhashDir(indexPath, textCol)
-    freshMeta(spark, indexPath, dir, expectIdCol)
-      .filter(m => metaInt(m, "num_hashes").contains(numHashes) &&
-        metaInt(m, "bands").contains(bands))
-      .map(_ => (read(spark, s"$dir/shingles"), read(spark, s"$dir/bands")))
+  /** A fresh artifact: the state its build froze, and its tables, each
+    * opened once through [[read]] on first use, so a reader that
+    * consults the artifact several times in one request shares one
+    * frame per table and reads no table it does not use. */
+  final class Artifact[F <: FrozenArtifact] private[IndexArtifacts] (
+      spark: SparkSession, dir: String, val state: F) {
+    private val opened = scala.collection.mutable.Map.empty[String, DataFrame]
+    def table(name: String): DataFrame =
+      opened.synchronized(opened.getOrElseUpdate(name, read(spark, s"$dir/$name")))
   }
 
-  def vectorsDir(indexPath: String, vecCol: String): String =
-    ArtifactKind.Ivf.dir(indexPath, vecCol)
+  /** `kind`'s artifact on column `c` when present and FRESH (one
+    * `freshMeta` check, see there), with the state from the same
+    * `thaw` an append encodes under: the analysis corpus scalars, the
+    * MinHash banding, the IVF centroids, the packed dimension (probed
+    * from the covered rows of the `fmt` index only when asked for), the
+    * PQ fit and codebook. None means missing, stale, built on another
+    * id column, or a meta that does not parse for the kind: callers
+    * fall back to their on-the-fly path.
+    *
+    * Every artifact read goes through here, so a read-side filter that
+    * applies to all kinds (tombstoned ids, say) lands once. */
+  def load(
+      spark: SparkSession,
+      kind: ArtifactKind,
+      indexPath: String,
+      c: String,
+      expectIdCol: Option[String] = None,
+      knownFp: => Option[String] = None,
+      fmt: String = "parquet"): Option[Artifact[kind.Frozen]] = {
+    val dir = kind.dir(indexPath, c)
+    for {
+      meta <- freshMeta(spark, indexPath, dir, expectIdCol, knownFp)
+      idCol <- metaStr(meta, "id_col")
+      state <- kind.thaw(spark, dir, meta, covered(kind,
+        kind.rows(read(spark, indexPath, fmt), c), read(spark, s"$dir/${kind.known}"), idCol, c))
+    } yield new Artifact[kind.Frozen](spark, dir, state)
+  }
 
   /** IVF list-balance report over the persisted assignments: one row
     * per centroid list with its population, plus min/max/avg and the
@@ -532,9 +520,10 @@ object IndexArtifacts {
       spark: SparkSession,
       indexPath: String,
       vecCol: String): Option[DataFrame] =
-    loadIvf(spark, indexPath, vecCol).map { case (cents, assignments) =>
+    load(spark, ArtifactKind.Ivf, indexPath, vecCol).map { a =>
+      val cents = a.state.cents
       val n = cents.count()
-      val counts = assignments.groupBy(col("cent_id"))
+      val counts = a.table("assignments").groupBy(col("cent_id"))
         .agg(count(lit(1)).as("list_size"))
       // empty lists (a centroid no vector chose) must appear as 0
       val full = cents.select(col("cent_id"))
@@ -551,62 +540,4 @@ object IndexArtifacts {
             if (agg.getDouble(2) == 0.0) 0.0 else agg.getLong(1) / agg.getDouble(2), 4)))
         .orderBy(col("cent_id"))
     }
-
-  /** Stamp a vector-artifact dir (the HNSW graph) with the live-data
-    * fingerprint — the artifact's commit point. */
-  def writeVectorsMeta(
-      spark: SparkSession, indexPath: String, vecKey: String, idCol: String): Unit =
-    writeMeta(spark, indexPath, vectorsDir(indexPath, vecKey),
-      "id_col" -> idCol, "vec_col" -> vecKey)
-
-  /** Freshness check alone (for artifacts whose payload loads inside
-    * tasks rather than as frames, e.g. the HNSW graph table). */
-  def vectorsMetaFresh(
-      spark: SparkSession, indexPath: String, vecKey: String,
-      expectIdCol: Option[String] = None): Boolean =
-    freshMeta(spark, indexPath, vectorsDir(indexPath, vecKey), expectIdCol).isDefined
-
-  /** Fresh (centroids, assignments) or None. */
-  def loadIvf(
-      spark: SparkSession,
-      indexPath: String,
-      vecCol: String,
-      expectIdCol: Option[String] = None): Option[(DataFrame, DataFrame)] = {
-    val dir = vectorsDir(indexPath, vecCol)
-    freshMeta(spark, indexPath, dir, expectIdCol).map(_ => (
-      read(spark, s"$dir/centroids"), read(spark, s"$dir/assignments")))
-  }
-
-  def packedDir(codec: PackedCodec, indexPath: String, vecCol: String): String =
-    ArtifactKind.Packed(codec).dir(indexPath, vecCol)
-
-  /** Fresh packed frame (the codec's `pack` schema) or None. */
-  def loadPacked(
-      spark: SparkSession,
-      codec: PackedCodec,
-      indexPath: String,
-      vecCol: String,
-      expectIdCol: Option[String] = None): Option[DataFrame] = {
-    val dir = packedDir(codec, indexPath, vecCol)
-    freshMeta(spark, indexPath, dir, expectIdCol).map(_ => read(spark, s"$dir/packed"))
-  }
-
-  def pqDir(indexPath: String, vecCol: String): String =
-    ArtifactKind.Pq.dir(indexPath, vecCol)
-
-  /** The flat codebook a PQ artifact stores. */
-  private[index] def storedCodebook(spark: SparkSession, dir: String): Array[Double] =
-    read(spark, s"$dir/codebook").head().getSeq[Double](0).toArray
-
-  /** Fresh ((m, k), codebook, codes frame) or None. */
-  def loadPq(
-      spark: SparkSession,
-      indexPath: String,
-      vecCol: String,
-      expectIdCol: Option[String] = None): Option[((Int, Int), Array[Double], DataFrame)] = {
-    val dir = pqDir(indexPath, vecCol)
-    freshMeta(spark, indexPath, dir, expectIdCol)
-      .flatMap(meta => for (m <- metaInt(meta, "m"); k <- metaInt(meta, "k")) yield
-        ((m, k), storedCodebook(spark, dir), read(spark, s"$dir/codes")))
-  }
 }

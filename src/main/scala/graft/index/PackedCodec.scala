@@ -11,10 +11,14 @@ import org.apache.spark.sql.functions._
   *  - write path: `Connector.save` maintains one artifact per
   *    `graft.index.<name>` option (`ArtifactKind.Packed`, through
   *    `IndexArtifacts.maintain`), stored under `<index>/_graft_<name>/<vecCol>/`;
-  *  - query path: `Ann.packedTopK` packs in-plan, `Ann.packedTopKIndexed`
-  *    reads the persisted frame (`IndexArtifacts.loadPacked`) — both
-  *    rank the same coarse window and rescore it exactly, so the two
-  *    forms are answer-equal by construction.
+  *  - query path: both forms rank the `coarse` score over `pack` rows
+  *    and keep the best k·oversample of them, then read only that
+  *    window's raw vectors (a broadcast semi-join against the index)
+  *    for the exact cosine. `Ann.packedTopK` packs the index in-plan;
+  *    `Ann.packedTopKIndexed` reads the packed table of a fresh
+  *    artifact (`IndexArtifacts.load`) and the index through the
+  *    schema cache, so a repeated query infers no schema. They rank
+  *    the same packed rows, so they are answer-equal by construction.
   *
   * `pack` drops null-vector rows: a null packs as all-zero codes whose
   * coarse estimate can outrank every real doc and flood the window. */

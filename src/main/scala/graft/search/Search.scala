@@ -552,6 +552,11 @@ object Search {
       .select(col("id"), col("cscore"))
   }
 
+  /** A fresh analysis artifact: the postings table and the corpus
+    * scalars BM25 reads (n_docs, avgdl), plus whether the build audited
+    * the ids unique and non-null. */
+  type AnalysisArtifact = graft.index.IndexArtifacts.Artifact[graft.index.ArtifactKind.Corpus]
+
   /** Artifact-aware bm25BoolClausesScores for the connector's
     * readMetadata `_score` path: a clause whose field carries FRESH
     * persisted analysis (graft.index.analysis) scores from the
@@ -562,9 +567,9 @@ object Search {
     * `excludeFields` (runtime-mapped names that shadow stored columns)
     * always score on the fly — their values are not what the write
     * path analyzed. `analysisOf(field)` is the field's fresh artifact
-    * or None (`IndexArtifacts.loadAnalysis`). */
+    * or None (`IndexArtifacts.load`). */
   def bm25BoolClausesScoresAuto(
-      analysisOf: String => Option[graft.index.IndexArtifacts.Analysis],
+      analysisOf: String => Option[AnalysisArtifact],
       docs: DataFrame,
       idCol: String,
       clauses: Seq[(String, String)],
@@ -747,12 +752,12 @@ object Search {
     * slice of the query's terms (`term IN` pushes into the term-sorted
     * parquet and prunes row groups) with the meta's corpus stats. */
   private def bm25ArtifactTermScores(
-      a: graft.index.IndexArtifacts.Analysis,
+      a: AnalysisArtifact,
       terms: Seq[String],
       k1: Double,
       b: Double): DataFrame =
-    bm25TermScores(a.postings.where(col("term").isin(terms: _*)), Nil,
-      Right((a.nDocs, a.avgdl)), k1, b)
+    bm25TermScores(a.table("postings").where(col("term").isin(terms: _*)), Nil,
+      Right((a.state.nDocs.toDouble, a.state.avgdl)), k1, b)
 
   private def bm25ComponentsFromToks(
       toksDf: DataFrame,
@@ -800,8 +805,8 @@ object Search {
       fmt: String = "parquet"): DataFrame = {
     val q = Analyzer.analyze(query)
     require(q.nonEmpty, s"bm25 query analyzed to zero tokens: $query")
-    graft.index.IndexArtifacts.loadAnalysis(
-      spark, indexPath, textCol, expectIdCol = Some(idCol)) match {
+    graft.index.IndexArtifacts.load(spark, graft.index.ArtifactKind.Analysis,
+      indexPath, textCol, expectIdCol = Some(idCol)) match {
       case Some(a) =>
         bm25ArtifactTermScores(a, q, k1, b)
           .groupBy(col("id"))

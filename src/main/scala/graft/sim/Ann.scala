@@ -1,7 +1,7 @@
 package graft.sim
 
 import graft.dedup.Vectors
-import graft.index.{IndexArtifacts, PackedCodec}
+import graft.index.{ArtifactKind, IndexArtifacts, PackedCodec}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -103,31 +103,10 @@ object Ann {
     bits.reduce(_ + _)
   }
 
-  /** IVF-flat with deterministic seed centroids: the coarse quantizer's
-    * centroids are the first `nCentroids` corpus vectors (a fixed seed
-    * sample — no iterative fit to ship), every vector is assigned to
-    * its nearest centroid (one narrow pass against broadcast
-    * centroids), and queries probe only the `nprobe` nearest centroid
-    * lists. At 100 TB the assignment is the partitioning: each inverted
-    * list is a shuffle partition and a probe touches nprobe/nCentroids
-    * of the corpus. */
-  def ivfTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nCentroids: Int,
-      nprobe: Int,
-      k: Int): DataFrame = {
-    ivfTopKWith(corpus, queries, idCol, vecCol,
-      seedCentroids(corpus, idCol, vecCol, nCentroids), nprobe, k)
-  }
-
   /** Deterministic seed quantizer: the LOWEST `n` corpus ids as
-    * centroids, whatever the id space (an `id < n` predicate silently
-    * yielded zero centroids on offset/sparse id spaces — the knnSearch
-    * comment's trap, fixed at the source). Shared by the fit-per-query
-    * form (ivfTopK) and the write-side artifact build, so both
+    * centroids, whatever the id space (an `id < n` predicate yields
+    * zero centroids on offset/sparse id spaces). Shared by the
+    * fit-per-query IVF form and the write-side artifact build, so both
     * quantizers are identical by construction. */
   def seedCentroids(
       corpus: DataFrame, idCol: String, vecCol: String, n: Int): DataFrame =
@@ -142,7 +121,7 @@ object Ann {
     * pass + one per-dimension mean (posexplode + groupBy — partial
     * aggregation, k*dim tiny result). Only the k*dim centroid model
     * ever reaches the driver, exactly like an MLlib fit. Returns a
-    * (cent_id, cv) frame for `ivfTopKWith`. */
+    * (cent_id, cv) frame for `ivfTopK`. */
   def kmeansCentroids(
       corpus: DataFrame,
       idCol: String,
@@ -167,10 +146,10 @@ object Ann {
       val centsDf = cents.toDF("cent_id", "cv")
       // argmax as max_by partial agg (v rides along in the struct;
       // it is constant per id) — same no-N-x-C-shuffle shape as
-      // ivfTopKWith's assignment
+      // assignToCentroids
       val assigned = c.crossJoin(broadcast(centsDf))
         .select(col("id"), col("cent_id"), col("v"),
-          // ROUNDED like ivfTopKWith's probe ranking: a near-tied
+          // ROUNDED like ivfTopK's probe ranking: a near-tied
           // vector must land in the same list at fit time and at
           // query time, or the fitted means describe a different
           // membership than the one probed
@@ -194,20 +173,6 @@ object Ann {
     } finally c.unpersist()
   }
 
-  /** IVF-flat over a supplied centroid frame (seed or k-means-fitted):
-    * assignment is one narrow pass against the broadcast centroids,
-    * probes touch nprobe/nCentroids of the corpus. */
-  def ivfTopKWith(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      cents: DataFrame,
-      nprobe: Int,
-      k: Int): DataFrame =
-    ivfTopKAssigned(corpus, queries, idCol, vecCol, cents,
-      assignToCentroids(corpus, idCol, vecCol, cents), nprobe, k)
-
   /** The IVF list assignment: argmax cosine (cent_id tie-break) as a
     * max_by PARTIAL aggregation — the exchange carries ~N pre-combined
     * rows instead of the N x |centroids| cross frame a row_number
@@ -229,19 +194,27 @@ object Ann {
       .groupBy(col("id"))
       .agg(max_by(col("cent_id"), struct(col("ccos"), negate(col("cent_id")))).as("cent_id"))
 
-  /** IVF probe+rank over a PRECOMPUTED (id, cent_id) assignment frame —
-    * the query-side half of ivfTopKWith, and the entry point for the
-    * persisted artifact path where assignment was paid at write time. */
-  def ivfTopKAssigned(
+  /** IVF-flat: queries probe only the `nprobe` lists whose centroid
+    * is nearest (round-4 cosine, cent_id ascending on ties), and the
+    * probed lists' vectors rank by exact cosine. `cents` is the
+    * quantizer's (cent_id, cv) frame — `seedCentroids`, `kmeansCentroids`
+    * or a persisted one — and `assign` the (id, cent_id) list
+    * membership: the persisted assignments, whose cost was paid at
+    * write time, or by default one narrow `assignToCentroids` pass over
+    * the corpus against the broadcast centroids. At 100 TB the
+    * assignment is the partitioning: each inverted list is a shuffle
+    * partition and a probe touches nprobe/nCentroids of the corpus. */
+  def ivfTopK(
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
       vecCol: String,
       cents: DataFrame,
-      assign: DataFrame,
       nprobe: Int,
-      k: Int): DataFrame = {
-    requireBoundedQueries(queries, "ivfTopKWith")
+      k: Int,
+      assign: Option[DataFrame] = None): DataFrame = {
+    requireBoundedQueries(queries, "ivfTopK")
+    val members = assign.getOrElse(assignToCentroids(corpus, idCol, vecCol, cents))
     val c = corpus.select(
       col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
@@ -258,7 +231,7 @@ object Ann {
       .select(col("query_id"), col("cent_id"))
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("id").asc)
-    probes.join(assign, "cent_id")
+    probes.join(members, "cent_id")
       .where(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"))
       .join(c, "id")
@@ -270,15 +243,14 @@ object Ann {
       .orderBy(col("query_id").asc, col("rank").asc)
   }
 
-  /** IVF over the PERSISTED vector index (graft.index.vectors,
-    * graft.index.IndexArtifacts): fresh artifacts supply the quantizer
-    * centroids AND the per-doc list assignments, so query-time cost is
-    * the probe+rank only — independent of fit/assignment cost, which
-    * was paid once at write time and amortizes across queries exactly
-    * like ES's HNSW graph build. Stale or missing artifacts fall back
-    * to the fit-per-query seed form with `nCentroids` centroids (the
-    * same quantizer the default artifact build uses, so both regimes
-    * return identical rows). */
+  /** IVF over the PERSISTED vector index (`graft.index.vectors`): a
+    * fresh artifact supplies the quantizer centroids AND the per-doc
+    * list assignments, so query-time cost is the probe+rank only — the
+    * fit and assignment were paid once at write time and amortize
+    * across queries like ES's HNSW graph build. A stale or missing
+    * artifact falls back to the fit-per-query seed form with
+    * `nCentroids` centroids (the quantizer the default artifact build
+    * uses, so both regimes return identical rows). */
   def ivfTopKIndexed(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String,
@@ -289,13 +261,14 @@ object Ann {
       nprobe: Int,
       k: Int,
       fmt: String = "parquet"): DataFrame = {
-    val corpus = spark.read.format(fmt).load(indexPath)
-    graft.index.IndexArtifacts.loadIvf(
-      spark, indexPath, vecCol, expectIdCol = Some(idCol)) match {
-      case Some((cents, assign)) =>
-        ivfTopKAssigned(corpus, queries, idCol, vecCol, cents, assign, nprobe, k)
+    val corpus = IndexArtifacts.read(spark, indexPath, fmt)
+    IndexArtifacts.load(spark, ArtifactKind.Ivf, indexPath, vecCol, Some(idCol)) match {
+      case Some(a) =>
+        ivfTopK(corpus, queries, idCol, vecCol, a.state.cents, nprobe, k,
+          Some(a.table("assignments")))
       case None =>
-        ivfTopK(corpus, queries, idCol, vecCol, nCentroids, nprobe, k)
+        ivfTopK(corpus, queries, idCol, vecCol,
+          seedCentroids(corpus, idCol, vecCol, nCentroids), nprobe, k)
     }
   }
 
@@ -524,26 +497,20 @@ object Ann {
       .orderBy(col("query_id").asc, col("rank").asc)
   }
 
-  /** Persist the per-partition NSW graphs as an index artifact:
-    * (graph_id, idx, id, vec, neighbors) rows under
-    * `_graft_vectors/<vecCol>_hnsw/graph`, the write-side twin of
-    * hnswTopK's in-task build — ES builds its HNSW at index time for
-    * exactly this reason. Vectors store UNIT-normalized (what beam
-    * search dots against). One corpus pass; the graph layout freezes,
-    * so indexed queries are deterministic across runs (the per-query
-    * build's layout depends on partition order instead). */
-  def buildHnsw(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
+  /** The per-partition NSW graphs of a corpus as (graph_id, idx, id,
+    * vec, neighbors) rows — the table `graft.index.ArtifactKind.Hnsw`
+    * persists, the write-side twin of hnswTopK's in-task build. One
+    * corpus pass; vectors are stored UNIT-normalized (what beam search
+    * dots against). */
+  def nswGraphs(
+      corpus: DataFrame,
       idCol: String,
       vecCol: String,
       m: Int = 8,
-      efConstruction: Int = 64,
-      fmt: String = "parquet"): Unit = {
+      efConstruction: Int = 64): DataFrame = {
+    val spark = corpus.sparkSession
     import spark.implicits._
-    val dir = graft.index.IndexArtifacts.vectorsDir(indexPath, vecCol + "_hnsw")
-    spark.read.format(fmt).load(indexPath)
-      .where(col(vecCol).isNotNull)
+    corpus
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
@@ -554,9 +521,6 @@ object Ann {
         }
       }
       .toDF("graph_id", "idx", "id", "vec", "neighbors")
-      .write.mode("overwrite").parquet(s"$dir/graph")
-    graft.index.IndexArtifacts.writeVectorsMeta(
-      spark, indexPath, vecCol + "_hnsw", idCol)
   }
 
   /** Query the PERSISTED graphs: each stored graph reloads inside one
@@ -576,11 +540,9 @@ object Ann {
       fmt: String = "parquet"): DataFrame = {
     import spark.implicits._
     requireBoundedQueries(queries, "hnswTopKIndexed")
-    val dir = graft.index.IndexArtifacts.vectorsDir(indexPath, vecCol + "_hnsw")
-    if (!graft.index.IndexArtifacts.vectorsMetaFresh(
-        spark, indexPath, vecCol + "_hnsw", expectIdCol = Some(idCol)))
-      return hnswTopK(spark.read.format(fmt).load(indexPath),
-        queries, idCol, vecCol, k)
+    val art = IndexArtifacts.load(spark, ArtifactKind.Hnsw, indexPath, vecCol, Some(idCol))
+    if (art.isEmpty)
+      return hnswTopK(IndexArtifacts.read(spark, indexPath, fmt), queries, idCol, vecCol, k)
     val qs = queries
       .where(col(vecCol).isNotNull)
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
@@ -592,7 +554,7 @@ object Ann {
     // no exchange-side sort: the per-graph rebuild below sorts by idx
     // in memory anyway, so a sortWithinPartitions here would be pure
     // wasted shuffle work
-    val hits = spark.read.parquet(s"$dir/graph")
+    val hits = art.get.table("graph")
       .repartition(col("graph_id"))
       .as[(Int, Int, Long, Array[Double], Array[Int])]
       .mapPartitions { rows =>
@@ -757,7 +719,7 @@ object Ann {
         JsonMethods.compact(JsonMethods.render(f)), idField))
       case None => corpus
     }
-    // r16: `"window": "auto"` — the Scala API's rule-sized auto
+    // `"window": "auto"` — the Scala API's rule-sized auto
     // window, reachable through the JSON front door (body knn, dsl
     // knn-in-bool, retriever knn legs all land here). GRAFT-SPECIFIC
     // EXTENSION: the upstream knn DSL defines only num_candidates and
@@ -770,7 +732,7 @@ object Ann {
     // the 16-list stage must see at least 1/nLists of the corpus as
     // candidates or a probed list cannot cover the query's true
     // neighborhood, and the 16k floor keeps the derived nprobe at or
-    // above the sqrt(nLists) spread floor (the r17 nprobe rail: a
+    // above the sqrt(nLists) spread floor (the nprobe rail: a
     // balanced quantizer spreads the neighborhood across ~sqrt(nLists)
     // lists); past the exhaustive threshold this escalates to the
     // exact path — the rail against the silent recall cliff.
@@ -788,9 +750,8 @@ object Ann {
     val numCandidates =
       if (windowAuto) {
         val n = filtered.where(col(field).isNotNull).count()
-        // 16k = 4·k·nprobeSpreadFloor(16): auto must clear the r17
-        // nprobe spread rail, not just the mass rule (16k subsumes
-        // the old 10k budget floor)
+        // 16k = 4·k·nprobeSpreadFloor(16): auto must clear the nprobe
+        // spread rail, not just the mass rule
         math.min(math.max(16L * k, (n + 15) / 16), Int.MaxValue.toLong).toInt
       } else root.get("num_candidates").collect {
         case JInt(i) => i.toInt
@@ -814,11 +775,11 @@ object Ann {
         // approximate stage: 16-list IVF; num_candidates maps to the
         // probe count (more candidates = more lists scanned). Seed
         // centroids are the first 16 vectors of the FILTERED corpus
-        // (ivfTopK's `id < n` seeding could come up empty after a
-        // selective pre-filter — e.g. a label predicate that excludes
-        // every low id).
+        // (an `id < n` seeding could come up empty after a selective
+        // pre-filter — e.g. a label predicate that excludes every low
+        // id).
         val nprobe = math.max(1, math.min(16, numCandidates / math.max(1, 4 * k)))
-        // r17 nprobe rail on the body leg: num_candidates is the
+        // the nprobe rail on the body leg: num_candidates is the
         // caller's explicit cost knob (never resized — ES semantics),
         // but an under-spread derived probe count is the measured
         // silent-recall regime, so it warns (auto mode's 16k floor
@@ -831,7 +792,7 @@ object Ann {
             col(field).cast("array<double>").as("cv"))
           .orderBy(col("cent_src_id")).limit(16)
           .select(col("cent_src_id").as("cent_id"), col("cv"))
-        ivfTopKWith(filtered, queries, idCol, field, cents, nprobe = nprobe, k = k)
+        ivfTopK(filtered, queries, idCol, field, cents, nprobe = nprobe, k = k)
       }
     // ES 8.8 `similarity`: a minimum-cosine cutoff applied to the
     // top-k window (never a corpus-wide score — the window is already
@@ -919,9 +880,9 @@ object Ann {
       k: Int,
       oversample: Int,
       fmt: String = "parquet"): Option[DataFrame] =
-    IndexArtifacts.loadPacked(spark, codec, indexPath, vecCol, Some(idCol)).map(packed =>
-      packedRescore(IndexArtifacts.liveVectors(spark, indexPath, vecCol, fmt),
-        idCol, vecCol, packed, codec, queryVec, k, oversample))
+    IndexArtifacts.load(spark, ArtifactKind.Packed(codec), indexPath, vecCol, Some(idCol), fmt = fmt)
+      .map(a => packedRescore(IndexArtifacts.liveVectors(spark, indexPath, vecCol, fmt),
+        idCol, vecCol, a.table("packed"), codec, queryVec, k, oversample))
 
   private def packedRescore(
       live: DataFrame, idCol: String, vecCol: String, packed: DataFrame,
@@ -1180,17 +1141,16 @@ object Ann {
     * (probed mass and the sqrt(nLists) spread floor). */
   @volatile var lastNprobeWarning: Option[String] = None
 
-  /** The probe count the last IVFADC call actually ran with (spec +
-    * ledger hook — what the auto rail resolved, or the explicit
-    * value). */
+  /** The probe count the last IVFADC call actually ran with (spec
+    * hook — what the auto rail resolved, or the explicit value). */
   @volatile var lastNprobeResolved: Option[Int] = None
 
-  /** The recall-ledger sizing rule, as an API-level guard: the
-    * coarse ADC window (k·oversample) must cover at least 1/(m·k) of
-    * the corpus. The ledger's measured cliff — 4x16 codes at 50k
-    * vectors / window 400 reads 1-2/10 recall while 8x64 at the same
-    * window reads 10/10 — sits exactly on this line: 50k/400 = 125 is
-    * over 4·16 = 64 and under 8·64 = 512. Returns the warning text
+  /** The PQ window sizing rule, as an API-level guard: the coarse ADC
+    * window (k·oversample) must cover at least 1/(m·k) of the corpus.
+    * The measured recall cliff — 4x16 codes at 50k vectors / window
+    * 400 read 1-2/10 recall while 8x64 at the same window read 10/10 —
+    * sits exactly on this line: 50k/400 = 125 is over 4·16 = 64 and
+    * under 8·64 = 512. Returns the warning text
     * when the window is under-sized for the corpus at this
     * resolution; raising oversample OR m·k clears it. */
   def pqSizingWarning(
@@ -1200,8 +1160,8 @@ object Ann {
       Some(s"PQ coarse window ${k.toLong * oversample} (k=$k x oversample=$oversample) " +
         s"covers under 1/(m*k) = 1/${m * codebookSize} of the $n corpus at " +
         s"m=$m k=$codebookSize — the measured regime where recall collapses to 1-2/10 " +
-        "(r14 ledger). Raise oversample toward corpus/window <= m*k, or raise the " +
-        "m x k resolution.")
+        "(50k vectors, window 400, 4x16 codes). Raise oversample toward " +
+        "corpus/window <= m*k, or raise the m x k resolution.")
     else None
 
   /** Coarse window k·oversample as the Int `limit` needs, computed in
@@ -1234,7 +1194,7 @@ object Ann {
 
   /** The window rule on an EXACTLY-KNOWN candidate mass — the SINGLE
     * rule site: the frame form below delegates here, and the IVFADC
-    * entry points call it directly because the per-list size
+    * body calls it directly because the per-list size
     * aggregation already gives them the probed mass exactly (no
     * second candidate scan). Auto (oversample = 0) sizes window =
     * mass/(m·ck) — the measured prescription, floor 4; explicit
@@ -1256,11 +1216,10 @@ object Ann {
     }
   }
 
-  /** The window rule + sizing guard, shared by ALL FOUR quantized
-    * entry points (pqTopK / pqTopKIndexed / ivfAdcTopK /
-    * ivfAdcTopKIndexed) so a rule change can never reopen a
-    * guard hole by missing one copy — the rule itself lives in
-    * `resolveWindowFromMass`; this form prices a candidate FRAME
+  /** The window rule + sizing guard of the PQ entry points (pqTopK /
+    * pqTopKIndexed); the rule itself lives in `resolveWindowFromMass`,
+    * which the IVFADC body calls too, so a rule change cannot reopen a
+    * guard hole by missing one copy. This form prices a candidate FRAME
     * (live vectors or stored codes). Auto (oversample = 0) pays one
     * full count of it; explicit windows pay only the bounded
     * limit(threshold+1) scan that decides over/under. */
@@ -1274,8 +1233,8 @@ object Ann {
       val threshold = sizingThreshold(k, oversample.toLong, m, ck)
       val over = candidates.limit((threshold + 1).toInt).count() > threshold
       // the bounded scan yields a boolean, not a count: feed the rule
-      // core a mass just over/at the threshold so the warning decision
-      // (mass > threshold) is identical to the old inline form
+      // core a mass just over/at the threshold, which decides the
+      // warning (mass > threshold) the same way
       resolveWindowFromMass(if (over) threshold + 1 else threshold,
         k, oversample, m, ck, s">$threshold-$corpusLabel")
     }
@@ -1305,8 +1264,8 @@ object Ann {
   }
 
   /** The nprobe rail — the same silent-recall-cliff guard the
-    * window rule is, one knob over, shared by BOTH IVFADC
-    * entry points. `listSizes` is the per-list assignment mass (ONE
+    * window rule is, one knob over, run by the IVFADC body.
+    * `listSizes` is the per-list assignment mass (ONE
     * narrow partial aggregation — nLists rows reach the driver);
     * `probeOrder` is ALL cent_ids in probe order (query cosine desc,
     * cent_id asc).
@@ -1420,14 +1379,14 @@ object Ann {
       k: Int,
       oversample: Int,
       fmt: String = "parquet"): Option[DataFrame] =
-    IndexArtifacts.loadPq(spark, indexPath, vecCol, Some(idCol))
-      .map { case ((m, ck), cb, codes) =>
-        // window rule + guard off the stored codes count — the
-        // persisted form is the one that meets real corpus sizes
-        val os: Long = resolveWindow(codes, k, oversample, m, ck, "vector")
-        pqRescore(IndexArtifacts.liveVectors(spark, indexPath, vecCol, fmt), idCol, vecCol,
-          codes, queryVec, cb, m, ck, coarseWindow(k, os), k)
-      }
+    IndexArtifacts.load(spark, ArtifactKind.Pq, indexPath, vecCol, Some(idCol)).map { a =>
+      val (p, codes) = (a.state.p, a.table("codes"))
+      // window rule + guard off the stored codes count — the
+      // persisted form is the one that meets real corpus sizes
+      val os: Long = resolveWindow(codes, k, oversample, p.m, p.k, "vector")
+      pqRescore(IndexArtifacts.liveVectors(spark, indexPath, vecCol, fmt), idCol, vecCol,
+        codes, queryVec, a.state.cb, p.m, p.k, coarseWindow(k, os), k)
+    }
 
   /** Per-row coarse-list assignment as ONE declarative expression
     * over the DRIVER-side centroids (they are already collected for
@@ -1476,7 +1435,9 @@ object Ann {
     * both already oracle-mirrored, so the composition is too.
     * nprobe = 0 resolves by the auto rule (`resolveNprobe`);
     * an explicit nprobe publishes `lastNprobeWarning` when the rail
-    * flags it. */
+    * flags it. This form fits the quantizers per query; the list sizes
+    * come from a map-only assignment expression, and only the probed
+    * lists are PQ-encoded. */
   def ivfAdcTopK(
       corpus: DataFrame,
       idCol: String,
@@ -1495,48 +1456,22 @@ object Ann {
     require(oversample >= 0, s"bad oversample $oversample (0 = auto rule-sized)")
     // coarse quantizer: caller-trained (kmeansCentroids — the
     // balanced-list production fit) or the deterministic seed default
-    val centsDf = coarseCents.getOrElse(seedCentroids(corpus, idCol, vecCol, nCentroids))
-    // probe selection on the driver: nCentroids is tiny by contract
-    val cents = centsDf.select(col("cent_id"), col("cv")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val cents = collectCents(
+      coarseCents.getOrElse(seedCentroids(corpus, idCol, vecCol, nCentroids)))
     require(cents.length == nCentroids,
       s"corpus has only ${cents.length} centroids, need $nCentroids")
-    val probeOrder = probeOrderOf(cents, queryVec)
     val live = corpus.where(col(vecCol).isNotNull)
-    val vcast = col(vecCol).cast("array<double>")
-    // per-list mass: one narrow partial aggregation over the map-only
-    // assignment expression — nCentroids rows reach the driver. This
-    // feeds BOTH rails (nprobe and window) with exact masses, so the
-    // window guard needs no second candidate scan and nothing is
-    // cached across jobs
-    val sizes = live
-      .select(assignedCentCol(vcast, cents).as("cent_id"))
-      .groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    // the nprobe rail — auto (0) walks probed mass to the window
-    // rule's threshold with the sqrt(nLists) spread floor; explicit
-    // nprobe warns when under-massed/under-spread (measured cliff:
-    // kmeans coarse 0/10 at nprobe 1-2, 10/10 at 4)
-    val np = resolveNprobe(sizes, probeOrder, nprobe, k, oversample, m, codebookSize)
-    val probed = probeOrder.take(np)
-    val probedMass = probed.iterator.map(sizes.getOrElse(_, 0L)).sum
-    // window rule + guard: the candidate corpus is the PROBED
-    // lists' rows — mass known exactly from the size aggregation
-    val os: Long = resolveWindowFromMass(
-      probedMass, k, oversample, m, codebookSize, s"$probedMass-candidate probed")
-    // codebooks: caller-trained (pqFitCodebooks / pqFitCodebooksDist),
-    // or the deterministic sample baseline the oracle replays
-    val cb = codebooks.getOrElse(
-      pqSampleCodebooks(corpus, idCol, vecCol, m, codebookSize))
-    require(cb.length == m * codebookSize * (queryVec.length / m),
-      s"codebook ${cb.length} != $m x $codebookSize x ${queryVec.length / m}")
-    // membership is a map-side FILTER (the assignment expression
-    // against the probed id set), so only nprobe/nCentroids of the
-    // corpus is ever PQ-encoded, never the whole corpus
-    pqRescore(live, idCol, vecCol,
-      pqEncodeFrame(live.where(assignedCentCol(vcast, cents).isin(probed: _*)),
-        idCol, vecCol, cb, m, codebookSize),
-      queryVec, cb, m, codebookSize, coarseWindow(k, os), k)
+    val member = assignedCentCol(col(vecCol).cast("array<double>"), cents)
+    ivfAdc(live, idCol, vecCol, queryVec, k, oversample, nprobe, m, codebookSize, cents,
+      live.select(member.as("cent_id")),
+      // caller-trained (pqFitCodebooks / pqFitCodebooksDist), or the
+      // deterministic sample baseline the oracle replays
+      codebooks.getOrElse(pqSampleCodebooks(corpus, idCol, vecCol, m, codebookSize)),
+      // membership is a map-side FILTER (the assignment expression
+      // against the probed id set), so only nprobe/nCentroids of the
+      // corpus is ever PQ-encoded, never the whole corpus
+      (probed, cb) => pqEncodeFrame(live.where(member.isin(probed: _*)),
+        idCol, vecCol, cb, m, codebookSize))
   }
 
   /** IVFADC over the PERSISTED artifacts — the production shape: the
@@ -1544,12 +1479,12 @@ object Ann {
     * at write time via `graft.index.vectors` + `graft.index.pq`); it
     * reads nprobe/nCentroids of the stored assignment rows, semi-joins
     * the stored m-byte codes, ADC-ranks, and rescores O(k·oversample)
-    * raw rows. The on-the-fly `ivfAdcTopK` re-derives both per query
-    * (11.9 s vs 3.4 s plain PQ at the 10x probe — the fit dominates),
-    * which is exactly why IVFADC is an INDEX structure. Requires both
-    * artifacts fresh, else None. Probe selection mirrors ivfTopK's
-    * round-4 cosine contract, so results are answer-equal to the
-    * on-the-fly form while the seed-id sets are unchanged. */
+    * raw rows. The on-the-fly `ivfAdcTopK` re-derives both per query,
+    * and the fit dominates its cost, which is why IVFADC is an INDEX
+    * structure. Requires both artifacts fresh, else None. Probe
+    * selection mirrors ivfTopK's round-4 cosine contract, so results
+    * are answer-equal to the on-the-fly form while the seed-id sets
+    * are unchanged. */
   def ivfAdcTopKIndexed(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String,
@@ -1561,31 +1496,57 @@ object Ann {
       nprobe: Int,
       fmt: String = "parquet"): Option[DataFrame] =
     for {
-      (centsDf, assignments) <- IndexArtifacts.loadIvf(spark, indexPath, vecCol, Some(idCol))
-      ((m, ck), cb, codes) <- IndexArtifacts.loadPq(spark, indexPath, vecCol, Some(idCol))
+      ivf <- IndexArtifacts.load(spark, ArtifactKind.Ivf, indexPath, vecCol, Some(idCol))
+      pq <- IndexArtifacts.load(spark, ArtifactKind.Pq, indexPath, vecCol, Some(idCol))
     } yield {
-      val cents = centsDf.select(col("cent_id"), col("cv")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      val cents = collectCents(ivf.state.cents)
       require(nprobe >= 0 && nprobe <= cents.length,
         s"nprobe $nprobe of ${cents.length} stored centroids (0 = auto rule-sized)")
-      val probeOrder = probeOrderOf(cents, queryVec)
-      // per-list mass from the STORED assignment table — one narrow
-      // partial aggregation, nLists rows to the driver; feeds both
-      // the nprobe rail and the window rule with exact masses
-      val sizes = assignments
-        .groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val np = resolveNprobe(sizes, probeOrder, nprobe, k, oversample, m, ck)
-      val probed = probeOrder.take(np)
-      val probedMass = probed.iterator.map(sizes.getOrElse(_, 0L)).sum
-      val member = assignments.where(col("cent_id").isin(probed: _*)).select(col("id"))
-      // the same guard + auto as the on-the-fly IVFADC form; the
-      // probed mass is exact from the size aggregation, so the rule
-      // pays no candidate scan at all here
-      val os: Long = resolveWindowFromMass(
-        probedMass, k, oversample, m, ck, s"$probedMass-candidate probed")
-      pqRescore(IndexArtifacts.liveVectors(spark, indexPath, vecCol, fmt), idCol, vecCol,
-        codes.join(member, Seq("id"), "left_semi"),
-        queryVec, cb, m, ck, coarseWindow(k, os), k)
+      val assignments = ivf.table("assignments")
+      ivfAdc(IndexArtifacts.liveVectors(spark, indexPath, vecCol, fmt), idCol, vecCol,
+        queryVec, k, oversample, nprobe, pq.state.p.m, pq.state.p.k, cents,
+        assignments.select(col("cent_id")), pq.state.cb,
+        (probed, _) => pq.table("codes").join(
+          assignments.where(col("cent_id").isin(probed: _*)).select(col("id")),
+          Seq("id"), "left_semi"))
     }
+
+  /** A (cent_id, cv) quantizer on the driver: nCentroids is tiny by
+    * contract. */
+  private def collectCents(cents: DataFrame): Array[(Long, Array[Double])] =
+    cents.select(col("cent_id"), col("cv")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+
+  /** The one IVFADC body: probe order off the driver-side centroids,
+    * the per-list mass of `lists` (one `cent_id` row per covered doc —
+    * one narrow partial aggregation, nLists rows to the driver), the
+    * nprobe rail and the window rule on those exact masses (no second
+    * candidate scan), then the ADC rank of the probed lists' codes
+    * under the codebook `cb` (evaluated once, after the rails) and the
+    * exact rescore of the window. `probedCodes(probed, cb)` is the
+    * (id, pq) frame of the docs in the `probed` lists. */
+  private def ivfAdc(
+      live: DataFrame, idCol: String, vecCol: String, queryVec: Seq[Double],
+      k: Int, oversample: Int, nprobe: Int, m: Int, ck: Int,
+      cents: Array[(Long, Array[Double])], lists: DataFrame, cb: => Array[Double],
+      probedCodes: (Seq[Long], Array[Double]) => DataFrame): DataFrame = {
+    val probeOrder = probeOrderOf(cents, queryVec)
+    val sizes = lists.groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    // the nprobe rail — auto (0) walks probed mass to the window
+    // rule's threshold with the sqrt(nLists) spread floor; explicit
+    // nprobe warns when under-massed/under-spread
+    val np = resolveNprobe(sizes, probeOrder, nprobe, k, oversample, m, ck)
+    val probed = probeOrder.take(np)
+    val probedMass = probed.iterator.map(sizes.getOrElse(_, 0L)).sum
+    // window rule + guard: the candidate corpus is the PROBED lists'
+    // rows, whose mass the size aggregation gives exactly
+    val os: Long = resolveWindowFromMass(
+      probedMass, k, oversample, m, ck, s"$probedMass-candidate probed")
+    val book = cb
+    require(book.length == m * ck * (queryVec.length / m),
+      s"codebook ${book.length} != $m x $ck x ${queryVec.length / m}")
+    pqRescore(live, idCol, vecCol, probedCodes(probed, book),
+      queryVec, book, m, ck, coarseWindow(k, os), k)
+  }
 }

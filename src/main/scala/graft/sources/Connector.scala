@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.dsl.EsQuery
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -112,11 +112,11 @@ object Connector {
         // one analysis load per field per request: the match rewrite
         // and the metadata scoring share the meta read and the frames
         val analysisLoads =
-          scala.collection.mutable.Map.empty[String, Option[graft.index.IndexArtifacts.Analysis]]
-        def analysisOf(f: String): Option[graft.index.IndexArtifacts.Analysis] =
+          scala.collection.mutable.Map.empty[String, Option[graft.search.Search.AnalysisArtifact]]
+        def analysisOf(f: String): Option[graft.search.Search.AnalysisArtifact] =
           analysisLoads.getOrElseUpdate(f, artifactIndexPath.flatMap(p =>
-            graft.index.IndexArtifacts.loadAnalysis(
-              spark, p, f, expectIdCol = Some(idField), knownFp = artifactFp)))
+            graft.index.IndexArtifacts.load(spark, graft.index.ArtifactKind.Analysis,
+              p, f, expectIdCol = Some(idField), knownFp = artifactFp)))
         // allow_no_indices=true (the ES default for wildcard
         // expressions): a pattern matching nothing yields zero hits,
         // not an error. With no matched index there is no schema, so
@@ -172,9 +172,9 @@ object Connector {
             // non-null (a null id never joins; a duplicate id
             // over-matches sibling rows)
             a <- analysisOf(f)
-            if a.idsClean
+            if a.state.idsClean
           } yield df0.join(
-            a.postings.where(col("term").isin(terms: _*))
+            a.table("postings").where(col("term").isin(terms: _*))
               .select(col("id").as("__graft_mid")),
             col(idField) === col("__graft_mid"), "left_semi")
         val df1 =
@@ -526,24 +526,18 @@ object Connector {
       case None => included
     }
     val op = cfg.getOrElse("graft.write.operation", "index")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // crash recovery: a swap that died between "rename live aside" and
     // "rename tmp in" leaves the index at path_graft_old. Restore it
     // before looking at `exists`, so a sink replay after a crash sees
     // the full index instead of silently rebuilding from one batch.
-    val livePath = new Path(path)
     recoverSwap(spark, path)
-    val exists = fs.exists(livePath)
+    val exists = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(new Path(path))
     // es.input.json analog: the index can be stored as json (or orc)
     // instead of parquet — same bulk semantics over any columnar/row fmt
     val fmt = cfg.getOrElse("graft.format", "parquet")
 
-    // es.mapping.routing analog: co-locate docs by the routing column
-    // (directory partitioning, so routed reads prune whole partitions)
-    def writer(df: DataFrame) = cfg.get("graft.mapping.routing") match {
-      case Some(r) => applyIndexSort(applyZOrder(df, cfg), cfg).write.format(fmt).partitionBy(r)
-      case None => applyIndexSort(applyZOrder(df, cfg), cfg).write.format(fmt)
-    }
+    def writer(df: DataFrame) = writerOf(df, cfg)
     def reader = spark.read.format(fmt)
 
     op match {
@@ -598,23 +592,15 @@ object Connector {
             .filterNot(existing.columns.contains).map { c =>
               when(applies, incoming(c)).otherwise(lit(null)).as(c)
             }
-          val merged = joined.select((mergedCols ++ newCols).toIndexedSeq: _*)
-          val tmp = new Path(path + "_graft_tmp")
-          if (fs.exists(tmp)) fs.delete(tmp, true)
-          writer(merged).mode("overwrite").save(tmp.toString)
-          swapIn(fs, livePath, tmp)
+          writeSwapped(spark, path, joined.select((mergedCols ++ newCols).toIndexedSeq: _*), cfg)
         } // no index -> nothing to update (ES would error per-doc)
       case "delete" =>
         // ES bulk `delete`: remove the shaped's ids from the index
         val idCol = cfg.getOrElse("graft.mapping.id",
           throw new IllegalArgumentException("delete write needs graft.mapping.id"))
         if (exists) {
-          val remaining = reader.load(path)
-            .join(shaped.select(col(idCol)), Seq(idCol), "left_anti")
-          val tmp = new Path(path + "_graft_tmp")
-          if (fs.exists(tmp)) fs.delete(tmp, true)
-          writer(remaining).mode("overwrite").save(tmp.toString)
-          swapIn(fs, livePath, tmp)
+          writeSwapped(spark, path,
+            reader.load(path).join(shaped.select(col(idCol)), Seq(idCol), "left_anti"), cfg)
         } // no index -> nothing to delete (ES reports not_found per doc)
       case "index" | "upsert" =>
         val idCol = cfg.getOrElse("graft.mapping.id",
@@ -639,10 +625,7 @@ object Connector {
             case None => resolve(unioned, idCol, col("_src"), col("_src"))
           }
           // two-phase swap: can't overwrite a path being read
-          val tmp = new Path(path + "_graft_tmp")
-          if (fs.exists(tmp)) fs.delete(tmp, true)
-          writer(merged.drop("_src")).mode("overwrite").save(tmp.toString)
-          swapIn(fs, livePath, tmp)
+          writeSwapped(spark, path, merged.drop("_src"), cfg)
         }
       case other =>
         throw new IllegalArgumentException(s"unknown graft.write.operation: $other")
@@ -656,21 +639,17 @@ object Connector {
     // incremental indexing an ES server does per bulk request. Kind
     // parameters are `graft.index.<kind>.<key>` options:
     //   minhash.hashes = 32, minhash.bands = 8;
-    //   vectors.centroids = 16, vectors.fit = seed | kmeans | hnsw;
+    //   vectors.centroids = 16, vectors.fit = seed | kmeans | hnsw
+    //   (hnsw selects the graph kind, which rebuilds on every write);
     //   pq.m = 4, pq.k = 16, pq.fit = sample | lloyd | lloyd-dist,
     //   pq.fit.sample_n = 65536, pq.fit.iters = 5.
     graft.index.ArtifactKind.all.foreach { kind =>
-      cfg.get(kind.option).foreach { spec =>
+      val cols = kind.columns(cfg)
+      if (cols.nonEmpty) {
         val idCol = cfg.getOrElse("graft.mapping.id", throw new IllegalArgumentException(
           s"${kind.option} needs graft.mapping.id (the artifact doc id)"))
-        spec.split(",").map(_.trim).filter(_.nonEmpty).foreach { c =>
-          // graph inserts are order-dependent: an HNSW graph rebuilds
-          // on every write (one corpus pass, the cost a segment merge
-          // pays in ES)
-          if (kind == graft.index.ArtifactKind.Ivf && cfg.get(s"${kind.option}.fit").contains("hnsw"))
-            graft.sim.Ann.buildHnsw(spark, path, idCol, c, fmt = fmt)
-          else graft.index.IndexArtifacts.maintain(spark, kind, path, idCol, c, op == "append", cfg, fmt)
-        }
+        cols.foreach(c => graft.index.IndexArtifacts.maintain(
+          spark, kind, path, idCol, c, op == "append", cfg, fmt))
       }
     }
   }
@@ -1288,16 +1267,21 @@ object Connector {
   private def writeSwapped(
       spark: SparkSession, path: String, df: DataFrame,
       cfg: Map[String, String]): Unit = {
-    val fmt = cfg.getOrElse("graft.format", "parquet")
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + "_graft_tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    val w = cfg.get("graft.mapping.routing") match {
-      case Some(r) => applyIndexSort(applyZOrder(df, cfg), cfg).write.format(fmt).partitionBy(r)
-      case None => applyIndexSort(applyZOrder(df, cfg), cfg).write.format(fmt)
-    }
-    w.mode("overwrite").save(tmp.toString)
+    writerOf(df, cfg).mode("overwrite").save(tmp.toString)
     swapIn(fs, new Path(path), tmp)(spark)
+  }
+
+  /** The index's writer: `graft.format`, z-order and index sort, and
+    * `graft.mapping.routing` partitioning (es.mapping.routing analog:
+    * co-locate docs by the routing column, so routed reads prune whole
+    * partitions). */
+  private def writerOf(df: DataFrame, cfg: Map[String, String]): DataFrameWriter[Row] = {
+    val w = applyIndexSort(applyZOrder(df, cfg), cfg).write
+      .format(cfg.getOrElse("graft.format", "parquet"))
+    cfg.get("graft.mapping.routing").fold(w)(w.partitionBy(_))
   }
 
   /** `index.sort.field` analog (`graft.index.sort` = "col[,col...]",

@@ -446,7 +446,7 @@ object Warc {
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val names = fs.listStatus(dir).filter(_.isFile).map(_.getPath.getName)
       val dup = names.groupBy(n => n.stripSuffix(".gz").stripSuffix(".warc"))
-        .collect { case (b, vs) if vs.length > 1 => vs.mkString(" + ") }
+        .collect { case (_, vs) if vs.length > 1 => vs.mkString(" + ") }
       require(dup.isEmpty,
         s"sources normalize to the same paired WET name: ${dup.mkString("; ")}")
     }

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.util.Stages
 
@@ -147,7 +147,17 @@ object LinkGraph {
     *
     * Returns (host, rank) with ranks in micro-units. */
   def pageRankInt(edges: DataFrame, iters: Int = 3, dampNum: Long = 85,
-      dampDen: Long = 100, scale: Long = 1000000L): DataFrame = {
+      dampDen: Long = 100, scale: Long = 1000000L): DataFrame =
+    pageRankIntCapped(edges, iters, dampNum, dampDen, scale, DriverEdgeCap)
+
+  /** Edge rows at or under which PageRank runs driver-side: 2e5 edge
+    * rows is ~10 MB of driver memory. */
+  val DriverEdgeCap = 200000
+
+  /** `pageRankInt` under an explicit driver-regime edge cap (negative:
+    * always distributed). */
+  private[graft] def pageRankIntCapped(edges: DataFrame, iters: Int, dampNum: Long,
+      dampDen: Long, scale: Long, edgeCap: Int): DataFrame = {
     val spark = edges.sparkSession
     // materialize the edge frame once: it feeds outW, the fused edge
     // table AND the node set, and upstream of it sits the page-bytes
@@ -157,11 +167,9 @@ object LinkGraph {
       col("weight").cast("long").as("w")))
     val outW = e.groupBy(col("src_host").as("host"))
       .agg(sum(col("w")).as("outw"))
-    // r17: the iteration body used to re-join outW and re-derive the
-    // dangling set (a left_anti) EVERY round — 3 extra exchanges per
-    // iteration. Fuse the source's total out-weight into the edge
-    // table once, and carry an is-dangling flag inside the rank frame,
-    // so one round is exactly one join + one groupBy.
+    // the source's total out-weight is fused into the edge table once,
+    // and the rank frame carries an is-dangling flag, so one
+    // distributed round is exactly one join + one groupBy
     val e2 = Stages.truncate(
       e.join(outW.withColumnRenamed("host", "src_host"), Seq("src_host"))
         .repartition(col("src_host")))
@@ -172,58 +180,25 @@ object LinkGraph {
           Seq("host"), "left_outer")
         .select(col("host"), col("has_out").isNull.as("dangling")))
 
-    // r18 small-graph regime (the dedupClusters size-adaptive recipe):
-    // the distributed loop costs 2 actions + a localCheckpoint PER
-    // ROUND — right when the host graph is cluster-sized, pure fixed
-    // overhead when it fits in a driver array. Probe with a BOUNDED
-    // limit(cap+1) collect (<= cap rows back means we hold the WHOLE
-    // edge set — never an unbounded collect); below the cap, run the
-    // identical integer recurrence driver-side: same div floors, same
-    // long sums (addition order is irrelevant on exact integers), so
-    // the ranks are bit-identical to the distributed rounds. A 100 TB
-    // host graph blows the cap on the first probe and takes the
-    // distributed path below, unchanged. Cap is conf-able
-    // (graft.pagerank.driverEdgeCap); 2e5 edge rows is ~10 MB driver
-    // memory — Bloom-filter-build territory (§3.2), not "data work".
-    val edgeCap = spark.conf.getOption("graft.pagerank.driverEdgeCap")
-      .map(_.toInt).getOrElse(200000)
+    // size-adaptive regime: the distributed loop costs 2 actions + a
+    // localCheckpoint PER ROUND — right when the host graph is
+    // cluster-sized, pure fixed overhead when it fits in a driver
+    // array. A BOUNDED limit(cap+1) collect probes the edges (<= cap
+    // rows back means the driver holds the WHOLE edge set); below the
+    // cap, the node collect holds the endpoints of those edges — at
+    // most 2 x cap hosts — and the identical integer recurrence runs
+    // driver-side: same div floors, same long sums (addition order is
+    // irrelevant on exact integers), so the ranks are bit-identical to
+    // the distributed rounds.
     val probe = e2.select(col("src_host"), col("dst_host"), col("w"), col("outw"))
       .limit(edgeCap + 1).collect()
-    if (probe.length <= edgeCap) {
-      val nf = nodesF.select(col("host"), col("dangling")).collect()
-        .map(r => (r.getString(0), r.getBoolean(1)))
-      val n = nf.length.toLong
-      require(n > 0, "pageRankInt: empty graph")
-      require(scale / n >= 1000,
-        s"pageRankInt: scale $scale gives under 1000 micro-units per node " +
-          s"for $n nodes - raise scale (e.g. ${n * 100000L}) so integer " +
-          "floors can't starve the rank signal")
-      val base = (dampDen - dampNum) * scale / (dampDen * n)
-      val idx = nf.iterator.map(_._1).zipWithIndex.toMap
-      val dangling = nf.map(_._2)
-      val srcI = probe.map(r => idx(r.getString(0)))
-      val dstI = probe.map(r => idx(r.getString(1)))
-      val ws = probe.map(_.getLong(2))
-      val outw = probe.map(_.getLong(3))
-      var rank = Array.fill(nf.length)(scale / n)
-      for (_ <- 0 until iters) {
-        var dmass = 0L
-        var i = 0
-        while (i < rank.length) { if (dangling(i)) dmass += rank(i); i += 1 }
-        val fixed = base + dmass * dampNum / (dampDen * n)
-        val next = Array.fill(nf.length)(fixed)
-        var j = 0
-        while (j < srcI.length) {
-          next(dstI(j)) += rank(srcI(j)) * ws(j) * dampNum / (dampDen * outw(j))
-          j += 1
-        }
-        rank = next
-      }
-      import spark.implicits._
-      return nf.indices.map(i => (nf(i)._1, rank(i))).toDF("host", "rank")
-    }
-
-    val n = nodesF.count() // host-cardinality scalar: the one sizing count
+    val driverNodes =
+      if (probe.length <= edgeCap)
+        Some(nodesF.select(col("host"), col("dangling")).collect()
+          .map(r => (r.getString(0), r.getBoolean(1))))
+      else None
+    // host cardinality: the distributed regime's one sizing count
+    val n = driverNodes.fold(nodesF.count())(_.length.toLong)
     require(n > 0, "pageRankInt: empty graph")
     // integer ranks starve when a node's share of `scale` is a handful
     // of units (floors eat the whole signal): demand >= ~1000 units
@@ -235,27 +210,54 @@ object LinkGraph {
         s"for $n nodes - raise scale (e.g. ${n * 100000L}) so integer " +
         "floors can't starve the rank signal")
     val base = (dampDen - dampNum) * scale / (dampDen * n)
-    var ranks = nodesF.select(col("host"), col("dangling"),
-      lit(scale / n).as("rank"))
-    for (_ <- 0 until iters) {
-      // dangling mass: one 1-row aggregate over the truncated rank
-      // frame, returned as a driver scalar (no rank VALUES ever reach
-      // the driver — one long does); both operands nonnegative, so
-      // Scala / == SQL div
-      val dmass = ranks.where(col("dangling"))
-        .agg(coalesce(sum(col("rank")), lit(0L))).head().getLong(0)
-      val fixed = base + dmass * dampNum / (dampDen * n)
-      val contribs = ranks.join(e2, ranks("host") === e2("src_host"))
-        .select(e2("dst_host").as("host"),
-          expr(s"(rank * w * ${dampNum}L) div (${dampDen}L * outw)")
-            .as("contrib"))
-        .groupBy(col("host")).agg(sum(col("contrib")).as("cin"))
-      ranks = Stages.truncate(
-        ranks.select(col("host"), col("dangling"))
-          .join(contribs, Seq("host"), "left_outer")
-          .select(col("host"), col("dangling"),
-            (lit(fixed) + coalesce(col("cin"), lit(0L))).as("rank")))
+
+    driverNodes match {
+      case Some(nf) =>
+        val idx = nf.iterator.map(_._1).zipWithIndex.toMap
+        val dangling = nf.map(_._2)
+        val srcI = probe.map(r => idx(r.getString(0)))
+        val dstI = probe.map(r => idx(r.getString(1)))
+        val ws = probe.map(_.getLong(2))
+        val outw = probe.map(_.getLong(3))
+        var rank = Array.fill(nf.length)(scale / n)
+        for (_ <- 0 until iters) {
+          var dmass = 0L
+          var i = 0
+          while (i < rank.length) { if (dangling(i)) dmass += rank(i); i += 1 }
+          val fixed = base + dmass * dampNum / (dampDen * n)
+          val next = Array.fill(nf.length)(fixed)
+          var j = 0
+          while (j < srcI.length) {
+            next(dstI(j)) += rank(srcI(j)) * ws(j) * dampNum / (dampDen * outw(j))
+            j += 1
+          }
+          rank = next
+        }
+        import spark.implicits._
+        nf.indices.map(i => (nf(i)._1, rank(i))).toDF("host", "rank")
+      case None =>
+        var ranks = nodesF.select(col("host"), col("dangling"),
+          lit(scale / n).as("rank"))
+        for (_ <- 0 until iters) {
+          // dangling mass: one 1-row aggregate over the truncated rank
+          // frame, returned as a driver scalar (no rank VALUES ever
+          // reach the driver — one long does); both operands
+          // nonnegative, so Scala / == SQL div
+          val dmass = ranks.where(col("dangling"))
+            .agg(coalesce(sum(col("rank")), lit(0L))).head().getLong(0)
+          val fixed = base + dmass * dampNum / (dampDen * n)
+          val contribs = ranks.join(e2, ranks("host") === e2("src_host"))
+            .select(e2("dst_host").as("host"),
+              expr(s"(rank * w * ${dampNum}L) div (${dampDen}L * outw)")
+                .as("contrib"))
+            .groupBy(col("host")).agg(sum(col("contrib")).as("cin"))
+          ranks = Stages.truncate(
+            ranks.select(col("host"), col("dangling"))
+              .join(contribs, Seq("host"), "left_outer")
+              .select(col("host"), col("dangling"),
+                (lit(fixed) + coalesce(col("cin"), lit(0L))).as("rank")))
+        }
+        ranks.select(col("host"), col("rank"))
     }
-    ranks.select(col("host"), col("rank"))
   }
 }

@@ -1089,27 +1089,18 @@ object TextAnalysis {
     shardAssign(headMid, idCol, textCol, nShards)
   }
 
-  /** CCNet-style perplexity bucketing (Wenzek et al. 2020): per-doc
-    * LM score (here the unigram surprisal this module already
-    * computes), split into head/middle/tail THIRDS by the corpus-wide
-    * score terciles — the published recipe keeps `head` (lowest
-    * perplexity) and drops or down-weights `tail`. Tercile edges come
-    * from the distributed-exact percentile (one sort-selection over
-    * the N-row score frame, never a single-reducer merge); the bucket
-    * key is then map-side math, and the report is one n-bucket
-    * groupBy. Edges round to 4 dp so the cut is engine-portable. */
-  def ccnetBuckets(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    // the score frame computes twice (edge pass + bucket pass) — kept
-    // persist-free so no cache entry outlives the call; a caller
-    // running both passes at corpus scale truncates/persists `scored`
-    // itself and uses the scored-frame form below
-    ccnetBucketsScored(unigramSurprisalUnsorted(docs, idCol, textCol))
-
-  /** The scored-frame form: callers that already hold the surprisal
-    * frame — composed pipelines, or a standalone caller that
-    * Stages.truncate'd it — pay ONE corpus scan instead of the
-    * standalone form's two (the edge pass and the bucket pass both
-    * read `scored`, so a materialized frame serves both). */
+  /** CCNet-style perplexity bucketing (Wenzek et al. 2020) over a
+    * scored frame (a `surprisal` column — the per-doc unigram LM score
+    * `unigramSurprisal` computes): split into head/middle/tail THIRDS
+    * by the corpus-wide score terciles — the published recipe keeps
+    * `head` (lowest perplexity) and drops or down-weights `tail`.
+    * Tercile edges come from the distributed-exact percentile (one
+    * sort-selection over the N-row score frame, never a single-reducer
+    * merge); the bucket key is then map-side math, and the report is
+    * one n-bucket groupBy. Edges round to 4 dp so the cut is
+    * engine-portable. The edge pass and the bucket pass both read
+    * `scored`, so a caller that materialized it (a composed pipeline,
+    * or a `Stages.truncate`d frame) pays one corpus scan. */
   def ccnetBucketsScored(scored: DataFrame): DataFrame = {
     val edges = graft.agg.Aggs.percentilesExactDistributed(
       scored, "surprisal", Seq("e1" -> (1.0 / 3), "e2" -> (2.0 / 3))).head()

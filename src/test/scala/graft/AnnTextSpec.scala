@@ -38,7 +38,7 @@ class AnnTextSpec extends SparkSpec with SpecTempRoot {
     assert(cents.length == 8)
     assert(cents.forall(_._2.length == cents.head._2.length))
     // fitted centroids drive the same IVF probe path
-    val r = Ann.ivfTopKWith(emb, emb.where(col("vec_id") < 3), "vec_id", "embedding",
+    val r = Ann.ivfTopK(emb, emb.where(col("vec_id") < 3), "vec_id", "embedding",
       Ann.kmeansCentroids(emb, "vec_id", "embedding", 8, 2), nprobe = 3, k = 5)
       .as[(Long, Long, Double, Int)].collect()
     val byQuery = r.groupBy(_._1)

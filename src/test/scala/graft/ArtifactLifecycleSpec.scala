@@ -36,7 +36,7 @@ class ArtifactLifecycleSpec extends SparkSpec with SpecTempRoot {
 
   /** (kind, source column) of every artifact `opts` asks for. */
   private val artifacts: Seq[(ArtifactKind, String)] =
-    ArtifactKind.all.map(k => k -> opts(k.option))
+    ArtifactKind.all.flatMap(k => k.columns(opts).map(k -> _))
 
   private case class Doc(id: Option[Long], text: Option[String], vec: Seq[Double])
 
@@ -90,13 +90,8 @@ class ArtifactLifecycleSpec extends SparkSpec with SpecTempRoot {
       opts + ("graft.write.operation" -> (if (op == "index") "index" else "append")))
   }
 
-  private def fresh(kind: ArtifactKind, idx: String, c: String): Boolean = kind match {
-    case ArtifactKind.Analysis => IndexArtifacts.loadAnalysis(spark, idx, c, Some("id")).isDefined
-    case ArtifactKind.Minhash => IndexArtifacts.loadMinhash(spark, idx, c, Some("id")).isDefined
-    case ArtifactKind.Ivf => IndexArtifacts.loadIvf(spark, idx, c, Some("id")).isDefined
-    case ArtifactKind.Packed(codec) => IndexArtifacts.loadPacked(spark, codec, idx, c, Some("id")).isDefined
-    case ArtifactKind.Pq => IndexArtifacts.loadPq(spark, idx, c, Some("id")).isDefined
-  }
+  private def fresh(kind: ArtifactKind, idx: String, c: String): Boolean =
+    IndexArtifacts.load(spark, kind, idx, c, Some("id")).isDefined
 
   private def cell(v: Any): String = v match {
     case null => "null"

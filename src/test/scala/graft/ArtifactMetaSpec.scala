@@ -43,24 +43,28 @@ class ArtifactMetaSpec extends SparkSpec with SpecTempRoot {
   }
 
   /** (artifact dir, expected meta with `FP` for the fingerprint, fresh load). */
-  private def kinds(out: String): Seq[(String, String, () => Boolean)] = Seq(
-    (IndexArtifacts.analysisDir(out, "text"),
-      """{"fingerprint":"FP","id_col":"id","text_col":"text","ids_clean":true,""" +
-        """"n_docs":6,"n_dl":6,"dl_sum":21.0}""",
-      () => IndexArtifacts.loadAnalysis(spark, out, "text", Some("id")).exists(_.idsClean)),
-    (IndexArtifacts.minhashDir(out, "text"),
-      """{"fingerprint":"FP","id_col":"id","text_col":"text","num_hashes":32,"bands":8}""",
-      () => IndexArtifacts.loadMinhash(spark, out, "text", Some("id")).isDefined),
-    (IndexArtifacts.vectorsDir(out, "vec"),
-      """{"fingerprint":"FP","id_col":"id","vec_col":"vec"}""",
-      () => IndexArtifacts.loadIvf(spark, out, "vec", Some("id")).isDefined),
-    (IndexArtifacts.pqDir(out, "vec"),
-      """{"fingerprint":"FP","id_col":"id","vec_col":"vec","m":2,"k":4,""" +
-        """"fit":"sample","fit_sample_n":65536,"fit_iters":5}""",
-      () => IndexArtifacts.loadPq(spark, out, "vec", Some("id")).isDefined)) ++
-    PackedCodec.all.map(c => (IndexArtifacts.packedDir(c, out, "vec"),
-      """{"fingerprint":"FP","id_col":"id","vec_col":"vec"}""",
-      () => IndexArtifacts.loadPacked(spark, c, out, "vec", Some("id")).isDefined))
+  private def kinds(out: String): Seq[(String, String, () => Boolean)] = {
+    def fresh(kind: ArtifactKind, c: String) = () => IndexArtifacts.load(spark, kind, out, c, Some("id")).isDefined
+    Seq(
+      (IndexArtifacts.analysisDir(out, "text"),
+        """{"fingerprint":"FP","id_col":"id","text_col":"text","ids_clean":true,""" +
+          """"n_docs":6,"n_dl":6,"dl_sum":21.0}""",
+        () => IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text", Some("id"))
+          .exists(_.state.idsClean)),
+      (IndexArtifacts.minhashDir(out, "text"),
+        """{"fingerprint":"FP","id_col":"id","text_col":"text","num_hashes":32,"bands":8}""",
+        fresh(ArtifactKind.Minhash, "text")),
+      (ArtifactKind.Ivf.dir(out, "vec"),
+        """{"fingerprint":"FP","id_col":"id","vec_col":"vec"}""",
+        fresh(ArtifactKind.Ivf, "vec")),
+      (ArtifactKind.Pq.dir(out, "vec"),
+        """{"fingerprint":"FP","id_col":"id","vec_col":"vec","m":2,"k":4,""" +
+          """"fit":"sample","fit_sample_n":65536,"fit_iters":5}""",
+        fresh(ArtifactKind.Pq, "vec"))) ++
+      PackedCodec.all.map(c => (ArtifactKind.Packed(c).dir(out, "vec"),
+        """{"fingerprint":"FP","id_col":"id","vec_col":"vec"}""",
+        fresh(ArtifactKind.Packed(c), "vec")))
+  }
 
   test("every artifact kind writes the stable meta layout, and that layout loads") {
     val out = s"$root/all_kinds"
@@ -101,7 +105,8 @@ class ArtifactMetaSpec extends SparkSpec with SpecTempRoot {
         .write.mode("append").parquet(out)
       spark.catalog.refreshByPath(out)
       IndexArtifacts.maintain(spark, ArtifactKind.Packed(codec), out, "id", "vec", append = true)
-      val packed = IndexArtifacts.loadPacked(spark, codec, out, "vec", Some("id"))
+      val packed = IndexArtifacts.load(spark, ArtifactKind.Packed(codec), out, "vec", Some("id"))
+        .map(_.table("packed"))
       assert(packed.isDefined, codec.name)
       assert(packed.get.count() == 7, s"${codec.name}: rebuild must cover every data row")
       assert(packed.get.where(col("id") === 1L).count() == 2, codec.name)
@@ -123,7 +128,7 @@ class ArtifactMetaSpec extends SparkSpec with SpecTempRoot {
       .write.parquet(s"$dir/stats")
     def listing = new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet
     assert(listing == Set("postings", "doclen", "df", "stats", "_graft_meta.json"))
-    assert(IndexArtifacts.loadAnalysis(spark, legacy, "text", Some("id")).isDefined)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, legacy, "text", Some("id")).isDefined)
     def scores(out: String) = graft.search.Search
       .bm25ScoresIndexed(spark, out, "id", "text", "alpha theta omicron pi")
       .orderBy(col("id")).collect().toSeq
@@ -140,13 +145,14 @@ class ArtifactMetaSpec extends SparkSpec with SpecTempRoot {
     save(out, opts: _*)
     // a build that died between its tables and its meta: the tables
     // (shingles/, codes/) stand, no commit point
-    val dirs = Seq(IndexArtifacts.minhashDir(out, "text"), IndexArtifacts.pqDir(out, "vec"))
+    val dirs = Seq(IndexArtifacts.minhashDir(out, "text"), ArtifactKind.Pq.dir(out, "vec"))
     dirs.foreach(d => new java.io.File(s"$d/_graft_meta.json").delete())
     graft.sources.Connector.save(
       corpus.where(col("id") === 6L).withColumn("id", lit(7L)), out,
       Map("graft.write.operation" -> "append", "graft.mapping.id" -> "id") ++ opts)
-    assert(IndexArtifacts.loadMinhash(spark, out, "text", Some("id"))
-      .exists(_._1.where(col("id") === 7L).count() == 1))
-    assert(IndexArtifacts.loadPq(spark, out, "vec", Some("id")).exists(_._3.count() == 7))
+    assert(IndexArtifacts.load(spark, ArtifactKind.Minhash, out, "text", Some("id"))
+      .exists(_.table("shingles").where(col("id") === 7L).count() == 1))
+    assert(IndexArtifacts.load(spark, ArtifactKind.Pq, out, "vec", Some("id"))
+      .exists(_.table("codes").count() == 7))
   }
 }

@@ -71,7 +71,7 @@ class Bm25RegimeSpec extends SparkSpec with SpecTempRoot {
     * regimes agree on every query. */
   private def regimesAgree(idx: String, queries: Seq[String], stage: String): Prop = {
     val layout = listing(IndexArtifacts.analysisDir(idx, "text"))
-    val fresh = IndexArtifacts.loadAnalysis(spark, idx, "text", Some("id")).isDefined
+    val fresh = IndexArtifacts.load(spark, ArtifactKind.Analysis, idx, "text", Some("id")).isDefined
     val fly = spark.read.parquet(idx)
     val agree = queries.map { q =>
       val indexed = scores(Search.bm25ScoresIndexed(spark, idx, "id", "text", q), "score")
@@ -141,7 +141,7 @@ class Bm25RegimeSpec extends SparkSpec with SpecTempRoot {
       def scored(dir: String) =
         scores(spark.graftDF(dir, body(qText, qTitle), idField = "id", readMetadata = true),
           "_score")
-      val fresh = IndexArtifacts.loadAnalysis(spark, analyzed, "text", Some("id")).isDefined
+      val fresh = IndexArtifacts.load(spark, ArtifactKind.Analysis, analyzed, "text", Some("id")).isDefined
       val (fromFly, fromArtifact) = (scored(plain), scored(analyzed))
       Prop.all(Prop(fresh) :| "artifact not fresh",
         Prop(fromFly == fromArtifact) :| s"'$qText' / '$qTitle' over $ds")

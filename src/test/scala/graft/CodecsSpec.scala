@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 class CodecsSpec extends SparkSpec with SpecTempRoot {
   override protected def tempRootPrefix = "gco"
 
-  import spark.implicits._
 
   // test-side chunk writer: lets the spec craft PNGs the encoder never
   // emits (RGB, per-row filter types) so DECODE is exercised beyond

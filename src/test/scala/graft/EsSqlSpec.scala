@@ -101,6 +101,15 @@ class EsSqlSpec extends SparkSpec with SpecTempRoot {
     intercept[IllegalArgumentException] { EsSql.fetchCursor("nope") }
   }
 
+  test("closeCursor (_sql/close) drops an open cursor: a later fetch fails") {
+    val (page, cur) = EsSql.openCursor(spark, sfDir,
+      "SELECT doc_id FROM documents ORDER BY doc_id", 100)
+    assert(page.count() == 100 && cur.isDefined)
+    EsSql.closeCursor(cur.get)
+    val e = intercept[IllegalArgumentException] { EsSql.fetchCursor(cur.get) }
+    assert(e.getMessage.contains("unknown or closed SQL cursor"), e.getMessage)
+  }
+
   test("cursor over a PIT-pinned read stays stable under concurrent writes") {
     import graft.sources.Connector
     import graft.sources.Connector.implicits._

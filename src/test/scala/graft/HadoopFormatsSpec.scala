@@ -7,7 +7,6 @@ import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType, JobID}
 import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 import org.apache.hadoop.mapreduce.task.{JobContextImpl, TaskAttemptContextImpl}
-import org.apache.spark.sql.functions._
 
 /** The MapReduce-classic surface (EsInput/OutputFormat analogs) driven
   * directly through the Hadoop format contracts — splits, record

@@ -8,7 +8,7 @@ import org.apache.hadoop.hive.ql.plan.{ExprNodeColumnDesc, ExprNodeConstantDesc,
   ExprNodeDesc, ExprNodeGenericFuncDesc}
 import org.apache.hadoop.hive.ql.udf.generic.{GenericUDFOPAnd, GenericUDFOPGreaterThan}
 import org.apache.hadoop.hive.serde2.typeinfo.TypeInfoFactory
-import org.apache.hadoop.io.{LongWritable, MapWritable, Text}
+import org.apache.hadoop.io.MapWritable
 import org.apache.hadoop.mapred.{FileInputFormat => OldFileInputFormat, JobConf, Reporter}
 import org.apache.spark.sql.functions._
 

@@ -15,6 +15,27 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
   override protected def tempRootPrefix = "gi"
   private lazy val root = specRoot.toString
 
+  /** A fresh IVF artifact as (centroids, assignments). */
+  private def ivf(out: String, c: String, idc: Option[String] = None) =
+    IndexArtifacts.load(spark, ArtifactKind.Ivf, out, c, idc)
+      .map(a => (a.state.cents, a.table("assignments")))
+
+  /** A fresh MinHash artifact of this banding as (shingles, bands). */
+  private def minhash(out: String, c: String, idc: Option[String] = None,
+      numHashes: Int = 32, bands: Int = 8) =
+    IndexArtifacts.load(spark, ArtifactKind.Minhash, out, c, idc)
+      .filter(_.state == ArtifactKind.Banding(numHashes, bands))
+      .map(a => (a.table("shingles"), a.table("bands")))
+
+  /** A fresh packed artifact's table. */
+  private def packedTable(codec: PackedCodec, out: String, c: String, idc: Option[String]) =
+    IndexArtifacts.load(spark, ArtifactKind.Packed(codec), out, c, idc).map(_.table("packed"))
+
+  /** A fresh PQ artifact as ((m, k), codebook, codes). */
+  private def pq(out: String, c: String, idc: Option[String]) =
+    IndexArtifacts.load(spark, ArtifactKind.Pq, out, c, idc)
+      .map(a => ((a.state.p.m, a.state.p.k), a.state.cb, a.table("codes")))
+
   private def topk(df: org.apache.spark.sql.DataFrame) =
     df.orderBy(col("score").desc, col("id").asc).limit(10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -28,7 +49,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.index.analysis" -> "text"))
 
     // artifacts present + fresh
-    assert(IndexArtifacts.loadAnalysis(spark, out, "text").isDefined)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text").isDefined)
     val onTheFly = topk(Search.bm25Scores(
       spark.read.parquet(out), "doc_id", "text", "fast hash join"))
     val indexed = topk(Search.bm25ScoresIndexed(
@@ -51,7 +72,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     graft.sources.Connector.save(
       docs.limit(50).withColumn("doc_id", col("doc_id") + lit(1000000L)),
       out, Map("graft.write.operation" -> "append"))
-    assert(IndexArtifacts.loadAnalysis(spark, out, "text").isEmpty)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text").isEmpty)
     val grown = topk(Search.bm25ScoresIndexed(
       spark, out, "doc_id", "text", "fast hash join"))
     val grownRef = topk(Search.bm25Scores(
@@ -64,7 +85,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.write.operation" -> "overwrite",
       "graft.mapping.id" -> "doc_id",
       "graft.index.analysis" -> "text"))
-    assert(IndexArtifacts.loadAnalysis(spark, out, "text").isDefined)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text").isDefined)
     assert(topk(Search.bm25ScoresIndexed(
       spark, out, "doc_id", "text", "fast hash join")) == onTheFly)
   }
@@ -76,10 +97,10 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.write.operation" -> "overwrite",
       "graft.mapping.id" -> "doc_id",
       "graft.index.analysis" -> "text, source"))
-    assert(IndexArtifacts.loadAnalysis(spark, out, "text").isDefined)
-    assert(IndexArtifacts.loadAnalysis(spark, out, "source").isDefined)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text").isDefined)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "source").isDefined)
     // each field's postings reflect ITS OWN analyzed tokens
-    val srcTerms = IndexArtifacts.loadAnalysis(spark, out, "source").get.postings
+    val srcTerms = IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "source").get.table("postings")
       .select(col("term")).distinct()
       .collect().map(_.getString(0)).toSet
     val expected = docs.select(
@@ -88,10 +109,8 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     assert(srcTerms == expected)
     // id-col validation: asking for artifacts keyed by a different
     // reader id reads as absent (the silent-wrong-join guard)
-    assert(IndexArtifacts.loadAnalysis(
-      spark, out, "text", expectIdCol = Some("event_id")).isEmpty)
-    assert(IndexArtifacts.loadAnalysis(
-      spark, out, "text", expectIdCol = Some("doc_id")).isDefined)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text", expectIdCol = Some("event_id")).isEmpty)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text", expectIdCol = Some("doc_id")).isDefined)
   }
 
   test("persisted IVF: artifact path equals fit-per-query; appends route incrementally to existing lists") {
@@ -103,15 +122,15 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.mapping.id" -> "vec_id",
       "graft.index.vectors" -> "embedding",
       "graft.index.vectors.centroids" -> "16"))
-    assert(graft.index.IndexArtifacts.loadIvf(spark, out, "embedding").isDefined)
+    assert(ivf(out, "embedding").isDefined)
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
     val queries = e.where(col("vec_id") < 5)
     val persisted = rows(Ann.ivfTopKIndexed(spark, out, queries,
       "vec_id", "embedding", nCentroids = 16, nprobe = 4, k = 10))
-    val perQuery = rows(Ann.ivfTopK(spark.read.parquet(out), queries,
-      "vec_id", "embedding", nCentroids = 16, nprobe = 4, k = 10))
+    val perQuery = rows(Ann.ivfTopK(spark.read.parquet(out), queries, "vec_id", "embedding",
+      Ann.seedCentroids(spark.read.parquet(out), "vec_id", "embedding", 16), nprobe = 4, k = 10))
     assert(persisted == perQuery && persisted.nonEmpty)
 
     // the persisted plan reads the assignments artifact and contains
@@ -128,7 +147,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.write.operation" -> "append",
       "graft.mapping.id" -> "vec_id",
       "graft.index.vectors" -> "embedding"))
-    val art = graft.index.IndexArtifacts.loadIvf(spark, out, "embedding")
+    val art = ivf(out, "embedding")
     assert(art.isDefined)
     val (cents, assign) = art.get
     // quantizer untouched (same 16 centroids), assignments grew by
@@ -149,7 +168,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     graft.sources.Connector.save(
       e.limit(3).withColumn("vec_id", col("vec_id") + lit(9000000L)),
       out, Map("graft.write.operation" -> "append"))
-    assert(graft.index.IndexArtifacts.loadIvf(spark, out, "embedding").isEmpty)
+    assert(ivf(out, "embedding").isEmpty)
   }
 
   test("persisted HNSW: frozen graphs answer deterministically with brute-force-grade recall; stale falls back") {
@@ -161,7 +180,15 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.mapping.id" -> "vec_id",
       "graft.index.vectors" -> "embedding",
       "graft.index.vectors.fit" -> "hnsw"))
-    assert(graft.index.IndexArtifacts.vectorsMetaFresh(spark, out, "embedding_hnsw"))
+    assert(IndexArtifacts.load(spark, ArtifactKind.Hnsw, out, "embedding").isDefined)
+    // the meta an earlier writer stamped (vec_col named the dir, not
+    // the source column) still loads fresh
+    val meta = new org.apache.hadoop.fs.Path(s"${ArtifactKind.Hnsw.dir(out, "embedding")}/_graft_meta.json")
+    val w = meta.getFileSystem(spark.sparkContext.hadoopConfiguration).create(meta, true)
+    try w.write(("{\"fingerprint\":\"" + IndexArtifacts.dataFingerprint(spark, out) +
+      "\",\"id_col\":\"vec_id\",\"vec_col\":\"embedding_hnsw\"}").getBytes("UTF-8"))
+    finally w.close()
+    assert(IndexArtifacts.load(spark, ArtifactKind.Hnsw, out, "embedding", Some("vec_id")).isDefined)
 
     val queries = e.where(col("vec_id") < 5)
     def run() = Ann.hnswTopKIndexed(spark, out, queries, "vec_id", "embedding", k = 10)
@@ -182,7 +209,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     graft.sources.Connector.save(
       e.limit(3).withColumn("vec_id", col("vec_id") + lit(7000000L)),
       out, Map("graft.write.operation" -> "append"))
-    assert(!graft.index.IndexArtifacts.vectorsMetaFresh(spark, out, "embedding_hnsw"))
+    assert(!IndexArtifacts.load(spark, ArtifactKind.Hnsw, out, "embedding").isDefined)
     assert(Ann.hnswTopKIndexed(spark, out, queries, "vec_id", "embedding", k = 10)
       .collect().nonEmpty)
   }
@@ -244,7 +271,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.index.analysis" -> "text")
     graft.sources.Connector.save(docs, out,
       cfg + ("graft.write.operation" -> "overwrite"))
-    assert(IndexArtifacts.loadAnalysis(spark, out, "text").isDefined)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text").isDefined)
 
     // an UPSERT goes through the _graft_tmp two-phase swap; the swap
     // replaces the whole directory, so with the analysis option the
@@ -252,7 +279,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     graft.sources.Connector.save(
       docs.limit(20).withColumn("text", lit("swapped fast hash join text")),
       out, cfg + ("graft.write.operation" -> "upsert"))
-    assert(IndexArtifacts.loadAnalysis(spark, out, "text").isDefined)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text").isDefined)
     val indexed = topk(Search.bm25ScoresIndexed(
       spark, out, "doc_id", "text", "fast hash join"))
     val fly = topk(Search.bm25Scores(
@@ -265,7 +292,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       docs.limit(5), out, Map(
         "graft.mapping.id" -> "doc_id",
         "graft.write.operation" -> "upsert"))
-    assert(IndexArtifacts.loadAnalysis(spark, out, "text").isEmpty)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text").isEmpty)
   }
 
   test("incremental analysis append: merged artifacts bit-equal a full rebuild; unsafe appends fall back") {
@@ -280,7 +307,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
 
     // append the other half: only IT tokenizes; postings grow by its rows
     graft.sources.Connector.save(half2, out, cfg + ("graft.write.operation" -> "append"))
-    assert(IndexArtifacts.loadAnalysis(spark, out, "text", Some("doc_id")).isDefined)
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text", Some("doc_id")).isDefined)
     val postAfter = spark.read.parquet(s"$dir/postings").count()
     assert(postAfter > postBefore)
 
@@ -314,7 +341,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     val flyDup = topk(Search.bm25Scores(spark.read.parquet(out), "doc_id", "text", "fast hash join"))
     assert(afterDup == flyDup && afterDup.nonEmpty)
     // duplicated ids -> the strict semi-join rewrite must see unclean ids
-    assert(IndexArtifacts.loadAnalysis(spark, out, "text", Some("doc_id")).exists(!_.idsClean))
+    assert(IndexArtifacts.load(spark, ArtifactKind.Analysis, out, "text", Some("doc_id")).exists(!_.state.idsClean))
   }
 
   test("persisted minhash: indexed cross screen equals on-the-fly; appends route only new docs") {
@@ -330,11 +357,11 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.write.operation" -> "overwrite",
       "graft.mapping.id" -> "doc_id",
       "graft.index.minhash" -> "text"))
-    assert(IndexArtifacts.loadMinhash(spark, out, "text", Some("doc_id")).isDefined)
+    assert(minhash(out, "text", Some("doc_id")).isDefined)
     // a different banding or id column must read as absent — band keys
     // from another banding would join garbage
-    assert(IndexArtifacts.loadMinhash(spark, out, "text", Some("doc_id"), 32, 4).isEmpty)
-    assert(IndexArtifacts.loadMinhash(spark, out, "text", Some("other")).isEmpty)
+    assert(minhash(out, "text", Some("doc_id"), 32, 4).isEmpty)
+    assert(minhash(out, "text", Some("other")).isEmpty)
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -366,13 +393,13 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
 
     // APPEND with the option: only the new docs pay shingle compute;
     // the artifact grows by exactly them and stays fresh
-    val before = IndexArtifacts.loadMinhash(spark, out, "text").get._1.count()
+    val before = minhash(out, "text").get._1.count()
     val extra = ref.limit(5).withColumn("doc_id", col("doc_id") + lit(5000000L))
     graft.sources.Connector.save(extra, out, Map(
       "graft.write.operation" -> "append",
       "graft.mapping.id" -> "doc_id",
       "graft.index.minhash" -> "text"))
-    val (sh2, bands2) = IndexArtifacts.loadMinhash(spark, out, "text", Some("doc_id")).get
+    val (sh2, bands2) = minhash(out, "text", Some("doc_id")).get
     assert(sh2.count() == before + 5)
     assert(sh2.where(col("id") >= 5000000L).count() == 5)
     assert(bands2.where(col("id") >= 5000000L).count() == 5 * 8)
@@ -387,7 +414,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     graft.sources.Connector.save(
       ref.limit(2).withColumn("doc_id", col("doc_id") + lit(9000000L)),
       out, Map("graft.write.operation" -> "append"))
-    assert(IndexArtifacts.loadMinhash(spark, out, "text").isEmpty)
+    assert(minhash(out, "text").isEmpty)
   }
 
   /** A one-file source dir whose content (and so fingerprint) is `v`. */
@@ -463,10 +490,10 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.write.operation" -> "overwrite",
       "graft.mapping.id" -> "vec_id",
       "graft.index.int4" -> "embedding"))
-    val packed = IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("vec_id")).get
+    val packed = packedTable(PackedCodec.Int4, out, "embedding", Some("vec_id")).get
     assert(packed.count() == 150)
     // a wrong expected id column reads as absent
-    assert(IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("other")).isEmpty)
+    assert(packedTable(PackedCodec.Int4, out, "embedding", Some("other")).isEmpty)
 
     val qv = (1 to 64).map(i => math.cos(i * 0.29))
     val idx = graft.sim.Ann.packedTopKIndexed(
@@ -484,13 +511,13 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.write.operation" -> "append",
       "graft.mapping.id" -> "vec_id",
       "graft.index.int4" -> "embedding"))
-    val p2 = IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("vec_id")).get
+    val p2 = packedTable(PackedCodec.Int4, out, "embedding", Some("vec_id")).get
     assert(p2.count() == 154 && p2.where(col("id") >= 9000000L).count() == 4)
     // a colliding raw append trips the audit -> full rebuild, fresh
     emb.limit(1).write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
     IndexArtifacts.maintain(spark, ArtifactKind.Packed(PackedCodec.Int4), out, "vec_id", "embedding", append = true)
-    assert(IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("vec_id")).get.count() == 155)
+    assert(packedTable(PackedCodec.Int4, out, "embedding", Some("vec_id")).get.count() == 155)
 
     // null-VECTOR rows are unpackable data, not audit failures: the
     // coverage identity counts the packable subset, so this append
@@ -503,7 +530,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       .write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
     IndexArtifacts.maintain(spark, ArtifactKind.Packed(PackedCodec.Int4), out, "vec_id", "embedding", append = true)
-    val p3 = IndexArtifacts.loadPacked(spark, PackedCodec.Int4, out, "embedding", Some("vec_id")).get
+    val p3 = packedTable(PackedCodec.Int4, out, "embedding", Some("vec_id")).get
     assert(p3.count() == 156 && p3.where(col("id") === 9100000L).count() == 1)
     assert(p3.where(col("id") === 9100001L).count() == 0)
   }
@@ -516,10 +543,10 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.mapping.id" -> "vec_id",
       "graft.index.pq" -> "embedding"))
     val ((m, k), cb, codes) =
-      IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id")).get
+      pq(out, "embedding", Some("vec_id")).get
     assert(m == 4 && k == 16 && cb.length == 4 * 16 * 16)
     assert(codes.count() == 150)
-    assert(IndexArtifacts.loadPq(spark, out, "embedding", Some("other")).isEmpty)
+    assert(pq(out, "embedding", Some("other")).isEmpty)
 
     val qv = (1 to 64).map(i => math.cos(i * 0.29))
     val idx = graft.sim.Ann.pqTopKIndexed(
@@ -538,7 +565,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.mapping.id" -> "vec_id",
       "graft.index.pq" -> "embedding"))
     val ((m2, k2), cb2, codes2) =
-      IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id")).get
+      pq(out, "embedding", Some("vec_id")).get
     assert(m2 == m && k2 == k)
     assert(cb2.toSeq == cb.toSeq, "append must not retrain the codebook")
     assert(codes2.count() == 154 && codes2.where(col("id") >= 9000000L).count() == 4)
@@ -546,7 +573,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     emb.limit(1).write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
     IndexArtifacts.maintain(spark, ArtifactKind.Pq, out, "vec_id", "embedding", append = true)
-    assert(IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id"))
+    assert(pq(out, "embedding", Some("vec_id"))
       .get._3.count() == 155)
   }
 
@@ -559,7 +586,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.index.pq" -> "embedding",
       "graft.index.pq.fit" -> "lloyd"))
     val ((m, k), cbLloyd, codes) =
-      IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id")).get
+      pq(out, "embedding", Some("vec_id")).get
     assert(m == 4 && k == 16 && codes.count() == 150)
     // the trained codebook differs from the sample baseline (Lloyd's
     // moved the centroids) but queries run the same plan shape
@@ -577,7 +604,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     spark.catalog.refreshByPath(out)
     IndexArtifacts.maintain(spark, ArtifactKind.Pq, out, "vec_id", "embedding", append = true)
     val ((_, _), cbAfter, codesAfter) =
-      IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id")).get
+      pq(out, "embedding", Some("vec_id")).get
     assert(codesAfter.count() == 151)
     val cbSample2 = graft.sim.Ann.pqSampleCodebooks(
       spark.read.parquet(out), "vec_id", "embedding", 4, 16)
@@ -594,7 +621,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.index.pq" -> "embedding",
       "graft.index.pq.fit" -> "lloyd-dist"))
     val ((m, k), cbDist, codes) =
-      IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id")).get
+      pq(out, "embedding", Some("vec_id")).get
     assert(m == 4 && k == 16 && codes.count() == 150)
     // the stored model IS the distributed fit, verbatim
     val expect = graft.sim.Ann.pqFitCodebooksDist(
@@ -613,7 +640,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     spark.catalog.refreshByPath(out)
     IndexArtifacts.maintain(spark, ArtifactKind.Pq, out, "vec_id", "embedding", append = true)
     val ((_, _), cbAfter, codesAfter) =
-      IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id")).get
+      pq(out, "embedding", Some("vec_id")).get
     assert(codesAfter.count() == 160)
     assert(cbAfter.toSeq == cbDist.toSeq,
       "clean append must keep the frozen lloyd-dist codebook")
@@ -632,7 +659,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.index.pq.fit.sample_n" -> "128",
       "graft.index.pq.fit.iters" -> "3"))
     val ((m, k), cbStored, _) =
-      IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id")).get
+      pq(out, "embedding", Some("vec_id")).get
     // the stored model is the distributed fit at the REQUESTED
     // hyperparams, verbatim — the composition IVFADC queries ride on
     val expect = graft.sim.Ann.pqFitCodebooksDist(
@@ -649,7 +676,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     spark.catalog.refreshByPath(out)
     IndexArtifacts.maintain(spark, ArtifactKind.Pq, out, "vec_id", "embedding", append = true)
     val ((_, _), cbAfter, codesAfter) =
-      IndexArtifacts.loadPq(spark, out, "embedding", Some("vec_id")).get
+      pq(out, "embedding", Some("vec_id")).get
     assert(codesAfter.count() == 201)
     val expectAfter = graft.sim.Ann.pqFitCodebooksDist(
       spark.read.parquet(out), "vec_id", "embedding", m, k,
@@ -692,10 +719,10 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.write.operation" -> "overwrite",
       "graft.mapping.id" -> "vec_id",
       "graft.index.bbq" -> "embedding"))
-    val packed = IndexArtifacts.loadPacked(spark, PackedCodec.Bbq, out, "embedding", Some("vec_id")).get
+    val packed = packedTable(PackedCodec.Bbq, out, "embedding", Some("vec_id")).get
     assert(packed.count() == 150)
     assert(packed.columns.toSeq == Seq("id", "b_lo", "b_hi"))
-    assert(IndexArtifacts.loadPacked(spark, PackedCodec.Bbq, out, "embedding", Some("other")).isEmpty)
+    assert(packedTable(PackedCodec.Bbq, out, "embedding", Some("other")).isEmpty)
 
     val qv = (1 to 64).map(i => math.cos(i * 0.29))
     val idx = graft.sim.Ann.packedTopKIndexed(
@@ -711,13 +738,13 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.write.operation" -> "append",
       "graft.mapping.id" -> "vec_id",
       "graft.index.bbq" -> "embedding"))
-    val p2 = IndexArtifacts.loadPacked(spark, PackedCodec.Bbq, out, "embedding", Some("vec_id")).get
+    val p2 = packedTable(PackedCodec.Bbq, out, "embedding", Some("vec_id")).get
     assert(p2.count() == 154 && p2.where(col("id") >= 9000000L).count() == 4)
     // a colliding raw append trips the audit -> full rebuild, fresh
     emb.limit(1).write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
     IndexArtifacts.maintain(spark, ArtifactKind.Packed(PackedCodec.Bbq), out, "vec_id", "embedding", append = true)
-    assert(IndexArtifacts.loadPacked(spark, PackedCodec.Bbq, out, "embedding", Some("vec_id")).get.count() == 155)
+    assert(packedTable(PackedCodec.Bbq, out, "embedding", Some("vec_id")).get.count() == 155)
   }
 
   test("persisted int8: packed score bit-equals the inline quantized cosine; audited appends (r14)") {
@@ -762,8 +789,21 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       "graft.write.operation" -> "append",
       "graft.mapping.id" -> "vec_id",
       "graft.index.int8" -> "embedding"))
-    val p2 = IndexArtifacts.loadPacked(spark, PackedCodec.Int8, out, "embedding", Some("vec_id")).get
+    val p2 = packedTable(PackedCodec.Int8, out, "embedding", Some("vec_id")).get
     assert(p2.count() == 154 && p2.where(col("id") >= 9000000L).count() == 4)
+  }
+
+  test("persisted packed query: a repeated call reads its schemas from the cache, launching no job") {
+    val out = s"$root/packed_jobs"
+    graft.sources.Connector.save(Tables.embeddings(spark, sfDir).limit(50), out, Map(
+      "graft.write.operation" -> "overwrite",
+      "graft.mapping.id" -> "vec_id",
+      "graft.index.int8" -> "embedding"))
+    val qv = (1 to 64).map(i => math.cos(i * 0.29))
+    def call(): Unit = graft.sim.Ann.packedTopKIndexed(
+      spark, out, "vec_id", "embedding", PackedCodec.Int8, qv, k = 5, oversample = 4).get
+    val (first, second, third) = (jobsLaunchedBy(call()), jobsLaunchedBy(call()), jobsLaunchedBy(call()))
+    assert(second < first && second == third && third == 0, (first, second, third))
   }
 
   test("refresh audits: id collisions and null ids force a FULL rebuild, never a silent gap (r14)") {
@@ -782,7 +822,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       .write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
     IndexArtifacts.maintain(spark, ArtifactKind.Minhash, out, "doc_id", "text", append = true)
-    val (sh, _) = IndexArtifacts.loadMinhash(spark, out, "text", Some("doc_id")).get
+    val (sh, _) = minhash(out, "text", Some("doc_id")).get
     // full rebuild: the artifact covers EVERY data row again (both
     // rows of the collided id), not old + nothing
     assert(sh.count() == dataCount0 + 1, s"expected rebuild to cover all rows")
@@ -801,7 +841,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
       .write.mode("append").parquet(out)
     spark.catalog.refreshByPath(out)
     IndexArtifacts.maintain(spark, ArtifactKind.Minhash, out, "doc_id", "text", append = true)
-    assert(IndexArtifacts.loadMinhash(spark, out, "text", Some("doc_id")).isDefined)
+    assert(minhash(out, "text", Some("doc_id")).isDefined)
 
     // -- IVF: same audit class on the assignments table
     val vout = s"$root/audit_ivf"
@@ -819,7 +859,7 @@ class IndexArtifactsSpec extends SparkSpec with SpecTempRoot {
     // rows are PER-ID (assignToCentroids groups), so the collided id
     // still resolves to exactly one list entry, covering every
     // distinct id rather than silently covering none of the append
-    val (_, asg) = IndexArtifacts.loadIvf(spark, vout, "embedding").get
+    val (_, asg) = ivf(vout, "embedding").get
     assert(asg.count() == vCount0,
       "IVF rebuild must cover every distinct id after a colliding append")
     assert(asg.select("id").distinct().count() == vCount0)

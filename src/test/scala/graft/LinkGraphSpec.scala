@@ -1,7 +1,7 @@
 package graft
 
 import graft.text.LinkGraph
-import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** r17 link-graph primitives: the anchor walk's followability rules
   * and the integer-PageRank contracts (determinism, mass accounting,
@@ -59,6 +59,37 @@ class LinkGraphSpec extends SparkSpec {
     // no dangling, no floor starvation beyond N units/iter: total mass
     // stays within iters * (N + |E|) micro-units of scale
     assert(math.abs(r1.map(_._2).sum - 1000000L) <= 4 * 4)
+  }
+
+  test("property: pageRankInt driver and distributed regimes give equal ranks") {
+    // sources s*, each with 1-3 weighted out-edges; sinks d* only ever
+    // receive (d0 always does), so every graph has a dangling host
+    val graph: Gen[(Seq[(String, String, Long)], Int)] = for {
+      nSrc <- Gen.choose(1, 6)
+      nSink <- Gen.choose(1, 3)
+      hosts = (0 until nSrc).map(i => s"s$i") ++ (0 until nSink).map(i => s"d$i")
+      out <- Gen.sequence[Seq[Seq[(String, String, Long)]], Seq[(String, String, Long)]](
+        (0 until nSrc).map { i =>
+          Gen.choose(1, 3).flatMap(Gen.listOfN(_, for {
+            dst <- Gen.oneOf(hosts.filterNot(_ == s"s$i"))
+            w <- Gen.choose(1L, 9L)
+          } yield (s"s$i", dst, w)))
+        })
+      iters <- Gen.choose(1, 4)
+    } yield ((("s0", "d0", 1L) +: out.flatten).groupBy(e => (e._1, e._2)).values.map(_.head)
+      .toSeq.sortBy(e => (e._1, e._2)), iters)
+    var cases = 0
+    val prop = Prop.forAll(graph) { case (es, iters) =>
+      cases += 1
+      def ranks(cap: Int) = LinkGraph.pageRankIntCapped(edges(es: _*), iters, 85, 100,
+        1000000L, cap).as[(String, Long)].collect().toMap
+      val (driver, distributed) = (ranks(LinkGraph.DriverEdgeCap), ranks(-1))
+      Prop(driver == distributed && driver.contains("d0")) :| s"$es\n$driver\n$distributed"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261020L)), prop)
+    assert(res.passed, res)
+    assert(cases >= 8)
   }
 
   test("pageRankInt: star sink accumulates, dangling mass recycles") {

@@ -212,7 +212,6 @@ class SearchSpec extends SparkSpec {
 
   test("rankEval: precision / MRR / DCG / recall against graded ratings") {
     import graft.search.Search
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val results = Seq((1L, 10L, 1), (1L, 20L, 2), (1L, 30L, 3))
       .toDF("query_id", "id", "rank")

@@ -332,8 +332,8 @@ class StreamingSpec extends SparkSpec with SpecTempRoot {
     try q.processAllAvailable() finally q.stop()
 
     // artifacts fresh after the last batch, ids clean across batches
-    assert(graft.index.IndexArtifacts.loadAnalysis(
-      spark, idx, "text", Some("doc_id")).exists(_.idsClean))
+    assert(graft.index.IndexArtifacts.load(spark, graft.index.ArtifactKind.Analysis,
+      idx, "text", Some("doc_id")).exists(_.state.idsClean))
     val indexed = Search.bm25ScoresIndexed(spark, idx, "doc_id", "text", "fast hash join")
       .orderBy(col("score").desc, col("id").asc).limit(10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
